@@ -377,9 +377,11 @@ object Tables {
   private val warnedSchemes =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
-  /** Atomically publish a fully-written `tmp` file at `dest`,
-    * failing if `dest` already exists — the single primitive every
-    * CAS commit here stands on. On the local filesystem a Hadoop
+  /** Atomically publish `body` as the file `dest`, failing if `dest`
+    * already exists — the single primitive every CAS commit here
+    * stands on. The body is staged in a uniquely-named dot-tmp file
+    * next to `dest` (two racers never clobber each other's in-flight
+    * writes), then published. On the local filesystem a Hadoop
     * rename silently overwrites (POSIX renameTo), so check-then-
     * rename has a lost-update window; a HARD LINK is the POSIX
     * atomic-exclusive publish: link(2) fails with EEXIST when the
@@ -390,11 +392,14 @@ object Tables {
     * WITHOUT that guarantee (S3A and friends rename by copy+delete)
     * get a one-time loud warning that CAS is best-effort there.
     * Returns true on success, false when `dest` already existed
-    * (the CAS lost); `tmp` is consumed either way. */
+    * (the CAS lost); the staged file is consumed either way. */
   private[graft] def publishExclusive(fs: org.apache.hadoop.fs.FileSystem,
-                                      tmp: org.apache.hadoop.fs.Path,
-                                      dest: org.apache.hadoop.fs.Path)
-      : Boolean =
+                                      dest: org.apache.hadoop.fs.Path,
+                                      body: String): Boolean = {
+    val tmp = new org.apache.hadoop.fs.Path(dest.getParent,
+      s".${dest.getName}.tmp-${java.util.UUID.randomUUID.toString.take(8)}")
+    val out = fs.create(tmp, true)
+    try out.write(body.getBytes("UTF-8")) finally out.close()
     if (fs.getScheme == "file") {
       val won =
         try {
@@ -423,6 +428,7 @@ object Tables {
       else if (fs.rename(tmp, dest)) true
       else { fs.delete(tmp, false); false }
     }
+  }
 
   /** Compare-and-set manifest commit: `version` is the EXPECTED next
     * version. The pointer flip is [[publishExclusive]] — atomic and
@@ -439,31 +445,17 @@ object Tables {
       throw new ManifestConflictException(root.toString, version)
     val body = parts.toSeq.sorted
       .map { case (p, d) => s"$p\t$d" }.mkString("\n")
-    // unique tmp name: two racers must not clobber each other's
-    // in-flight writes either
-    val tmp = new org.apache.hadoop.fs.Path(root,
-      s".manifest_tmp_${version}_${java.util.UUID.randomUUID.toString.take(8)}")
-    val out = fs.create(tmp, true)
-    try out.write(body.getBytes("UTF-8"))
-    finally out.close()
-    if (!publishExclusive(fs, tmp, dest))
+    if (!publishExclusive(fs, dest, body))
       throw new ManifestConflictException(root.toString, version)
   }
 
   private def readManifestFile(fs: org.apache.hadoop.fs.FileSystem,
                                mf: org.apache.hadoop.fs.Path)
-      : Map[String, String] = {
-    val in = fs.open(mf)
-    val body = try {
-      val buf = new java.io.ByteArrayOutputStream()
-      org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 4096, false)
-      buf.toString("UTF-8")
-    } finally in.close()
-    body.split("\n").filter(_.nonEmpty).map { line =>
+      : Map[String, String] =
+    readSmallFile(fs, mf).split("\n").filter(_.nonEmpty).map { line =>
       val Array(p, d) = line.split("\t", 2)
       p -> d
     }.toMap
-  }
 
   /** Does a manifested table exist at `path`? Only the two genuine
     * no-archive shapes answer false — the root directory is missing,
@@ -1352,10 +1344,8 @@ object Tables {
 
   private val DeclaredColsName = "_graft_added_cols"
 
-  /** The declaration files at `root`, (version, path), version order.
-    * The legacy un-versioned sidecar (written by pre-r16 ALTERs, one
-    * in-place-overwritten file) reads as version 0; CAS-published
-    * declarations are `_graft_added_cols-%09d` from 1 up. */
+  /** The declaration files at `root`, (version, path), version order:
+    * CAS-published `_graft_added_cols-%09d` from 1 up. */
   private def declaredColsFiles(fs: org.apache.hadoop.fs.FileSystem,
       root: org.apache.hadoop.fs.Path)
       : Seq[(Long, org.apache.hadoop.fs.Path)] = {
@@ -1364,7 +1354,6 @@ object Tables {
       .filter(_.getName.startsWith(DeclaredColsName))
       .flatMap { p =>
         p.getName.stripPrefix(DeclaredColsName) match {
-          case "" => Some(0L -> p)
           case s if s.startsWith("-") && s.drop(1).forall(_.isDigit) =>
             Some(s.drop(1).toLong -> p)
           case _ => None // a writer's dot-tmp never matches (dot prefix)
@@ -1382,12 +1371,12 @@ object Tables {
     * never retypes.
     *
     * Persisted with the manifest discipline, not an in-place
-    * overwrite: each declaration is the FULL list (DDL form) written
-    * to a dot-tmp and [[publishExclusive]]d as the next
-    * `_graft_added_cols-<v>` — a reader can never observe a torn
-    * file (the old version stays readable until the new one is
-    * fully visible), and two concurrent ALTERs serialize through the
-    * CAS (the loser re-reads the winner's list and retries, so
+    * overwrite: each declaration is the FULL list (DDL form)
+    * [[publishExclusive]]d as the next `_graft_added_cols-<v>` — a
+    * reader can never observe a torn file (the old version stays
+    * readable until the new one is fully visible), and two
+    * concurrent ALTERs serialize through the CAS (the loser re-reads
+    * the winner's list and retries, so
     * neither declaration is silently dropped). One tiny file per
     * ALTER accumulates — the delete-claim tradeoff, and ALTERs are
     * rare. */
@@ -1402,9 +1391,6 @@ object Tables {
     while (attempts < 32) {
       attempts += 1
       val files = declaredColsFiles(fs, root)
-      // a fresh archive starts at version 1 (getOrElse(0L) + 1), so
-      // the legacy un-versioned sidecar is the UNIQUE version 0 —
-      // two v0 entries would make lastOption listing-order-dependent
       val version = files.lastOption.map(_._1).getOrElse(0L)
       val declared = files.lastOption
         .map(f => StructType.fromDDL(readSmallFile(fs, f._2)).fields.toSeq)
@@ -1416,13 +1402,9 @@ object Tables {
         s"columns [${clash.mkString(",")}] already exist at $path — " +
           "evolution is add-a-column, never change-a-column")
       val all = StructType(declared ++ newCols.fields)
-      val tmp = new org.apache.hadoop.fs.Path(root,
-        s".$DeclaredColsName-tmp-${java.util.UUID.randomUUID()}")
-      val out = fs.create(tmp, true)
-      try out.write(all.toDDL.getBytes("UTF-8")) finally out.close()
       val dest = new org.apache.hadoop.fs.Path(root,
         f"$DeclaredColsName-${version + 1}%09d")
-      if (publishExclusive(fs, tmp, dest)) return
+      if (publishExclusive(fs, dest, all.toDDL)) return
       // CAS lost: a concurrent ALTER published version+1 first —
       // loop re-reads ITS list so both declarations survive
     }
@@ -1638,16 +1620,14 @@ object Tables {
   // flips the marker, so concurrent readers hold a complete snapshot
   // for as long as superseded dirs are retained
   // ([[sweepBucketedScratch]] is the reclaim verb — run it after a
-  // grace period, like [[vacuumManifested]]). The LEGACY layout
-  // (data + sidecar directly at the root, no markers) keeps reading
-  // and ingesting; its first fold migrates it to v1.
+  // grace period, like [[vacuumManifested]]).
 
   private def bucketVersionMarker(root: org.apache.hadoop.fs.Path,
                                   v: Long) =
     new org.apache.hadoop.fs.Path(root, f"_bucketv-$v%019d")
 
   /** Committed versions of a bucketed archive, ascending; empty for
-    * a legacy (unversioned) or absent archive. */
+    * an absent archive. */
   private[graft] def bucketedVersions(spark: SparkSession,
                                       path: String): Seq[Long] = {
     val root = new org.apache.hadoop.fs.Path(path)
@@ -1659,7 +1639,7 @@ object Tables {
   }
 
   /** The archive's CURRENT version (max committed marker); None for
-    * a legacy or absent archive. */
+    * an absent archive. */
   private[graft] def bucketedCurrentVersion(spark: SparkSession,
                                             path: String): Option[Long] =
     bucketedVersions(spark, path).lastOption
@@ -1674,12 +1654,8 @@ object Tables {
   private def commitBucketVersion(spark: SparkSession, path: String,
                                   v: Long): Unit = {
     val root = new org.apache.hadoop.fs.Path(path)
-    val fs = fsFor(spark, root)
-    val tmp = new org.apache.hadoop.fs.Path(root,
-      s"._bucketv_tmp_${v}_${java.util.UUID.randomUUID.toString.take(8)}")
-    val out = fs.create(tmp, true)
-    try out.write(v.toString.getBytes("UTF-8")) finally out.close()
-    if (!publishExclusive(fs, tmp, bucketVersionMarker(root, v)))
+    if (!publishExclusive(fsFor(spark, root), bucketVersionMarker(root, v),
+        v.toString))
       throw new IllegalStateException(
         s"bucketed archive $path: version $v was committed by a " +
           "concurrent fold — two maintenance windows are folding the " +
@@ -1724,19 +1700,21 @@ object Tables {
     * false. */
   private[graft] def bucketedArchiveExists(spark: SparkSession,
                                            path: String): Boolean =
-    bucketedCurrentVersion(spark, path).nonEmpty || {
-      // legacy layout: sidecar directly at the root
-      val p = bucketSpecPath(path)
-      try fsFor(spark, p).exists(p)
-      catch { case _: java.io.FileNotFoundException => false }
-    }
+    bucketedCurrentVersion(spark, path).nonEmpty
 
-  /** The directory holding the archive's CURRENT complete table —
-    * the current version dir, or the root itself for a legacy
-    * archive. */
-  private def bucketedLiveDir(spark: SparkSession, path: String): String =
-    bucketedCurrentVersion(spark, path)
-      .map(bucketedVersionDir(path, _)).getOrElse(path)
+  /** The archive's CURRENT version — loud when `path` holds no
+    * committed `_bucketv-` marker (no archive, or a create that
+    * crashed before its marker). */
+  private def bucketedLiveVersion(spark: SparkSession, path: String): Long =
+    bucketedCurrentVersion(spark, path).getOrElse(
+      throw new IllegalStateException(
+        s"no bucketed archive at $path: no committed _bucketv- version " +
+          "marker — build it via writeBucketedArchive"))
+
+  /** The directory holding the archive's CURRENT complete table. */
+  private[graft] def bucketedLiveDir(spark: SparkSession,
+                                     path: String): String =
+    bucketedVersionDir(path, bucketedLiveVersion(spark, path))
 
   private def writeBucketSpec(spark: SparkSession, path: String,
                               keyCol: String, buckets: Int,
@@ -1752,8 +1730,7 @@ object Tables {
   }
 
   /** The archive's current bucket spec — resolved through the
-    * version pointer (the current version dir's sidecar), with the
-    * root sidecar as the legacy fallback. */
+    * version pointer (the current version dir's sidecar). */
   private[graft] def readBucketSpec(spark: SparkSession, path: String)
       : (String, Int, Seq[String], StructType) =
     readBucketSpecAtDir(spark, bucketedLiveDir(spark, path), path)
@@ -1762,22 +1739,11 @@ object Tables {
                                   path: String)
       : (String, Int, Seq[String], StructType) = {
     val p = bucketSpecPath(dir)
-    val in = fsFor(spark, p).open(p)
-    val body = try {
-      val buf = new java.io.ByteArrayOutputStream()
-      org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 4096, false)
-      buf.toString("UTF-8")
-    } finally in.close()
     // line 5 (the sizing note) is documentation, not configuration
-    val lines = body.split("\n", 5)
-    if (lines.length >= 4)
+    val lines = readSmallFile(fsFor(spark, p), p).split("\n", 5)
+    if (lines.length == 5)
       (lines(0), lines(1).toInt, lines(2).split(",").toSeq,
         StructType.fromDDL(lines(3)))
-    else if (lines.length == 3)
-      // pre-partCols sidecar (key/buckets/DDL): those archives were
-      // all epoch-only layouts, so the historical default applies
-      (lines(0), lines(1).toInt, Seq("ingest_epoch"),
-        StructType.fromDDL(lines(2)))
     else
       throw new IllegalStateException(
         s"unreadable bucket spec at $path (${lines.length} lines) — " +
@@ -1792,11 +1758,7 @@ object Tables {
     * directory layout. */
   private def ensureBucketedRegistered(spark: SparkSession,
                                        path: String): String =
-    bucketedCurrentVersion(spark, path) match {
-      case Some(v) => ensureBucketedRegisteredAt(spark, path, v)
-      case None => // legacy layout: the root IS the table
-        registerBucketedDir(spark, path, path, bucketedArchName(path))
-    }
+    ensureBucketedRegisteredAt(spark, path, bucketedLiveVersion(spark, path))
 
   /** Register (if this session hasn't yet) the catalog entry for one
     * VERSION of the archive and return its name — the time-travel
@@ -1852,9 +1814,8 @@ object Tables {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = fsFor(spark, root)
     // recreate from scratch: previous generations' catalog entries
-    // (legacy + any versions this session registered) must go with
-    // the dirs, or a stale entry would point into the void
-    spark.sql(s"DROP TABLE IF EXISTS `${bucketedArchName(path)}`")
+    // (any versions this session registered) must go with the dirs,
+    // or a stale entry would point into the void
     bucketedVersions(spark, path).foreach(v =>
       spark.sql(s"DROP TABLE IF EXISTS `${bucketedArchName(path, v)}`"))
     if (fs.exists(root)) fs.delete(root, true)
@@ -1952,11 +1913,7 @@ object Tables {
                          path: String, epoch: Long,
                          writerId: String): Unit = {
     val claim = epochClaimPath(path, epoch)
-    val tmp = new org.apache.hadoop.fs.Path(path,
-      s"._claim_tmp_${epoch}_${java.util.UUID.randomUUID.toString.take(8)}")
-    val out = fs.create(tmp, true)
-    try out.write(writerId.getBytes("UTF-8")) finally out.close()
-    if (!publishExclusive(fs, tmp, claim)) {
+    if (!publishExclusive(fs, claim, writerId)) {
       val holder =
         try readSmallFile(fs, claim)
         catch { case _: java.io.IOException => "<unreadable>" }
@@ -2019,12 +1976,12 @@ object Tables {
 
   /** Thrown when a maintenance window finds its topology root LEASED
     * by another window. Folds are deliberately not claim-guarded per
-    * archive (their staged-swap crash story is the recovery
-    * preamble), which leaves one race the scheduling contract alone
-    * was carrying: two concurrently-scheduled WINDOWS folding the
-    * same topology could interleave staged swaps silently. The
-    * window-level lease makes that contract a mechanism — one claim
-    * per topology root, held for the whole sweep. */
+    * archive (their crash story is stage-then-flip), which leaves one
+    * race the scheduling contract alone was carrying: two
+    * concurrently-scheduled WINDOWS folding the same topology could
+    * interleave their rewrites silently. The window-level lease makes
+    * that contract a mechanism — one claim per topology root, held
+    * for the whole sweep. */
   final class MaintenanceLeaseException(root: String, holder: String)
     extends RuntimeException(
       s"maintenance window at $root is leased by '$holder' — another " +
@@ -2051,11 +2008,7 @@ object Tables {
     val fs = fsFor(spark, rootP)
     if (!fs.exists(rootP)) fs.mkdirs(rootP)
     val lease = maintenanceLeasePath(root)
-    val tmp = new org.apache.hadoop.fs.Path(root,
-      s"._lease_tmp_${java.util.UUID.randomUUID.toString.take(8)}")
-    val out = fs.create(tmp, true)
-    try out.write(holderId.getBytes("UTF-8")) finally out.close()
-    if (!publishExclusive(fs, tmp, lease)) {
+    if (!publishExclusive(fs, lease, holderId)) {
       val holder =
         try readSmallFile(fs, lease)
         catch { case _: java.io.IOException => "<unreadable>" }
@@ -2104,9 +2057,9 @@ object Tables {
     val spark = df.sparkSession
     val name = ensureBucketedRegistered(spark, path)
     val (key, buckets, partCols, schema) = readBucketSpec(spark, path)
-    // epoch data lands in the CURRENT version dir (the root itself on
-    // a legacy layout); claims stay at table-root scope — one epoch
-    // number line per archive, whatever version is live
+    // epoch data lands in the CURRENT version dir; claims stay at
+    // table-root scope — one epoch number line per archive, whatever
+    // version is live
     val live = new org.apache.hadoop.fs.Path(
       bucketedLiveDir(spark, path))
     val fs = fsFor(spark, live)
@@ -2177,7 +2130,7 @@ object Tables {
     * for the layout whose schema is part of the PHYSICAL contract
     * (catalog DDL + bucketspec sidecar pin it; a manifested archive
     * evolves implicitly because [[readFromParts]] merges by name).
-    * Rewrites through the fold's staged swap with the new columns
+    * Rewrites through the fold's stage-then-flip with the new columns
     * null-filled, so bucket layout, partitioning and reader
     * isolation hold; sidecar + catalog pick up the superset schema
     * from the rewrite. Add-a-column only — an existing name is
@@ -2259,32 +2212,18 @@ object Tables {
   /** Reclaim a bucketed archive's dead mass — the vacuum verb for
     * the bucketed layout: every version dir EXCEPT the current one
     * (superseded versions a fold retained for concurrent readers,
-    * and crashed stages that never got a marker), plus any
-    * pre-versioned fold scratch siblings (`.fold_tmp` / `.fold_old`)
-    * a legacy crashed swap left behind. Run AFTER a grace period
-    * longer than the slowest reader's resolve-to-read window — the
-    * [[vacuumManifested]] contract: until this runs, readers that
-    * resolved the previous version (and [[readBucketedArchiveAt]]
-    * time travelers) keep a complete snapshot. Returns the number of
-    * dirs removed. Legacy-layout archives only sweep scratch (their
-    * live data IS the root; a missing live dir there means a
-    * crashed legacy swap whose `.fold_old` is the recovery copy —
-    * left for the next fold's preamble). */
+    * and crashed stages that never got a marker). Run AFTER a grace
+    * period longer than the slowest reader's resolve-to-read window
+    * — the [[vacuumManifested]] contract: until this runs, readers
+    * that resolved the previous version (and
+    * [[readBucketedArchiveAt]] time travelers) keep a complete
+    * snapshot. Returns the number of version dirs removed. */
   private[graft] def sweepBucketedScratch(spark: SparkSession,
                                           path: String): Int = {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = fsFor(spark, root)
     if (!fs.exists(root)) return 0
-    val cur = bucketedCurrentVersion(spark, path)
-    val scratch = Seq(".fold_tmp", ".fold_old").count { suf =>
-      val p = new org.apache.hadoop.fs.Path(path + suf)
-      fs.exists(p) && {
-        // a crashed fold can also leave the staged table registered
-        spark.sql(s"DROP TABLE IF EXISTS `${bucketedArchName(path + suf)}`")
-        fs.delete(p, true)
-      }
-    }
-    val versions = cur.fold(0) { c =>
+    val versions = bucketedCurrentVersion(spark, path).fold(0) { c =>
       val vdirs = fs.listStatus(root).toSeq.filter(st =>
         st.isDirectory && st.getPath.getName.matches("v\\d+"))
         .map(st => st.getPath.getName.stripPrefix("v").toLong)
@@ -2296,17 +2235,6 @@ object Tables {
         fs.delete(bucketVersionMarker(root, v), false)
       }
       vdirs.size
-    }
-    // legacy remnants: a migrated archive's root-level partition
-    // dirs + root sidecar, retained through the migration's grace
-    // period (readers that resolved the legacy root), reclaimed here
-    val legacy = cur.fold(0) { _ =>
-      val dead = fs.listStatus(root).toSeq.filter(st =>
-        st.isDirectory && st.getPath.getName.contains("="))
-      dead.foreach(st => fs.delete(st.getPath, true))
-      val spec = bucketSpecPath(path)
-      if (dead.nonEmpty || fs.exists(spec)) fs.delete(spec, false)
-      dead.size
     }
     // superseded Bloom-sidecar dirs get the same grace-then-reclaim
     sweepBloomDirs(spark, path)
@@ -2357,7 +2285,7 @@ object Tables {
       catch { case _: java.io.FileNotFoundException => Nil }
     seqs.dropRight(1).foreach(v =>
       fs.delete(dvbSeqMarker(root, v), false))
-    scratch + versions + legacy
+    versions
   }
 
   /** Full-rewrite maintenance (the epoch FOLD): stage the rewritten
@@ -2380,29 +2308,17 @@ object Tables {
     * crashed fold costs one dead stage dir and nothing else — and
     * the race a claim would catch (two maintenance windows folding
     * the same archive) is precluded by the window lease and caught
-    * loudly by the marker publish regardless.
-    *
-    * A LEGACY archive (data at the root, no markers) migrates here:
-    * the rewrite stages as v1, the marker commits, and the legacy
-    * root-level partition dirs + sidecar are dropped — one fold and
-    * the archive is versioned. */
+    * loudly by the marker publish regardless. */
   def replaceBucketedArchive(df: DataFrame, path: String): Unit = {
     val spark = df.sparkSession
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = fsFor(spark, root)
-    // legacy recovery preamble: a PRE-VERSIONED fold crashed between
-    // its renames — the aside copy is the only complete archive
-    val old = new org.apache.hadoop.fs.Path(path + ".fold_old")
-    if (!fs.exists(root) && fs.exists(old))
-      require(fs.rename(old, root), s"fold recovery failed for $path")
     val (key, buckets, partCols, _) = readBucketSpec(spark, path)
-    val cur = bucketedCurrentVersion(spark, path)
     // stage above BOTH the current version and any crashed stage
-    val staged = try fs.listStatus(root).toSeq
-        .filter(st => st.isDirectory && st.getPath.getName.matches("v\\d+"))
-        .map(_.getPath.getName.stripPrefix("v").toLong)
-      catch { case _: java.io.FileNotFoundException => Nil }
-    val next = (cur.getOrElse(0L) +: staged).max + 1L
+    val staged = fs.listStatus(root).toSeq
+      .filter(st => st.isDirectory && st.getPath.getName.matches("v\\d+"))
+      .map(_.getPath.getName.stripPrefix("v").toLong)
+    val next = (bucketedLiveVersion(spark, path) +: staged).max + 1L
     // `df` usually READS the version being replaced — safe without a
     // checkpoint, because the stage writes into a NEW dir while the
     // source version's files stay untouched until the sweep
@@ -2413,16 +2329,6 @@ object Tables {
     val mut = beginBucketedMutation(spark, path)
     try commitBucketVersion(spark, path, next)
     finally endBucketedMutation(spark, path, mut)
-    if (cur.isEmpty) {
-      // legacy migration: drop only the legacy CATALOG entry now.
-      // The root-level partition dirs + sidecar stay as dead mass —
-      // version markers resolve first, so every versioned reader
-      // already ignores them, and a concurrent reader that resolved
-      // the LEGACY root keeps a complete snapshot mid-scan (the same
-      // retained-version grace period a superseded version dir
-      // gets); [[sweepBucketedScratch]] reclaims them after it
-      spark.sql(s"DROP TABLE IF EXISTS `${bucketedArchName(path)}`")
-    }
     ensureBucketedRegistered(spark, path)
     refreshBucketedBlooms(spark, path)
     ()
@@ -2650,12 +2556,11 @@ object Tables {
     * window), and is skipped outright when there are none — the
     * steady state between a delete's DV build and its retirement.
     *
-    * Overlay discipline: no sidecar, a pre-versioned pointer, a
-    * version mismatch, or a vanished mask dir all degrade to
-    * [[minusTombstones]] — staleness costs the positional fast
-    * path, never rows. Row-identical to the key mask by
-    * construction (the DV was built from the same tombstone set
-    * against the same files). */
+    * Overlay discipline: no sidecar, a version mismatch, or a
+    * vanished mask dir all degrade to [[minusTombstones]] —
+    * staleness costs the positional fast path, never rows.
+    * Row-identical to the key mask by construction (the DV was built
+    * from the same tombstone set against the same files). */
   def readManifestedMasked(spark: SparkSession, path: String,
       tombPath: String, keyCol: String): DataFrame = {
     val tombE = readTombstonesWithEpochs(spark, tombPath)
@@ -2852,25 +2757,18 @@ object Tables {
     fs.listStatus(dir).toSeq.filter(_.isFile)
       .map(_.getPath).sortBy(_.getName).map { f =>
         val name = f.getName
-        def parse(p: String, tomb: String, key: String, asOf: String,
-                  roots: String, layout: String): String = {
-          def opt(s: String) = if (s == "-") None else Some(s)
-          require(layout == "manifested" || layout == "bucketed",
-            s"live-SQL registry entry $f names unknown layout " +
-              s"'$layout'")
-          graft.plans.LiveArchives.register(spark, name,
-            graft.plans.LiveArchives.LiveReg(p, opt(tomb), opt(key),
-              opt(asOf).map(_.toLong),
-              if (roots == "-") Nil else roots.split("\t").toSeq,
-              bucketed = layout == "bucketed"))
-          name
-        }
         readSmallFile(fs, f).split("\n", -1) match {
           case Array(p, tomb, key, asOf, roots, layout) =>
-            parse(p, tomb, key, asOf, roots, layout)
-          // legacy 5-line entries predate the layout field
-          case Array(p, tomb, key, asOf, roots) =>
-            parse(p, tomb, key, asOf, roots, "manifested")
+            def opt(s: String) = if (s == "-") None else Some(s)
+            require(layout == "manifested" || layout == "bucketed",
+              s"live-SQL registry entry $f names unknown layout " +
+                s"'$layout'")
+            graft.plans.LiveArchives.register(spark, name,
+              graft.plans.LiveArchives.LiveReg(p, opt(tomb), opt(key),
+                opt(asOf).map(_.toLong),
+                if (roots == "-") Nil else roots.split("\t").toSeq,
+                bucketed = layout == "bucketed"))
+            name
           case other => throw new IllegalStateException(
             s"garbled live-SQL registry entry at $f " +
               s"(${other.length} lines) — delete it and re-register")
@@ -2948,8 +2846,9 @@ object Tables {
     * alone has no sound merge (max underestimates disjoint key
     * ranges by the partition count; sum overestimates shared ones),
     * and a merged-ndv error feeds straight into CBO's join
-    * cardinalities. Absent on legacy sidecar lines → the merge
-    * falls back to max (conservative for broadcasts). */
+    * cardinalities. Absent when the partition holds no non-null
+    * value → the merge falls back to max (conservative for
+    * broadcasts). */
   private[graft] case class ColStat(ndv: Long, nulls: Long,
       min: Option[String], max: Option[String],
       avgLen: Long, maxLen: Long,
@@ -3155,7 +3054,7 @@ object Tables {
       val cols = colBlob.split(";").filter(_.nonEmpty).map { cb =>
         val f = cb.split("\\|", 11)
         val hist =
-          if (f.length < 8 || f(7).isEmpty) None
+          if (f(7).isEmpty) None
           else f(7).split("~", 2) match {
             case Array(h, bz) => Some((h.toDouble,
               bz.split(",").toSeq.filter(_.nonEmpty).map { b =>
@@ -3166,10 +3065,8 @@ object Tables {
           }
         f(0) -> ColStat(f(1).toLong, f(2).toLong,
           Some(f(3)).filter(_.nonEmpty), Some(f(4)).filter(_.nonEmpty),
-          f(5).toLong, f(6).toLong, hist,
-          if (f.length > 8) Some(f(8)).filter(_.nonEmpty) else None,
-          if (f.length > 9) Some(f(9)).filter(_.nonEmpty) else None,
-          if (f.length > 10) Some(f(10)).filter(_.nonEmpty) else None)
+          f(5).toLong, f(6).toLong, hist, Some(f(8)).filter(_.nonEmpty),
+          Some(f(9)).filter(_.nonEmpty), Some(f(10)).filter(_.nonEmpty))
       }.toMap
       part -> PartStats(rows.toLong, bytes.toLong, cols)
     }.toMap
@@ -3239,10 +3136,9 @@ object Tables {
       v: Long, liveParts: Map[String, String], freshDir: String,
       partCols: Seq[String], combine: Boolean = false): Unit =
   // best-effort BY CONTRACT: the manifest commit has already
-  // succeeded when this runs, so a stats failure (a non-finite bound
-  // a legacy line slipped past widen's guard, a transient FS error)
-  // must degrade to "this version has no estimate" — never fail a
-  // commit that actually landed
+  // succeeded when this runs, so a stats failure (a non-finite
+  // bound, a transient FS error) must degrade to "this version has
+  // no estimate" — never fail a commit that actually landed
   try {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = fsFor(spark, root)
@@ -3281,8 +3177,8 @@ object Tables {
     * partition (an append's carried + fresh halves): counts sum,
     * bounds widen, histograms mass-merge, avg lengths row-weight,
     * and ndv unions exactly via the HLL sketches when both sides
-    * carry one (falling back to max — conservative — when either is
-    * a legacy line). A column present on only one side has no sound
+    * carry one (falling back to max — conservative — when either side
+    * has none). A column present on only one side has no sound
     * merge and is dropped from the line. */
   private def mergePartStats(a: PartStats, b: PartStats): PartStats = {
     val cols = (a.cols.keySet intersect b.cols.keySet).map { c =>
@@ -3565,9 +3461,7 @@ object Tables {
       delCovered: Long, archCovered: Long, version: Long)
 
   /** The current deletion-vector sidecar pointer, or None if never
-    * built / dropped by a retirement. Pre-versioned pointers (no
-    * manifest version recorded) read as version -1: never current,
-    * so every consumer degrades to its scan/key-join fallback. */
+    * built / dropped by a retirement. */
   def deletionVectors(spark: SparkSession, path: String)
       : Option[DvPointer] = {
     val ptr = dvPtrPath(path)
@@ -3576,8 +3470,6 @@ object Tables {
     else readSmallFile(fs, ptr).split("\n") match {
       case Array(dir, i, d, a, v) =>
         Some(DvPointer(dir, i.toLong, d.toLong, a.toLong, v.toLong))
-      case Array(dir, i, d, a) =>
-        Some(DvPointer(dir, i.toLong, d.toLong, a.toLong, -1L))
       case other => throw new IllegalStateException(
         s"garbled deletion-vector pointer at $ptr (${other.length} " +
           "lines) — delete it and re-run computeDeletionVectors")
@@ -3601,21 +3493,18 @@ object Tables {
   // applies, so the positional machinery extends here. One
   // difference: a bucketed archive has no manifest version to stamp
   // coverage with — epoch ingests replace partition subtrees INSIDE
-  // the current version dir — so the pointer records a DIGEST of the
-  // live file listing instead. Any file change (epoch ingest, replay,
-  // fold, evolution rewrite) changes the digest and the masked read
-  // degrades to the key mask: staleness costs the positional fast
-  // path, never rows. Every part file is uniquely named (UUID per
-  // write job), so same-name replacement cannot fool the digest.
+  // the current version dir — so the pointer records the archive's
+  // COMMIT SEQUENCE instead (the protocol below). Any live-tree
+  // mutation (epoch ingest, replay, fold, evolution rewrite) bumps
+  // the seq and the masked read degrades to the key mask: staleness
+  // costs the positional fast path, never rows.
 
   private def bucketedDvPtrPath(path: String) =
     new org.apache.hadoop.fs.Path(path.stripSuffix("/") + "/_dvb_ptr")
 
   // ---------- Bucketed mutation protocol (O(1) coverage stamp) ----------
-  // The DV coverage stamp was a digest of the full recursive
-  // live-file listing — O(data files) at PLAN time on EVERY masked
-  // read once a pointer exists. The protocol replaces that walk with
-  // root-level metadata, read in ONE small listing:
+  // The DV coverage stamp is root-level metadata, read in ONE small
+  // listing — never a walk of the data tree:
   //  * `_dvbseq-%019d` markers: a monotonic COMMIT SEQUENCE, bumped
   //    via [[publishExclusive]] (two concurrent mutators can never
   //    share a number — the lost-increment of a rewritten counter
@@ -3631,8 +3520,7 @@ object Tables {
   // degrade to the key mask (safe, never wrong rows) until
   // [[sweepBucketedScratch]] clears markers older than the sidecar
   // grace AND bumps the seq for them (their tree changes may have
-  // landed without one). Legacy pointers carrying a listing digest
-  // keep validating by digest until their next rebuild.
+  // landed without one).
 
   private def dvbSeqMarker(root: org.apache.hadoop.fs.Path, v: Long) =
     new org.apache.hadoop.fs.Path(root, f"_dvbseq-$v%019d")
@@ -3662,12 +3550,8 @@ object Tables {
     while (attempts < 10000) {
       attempts += 1
       val (cur, _) = bucketedRootState(spark, path)
-      val tmp = new org.apache.hadoop.fs.Path(root,
-        s"._dvbseq_tmp_${java.util.UUID.randomUUID.toString.take(8)}")
-      val out = fs.create(tmp, true)
-      try out.write((cur + 1).toString.getBytes("UTF-8"))
-      finally out.close()
-      if (publishExclusive(fs, tmp, dvbSeqMarker(root, cur + 1))) {
+      if (publishExclusive(fs, dvbSeqMarker(root, cur + 1),
+          (cur + 1).toString)) {
         if (cur > 0L) fs.delete(dvbSeqMarker(root, cur), false)
         return
       }
@@ -3701,39 +3585,11 @@ object Tables {
     ()
   }
 
-  /** Digest of a bucketed archive's live file listing — the LEGACY
-    * coverage stamp (superseded by the commit-seq protocol; still
-    * the fallback stamp for a build that observed a mutation in
-    * flight, and the validator for pointers written before the
-    * protocol). One recursive listing; md5 over the sorted paths
-    * RELATIVE to the live dir, so the digest is location-independent
-    * — a builder and a reader reaching the archive via different
-    * path prefixes/mounts still agree. */
-  private[graft] def bucketedLiveDigest(spark: SparkSession,
-                                        path: String): String = {
-    val liveDir = new org.apache.hadoop.fs.Path(
-      bucketedLiveDir(spark, path))
-    val fs = fsFor(spark, liveDir)
-    val base = liveDir.toUri.getPath.stripSuffix("/") + "/"
-    def walk(d: org.apache.hadoop.fs.Path): Seq[String] =
-      fs.listStatus(d).toSeq.flatMap { st =>
-        val n = st.getPath.getName
-        if (st.isDirectory && !n.startsWith(".") && !n.startsWith("_"))
-          walk(st.getPath)
-        else if (st.isFile && !n.startsWith(".") && !n.startsWith("_"))
-          Seq(st.getPath.toUri.getPath.stripPrefix(base))
-        else Nil
-      }
-    val md = java.security.MessageDigest.getInstance("MD5")
-    walk(liveDir).sorted.foreach(p => md.update((p + "\n").getBytes("UTF-8")))
-    md.digest().map("%02x".format(_)).mkString
-  }
-
   /** A bucketed deletion-vector pointer: the mask dir, the tombstone
-    * lane maxes it covers, and the live-file digest it was computed
-    * against. */
+    * lane maxes it covers, and the commit seq it was computed
+    * against (stored as `seq:<n>`). */
   final case class BucketedDvPointer(dir: String, insCovered: Long,
-      delCovered: Long, digest: String)
+      delCovered: Long, seq: Long)
 
   /** The current bucketed deletion-vector pointer, or None. */
   def bucketedDeletionVectors(spark: SparkSession, path: String)
@@ -3742,8 +3598,9 @@ object Tables {
     val fs = fsFor(spark, ptr)
     if (!fs.exists(ptr)) None
     else readSmallFile(fs, ptr).split("\n") match {
-      case Array(dir, i, d, g) =>
-        Some(BucketedDvPointer(dir, i.toLong, d.toLong, g))
+      case Array(dir, i, d, g) if g.startsWith("seq:") =>
+        Some(BucketedDvPointer(dir, i.toLong, d.toLong,
+          g.stripPrefix("seq:").toLong))
       case other => throw new IllegalStateException(
         s"garbled bucketed deletion-vector pointer at $ptr " +
           s"(${other.length} lines) — delete it and re-run " +
@@ -3758,7 +3615,13 @@ object Tables {
     * [[readBucketedArchiveMasked]] between the delete and the next
     * fold stays on the positional fast path. Same overlay
     * discipline: fresh uniquely-named dir, pointer flips last,
-    * superseded dirs retained until [[sweepBucketedScratch]]. */
+    * superseded dirs retained until [[sweepBucketedScratch]]. The
+    * pointer publishes only when the build's whole window is QUIET
+    * (no in-flight mutation and an unmoved commit seq, probed before
+    * and after the scan — a mutation whose start-bump predates the
+    * window would leave its in-flight marker visible at one of the
+    * two probes); otherwise the previous pointer stays, and its
+    * older seq already fails the masked read's currency check. */
   def computeBucketedDeletionVectors(spark: SparkSession, path: String,
       tombPath: String, keyCol: String): Long =
     readTombstones(spark, tombPath, keyCol) match {
@@ -3767,14 +3630,7 @@ object Tables {
         val (insTombMax, delTombMax) =
           readTombstonesWithEpochs(spark, tombPath)
             .map(laneMaxes).getOrElse((-1L, -1L))
-        // coverage stamp: the commit seq when the build's whole
-        // window is QUIET (checked before and after the scan — a
-        // mutation whose start-bump predates the window would leave
-        // its in-flight marker visible at one of the two probes);
-        // otherwise fall back to the pre-scan listing digest, which
-        // self-validates against whatever tree the mutation leaves
         val (seq0, busy0) = bucketedRootState(spark, path)
-        val digest = bucketedLiveDigest(spark, path)
         val dv = readBucketedArchive(spark, path)
           .select(col(keyCol),
             col("_metadata.file_path").as("file"),
@@ -3789,15 +3645,13 @@ object Tables {
         // already hash-partitioned the mask by file
         dv.write.mode(SaveMode.Overwrite).parquet(dir)
         val (seq1, busy1) = bucketedRootState(spark, path)
-        val stamp =
-          if (!busy0 && !busy1 && seq0 == seq1) s"seq:$seq0"
-          else digest
-        val ptr = bucketedDvPtrPath(path)
-        val fs = fsFor(spark, ptr)
-        val out = fs.create(ptr, true)
-        try out.write(s"$dir\n$insTombMax\n$delTombMax\n$stamp"
-          .getBytes("UTF-8"))
-        finally out.close()
+        if (!busy0 && !busy1 && seq0 == seq1) {
+          val ptr = bucketedDvPtrPath(path)
+          val out = fsFor(spark, ptr).create(ptr, true)
+          try out.write(s"$dir\n$insTombMax\n$delTombMax\nseq:$seq0"
+            .getBytes("UTF-8"))
+          finally out.close()
+        }
         spark.read.parquet(dir).count()
     }
 
@@ -3819,11 +3673,8 @@ object Tables {
     def keyMasked = minusTombstones(
       readBucketedArchive(spark, path), tombPath, keyCol)
     val dvOpt = bucketedDeletionVectors(spark, path).filter { p =>
-      if (p.digest.startsWith("seq:")) {
-        val (seq, busy) = bucketedRootState(spark, path)
-        !busy && p.digest == s"seq:$seq"
-      } else // pre-protocol pointer: validate by listing digest
-        p.digest == bucketedLiveDigest(spark, path)
+      val (seq, busy) = bucketedRootState(spark, path)
+      !busy && p.seq == seq
     }
     if (dvOpt.isEmpty) return keyMasked
     val dvp = dvOpt.get
@@ -4101,7 +3952,7 @@ object Tables {
     * rule (epochs below high-water fold into the base layer, the
     * newest epoch — still crash-replayable — keeps its own value;
     * tombstones retire EXCEPT keys living in that carried epoch),
-    * rewritten through [[replaceBucketedArchive]]'s staged swap so
+    * rewritten as the next version by [[replaceBucketedArchive]] so
     * the bucket layout survives the fold. The carry decision reads
     * its snapshot BEFORE the rewrite — after it, the tombstoned keys
     * are already masked out of the carried epoch and the carry would
@@ -4346,13 +4197,8 @@ object Tables {
 
   /** The mirror's persisted consumer cursor (ingest-lane epoch,
     * streaming-delete-lane epoch, bucket count). None = never
-    * synced. Legacy single-epoch sidecars read with an empty
-    * delete-lane position when the single value is a sane ingest
-    * epoch, and as never-synced (forcing the managed consumer's
-    * automatic full rebuild) when it was contaminated by a
-    * delete-lane epoch — the single-cursor bug the two-lane format
-    * exists to fix. A garbled sidecar fails loudly — delete it to
-    * force a full re-sync. */
+    * synced. A garbled sidecar fails loudly — delete it to force a
+    * full re-sync. */
   def mirrorCursor(spark: SparkSession, mirrorPath: String)
       : Option[(Long, Long, Int)] = {
     val p = cursorPath(mirrorPath)
@@ -4360,9 +4206,6 @@ object Tables {
     if (!fs.exists(p)) None
     else readSmallFile(fs, p).split("\n") match {
       case Array(e, d, b) => Some((e.toLong, d.toLong, b.toInt))
-      case Array(e, b) if e.toLong < DeleteEpochBase =>
-        Some((e.toLong, -1L, b.toInt))
-      case Array(_, _) => None // contaminated legacy cursor: rebuild
       case other => throw new IllegalStateException(
         s"garbled mirror cursor at $p (${other.length} lines) — delete " +
           "it to force a full re-sync")
@@ -4660,14 +4503,6 @@ object Tables {
     }
     mirrorCursor(spark, aggPath) match {
       case None => fullBuild("full", -1L)
-      case Some(_) if manifestExists(spark, aggPath) &&
-          !readManifested(spark, aggPath).columns.contains("_asof_del") =>
-        // legacy aggregate built before the two-lane feed: it has no
-        // `_asof_del` column, so neither the cursor repair below nor
-        // the delta merge can resolve against it — rebuild once (the
-        // upsert rewrites every bucket, adding the column); later
-        // syncs are incremental again
-        fullBuild("upgrade", -1L)
       case Some((cursor0, delCursor0, b)) =>
         require(b == buckets,
           s"aggregate at $aggPath was built with $b buckets, sync asked " +

@@ -592,7 +592,7 @@ object Curation {
     if (maxE <= 0L) return -1L
     // label epochs are UPDATES: the fold materializes latest-per-doc
     // (exchange-free off the doc_id-bucketed scan) as the sole base
-    // layer, through the staged swap that preserves the bucket layout
+    // layer, as the next version (the rewrite keeps the bucket layout)
     val current = arch
       .groupBy(col("doc_id"))
       .agg(max_by(col("label"), col("ingest_epoch")).as("label"))
@@ -759,7 +759,7 @@ object Curation {
       relabeled.withColumn("ingest_epoch", lit(epoch)),
       s"$idx/labels", epoch)
     // deletion-vector build at DELETE time, after the repair commit
-    // (the digest must stamp the post-commit file set) — for the
+    // (the seq stamp must cover the post-commit file set) — for the
     // LABELS archive only: readClusterLabels is the steady-state hot
     // consumer between deletes and folds, so its mask must stay
     // positional instead of growing a key anti-join build side with
@@ -814,7 +814,7 @@ object Curation {
     val labels = s"$idx/labels"
     // labels: latest-per-doc minus tombstones becomes the base layer
     // (aggregate exchange-free off the doc_id-bucketed scan; the
-    // staged-swap rewrite preserves the bucket layout)
+    // versioned rewrite preserves the bucket layout)
     val current = Tables.minusTombstones(
         Tables.readBucketedArchive(s, labels)
           .groupBy(col("doc_id"))
@@ -824,9 +824,8 @@ object Curation {
     Tables.replaceBucketedArchive(current, labels)
     // postings + sizes: fold epochs below high-water into the base,
     // carry the newest, subtract tombstones physically. The bucketed
-    // postings fold through the staged-swap rewrite (which preserves
-    // the bucket layout); the manifested sizes fold behind the
-    // pointer as before.
+    // postings fold as the next version (which preserves the bucket
+    // layout); the manifested sizes fold behind the pointer.
     def foldEpochs(path: String, read: => DataFrame,
                    rewrite: DataFrame => Unit): Long = {
       val arch = read

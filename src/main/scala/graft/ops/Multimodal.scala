@@ -1268,20 +1268,6 @@ object Multimodal {
           s"$idx/tombstones", "doc_id")
         .select(col("doc_id"), col("afp")))
 
-  /** Epoch fold + physical delete for the audio archive — the shared
-    * [[graft.io.Tables.foldManifestedEpochs]] carry rule. */
-  private[graft] def compactAudioFpEpochs(s: SparkSession,
-                                          idx: String): Long =
-    Tables.foldManifestedEpochs(s, s"$idx/hashes",
-      s"$idx/tombstones", "doc_id")
-
-  /** Same fold for the pHash archive (its ingest/delete legs landed
-    * round 8; this closes the fold leg with the shared rule). */
-  private[graft] def compactPhashEpochs(s: SparkSession,
-                                        idx: String): Long =
-    Tables.foldManifestedEpochs(s, s"$idx/hashes",
-      s"$idx/tombstones", "doc_id")
-
   private val afpIdxMemo =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 

@@ -714,17 +714,15 @@ object ScaleOps {
     * partition directories of the CURRENT version, `versions` counts
     * retained version dirs (the versioned fold keeps superseded
     * versions for concurrent readers), and dead mass is every
-    * non-current version dir plus any legacy crashed-swap scratch
-    * (`.fold_tmp` / `.fold_old`) — all reclaimed by
+    * non-current version dir — reclaimed by
     * [[graft.io.Tables.sweepBucketedScratch]], the layout's vacuum
     * verb. */
   private[graft] def bucketedArchiveHealth(s: SparkSession, store: String,
       path: String, tombPath: String, keyCol: String): ArchiveHealth = {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val cur = Tables.bucketedCurrentVersion(s, path)
-    val liveDir = cur.fold(root)(v => new org.apache.hadoop.fs.Path(
-      Tables.bucketedVersionDir(path, v)))
+    val liveDir = new org.apache.hadoop.fs.Path(
+      Tables.bucketedLiveDir(s, path))
     val nEpochs = fs.listStatus(liveDir).count(st =>
       st.isDirectory && st.getPath.getName.startsWith("ingest_epoch="))
     val live = Tables.minusTombstones(
@@ -733,11 +731,7 @@ object ScaleOps {
       .map(_.count()).getOrElse(0L)
     val vdirs = fs.listStatus(root).toSeq.filter(st =>
       st.isDirectory && st.getPath.getName.matches("v\\d+"))
-    val deadVersions = cur.fold(Seq.empty[org.apache.hadoop.fs.Path])(c =>
-      vdirs.filter(_.getPath.getName != s"v$c").map(_.getPath))
-    val scratch = Seq(path + ".fold_tmp", path + ".fold_old")
-      .map(new org.apache.hadoop.fs.Path(_)).filter(fs.exists)
-    val dead = deadVersions ++ scratch
+    val dead = vdirs.map(_.getPath).filter(_.getName != liveDir.getName)
     ArchiveHealth(store, nEpochs, live, nTomb,
       math.max(1, vdirs.size), dead.size,
       dead.map(p => fs.getContentSummary(p).getLength).sum)
@@ -1655,7 +1649,7 @@ object ScaleOps {
     * everything-but-the-tenth oracle only if the positional mask
     * drops exactly the tombstoned rows across both epochs' files.
     * BucketedDvSpec pins the mechanics: covered steady-state plan
-    * free of LeftAnti, digest staleness (epoch ingest, fold)
+    * free of LeftAnti, commit-seq staleness (epoch ingest, fold)
     * degrading to the key mask, fresh-tombstone overlay, vacuum
     * sweep. */
   def qDvBucketed(s: SparkSession, dir: String): DataFrame = {

@@ -2354,12 +2354,8 @@ object Similarity {
     val root = new org.apache.hadoop.fs.Path(iroot)
     val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
     if (!fs.exists(root)) fs.mkdirs(root)
-    val tmp = new org.apache.hadoop.fs.Path(root,
-      s"._ptr_tmp_${java.util.UUID.randomUUID.toString.take(8)}")
-    val out = fs.create(tmp, true)
-    try out.write(target.getBytes("UTF-8")) finally out.close()
-    if (!Tables.publishExclusive(fs, tmp,
-        new org.apache.hadoop.fs.Path(root, indexPtrName(ptrVersion))))
+    if (!Tables.publishExclusive(fs,
+        new org.apache.hadoop.fs.Path(root, indexPtrName(ptrVersion)), target))
       throw new Tables.ManifestConflictException(iroot, ptrVersion)
   }
 

@@ -760,9 +760,10 @@ object TextOps {
     * ([[graft.io.Tables.minusTombstones]]): a batch doc whose only
     * near-dup was deleted reads clean, without a single archive file
     * being rewritten. Physical removal is the compaction's job
-    * ([[compactFingerprintEpochs]] folds the anti-join into the base
-    * layer and retires the tombstones — TombstoneSpec pins
-    * post-fold absence, fold ≡ masked view, and replay idempotence).
+    * ([[graft.io.Tables.foldManifestedEpochs]] folds the anti-join
+    * into the base layer and retires the tombstones — TombstoneSpec
+    * pins post-fold absence, fold ≡ masked view, and replay
+    * idempotence).
     *
     * HASH-gated: the DuckDB oracle recomputes both sides from text
     * with the deleted docs excluded from the corpus CTE — agreement
@@ -832,23 +833,6 @@ object TextOps {
       |LEFT JOIN best ON best.b_id = doc.doc_id
       |WHERE doc.doc_id % 10 = 0
       |ORDER BY doc.doc_id""".stripMargin
-
-  /** Physical tombstone fold for the fingerprint archive: rewrite the
-    * LIVE rows minus tombstones, folding every epoch strictly below
-    * the high-water mark into the base layer ([[graft.ops.Similarity
-    * .compactIndexEpochs]]'s carry rule: the NEWEST epoch keeps its
-    * own value because a foreachBatch crash-replay can still rewrite
-    * exactly that epoch). Tombstones whose keys live in that
-    * carried-through newest epoch stay LIVE — a replay recomputes the
-    * epoch's rows from text, which would silently resurrect a folded
-    * delete; keeping those tombstones masked until the NEXT fold
-    * closes the gap. All other tombstones retire
-    * ([[graft.io.Tables.clearManifested]] — one pointer flip).
-    * Returns the folded high-water epoch, -1 for a no-op. */
-  private[graft] def compactFingerprintEpochs(s: SparkSession,
-                                            idx: String): Long =
-    Tables.foldManifestedEpochs(s, s"$idx/fingerprints",
-      s"$idx/tombstones", "doc_id")
 
   val qWinnowIncrementalOracle: String =
     """WITH d AS (SELECT doc_id, string_split(text,' ') AS ws
@@ -1827,9 +1811,10 @@ object TextOps {
     * layer. The NEWEST epoch carries through unchanged (a foreachBatch
     * crash-replay can still rewrite exactly that epoch) and tombstones
     * for its keys stay LIVE until the next fold — the same carry rule
-    * as [[compactFingerprintEpochs]] / [[graft.ops.Similarity
-    * .compactIndexEpochs]]. Retrieval results are invariant across the
-    * fold (TokenIndexSpec pins masked-view ≡ post-fold ranking).
+    * as [[graft.io.Tables.foldManifestedEpochs]] /
+    * [[graft.ops.Similarity.compactIndexEpochs]]. Retrieval results
+    * are invariant across the fold (TokenIndexSpec pins masked-view ≡
+    * post-fold ranking).
     * Returns the folded high-water epoch, -1 for a no-op. */
   private[graft] def compactTokenIndexEpochs(s: SparkSession,
                                              idx: String): Long = {
@@ -1847,8 +1832,8 @@ object TextOps {
     val pre = Tables.readManifested(s, s"$idx/doclen")
     def foldedEpoch = when(col("ingest_epoch") < maxE, lit(0L))
       .otherwise(col("ingest_epoch"))
-    // bucketed postings fold through the staged-swap rewrite (layout
-    // preserved); manifested doclen folds behind the pointer
+    // bucketed postings fold as the next version (layout preserved);
+    // manifested doclen folds behind the pointer
     Tables.replaceBucketedArchive(
       Tables.minusTombstones(
           Tables.readBucketedArchive(s, s"$idx/postings"),

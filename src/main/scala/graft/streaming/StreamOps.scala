@@ -503,7 +503,7 @@ object StreamOps {
     * build layer's epoch 0). Replay contract as everywhere: decode is
     * deterministic, so a crashed epoch recommits identical rows. With
     * [[runDeleteStream]] on the same archive and
-    * [[graft.ops.Multimodal.compactAudioFpEpochs]]'s fold, the audio
+    * [[graft.io.Tables.foldManifestedEpochs]]'s fold, the audio
     * modality has the same ingest/delete/probe triangle as text
     * fingerprints and image hashes. */
   def runAudioFpIngest(docs: DataFrame, idx: String,
@@ -873,7 +873,7 @@ object StreamOps {
     * single-writer-per-window contract every fold documents, as a
     * MECHANISM — two concurrently-scheduled windows on the same root
     * are loud (the second throws, naming the holder) instead of
-    * racing staged swaps; a scheduler retrying its own crashed
+    * racing their folds; a scheduler retrying its own crashed
     * window re-enters under its stable `holderId`; a single
     * scheduler sees zero behavior change (claim, sweep, release). */
   private def withWindowLease[T](s: SparkSession, root: String,
@@ -898,25 +898,29 @@ object StreamOps {
     * when RTBF requests arrived since the last window (see
     * [[runFrontDoorDeletes]]); and [[graft.io.Tables
     * .vacuumManifested]] of the POSTINGS archives, which are
-    * bucketed (their fold's staged swap reclaims superseded copies
-    * itself). StreamOpsSpec pins: every read view byte-identical
-    * across the sweep, every store's version/dead-dir counters
-    * reset, epoch layers collapsed. */
+    * bucketed (their folds retain superseded version dirs, which
+    * this window reclaims with [[graft.io.Tables
+    * .sweepBucketedScratch]]). StreamOpsSpec pins: every read view
+    * byte-identical across the sweep, every store's version/dead-dir
+    * counters reset, epoch layers collapsed. */
   def runMaintenanceWindow(s: SparkSession, root: String,
       holderId: String = java.util.UUID.randomUUID.toString): DataFrame =
       withWindowLease(s, root, holderId) {
     import s.implicits._
     foldCorpusTombstones(s, s"$root/corpus")
     if (Tables.manifestExists(s, s"$root/winnow/fingerprints"))
-      graft.ops.TextOps.compactFingerprintEpochs(s, s"$root/winnow")
+      Tables.foldManifestedEpochs(s, s"$root/winnow/fingerprints",
+        s"$root/winnow/tombstones", "doc_id")
     if (Tables.bucketedArchiveExists(s, s"$root/clusters/labels"))
       graft.ops.Curation.compactClusterArchive(s, s"$root/clusters")
     if (Tables.bucketedArchiveExists(s, s"$root/tokens/postings"))
       graft.ops.TextOps.compactTokenIndexEpochs(s, s"$root/tokens")
     if (Tables.manifestExists(s, s"$root/phash/hashes"))
-      graft.ops.Multimodal.compactPhashEpochs(s, s"$root/phash")
+      Tables.foldManifestedEpochs(s, s"$root/phash/hashes",
+        s"$root/phash/tombstones", "doc_id")
     if (Tables.manifestExists(s, s"$root/audio/hashes"))
-      graft.ops.Multimodal.compactAudioFpEpochs(s, s"$root/audio")
+      Tables.foldManifestedEpochs(s, s"$root/audio/hashes",
+        s"$root/audio/tombstones", "doc_id")
     val stores = Seq(
       "winnow" -> s"$root/winnow/fingerprints",
       "cluster_sizes" -> s"$root/clusters/sizes",
@@ -991,7 +995,8 @@ object StreamOps {
     val groups = Seq(
       ("winnow", s"$root/winnow/fingerprints", s"$root/winnow/tombstones",
         false, () => {
-          graft.ops.TextOps.compactFingerprintEpochs(s, s"$root/winnow"); ()
+          Tables.foldManifestedEpochs(s, s"$root/winnow/fingerprints",
+            s"$root/winnow/tombstones", "doc_id"); ()
         }, Nil),
       ("clusters", s"$root/clusters/labels", s"$root/clusters/tombstones",
         true, () => graft.ops.Curation.compactClusterArchive(
@@ -1003,11 +1008,13 @@ object StreamOps {
         }, Seq(s"$root/tokens/doclen")),
       ("phash", s"$root/phash/hashes", s"$root/phash/tombstones",
         false, () => {
-          graft.ops.Multimodal.compactPhashEpochs(s, s"$root/phash"); ()
+          Tables.foldManifestedEpochs(s, s"$root/phash/hashes",
+            s"$root/phash/tombstones", "doc_id"); ()
         }, Nil),
       ("audio", s"$root/audio/hashes", s"$root/audio/tombstones",
         false, () => {
-          graft.ops.Multimodal.compactAudioFpEpochs(s, s"$root/audio"); ()
+          Tables.foldManifestedEpochs(s, s"$root/audio/hashes",
+            s"$root/audio/tombstones", "doc_id"); ()
         }, Nil))
     val rows = groups.flatMap {
       case (name, path, tomb, bucketed, fold, secondaries) =>
@@ -1028,9 +1035,8 @@ object StreamOps {
         // vacuum: manifested stores reclaim superseded manifest
         // versions; bucketed stores reclaim superseded/crashed
         // version dirs (the versioned fold retains them for
-        // concurrent readers) plus legacy swap scratch — without the
-        // sweep the vacuum_due flag stays latched and every window
-        // re-acts
+        // concurrent readers) — without the sweep the vacuum_due flag
+        // stays latched and every window re-acts
         if (vacDue) {
           if (bucketed) Tables.sweepBucketedScratch(s, path)
           else Tables.vacuumManifested(s, path)

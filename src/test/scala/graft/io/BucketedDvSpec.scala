@@ -20,12 +20,11 @@ import graft.SparkSpec
   *    key-masked on top (correctness first), and the plan shows the
   *    anti-join again;
   *  - STALENESS: ANY live-tree mutation — an epoch ingest, a fold's
-  *    staged swap — bumps the commit seq (or, mid-mutation, shows an
+  *    version flip — bumps the commit seq (or, mid-mutation, shows an
   *    in-flight marker) and the masked read degrades to the key mask
   *    (staleness costs the fast path, never rows); a rebuild
   *    restores it. The check is ONE root listing — O(metadata),
-  *    never the recursive data-tree walk the legacy digest paid;
-  *    pre-protocol digest pointers keep validating by digest;
+  *    never a recursive data-tree walk;
   *  - VACUUM: superseded `_dvb` dirs are retained until
   *    [[Tables.sweepBucketedScratch]], which keeps exactly the
   *    current pointer's dir.
@@ -105,16 +104,16 @@ class BucketedDvSpec extends SparkSpec {
     assert(!hasLeftAnti(
       Tables.readBucketedArchiveMasked(spark, p, tomb, "k")))
     // an epoch ingest changes files WITHOUT touching tombstones: the
-    // digest no longer matches and the positions may be wrong — the
-    // read must fall back to the key mask
+    // commit seq moves and the positions may be wrong — the read
+    // must fall back to the key mask
     Tables.ingestBucketedArchive(
       Seq((500L, "d500", 0L)).toDF("k", "body", "grp"), p, epoch = 2L)
     val afterIngest = Tables.readBucketedArchiveMasked(spark, p, tomb, "k")
     assert(cnt(afterIngest) === 499L,
       "post-ingest masked read must stay correct")
     assert(hasLeftAnti(afterIngest),
-      "a stale digest must degrade to the key mask")
-    // rebuild: fast path again, and the fold's staged swap degrades
+      "a stale seq stamp must degrade to the key mask")
+    // rebuild: fast path again, and the fold's version flip degrades
     // it once more across the version boundary
     Tables.computeBucketedDeletionVectors(spark, p, tomb, "k")
     assert(!hasLeftAnti(
@@ -128,17 +127,14 @@ class BucketedDvSpec extends SparkSpec {
   }
 
   test("commit-seq protocol: a quiet build stamps the O(1) seq form; " +
-    "an in-flight mutation marker degrades the read; a legacy " +
-    "digest pointer keeps validating") {
+    "an in-flight mutation marker degrades the read") {
     val (p, tomb) = mkFixture("seq")
     Tables.ingestTombstones(Seq(4L).toDF("k"), tomb,
       Tables.DeleteEpochBase)
     Tables.computeBucketedDeletionVectors(spark, p, tomb, "k")
     val ptr = Tables.bucketedDeletionVectors(spark, p).get
-    assert(ptr.digest.startsWith("seq:"),
-      s"a quiet-window build must stamp the commit seq, got " +
-        s"'${ptr.digest}' — the legacy digest re-walks the data " +
-        "tree on every masked read")
+    assert(ptr.seq === Tables.bucketedRootState(spark, p)._1,
+      s"a quiet-window build must stamp the current commit seq: $ptr")
     assert(!hasLeftAnti(
       Tables.readBucketedArchiveMasked(spark, p, tomb, "k")))
     // a mutation IN FLIGHT (marker present, seq not yet bumped) must
@@ -154,16 +150,15 @@ class BucketedDvSpec extends SparkSpec {
     assert(!hasLeftAnti(
       Tables.readBucketedArchiveMasked(spark, p, tomb, "k")),
       "clearing the marker must restore the fast path")
-    // a PRE-PROTOCOL pointer (listing digest in the stamp field)
-    // still validates — old archives fast-path until their rebuild
-    val ptrPath = new org.apache.hadoop.fs.Path(p + "/_dvb_ptr")
-    val legacy = s"${ptr.dir}\n${ptr.insCovered}\n${ptr.delCovered}\n" +
-      Tables.bucketedLiveDigest(spark, p)
-    val out = fs.create(ptrPath, true)
-    try out.write(legacy.getBytes("UTF-8")) finally out.close()
-    val viaDigest = Tables.readBucketedArchiveMasked(spark, p, tomb, "k")
-    assert(!hasLeftAnti(viaDigest) && cnt(viaDigest) === 499L,
-      "a legacy digest pointer must keep serving the fast path")
+    // a build whose window is NOT quiet publishes no pointer: the
+    // previous one stays, and its older seq no longer validates
+    fs.create(marker, true).close()
+    Tables.ingestTombstones(Seq(6L).toDF("k"), tomb,
+      Tables.DeleteEpochBase + 1L)
+    Tables.computeBucketedDeletionVectors(spark, p, tomb, "k")
+    assert(Tables.bucketedDeletionVectors(spark, p).get === ptr,
+      "a build over an in-flight mutation must not publish a pointer")
+    fs.delete(marker, false)
   }
 
   test("vacuum: superseded _dvb dirs retained until the sweep, which " +

@@ -324,4 +324,23 @@ class DeleteVectorSpec extends SparkSpec {
         "vacuum reclaimed the LIVE mask dir")
     } finally spark.conf.set("spark.sql.adaptive.enabled", restore)
   }
+
+  test("a deletion-vector pointer in the removed 4-line form (no " +
+    "manifest version) fails loudly as garbled") {
+    val root = java.nio.file.Files
+      .createTempDirectory("graft-dv-ptr4").toString
+    try {
+      val p = s"$root/arch"
+      new java.io.File(p).mkdirs()
+      val out = new java.io.FileOutputStream(s"$p/_dv_ptr")
+      out.write(s"$root/_dv/x\n-1\n1000000\n0".getBytes("UTF-8"))
+      out.close()
+      val ex = intercept[IllegalStateException] {
+        Tables.deletionVectors(spark, p)
+      }
+      assert(ex.getMessage.contains("garbled deletion-vector pointer"),
+        s"4-line pointer error not actionable: ${ex.getMessage}")
+    } finally
+      org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(root))
+  }
 }

@@ -128,7 +128,7 @@ class IncrAggSpec extends SparkSpec {
     val fs = cur.getFileSystem(spark.sparkContext.hadoopConfiguration)
     def rewindCursor(e: Long): Unit = {
       val out = fs.create(cur, true)
-      try out.write(s"$e\n64".getBytes("UTF-8")) finally out.close()
+      try out.write(s"$e\n-1\n64".getBytes("UTF-8")) finally out.close()
     }
     rewindCursor(0L)
     val r4 = sync()
@@ -204,47 +204,5 @@ class IncrAggSpec extends SparkSpec {
     assert(r2.mode == "resync", s"expected automatic resync, got ${r2.mode}")
     assertAgg(agg, p, tomb, "after resync")
     assert(sync().mode == "noop")
-  }
-
-  test("legacy aggregate (pre-two-lane: no _asof_del column, 2-line " +
-    "cursor) upgrades via ONE automatic full rebuild instead of " +
-    "crashing in cursor repair, then syncs incrementally again") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-incragg-legacy").toString
-    val p = s"$root/arch"
-    val tomb = s"$root/arch_tombstones"
-    val agg = s"$root/agg"
-    def sync() = Tables.syncAggregate(spark, p, tomb, "doc_id",
-      Seq("lang"), Seq("n_chars"), agg, buckets = 8)
-
-    Tables.writeManifested(
-      docs.withColumn("ingest_epoch", lit(0L)), p, Seq("ingest_epoch"))
-    sync()
-    // devolve the table to its pre-two-lane shape: drop _asof_del
-    // from every bucket and park a sane 2-line `epoch\nbuckets`
-    // cursor — exactly what a real upgrade walks in on
-    Tables.upsertManifested(
-      Tables.readManifested(spark, agg).drop("_asof_del"),
-      agg, Seq("kb"), _ => true)
-    val cursor = new org.apache.hadoop.fs.Path(
-      agg.stripSuffix("/") + ".feed_cursor")
-    val fs = cursor.getFileSystem(
-      spark.sessionState.newHadoopConf())
-    val out = fs.create(cursor, true)
-    try out.write("0\n8".getBytes("UTF-8")) finally out.close()
-
-    val up = sync() // crashed with AnalysisException before the fix
-    assert(up.mode == "upgrade", s"expected upgrade, got ${up.mode}")
-    assert(Tables.readManifested(spark, agg).columns
-      .contains("_asof_del"), "upgrade did not add _asof_del")
-    assertAgg(agg, p, tomb, "after legacy upgrade")
-
-    // and the table is a first-class two-lane consumer again
-    Tables.upsertManifested(
-      docs.limit(5).withColumn("lang", lit("zz-new"))
-        .withColumn("ingest_epoch", lit(1L)),
-      p, Seq("ingest_epoch"), _ == "ingest_epoch=1")
-    assert(sync().mode == "incremental")
-    assertAgg(agg, p, tomb, "incremental after upgrade")
   }
 }

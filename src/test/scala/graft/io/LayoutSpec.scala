@@ -461,7 +461,7 @@ class LayoutSpec extends SparkSpec {
         spark.conf.set("spark.sql.adaptive.enabled", prevA)
       }
 
-      // fold: full rewrite via the staged swap — epochs below the
+      // fold: full rewrite as the next version — epochs below the
       // high-water fold to 0, rows survive, scan stays bucketed
       val folded = Tables.readBucketedArchive(spark, path)
         .withColumn("ingest_epoch", lit(0L))
@@ -844,86 +844,41 @@ class LayoutSpec extends SparkSpec {
     }
   }
 
-  test("legacy (unversioned) bucketed archive: reads and epoch " +
-    "commits keep working in place; the first fold migrates it to " +
-    "the versioned layout") {
+  test("a bucketed root with no committed _bucketv- marker fails " +
+    "loudly, naming the path") {
     import graft.SparkSpec.spark.implicits._
-    val root0 = java.nio.file.Files
-      .createTempDirectory("graft-blegacy").toString
-    val vsrc = s"$root0/vsrc"
-    val path = s"$root0/arch"
-    val fs = new org.apache.hadoop.fs.Path(root0)
+    val root = java.nio.file.Files
+      .createTempDirectory("graft-bnomarker").toString
+    val path = s"$root/arch"
+    val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     try {
-      // construct a genuine LEGACY archive: build versioned, then
-      // move the v1 contents (partition dirs + sidecar) to the root
-      // of a fresh path — data + sidecar at the root, no markers
-      val df = (0L until 300L).map(i => (i, s"k${i % 11}", 0L))
-        .toDF("doc_id", "key", "ingest_epoch")
-      Tables.writeBucketedArchive(df, vsrc, "key", 4)
-      val v1dir = new org.apache.hadoop.fs.Path(
-        Tables.bucketedVersionDir(vsrc, 1L))
-      fs.mkdirs(new org.apache.hadoop.fs.Path(path))
-      fs.listStatus(v1dir).foreach { st =>
-        require(fs.rename(st.getPath, new org.apache.hadoop.fs.Path(
-          path, st.getPath.getName)))
+      Tables.writeBucketedArchive(
+        (0L until 20L).map(i => (i, s"k${i % 3}", 0L))
+          .toDF("doc_id", "key", "ingest_epoch"), path, "key", 4)
+      fs.listStatus(new org.apache.hadoop.fs.Path(path))
+        .filter(_.getPath.getName.startsWith("_bucketv-"))
+        .foreach(st => fs.delete(st.getPath, false))
+      assert(!Tables.bucketedArchiveExists(spark, path))
+      val reads = Seq[() => Any](
+        () => Tables.readBucketedArchive(spark, path),
+        () => Tables.readBucketSpec(spark, path),
+        () => Tables.ingestBucketedArchive(
+          Seq((99L, "k0")).toDF("doc_id", "key"), path, 1L))
+      reads.foreach { f =>
+        val ex = intercept[IllegalStateException](f())
+        assert(ex.getMessage.contains(path) &&
+          ex.getMessage.contains("_bucketv-"),
+          s"marker-less root error must name the path: ${ex.getMessage}")
       }
-      assert(Tables.bucketedCurrentVersion(spark, path).isEmpty,
-        "fixture must be a legacy (marker-less) archive")
-
-      // legacy reads + replace-or-add epoch commits work in place
-      assert(Tables.readBucketedArchive(spark, path).count() == 300L)
-      Tables.ingestBucketedArchive(
-        (1000L until 1050L).map(i => (i, s"k${i % 11}", 1L))
-          .toDF("doc_id", "key", "ingest_epoch"), path, 1L)
-      assert(Tables.readBucketedArchive(spark, path).count() == 350L)
-      assert(fs.exists(new org.apache.hadoop.fs.Path(
-          s"$path/ingest_epoch=1")),
-        "legacy ingest must land in the root-level layout")
-
-      // first fold: migrate to v1 — the legacy root-level data dirs
-      // + sidecar RETAIN (a concurrent reader that resolved the
-      // legacy root keeps a complete snapshot mid-scan; markers
-      // resolve first so versioned readers ignore them), and the
-      // scratch sweep reclaims them after the grace period
-      Tables.foldBucketedEpochs(spark, path, s"$root0/tomb", "doc_id")
-      assert(Tables.bucketedCurrentVersion(spark, path).contains(1L),
-        "fold must migrate a legacy archive to the versioned layout")
-      assert(Tables.readBucketedArchive(spark, path).count() == 350L)
-      assert(fs.exists(new org.apache.hadoop.fs.Path(
-          s"$path/ingest_epoch=0")),
-        "legacy root dirs must retain until the sweep — deleting " +
-          "them at the marker flip breaks mid-scan legacy readers")
-      assert(Tables.sweepBucketedScratch(spark, path) > 0,
-        "sweep must count the reclaimed legacy remnants")
-      assert(!fs.exists(new org.apache.hadoop.fs.Path(
-          s"$path/ingest_epoch=0")) &&
-        !fs.exists(new org.apache.hadoop.fs.Path(
-          s"$path/_graft_bucketspec")),
-        "legacy root-level data/sidecar must be reclaimed by the sweep")
-      assert(Tables.readBucketedArchive(spark, path).count() == 350L)
-      // and the migrated archive keeps ingesting + folding versioned
-      Tables.ingestBucketedArchive(
-        (2000L until 2020L).map(i => (i, s"k${i % 11}", 2L))
-          .toDF("doc_id", "key", "ingest_epoch"), path, 2L)
-      assert(Tables.readBucketedArchive(spark, path).count() == 370L)
-      Tables.foldBucketedEpochs(spark, path, s"$root0/tomb", "doc_id")
-      assert(Tables.bucketedCurrentVersion(spark, path).contains(2L))
-      assert(Tables.readBucketedArchive(spark, path).count() == 370L)
     } finally {
-      spark.sql(s"DROP TABLE IF EXISTS `${Tables.bucketedArchName(path)}`")
-      (1L to 3L).foreach { v =>
-        spark.sql(
-          s"DROP TABLE IF EXISTS `${Tables.bucketedArchName(path, v)}`")
-        spark.sql(
-          s"DROP TABLE IF EXISTS `${Tables.bucketedArchName(vsrc, v)}`")
-      }
-      org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(root0))
+      spark.sql(s"DROP TABLE IF EXISTS `${Tables.bucketedArchName(path, 1L)}`")
+      org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(root))
     }
   }
 
-  test("bucket-spec migration: a legacy 3-line sidecar reads with the " +
-    "historical epoch-only partCols; a garbled one fails loudly") {
+  test("bucket-spec sidecar: a 3-line (pre-partCols) or otherwise " +
+    "garbled sidecar fails loudly") {
     import graft.SparkSpec.spark.implicits._
     val root = java.nio.file.Files
       .createTempDirectory("graft-bspec-mig").toString
@@ -932,10 +887,7 @@ class LayoutSpec extends SparkSpec {
       val df = (0L until 40L).map(i => (i, s"k${i % 7}", 0L))
         .toDF("doc_id", "key", "ingest_epoch")
       Tables.writeBucketedArchive(df, path, "key", 4)
-      // rewrite the sidecar in the PRE-partCols format (key/buckets/
-      // DDL) — what an archive written before the layout change
-      // carries on disk; under the versioned layout the sidecar
-      // lives in the current version dir
+      // the sidecar lives in the current version dir
       val (key, buckets, _, schema) = Tables.readBucketSpec(spark, path)
       val vdir = Tables.bucketedVersionDir(path,
         Tables.bucketedCurrentVersion(spark, path).get)
@@ -945,23 +897,16 @@ class LayoutSpec extends SparkSpec {
         val out = fs.create(sidecar, true)
         try out.write(body.getBytes("UTF-8")) finally out.close()
       }
-      rewrite(s"$key\n$buckets\n${schema.toDDL}")
-      val (k2, b2, pcs2, sch2) = Tables.readBucketSpec(spark, path)
-      assert(k2 == key && b2 == buckets && sch2 == schema,
-        "legacy sidecar did not round-trip key/buckets/schema")
-      assert(pcs2 == Seq("ingest_epoch"),
-        s"legacy sidecar must default to epoch-only partCols, got $pcs2")
-      // a fresh catalog re-registers from the legacy sidecar and reads
-      spark.sql(s"DROP TABLE IF EXISTS `${Tables.bucketedArchName(path, 1L)}`")
-      assert(Tables.readBucketedArchive(spark, path).count() == 40L,
-        "legacy-sidecar archive unreadable after re-registration")
-      // garbled sidecar (too few lines): loud, actionable failure
-      rewrite("key\n4")
-      val ex = intercept[IllegalStateException] {
-        Tables.readBucketSpec(spark, path)
+      // the PRE-partCols format (key/buckets/DDL) and a truncated
+      // one: both loud, actionable failures
+      Seq(s"$key\n$buckets\n${schema.toDDL}", "key\n4").foreach { body =>
+        rewrite(body)
+        val ex = intercept[IllegalStateException] {
+          Tables.readBucketSpec(spark, path)
+        }
+        assert(ex.getMessage.contains("rebuild"),
+          s"garbled sidecar error not actionable: ${ex.getMessage}")
       }
-      assert(ex.getMessage.contains("rebuild"),
-        s"garbled sidecar error not actionable: ${ex.getMessage}")
     } finally {
       spark.sql(s"DROP TABLE IF EXISTS `${Tables.bucketedArchName(path)}`")
       org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(root))
@@ -969,8 +914,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("emptied archives: folds no-op (max epoch is NULL, not an NPE) " +
-    "and the scratch sweep reclaims crashed-fold leftovers without " +
-    "touching a recovery copy") {
+    "and the sweep reclaims the superseded version") {
     import graft.SparkSpec.spark.implicits._
     val root = java.nio.file.Files
       .createTempDirectory("graft-empty-fold").toString
@@ -993,33 +937,15 @@ class LayoutSpec extends SparkSpec {
         spark, path, s"$root/tomb", "doc_id") == -1L,
         "fold over an emptied archive must no-op")
 
-      // crashed-fold scratch next to a LIVE archive: sweep reclaims
-      // it, together with the superseded version dir the fold
+      // the sweep reclaims the superseded version dir the fold
       // retained (v1; the fold committed v2)
-      fs.mkdirs(new org.apache.hadoop.fs.Path(path + ".fold_tmp"))
-      fs.mkdirs(new org.apache.hadoop.fs.Path(path + ".fold_old"))
-      assert(Tables.sweepBucketedScratch(spark, path) == 3,
-        "sweep must reclaim both scratch dirs + the superseded version")
-      assert(!fs.exists(new org.apache.hadoop.fs.Path(path + ".fold_tmp"))
-        && !fs.exists(new org.apache.hadoop.fs.Path(path + ".fold_old")),
-        "scratch dirs survived the sweep")
+      assert(Tables.sweepBucketedScratch(spark, path) == 1,
+        "sweep must reclaim the superseded version")
       assert(!fs.exists(new org.apache.hadoop.fs.Path(
           Tables.bucketedVersionDir(path, 1L))),
         "superseded version dir survived the sweep")
       assert(Tables.readBucketedArchive(spark, path).count() == 0L,
         "sweep broke the live (current-version) read")
-
-      // crash mid-swap (live dir missing, .fold_old IS the archive):
-      // the sweep must NOT delete the recovery copy
-      require(fs.rename(new org.apache.hadoop.fs.Path(path),
-        new org.apache.hadoop.fs.Path(path + ".fold_old")))
-      assert(Tables.sweepBucketedScratch(spark, path) == 0,
-        "sweep deleted a mid-swap recovery copy")
-      assert(fs.exists(new org.apache.hadoop.fs.Path(path + ".fold_old")),
-        "recovery copy gone after sweep")
-      // restore live for cleanup symmetry
-      require(fs.rename(new org.apache.hadoop.fs.Path(path + ".fold_old"),
-        new org.apache.hadoop.fs.Path(path)))
     } finally {
       spark.sql(s"DROP TABLE IF EXISTS `${Tables.bucketedArchName(path)}`")
       org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(root))

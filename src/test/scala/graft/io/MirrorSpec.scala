@@ -90,7 +90,7 @@ class MirrorSpec extends SparkSpec {
     val cur = new org.apache.hadoop.fs.Path(m + ".feed_cursor")
     val fs = cur.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val out = fs.create(cur, true)
-    try out.write("0\n64".getBytes("UTF-8")) finally out.close()
+    try out.write("0\n-1\n64".getBytes("UTF-8")) finally out.close()
     val r4 = Tables.syncMirror(spark, p, tomb, "doc_id", m, buckets = 64)
     assert(r4.mode == "incremental" && r4.cursorTo == 2L)
     assertMirrors(Tables.readMirror(spark, m), masked, "after replay")
@@ -101,6 +101,22 @@ class MirrorSpec extends SparkSpec {
     }
     assert(ex.getMessage.contains("re-bucketing"),
       s"bucket mismatch must be loud: ${ex.getMessage}")
+  }
+
+  test("a cursor in the removed 2-line form fails loudly") {
+    val root = java.nio.file.Files
+      .createTempDirectory("graft-mirror-cursor2").toString
+    try {
+      val m = s"$root/mirror"
+      val out = new java.io.FileOutputStream(m + ".feed_cursor")
+      out.write("0\n64".getBytes("UTF-8")); out.close()
+      val ex = intercept[IllegalStateException] {
+        Tables.mirrorCursor(spark, m)
+      }
+      assert(ex.getMessage.contains("delete it"),
+        s"2-line cursor error not actionable: ${ex.getMessage}")
+    } finally
+      org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(root))
   }
 
   test("watermark-capped sync: a half-landed front-door epoch stays " +

@@ -17,7 +17,7 @@ import graft.io.Tables
   *    without changing anything a read view returns;
   *  - WINNOW fingerprint archive: a tombstoned doc stops matching
   *    the streaming probe immediately, and
-  *    [[TextOps.compactFingerprintEpochs]] folds it out physically;
+  *    [[Tables.foldManifestedEpochs]] folds it out physically;
   *  - ANN code table ([[Similarity.deleteVectors]]): a deleted
   *    vector is never returned as a neighbor, masked serve ≡
   *    post-fold serve, and [[Similarity.compactIndexEpochs]]
@@ -177,7 +177,8 @@ class TombstoneSpec extends SparkSpec {
       // fold: docs 1/10's fingerprints physically gone, tombstones
       // retired (neither key is in the newest replayable epoch), and
       // a fresh copy still reads clean
-      TextOps.compactFingerprintEpochs(spark, idx)
+      Tables.foldManifestedEpochs(spark, s"$idx/fingerprints",
+        s"$idx/tombstones", "doc_id")
       val ids = Tables.readManifested(spark, s"$idx/fingerprints")
         .select(col("doc_id")).distinct().as[Long].collect().toSet
       assert(!ids.contains(1L) && !ids.contains(10L),

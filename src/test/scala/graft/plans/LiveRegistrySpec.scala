@@ -112,12 +112,15 @@ class LiveRegistrySpec extends SparkSpec {
     assert(s2.sql("SELECT count(*) FROM reg_masked")
       .head().getLong(0) === 48L,
       "a load is a snapshot: the earlier session keeps its entry")
-    // a garbled entry is loud, not silently skipped
-    val bad = new java.io.FileOutputStream(
-      s"$root/_graft_livesql/garbled")
-    bad.write("only-one-line".getBytes("UTF-8")); bad.close()
-    intercept[IllegalStateException] {
-      Tables.loadLiveSqlRegistry(spark.newSession(), root)
+    // a garbled entry is loud, not silently skipped — including the
+    // removed 5-line form (no layout field)
+    Seq("only-one-line", s"$root/arch\n-\n-\n-\n-").foreach { body =>
+      val bad = new java.io.FileOutputStream(
+        s"$root/_graft_livesql/garbled")
+      bad.write(body.getBytes("UTF-8")); bad.close()
+      intercept[IllegalStateException] {
+        Tables.loadLiveSqlRegistry(spark.newSession(), root)
+      }
     }
   }
 

@@ -916,7 +916,8 @@ class StreamOpsSpec extends SparkSpec {
       .resolveManifest(spark, s"$idx/tombstones")._2.keys.toSet == epochs,
       "idle restart re-committed delete epochs")
     // the physical fold retires streamed tombstones like any others
-    graft.ops.TextOps.compactFingerprintEpochs(spark, idx)
+    graft.io.Tables.foldManifestedEpochs(spark, s"$idx/fingerprints",
+      s"$idx/tombstones", "doc_id")
     assert(graft.io.Tables.readTombstones(spark, s"$idx/tombstones",
       "doc_id").isEmpty, "fold did not retire streamed tombstones")
     val left = graft.io.Tables.readManifested(spark, s"$idx/fingerprints")
