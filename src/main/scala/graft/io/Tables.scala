@@ -2461,7 +2461,7 @@ object Tables {
     * the archive they mask: readers subtract them
     * ([[minusTombstones]]), and the archive's epoch COMPACTION folds
     * them physically (anti-join the base layer, then
-    * [[clearManifested]]) — until then a removed/poisoned/forgotten
+    * [[retireTombstones]]) — until then a removed/poisoned/forgotten
     * doc is logically gone from every read at the cost of one
     * broadcast anti-join, without rewriting a single archive file.
     * Replace-or-add per epoch like every commit here: a crash-replay
@@ -2469,13 +2469,19 @@ object Tables {
     * idempotent, so tombstone READS need no epoch self-exclusion —
     * a replay that sees its own prior partial commit subtracts the
     * same keys it is about to commit. */
-  def ingestTombstones(ids: DataFrame, path: String, epoch: Long): Unit = {
+  def ingestTombstones(ids: DataFrame, path: String, epoch: Long): Unit =
+    ingestTombstones(ids, path, epoch, _ == s"ingest_epoch=$epoch")
+
+  /** [[ingestTombstones]] replacing every live partition `dropPart`
+    * selects in the same commit — [[retireTombstones]] lands its
+    * carried keys as the table's only partition this way. */
+  private def ingestTombstones(ids: DataFrame, path: String, epoch: Long,
+                               dropPart: String => Boolean): Unit = {
     require(ids.columns.length == 1,
       s"tombstones are bare keys; got columns [${ids.columns.mkString(",")}]")
     val df = ids.distinct().withColumn("ingest_epoch", lit(epoch))
     if (manifestExists(ids.sparkSession, path))
-      upsertManifested(df, path, Seq("ingest_epoch"),
-        _ == s"ingest_epoch=$epoch")
+      upsertManifested(df, path, Seq("ingest_epoch"), dropPart)
     else
       try writeManifested(df, path, Seq("ingest_epoch"))
       catch {
@@ -2776,8 +2782,9 @@ object Tables {
       }
   }
 
-  /** Empty an archive's auxiliary table in ONE pointer flip — used by
-    * physical folds to retire tombstones they just applied. Data dirs
+  /** Empty an archive's auxiliary table in ONE pointer flip — how
+    * [[retireTombstones]] retires a fold's tombstones when it carries
+    * none. Data dirs
     * stay on disk until [[vacuumManifested]] (readers of the previous
     * pointer stay isolated); the next [[readTombstones]] sees zero
     * partitions and reports None. */
@@ -3710,7 +3717,7 @@ object Tables {
     * other file of the touched partitions BY REFERENCE (multi-path
     * manifest entries — [[entryPaths]]) and untouched partitions as
     * whole-dir references, in ONE manifest CAS. At 100 TB RTBF volume
-    * this is the cost gap to [[foldManifestedEpochs]]: a sparse
+    * this is the cost gap to [[foldEpochs]]: a sparse
     * victim set rewrites the victim files' bytes, not every epoch
     * partition below high-water.
     *
@@ -3819,15 +3826,9 @@ object Tables {
     }
     val touched = plans.filter(_._2.victims.nonEmpty)
     val carryAndClear = () => {
-      val carried = tomb.join(
+      retireTombstones(spark, tombPath, tomb,
         all.where(col("ingest_epoch") === maxE && lit(maxE > 0L))
-          .select(col(keyCol)).distinct(),
-        Seq(keyCol), "left_semi").localCheckpoint()
-      try {
-        clearManifested(spark, tombPath)
-        if (!carried.isEmpty)
-          ingestTombstones(carried, tombPath, epoch = 0L)
-      } finally graft.ops.Ckpt.release(carried)
+          .select(col(keyCol)).distinct())
       recordFoldHorizon(spark, path, insTombMax)
       recordFoldHorizon(spark, path, delTombMax)
       dropDeletionVectors(spark, path)
@@ -3880,40 +3881,54 @@ object Tables {
       plans.values.map(_.keptBytes).sum, usedSidecar)
   }
 
-  /** Shared epoch-fold-with-carry for a MANIFESTED epoch-partitioned
-    * archive — the one sequence every archive's maintenance step was
-    * re-implementing: rewrite the live rows MINUS tombstones with
-    * every epoch strictly below the high-water mark folded into the
-    * base layer (epoch 0); the NEWEST epoch keeps its own value,
-    * because a foreachBatch crash-replay can still rewrite exactly
-    * that epoch; then retire the tombstones in one pointer flip —
-    * EXCEPT keys living in that carried newest epoch, whose replay
-    * would recompute the rows from source and silently resurrect a
-    * folded delete (they stay masked until the next fold). The build
-    * layer (epoch 0) is not a replayable micro-batch — when it is the
-    * only layer, nothing is carried. Readers stay isolated behind the
-    * manifest pointer throughout. Returns the folded high-water
-    * epoch, -1 for a no-op.
+  /** One epoch-partitioned data table as [[foldEpochs]] rewrites it:
+    * MANIFESTED tables fold behind the manifest pointer and keep
+    * `partCols` (the ANN code table's (ingest_epoch, cell) — with
+    * `ingest_epoch` FIRST); BUCKETED ones fold as the next version by
+    * [[replaceBucketedArchive]], so the bucket layout survives. */
+  private[graft] final case class EpochTable(path: String,
+      bucketed: Boolean = false, partCols: Seq[String] = Seq("ingest_epoch"))
+
+  /** The epoch fold with carry, for every store and both layouts:
+    * rewrite each table's live rows MINUS tombstones with every epoch
+    * strictly below the high-water mark folded into the base layer
+    * (epoch 0); the NEWEST epoch keeps its own value, because a
+    * foreachBatch crash-replay can still rewrite exactly that epoch;
+    * then [[retireTombstones]] — EXCEPT keys living in that carried
+    * newest epoch, whose replay would recompute the rows from source
+    * and silently resurrect a folded delete (they stay masked until
+    * the next fold). The build layer (epoch 0) is not a replayable
+    * micro-batch — when it is the only layer, nothing is carried.
     *
-    * `partCols` lets multi-level archives (the ANN code table's
-    * (ingest_epoch, cell)) keep their sub-partitioning through the
-    * fold; `ingest_epoch` must be the FIRST level. */
-  private[graft] def foldManifestedEpochs(s: SparkSession, path: String,
-      tombPath: String, keyCol: String,
-      partCols: Seq[String] = Seq("ingest_epoch")): Long = {
-    require(partCols.headOption.contains("ingest_epoch"),
-      "foldManifestedEpochs needs ingest_epoch as the first level")
-    val (_, parts) = resolveManifest(s, path)
-    // an archive whose every row was physically deleted (full-corpus
-    // RTBF followed by a fold, or clearManifested) has no partitions:
-    // nothing to fold, and its tombstones stay — an empty archive has
-    // no replayable newest epoch to decide a carry against, so
-    // retiring them here could let a later epoch replay resurrect
-    if (parts.isEmpty) return -1L
-    val maxE = parts.keys
-      .map(_.takeWhile(_ != '/').stripPrefix("ingest_epoch=").toLong).max
+    * A store's tables (token postings + doc lengths, cluster postings
+    * + sizes) fold together: the FIRST table gives the high-water mark
+    * and the newest epoch's keys, read BEFORE any rewrite (after it
+    * the tombstoned keys are already masked out of the carried epoch
+    * and the carry would be vacuously empty). An empty first table is
+    * a no-op that keeps its tombstones — with no replayable newest
+    * epoch to decide a carry against, retiring them could let a later
+    * replay resurrect. Readers stay isolated behind each table's
+    * pointer throughout. Returns the folded high-water epoch, -1 for
+    * a no-op. */
+  private[graft] def foldEpochs(s: SparkSession, tables: Seq[EpochTable],
+      tombPath: String, keyCol: String): Long = {
+    require(tables.nonEmpty &&
+      tables.forall(_.partCols.headOption.contains("ingest_epoch")),
+      "foldEpochs needs tables with ingest_epoch as the first level")
+    def read(t: EpochTable) =
+      if (t.bucketed) readBucketedArchive(s, t.path)
+      else readManifested(s, t.path)
+    // manifested: the high-water mark is in the partition keys (no
+    // scan); bucketed: a nullable max, -1 for an emptied archive
+    val lead = tables.head
+    val maxE =
+      if (lead.bucketed) maxIngestEpoch(read(lead))
+      else resolveManifest(s, lead.path)._2.keys
+        .map(_.takeWhile(_ != '/').stripPrefix("ingest_epoch=").toLong)
+        .foldLeft(-1L)(math.max)
+    if (maxE < 0L) return -1L
     val tomb = readTombstones(s, tombPath, keyCol)
-    if (maxE <= 0L && tomb.isEmpty) return -1L
+    if (maxE == 0L && tomb.isEmpty) return -1L
     // the fold destroys change attribution: epochs below high-water
     // collapse into the base layer, applied tombstones retire — the
     // feed horizon ([[recordFoldHorizon]]) must cover both, per LANE
@@ -3921,77 +3936,45 @@ object Tables {
     // ingest-lane record)
     val (insTombMax, delTombMax) = readTombstonesWithEpochs(s, tombPath)
       .map(laneMaxes).getOrElse((-1L, -1L))
-    // readManifested resolves the pointer NOW, so this frame pins the
-    // pre-fold snapshot — the carry decision below still sees the
-    // newest epoch's keys after the rewrite flips the pointer
-    val all = readManifested(s, path)
-    upsertManifested(
-      minusTombstones(all, tombPath, keyCol)
+    val newest = tomb.map(_ => read(lead)
+      .where(col("ingest_epoch") === maxE && lit(maxE > 0L))
+      .select(col(keyCol)).distinct().localCheckpoint())
+    tables.foreach { t =>
+      val folded = minusTombstones(read(t), tombPath, keyCol)
         .withColumn("ingest_epoch",
           when(col("ingest_epoch") < maxE, lit(0L))
-            .otherwise(col("ingest_epoch"))),
-      path, partCols, _ => true)
-    tomb.foreach { td =>
-      val carried = td.join(
-        all.where(col("ingest_epoch") === maxE && lit(maxE > 0L))
-          .select(col(keyCol)).distinct(),
-        Seq(keyCol), "left_semi").localCheckpoint()
-      clearManifested(s, tombPath)
-      if (!carried.isEmpty) ingestTombstones(carried, tombPath, epoch = 0L)
-      graft.ops.Ckpt.release(carried)
+            .otherwise(col("ingest_epoch")))
+      if (t.bucketed) replaceBucketedArchive(folded, t.path)
+      else upsertManifested(folded, t.path, t.partCols, _ => true)
+      // inserts at the KEPT newest epoch stay attributable (cursor
+      // maxE-1 still feeds them); retired deletes do not (each lane's
+      // cursor must clear its own highest retired delete epoch)
+      recordFoldHorizon(s, t.path, math.max(maxE - 1L, insTombMax))
+      recordFoldHorizon(s, t.path, delTombMax)
     }
-    // inserts at the KEPT newest epoch stay attributable (cursor
-    // maxE-1 still feeds them); retired deletes do not (each lane's
-    // cursor must clear its own highest retired delete epoch)
-    recordFoldHorizon(s, path, math.max(maxE - 1L, insTombMax))
-    recordFoldHorizon(s, path, delTombMax)
+    for (td <- tomb; keys <- newest) {
+      retireTombstones(s, tombPath, td, keys)
+      graft.ops.Ckpt.release(keys)
+    }
     maxE
   }
 
-  /** [[foldManifestedEpochs]] for a BUCKETED archive: same carry
-    * rule (epochs below high-water fold into the base layer, the
-    * newest epoch — still crash-replayable — keeps its own value;
-    * tombstones retire EXCEPT keys living in that carried epoch),
-    * rewritten as the next version by [[replaceBucketedArchive]] so
-    * the bucket layout survives the fold. The carry decision reads
-    * its snapshot BEFORE the rewrite — after it, the tombstoned keys
-    * are already masked out of the carried epoch and the carry would
-    * be vacuously empty (the resurrect-on-replay bug the rule
-    * exists to prevent). Returns the folded high-water epoch, -1
-    * for a no-op. */
-  private[graft] def foldBucketedEpochs(s: SparkSession, path: String,
-      tombPath: String, keyCol: String): Long = {
-    val arch = readBucketedArchive(s, path)
-    // max() over an archive whose rows were all physically deleted is
-    // NULL — an empty archive is a fold no-op ([[maxIngestEpoch]]'s
-    // -1), not an NPE at the next maintenance window
-    val maxE = maxIngestEpoch(arch)
-    if (maxE < 0L) return -1L
-    val tomb = readTombstones(s, tombPath, keyCol)
-    if (maxE <= 0L && tomb.isEmpty) return -1L
-    // same per-lane feed-horizon rule as the manifested fold
-    val (insTombMax, delTombMax) = readTombstonesWithEpochs(s, tombPath)
-      .map(laneMaxes).getOrElse((-1L, -1L))
-    val preNewest = arch
-      .where(col("ingest_epoch") === maxE && lit(maxE > 0L))
-      .select(col(keyCol)).distinct().localCheckpoint()
-    replaceBucketedArchive(
-      minusTombstones(arch, tombPath, keyCol)
-        .withColumn("ingest_epoch",
-          when(col("ingest_epoch") < maxE, lit(0L))
-            .otherwise(col("ingest_epoch"))),
-      path)
-    tomb.foreach { td =>
-      val carried = td.join(preNewest, Seq(keyCol), "left_semi")
-        .localCheckpoint()
-      clearManifested(s, tombPath)
-      if (!carried.isEmpty) ingestTombstones(carried, tombPath, epoch = 0L)
-      graft.ops.Ckpt.release(carried)
-    }
-    graft.ops.Ckpt.release(preNewest)
-    recordFoldHorizon(s, path, math.max(maxE - 1L, insTombMax))
-    recordFoldHorizon(s, path, delTombMax)
-    maxE
+  /** Retire a fold's applied tombstones `td` in ONE commit, keeping
+    * the keys that also live in `replayable` (the pre-fold newest
+    * epoch: a crash-replay of it re-lands their rows, so they must
+    * stay masked until the next fold). The carried keys land at epoch
+    * 0 as the tombstone table's only partition, in the same manifest
+    * version that drops every other — no version in between reads
+    * empty, so a crash mid-retire cannot unmask them. Nothing carried:
+    * the table is cleared. */
+  private[graft] def retireTombstones(s: SparkSession, tombPath: String,
+      td: DataFrame, replayable: DataFrame): Unit = {
+    val carried = td.join(replayable, td.columns.toSeq, "left_semi")
+      .localCheckpoint()
+    try {
+      if (carried.isEmpty) clearManifested(s, tombPath)
+      else ingestTombstones(carried, tombPath, 0L, _ => true)
+    } finally graft.ops.Ckpt.release(carried)
   }
 
   // ---------- Change-data-feed (incremental consumers) ----------

@@ -797,14 +797,12 @@ object Curation {
   /** Full lifecycle fold for the cluster archive: labels fold to
     * their latest-per-doc view MINUS tombstones as the sole base
     * layer ([[compactLabelEpochs]]' fold with the delete applied
-    * physically); postings and sizes fold their epoch layers the
-    * same way ([[graft.ops.Similarity.compactIndexEpochs]]' carry
-    * rule — the newest epoch keeps its own value because a
-    * foreachBatch crash-replay can still rewrite exactly that
-    * epoch); then the tombstones retire, except keys living in a
-    * still-replayable newest epoch (a replay recomputes those rows
-    * from text and would silently resurrect a folded delete — their
-    * tombstones stay masked until the next fold). One maintenance
+    * physically); postings and sizes then fold their epoch layers
+    * together through [[graft.io.Tables.foldEpochs]], which also
+    * retires the tombstones except keys living in a still-replayable
+    * newest epoch (a replay recomputes those rows from text and would
+    * silently resurrect a folded delete — their tombstones stay
+    * masked until the next fold). One maintenance
     * entry point = one consistent cut across all three tables;
     * TombstoneSpec pins post-fold physical absence and that the fold
     * changes nothing any read view returns. */
@@ -822,52 +820,14 @@ object Curation {
         tombPath, "doc_id")
       .withColumn("ingest_epoch", lit(0L))
     Tables.replaceBucketedArchive(current, labels)
-    // postings + sizes: fold epochs below high-water into the base,
-    // carry the newest, subtract tombstones physically. The bucketed
-    // postings fold as the next version (which preserves the bucket
-    // layout); the manifested sizes fold behind the pointer.
-    def foldEpochs(path: String, read: => DataFrame,
-                   rewrite: DataFrame => Unit): Long = {
-      val arch = read
-      val maxE = arch.agg(max(col("ingest_epoch")).cast("long"))
-        .head().getLong(0)
-      val masked = Tables.minusTombstones(arch, tombPath, "doc_id")
-      rewrite(masked.withColumn("ingest_epoch",
-        when(col("ingest_epoch") < maxE, lit(0L))
-          .otherwise(col("ingest_epoch"))))
-      maxE
-    }
-    // PRE-fold snapshot of the newest postings epoch's doc set — the
-    // carry decision's input. Reading it AFTER replaceBucketedArchive
-    // would see the tombstoned keys already masked OUT of the carried
-    // epoch, so td ∩ replayable would always be empty, every
-    // tombstone would retire, and a foreachBatch crash-replay of that
-    // epoch (which recomputes its rows from source) would silently
-    // resurrect the folded deletes — exactly what the carry rule
-    // exists to prevent. Same discipline as foldManifestedEpochs'
-    // `all` pin and compactTokenIndexEpochs' `pre` snapshot.
-    val prePost = Tables.readBucketedArchive(s, s"$idx/postings")
-    val maxPostPre = prePost.agg(max(col("ingest_epoch")).cast("long"))
-      .head().getLong(0)
-    val preNewest = prePost
-      .where(col("ingest_epoch") === maxPostPre && lit(maxPostPre > 0L))
-      .select(col("doc_id")).distinct().localCheckpoint()
-    foldEpochs(s"$idx/postings",
-      Tables.readBucketedArchive(s, s"$idx/postings"),
-      Tables.replaceBucketedArchive(_, s"$idx/postings"))
-    foldEpochs(s"$idx/sizes",
-      Tables.readManifested(s, s"$idx/sizes"),
-      Tables.upsertManifested(_, s"$idx/sizes",
-        Seq("ingest_epoch"), _ => true))
-    Tables.readTombstones(s, tombPath, "doc_id").foreach { td =>
-      val carried = td.join(preNewest, Seq("doc_id"), "left_semi")
-        .localCheckpoint()
-      Tables.clearManifested(s, tombPath)
-      if (!carried.isEmpty)
-        Tables.ingestTombstones(carried, tombPath, epoch = 0L)
-      Ckpt.release(carried)
-    }
-    Ckpt.release(preNewest)
+    // postings + sizes: the shared epoch fold with carry. The postings
+    // lead (their newest epoch's docs decide the carry); the bucketed
+    // postings fold as the next version, the manifested sizes behind
+    // the pointer
+    Tables.foldEpochs(s, Seq(Tables.EpochTable(s"$idx/postings",
+        bucketed = true), Tables.EpochTable(s"$idx/sizes")),
+      tombPath, "doc_id")
+    ()
   }
 
   val qClusterDeleteOracle: String =

@@ -535,24 +535,33 @@ object Multimodal {
     * per query. The near-dup probe then reads hashes only. */
   private[graft] def buildPhashIndexTo(s: SparkSession, docs: DataFrame,
                                        idx: String): Unit =
-    Tables.writeManifested(
-      phash64Frame(s, mediaPngOf(s, docs))
-        .withColumn("ingest_epoch", lit(0L)),
-      s"$idx/hashes", Seq("ingest_epoch"))
+    buildHashIndexTo(phash64Frame(s, mediaPngOf(s, docs)), idx)
 
   /** Commit ONE batch's hashes under its own epoch — replace-or-add:
     * decoding is deterministic, so a crash-replay of epoch E
     * recommits identical rows. Cost scales with the batch, never the
     * index. */
   private[graft] def ingestPhashIndex(s: SparkSession, batch: DataFrame,
-                                      idx: String, epoch: Long): Unit = {
+                                      idx: String, epoch: Long): Unit =
+    ingestHashIndex(s, batch, idx, epoch,
+      b => phash64Frame(s, mediaPngOf(s, b)))
+
+  /** The build body both decoded-media archives share (pHash, audio
+    * fingerprints): `hashes` lands as the base layer (epoch 0). */
+  private def buildHashIndexTo(hashes: DataFrame, idx: String): Unit =
+    Tables.writeManifested(hashes.withColumn("ingest_epoch", lit(0L)),
+      s"$idx/hashes", Seq("ingest_epoch"))
+
+  /** The ingest body both decoded-media archives share: `hash` decodes
+    * and hashes the batch, whose rows land under `epoch`. */
+  private def ingestHashIndex(s: SparkSession, batch: DataFrame,
+      idx: String, epoch: Long, hash: DataFrame => DataFrame): Unit = {
     // bootstrap-safe like the token index: a stream may create the
     // archive; an empty first batch defers creation (an empty
     // manifest would wedge every later read)
     val hasManifest = Tables.manifestExists(s, s"$idx/hashes")
     if (!hasManifest && batch.isEmpty) return
-    val hashes = phash64Frame(s, mediaPngOf(s, batch))
-      .withColumn("ingest_epoch", lit(epoch))
+    val hashes = hash(batch).withColumn("ingest_epoch", lit(epoch))
     if (hasManifest)
       Tables.upsertManifested(hashes,
         s"$idx/hashes", Seq("ingest_epoch"), _ == s"ingest_epoch=$epoch")
@@ -1236,26 +1245,15 @@ object Multimodal {
     * (winnow), images (pHash) and audio. */
   private[graft] def buildAudioFpIndexTo(s: SparkSession, docs: DataFrame,
                                          idx: String): Unit =
-    Tables.writeManifested(
-      afpFrame(s, mediaWavOf(s, docs))
-        .withColumn("ingest_epoch", lit(0L)),
-      s"$idx/hashes", Seq("ingest_epoch"))
+    buildHashIndexTo(afpFrame(s, mediaWavOf(s, docs)), idx)
 
   /** Commit ONE batch's fingerprints under its own epoch —
     * replace-or-add (decode is deterministic); bootstrap-safe like
     * the pHash archive. */
   private[graft] def ingestAudioFpIndex(s: SparkSession, batch: DataFrame,
-                                        idx: String, epoch: Long): Unit = {
-    val hasManifest = Tables.manifestExists(s, s"$idx/hashes")
-    if (!hasManifest && batch.isEmpty) return
-    val hashes = afpFrame(s, mediaWavOf(s, batch))
-      .withColumn("ingest_epoch", lit(epoch))
-    if (hasManifest)
-      Tables.upsertManifested(hashes,
-        s"$idx/hashes", Seq("ingest_epoch"), _ == s"ingest_epoch=$epoch")
-    else
-      Tables.writeManifested(hashes, s"$idx/hashes", Seq("ingest_epoch"))
-  }
+                                        idx: String, epoch: Long): Unit =
+    ingestHashIndex(s, batch, idx, epoch,
+      b => afpFrame(s, mediaWavOf(s, b)))
 
   /** Near-dup pairs served from a persisted audio-fingerprint archive,
     * tombstone-masked: a forgotten clip's pairs vanish on the next

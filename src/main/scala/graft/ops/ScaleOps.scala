@@ -788,9 +788,9 @@ object ScaleOps {
       }
       stage("staged")
       val (pf, tf) = stage("folded")
-      Tables.foldManifestedEpochs(s, pf, tf, "doc_id")
+      Tables.foldEpochs(s, Seq(Tables.EpochTable(pf)), tf, "doc_id")
       val (pv, tv) = stage("vacuumed")
-      Tables.foldManifestedEpochs(s, pv, tv, "doc_id")
+      Tables.foldEpochs(s, Seq(Tables.EpochTable(pv)), tv, "doc_id")
       Tables.vacuumManifested(s, pv)
       root
     })

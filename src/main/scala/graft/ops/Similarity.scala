@@ -1798,8 +1798,8 @@ object Similarity {
     // mask-rewrite/newest-epoch-carry/tombstone-retire sequence,
     // keeping the (ingest_epoch, cell) sub-partitioning so the
     // single-version result restores scan-time DPP on `cell`
-    Tables.foldManifestedEpochs(s, s"$idx/codes", s"$idx/tombstones",
-      "vec_id", Seq("ingest_epoch", "cell"))
+    Tables.foldEpochs(s, Seq(Tables.EpochTable(s"$idx/codes",
+      partCols = Seq("ingest_epoch", "cell"))), s"$idx/tombstones", "vec_id")
 
   /** Commit one DELETE epoch of vector tombstones against a persisted
     * index — the removal verb of the index lifecycle (build → serve →
@@ -1970,8 +1970,9 @@ object Similarity {
     * so the single-version result restores the selective strategy's
     * label partition pruning that a many-epoch union fragments. */
   def compactFilteredIndexEpochs(s: SparkSession, idx: String): Long =
-    Tables.foldManifestedEpochs(s, s"$idx/codes", s"$idx/tombstones",
-      "vec_id", Seq("ingest_epoch", "label", "cell"))
+    Tables.foldEpochs(s, Seq(Tables.EpochTable(s"$idx/codes",
+        partCols = Seq("ingest_epoch", "label", "cell"))),
+      s"$idx/tombstones", "vec_id")
 
   private[ops] def filteredIndex(s: SparkSession, dir: String): String =
     filteredIdxMemo.computeIfAbsent(dir, _ => {

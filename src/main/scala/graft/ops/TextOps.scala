@@ -760,7 +760,7 @@ object TextOps {
     * ([[graft.io.Tables.minusTombstones]]): a batch doc whose only
     * near-dup was deleted reads clean, without a single archive file
     * being rewritten. Physical removal is the compaction's job
-    * ([[graft.io.Tables.foldManifestedEpochs]] folds the anti-join
+    * ([[graft.io.Tables.foldEpochs]] folds the anti-join
     * into the base layer and retires the tombstones — TombstoneSpec
     * pins post-fold absence, fold ≡ masked view, and replay
     * idempotence).
@@ -1806,63 +1806,21 @@ object TextOps {
       .join(allowed, Seq("doc_id"), "left_semi"))
 
   /** Physical tombstone fold for the token index — both tables
-    * (postings + doclen) rewrite live-minus-tombstones, with every
+    * (postings + doclen) fold together through
+    * [[graft.io.Tables.foldEpochs]]: live-minus-tombstones, every
     * epoch strictly below the high-water mark folded into the base
-    * layer. The NEWEST epoch carries through unchanged (a foreachBatch
-    * crash-replay can still rewrite exactly that epoch) and tombstones
-    * for its keys stay LIVE until the next fold — the same carry rule
-    * as [[graft.io.Tables.foldManifestedEpochs]] /
-    * [[graft.ops.Similarity.compactIndexEpochs]]. Retrieval results
-    * are invariant across the fold (TokenIndexSpec pins masked-view ≡
+    * layer, the NEWEST epoch carried through unchanged with its
+    * tombstones LIVE until the next fold. Doc lengths lead: they list
+    * every doc of the newest epoch (postings miss token-less docs),
+    * which is what the carry decision needs. Retrieval results are
+    * invariant across the fold (TokenIndexSpec pins masked-view ≡
     * post-fold ranking).
     * Returns the folded high-water epoch, -1 for a no-op. */
   private[graft] def compactTokenIndexEpochs(s: SparkSession,
-                                             idx: String): Long = {
-    val tombPath = s"$idx/tombstones"
-    // nullable read: a postings archive emptied by a full-corpus RTBF
-    // + fold has max() = NULL — the fold no-ops instead of NPEing
-    val maxE = Tables.maxIngestEpoch(
-      Tables.readBucketedArchive(s, s"$idx/postings"))
-    if (maxE < 0L) return -1L
-    val tomb = Tables.readTombstones(s, tombPath, "doc_id")
-    if (maxE <= 0L && tomb.isEmpty) return -1L
-    // pre-fold doclen snapshot: reader isolation pins its partition
-    // list now, so the carry decision below still sees the newest
-    // epoch's keys after both tables' pointers advance
-    val pre = Tables.readManifested(s, s"$idx/doclen")
-    def foldedEpoch = when(col("ingest_epoch") < maxE, lit(0L))
-      .otherwise(col("ingest_epoch"))
-    // bucketed postings fold as the next version (layout preserved);
-    // manifested doclen folds behind the pointer
-    Tables.replaceBucketedArchive(
-      Tables.minusTombstones(
-          Tables.readBucketedArchive(s, s"$idx/postings"),
-          tombPath, "doc_id")
-        .withColumn("ingest_epoch", foldedEpoch),
-      s"$idx/postings")
-    Tables.upsertManifested(
-      Tables.minusTombstones(
-          Tables.readManifested(s, s"$idx/doclen"), tombPath, "doc_id")
-        .withColumn("ingest_epoch", foldedEpoch),
-      s"$idx/doclen", Seq("ingest_epoch"), _ => true)
-    tomb.foreach { td =>
-      // keys arriving in the still-replayable newest epoch keep their
-      // tombstones (a replay recomputes the epoch from text and would
-      // silently resurrect a folded delete); everything else retires
-      // in one pointer flip. The build layer (epoch 0) is not a
-      // replayable micro-batch — when it is the only layer, nothing
-      // is carried
-      val carried = td.join(
-        pre.where(col("ingest_epoch") === maxE && lit(maxE > 0L))
-          .select(col("doc_id")).distinct(),
-        Seq("doc_id"), "left_semi").localCheckpoint()
-      Tables.clearManifested(s, tombPath)
-      if (!carried.isEmpty)
-        Tables.ingestTombstones(carried, tombPath, epoch = 0L)
-      Ckpt.release(carried)
-    }
-    maxE
-  }
+                                             idx: String): Long =
+    Tables.foldEpochs(s, Seq(Tables.EpochTable(s"$idx/doclen"),
+        Tables.EpochTable(s"$idx/postings", bucketed = true)),
+      s"$idx/tombstones", "doc_id")
 
   /** Token index per data dir, memoized: in production the index is
     * built once (or epoch-ingested) and queried many times, so the

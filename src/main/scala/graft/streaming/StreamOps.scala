@@ -2,12 +2,12 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState,
-  GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode,
-  TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{DataStreamWriter, ExpiredTimerInfo,
+  GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig,
+  TimeMode, TimerValues, ValueState}
 import org.apache.spark.sql.types._
 
 import graft.io.Tables
@@ -117,6 +117,43 @@ object StreamOps {
     reader.parquet(dir)
   }
 
+  // ---------- The stream runner ----------
+
+  /** Run a streaming query over the currently-available input
+    * (Trigger.AvailableNow semantics via processAllAvailable), then
+    * stop it — every entry point in this module drains through
+    * here. */
+  private def drain(w: DataStreamWriter[Row]): Unit = {
+    val q = w.start()
+    try q.processAllAvailable() finally q.stop()
+  }
+
+  /** [[drain]] `df` in append mode through a foreachBatch `body`
+    * under `checkpoint` — the micro-batch epoch contract every store
+    * leg here builds on (a restart resumes after the last committed
+    * epoch; a crashed epoch replays under the same number). */
+  private def drainBatches(df: DataFrame, checkpoint: String)(
+      body: (DataFrame, Long) => Unit): Unit =
+    drain(df.writeStream.outputMode(OutputMode.Append)
+      .option("checkpointLocation", checkpoint).foreachBatch(body))
+
+  /** The body every delete leg shares: each micro-batch of `ids`
+    * commits as ONE delete epoch (+1000000 offset, so delete epochs
+    * never collide with an ingest stream's +1-offset epochs on a
+    * shared archive — the two checkpoints count independently from
+    * 0) to every tombstone table `legs` names for it, one
+    * (keys, tombstone tables) pair per key space. */
+  private def drainDeletes(ids: DataFrame, checkpoint: String)(
+      legs: DataFrame => Seq[(DataFrame, Seq[String])]): Unit =
+    drainBatches(ids, checkpoint) { (b, epoch) =>
+      val e = epoch + Tables.DeleteEpochBase
+      legs(b).foreach { case (keys, tombs) =>
+        val k = keys.localCheckpoint()
+        try tombs.foreach(Tables.ingestTombstones(k, _, e))
+        finally graft.ops.Ckpt.release(k)
+      }
+    }
+
   /** Streaming ANN index maintenance — the third leg of the index
     * lifecycle (build once → serve many → maintain continuously):
     * each micro-batch of newly embedded vectors is encoded against
@@ -128,66 +165,38 @@ object StreamOps {
     * read with no rebuild, and a crashed epoch replays into exactly
     * its own partition. */
   def runIndexIngest(vecs: DataFrame, idx: String,
-                     checkpoint: String): Unit = {
-    val q = vecs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (b: DataFrame, epoch: Long) =>
-        graft.ops.Similarity.ingestVectors(b, idx, epoch + 1)
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
-  }
+                     checkpoint: String): Unit =
+    drainBatches(vecs, checkpoint) { (b, epoch) =>
+      graft.ops.Similarity.ingestVectors(b, idx, epoch + 1)
+    }
 
   /** Streaming DELETE requests against a persisted index — the
     * right-to-be-forgotten feed every production deployment ends up
     * wiring next to its ingest stream: each micro-batch of key
-    * tombstones commits as a delete epoch
-    * ([[graft.io.Tables.ingestTombstones]]; epochs offset +1000000 so
-    * delete epochs can never collide with the ingest stream's
-    * +1-offset epochs when both streams maintain the same archive —
-    * the two checkpoints count independently from 0). The serve /
+    * tombstones commits as a delete epoch under [[drainDeletes]]'
+    * epoch contract. The serve /
     * probe read views subtract the keys immediately; the archive's
     * epoch compaction makes the removal physical and retires the
     * tombstones on its own schedule. A crashed micro-batch replays
     * into exactly its own tombstone epoch (replace-or-add of
     * identical keys — deletion is idempotent by nature). */
   def runDeleteStream(ids: DataFrame, archivePath: String,
-                      checkpoint: String): Unit = {
-    val q = ids.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (b: DataFrame, epoch: Long) =>
-        graft.io.Tables.ingestTombstones(
-          b, s"$archivePath/tombstones", epoch + Tables.DeleteEpochBase)
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
-  }
+                      checkpoint: String): Unit =
+    drainDeletes(ids, checkpoint)(b =>
+      Seq(b -> Seq(s"$archivePath/tombstones")))
 
   /** [[runDeleteStream]] wired for the CORPUS STORE: the corpus'
-    * tombstone table lives at the SIBLING path
-    * ([[corpusTombstonePath]] — a `tombstones/` subdirectory would
-    * corrupt the plain epoch-partitioned table's partition
-    * discovery), so the generic archive-rooted entry point cannot
-    * target it; this one commits each micro-batch of doc keys
-    * directly to the sibling table [[corpusView]] reads. Same epoch
-    * contract (+1000000 delete-epoch offset, idempotent replay). */
+    * tombstone table lives at the SIBLING path its [[corpusStore]]
+    * entry names (a `tombstones/` subdirectory would corrupt the
+    * plain epoch-partitioned table's partition discovery), so the
+    * generic archive-rooted entry point cannot target it; this one
+    * commits each micro-batch of doc keys directly to the sibling
+    * table [[corpusView]] reads. Same epoch contract (+1000000
+    * delete-epoch offset, idempotent replay). */
   def runCorpusDeleteStream(ids: DataFrame, corpusPath: String,
-                            checkpoint: String): Unit = {
-    val q = ids.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (b: DataFrame, epoch: Long) =>
-        graft.io.Tables.ingestTombstones(
-          b, corpusTombstonePath(corpusPath), epoch + Tables.DeleteEpochBase)
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
-  }
+                            checkpoint: String): Unit =
+    drainDeletes(ids, checkpoint)(b =>
+      Seq(b -> Seq(corpusStore(corpusPath).tombstones)))
 
   // ---------- Streaming corpus ingest (curation front door) ----------
 
@@ -209,12 +218,9 @@ object StreamOps {
     * not anti-join the batch against itself — without the exclusion a
     * replay would land an EMPTY partition and silently lose the
     * epoch's docs. */
-  /** The corpus store's tombstone table lives at a SIBLING path: the
-    * corpus itself is a plain epoch-partitioned parquet table (not
-    * manifested), so a `tombstones/` subdirectory would corrupt its
-    * partition discovery. */
+  /** The corpus store's tombstone table ([[corpusStore]]). */
   private[graft] def corpusTombstonePath(corpusPath: String): String =
-    s"${corpusPath.stripSuffix("/")}_tombstones"
+    corpusStore(corpusPath).tombstones
 
   /** The corpus read view every consumer should use: landed docs
     * minus live tombstones. Deletion reaches the corpus STORE, not
@@ -303,13 +309,9 @@ object StreamOps {
     val (insTombMax, delTombMax) =
       Tables.readTombstonesWithEpochs(spark, tombPath)
         .map(Tables.laneMaxes).getOrElse((-1L, -1L))
-    val carried = td.join(
-        all.where(col("ingest_epoch") === maxE)
-          .select(col("doc_id")).distinct(),
-        Seq("doc_id"), "left_semi").localCheckpoint()
-    Tables.clearManifested(spark, tombPath)
-    if (!carried.isEmpty)
-      Tables.ingestTombstones(carried, tombPath, epoch = 0L)
+    Tables.retireTombstones(spark, tombPath, td,
+      all.where(col("ingest_epoch") === maxE)
+        .select(col("doc_id")).distinct())
     // the retire destroys DELETE attribution (cleared outright, or
     // carried tombstones re-stamped at epoch 0): record the horizon
     // so a corpus change-feed consumer ([[syncCorpusAggregate]])
@@ -323,7 +325,7 @@ object StreamOps {
     // NO-OP for localCheckpoint'd frames (Ckpt.scala) — on this
     // long-running maintenance path the blocks must not wait for the
     // ContextCleaner
-    graft.ops.Ckpt.release(td); graft.ops.Ckpt.release(carried)
+    graft.ops.Ckpt.release(td)
     maxE
   }
 
@@ -429,17 +431,10 @@ object StreamOps {
     * bounded epochs; the checkpoint makes a restart resume after the
     * last committed epoch and a crashed epoch replay cleanly. */
   def runCorpusIngest(docs: DataFrame, corpusPath: String,
-                      checkpoint: String): Unit = {
-    val q = docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        ingestBatch(batch, epoch, corpusPath)
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
-  }
+                      checkpoint: String): Unit =
+    drainBatches(docs, checkpoint) { (batch, epoch) =>
+      ingestBatch(batch, epoch, corpusPath)
+    }
 
   /** Streaming maintenance of the ranked-retrieval token index
     * ([[graft.ops.TextOps.buildTokenIndexTo]] starts it; this keeps it
@@ -457,18 +452,11 @@ object StreamOps {
     * under the same epoch contract. Per-batch cost scales with the
     * batch, never the index. */
   def runTokenIndexIngest(docs: DataFrame, idx: String,
-                          checkpoint: String): Unit = {
-    val q = docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (b: DataFrame, epoch: Long) =>
-        graft.ops.TextOps.ingestTokenIndex(b, idx, epoch + 1,
-          writerId = Some(checkpoint))
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
-  }
+                          checkpoint: String): Unit =
+    drainBatches(docs, checkpoint) { (b, epoch) =>
+      graft.ops.TextOps.ingestTokenIndex(b, idx, epoch + 1,
+        writerId = Some(checkpoint))
+    }
 
   /** Streaming maintenance of the pHash archive
     * ([[graft.ops.Multimodal.buildPhashIndexTo]] starts it): each
@@ -483,18 +471,11 @@ object StreamOps {
     * probe reading the masked view, the image modality gets the same
     * ingest/delete/probe triangle as text fingerprints. */
   def runPhashIngest(docs: DataFrame, idx: String,
-                     checkpoint: String): Unit = {
-    val q = docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (b: DataFrame, epoch: Long) =>
-        graft.ops.Multimodal.ingestPhashIndex(
-          b.sparkSession, b, idx, epoch + 1)
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
-  }
+                     checkpoint: String): Unit =
+    drainBatches(docs, checkpoint) { (b, epoch) =>
+      graft.ops.Multimodal.ingestPhashIndex(
+        b.sparkSession, b, idx, epoch + 1)
+    }
 
   /** Streaming maintenance of the audio-fingerprint archive — the
     * audio face of [[runPhashIngest]]: each micro-batch of documents
@@ -503,22 +484,15 @@ object StreamOps {
     * build layer's epoch 0). Replay contract as everywhere: decode is
     * deterministic, so a crashed epoch recommits identical rows. With
     * [[runDeleteStream]] on the same archive and
-    * [[graft.io.Tables.foldManifestedEpochs]]'s fold, the audio
+    * [[graft.io.Tables.foldEpochs]]'s fold, the audio
     * modality has the same ingest/delete/probe triangle as text
     * fingerprints and image hashes. */
   def runAudioFpIngest(docs: DataFrame, idx: String,
-                       checkpoint: String): Unit = {
-    val q = docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (b: DataFrame, epoch: Long) =>
-        graft.ops.Multimodal.ingestAudioFpIndex(
-          b.sparkSession, b, idx, epoch + 1)
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
-  }
+                       checkpoint: String): Unit =
+    drainBatches(docs, checkpoint) { (b, epoch) =>
+      graft.ops.Multimodal.ingestAudioFpIndex(
+        b.sparkSession, b, idx, epoch + 1)
+    }
 
   /** Streaming semantic dedup — [[runNearDupProbe]]'s embedding-side
     * sibling: each micro-batch of vectors probes the persisted
@@ -533,23 +507,16 @@ object StreamOps {
     * already EXIST ([[graft.ops.Similarity.buildSemDedupArchiveTo]]
     * is the one-time build). */
   def runSemDedupProbe(vecs: DataFrame, idx: String, outPath: String,
-                       checkpoint: String): Unit = {
-    val q = vecs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (b: DataFrame, epoch: Long) =>
-        graft.ops.Similarity
-          .dedupSemanticIncrementalFrom(b, idx, epoch + 1)
-          .withColumn("ingest_epoch", lit(epoch + 1))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("ingest_epoch")
-          .parquet(outPath)
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
-  }
+                       checkpoint: String): Unit =
+    drainBatches(vecs, checkpoint) { (b, epoch) =>
+      graft.ops.Similarity
+        .dedupSemanticIncrementalFrom(b, idx, epoch + 1)
+        .withColumn("ingest_epoch", lit(epoch + 1))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("ingest_epoch")
+        .parquet(outPath)
+    }
 
   // ---------- Streaming near-dup probe (fingerprint archive) ----------
 
@@ -564,17 +531,10 @@ object StreamOps {
     * rate, and the same epoch-compaction lifecycle as the ANN code
     * table applies when epochs accumulate. */
   def runNearDupProbe(docs: DataFrame, idx: String, outPath: String,
-                      checkpoint: String): Unit = {
-    val q = docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (b: DataFrame, epoch: Long) =>
-        graft.ops.TextOps.ingestAndProbeFingerprints(b, epoch, idx, outPath)
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
-  }
+                      checkpoint: String): Unit =
+    drainBatches(docs, checkpoint) { (b, epoch) =>
+      graft.ops.TextOps.ingestAndProbeFingerprints(b, epoch, idx, outPath)
+    }
 
   // ---------- The composed curation front door ----------
 
@@ -609,62 +569,51 @@ object StreamOps {
     * `phash/`, `audio/`. */
   def runFrontDoor(docs: DataFrame, root: String,
                    checkpoint: String,
-                   benchmark: Option[DataFrame] = None): Unit = {
-    val q = docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (b: DataFrame, epoch: Long) =>
-        val s = b.sparkSession
-        // +1 offset on EVERY store, corpus included: epoch 0 is the
-        // one-time seed/build layer across the whole topology
-        val e = epoch + 1
-        ingestBatch(b, e, s"$root/corpus", benchmark)
-        // the epoch's survivors, read back from the store — exactly
-        // what landed, identical on a crash-replay
-        val survivors = corpusView(s, s"$root/corpus")
-          .where(col("ingest_epoch").cast("long") === e)
-          .select("doc_id", "text", "lang", "source", "n_chars")
-          .localCheckpoint()
-        if (!survivors.isEmpty) {
-          graft.ops.TextOps.ingestAndProbeFingerprints(
-            survivors, e, s"$root/winnow", s"$root/neardup")
-          // the checkpoint location IS the writer identity: Structured
-          // Streaming guarantees one live attempt per checkpoint, so a
-          // crash-replay may re-enter its own epoch claim on the
-          // bucketed archives while any OTHER writer stays loud
-          graft.ops.Curation.clusterIncrementalFrom(
-            survivors, s"$root/clusters",
-            isBatch = _ => lit(true), epoch = e,
-            writerId = Some(checkpoint))
-          graft.ops.TextOps.ingestTokenIndex(
-            survivors, s"$root/tokens", e, writerId = Some(checkpoint))
-          graft.ops.Multimodal.ingestPhashIndex(
-            s, survivors, s"$root/phash", e)
-          graft.ops.Multimodal.ingestAudioFpIndex(
-            s, survivors, s"$root/audio", e)
-        }
-        // topology commit marker, written LAST: certifies every store
-        // above landed this epoch — cross-store readers resolve at
-        // the highest marked epoch (Tables.consistentView), so a
-        // crash between store commits leaves the half-landed epoch
-        // invisible to them until the replay completes and re-marks
-        Tables.commitEpochMarker(s, root, e)
-        graft.ops.Ckpt.release(survivors)
-        ()
+                   benchmark: Option[DataFrame] = None): Unit =
+    drainBatches(docs, checkpoint) { (b, epoch) =>
+      val s = b.sparkSession
+      // +1 offset on EVERY store, corpus included: epoch 0 is the
+      // one-time seed/build layer across the whole topology
+      val e = epoch + 1
+      ingestBatch(b, e, s"$root/corpus", benchmark)
+      // the epoch's survivors, read back from the store — exactly
+      // what landed, identical on a crash-replay
+      val survivors = corpusView(s, s"$root/corpus")
+        .where(col("ingest_epoch").cast("long") === e)
+        .select("doc_id", "text", "lang", "source", "n_chars")
+        .localCheckpoint()
+      if (!survivors.isEmpty) {
+        graft.ops.TextOps.ingestAndProbeFingerprints(
+          survivors, e, s"$root/winnow", s"$root/neardup")
+        // the checkpoint location IS the writer identity: Structured
+        // Streaming guarantees one live attempt per checkpoint, so a
+        // crash-replay may re-enter its own epoch claim on the
+        // bucketed archives while any OTHER writer stays loud
+        graft.ops.Curation.clusterIncrementalFrom(
+          survivors, s"$root/clusters",
+          isBatch = _ => lit(true), epoch = e,
+          writerId = Some(checkpoint))
+        graft.ops.TextOps.ingestTokenIndex(
+          survivors, s"$root/tokens", e, writerId = Some(checkpoint))
+        graft.ops.Multimodal.ingestPhashIndex(
+          s, survivors, s"$root/phash", e)
+        graft.ops.Multimodal.ingestAudioFpIndex(
+          s, survivors, s"$root/audio", e)
       }
-      .start()
-    q.processAllAvailable()
-    q.stop()
-  }
+      // topology commit marker, written LAST: certifies every store
+      // above landed this epoch — cross-store readers resolve at
+      // the highest marked epoch (Tables.consistentView), so a
+      // crash between store commits leaves the half-landed epoch
+      // invisible to them until the replay completes and re-marks
+      Tables.commitEpochMarker(s, root, e)
+      graft.ops.Ckpt.release(survivors)
+    }
 
   /** The front door's DELETE leg: one right-to-be-forgotten stream
     * that removes each micro-batch of doc keys from the ENTIRE
-    * topology [[runFrontDoor]] maintains — corpus store, winnow
-    * fingerprints, cluster labels, token postings, pHash hashes and
-    * audio fingerprints — in one foreachBatch, under one delete
-    * epoch (+1000000 offset so
-    * tombstone epochs can never collide with the ingest leg's on any
-    * shared archive). Every read view masks the keys IMMEDIATELY
+    * topology [[runFrontDoor]] maintains — every [[documentStores]]
+    * store — in one foreachBatch, under one delete epoch
+    * ([[drainDeletes]]). Every read view masks the keys IMMEDIATELY
     * (deletion is idempotent, so a crashed micro-batch replays
     * cleanly everywhere), and each store's own fold makes the removal
     * physical on its maintenance schedule.
@@ -682,26 +631,9 @@ object StreamOps {
     * maintenance window — the same single-writer-per-window contract
     * the corpus fold documents. */
   def runFrontDoorDeletes(ids: DataFrame, root: String,
-                          checkpoint: String): Unit = {
-    val q = ids.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (b: DataFrame, epoch: Long) =>
-        val e = epoch + Tables.DeleteEpochBase
-        val keys = b.select(col("doc_id")).localCheckpoint()
-        Tables.ingestTombstones(keys, corpusTombstonePath(s"$root/corpus"), e)
-        Tables.ingestTombstones(keys, s"$root/winnow/tombstones", e)
-        Tables.ingestTombstones(keys, s"$root/tokens/tombstones", e)
-        Tables.ingestTombstones(keys, s"$root/phash/tombstones", e)
-        Tables.ingestTombstones(keys, s"$root/audio/tombstones", e)
-        Tables.ingestTombstones(keys, s"$root/clusters/tombstones", e)
-        graft.ops.Ckpt.release(keys)
-        ()
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
-  }
+                          checkpoint: String): Unit =
+    drainDeletes(ids, checkpoint)(b =>
+      Seq(b.select(col("doc_id")) -> documentStores(root).map(_.tombstones)))
 
   /** The VECTOR front door — the embedding stream's composed
     * topology, mirroring [[runFrontDoor]]'s one-checkpoint/one-epoch
@@ -721,90 +653,66 @@ object StreamOps {
     * under `root`: `ann/`, `sem/`, `sem_verdicts`, `drift` (one
     * retrain-trigger row per ingest epoch). */
   def runVectorFrontDoor(vecs: DataFrame, root: String,
-                         checkpoint: String): Unit = {
-    val q = vecs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (b: DataFrame, epoch: Long) =>
-        val e = epoch + 1
-        // pointer-aware: a VERSIONED index root (retrain lifecycle)
-        // resolves to its current version; a plain dir is itself —
-        // after a retrain flip, the next batch encodes against the
-        // new version's artifacts with no topology change
-        val annIdx = graft.ops.Similarity
-          .resolveIndexDir(b.sparkSession, s"$root/ann")
-        graft.ops.Similarity.ingestVectors(b, annIdx, e)
-        // optional third store: a FILTERED-serving index at
-        // `root/fann` joins the topology the moment its one-time
-        // build exists — same epoch, same replay contract
-        if (Tables.manifestExists(b.sparkSession, s"$root/fann/codes"))
-          graft.ops.Similarity.ingestFilteredVectors(b, s"$root/fann", e)
-        graft.ops.Similarity
-          .dedupSemanticIncrementalFrom(b, s"$root/sem", e,
-            writerId = Some(checkpoint))
+                         checkpoint: String): Unit =
+    drainBatches(vecs, checkpoint) { (b, epoch) =>
+      val e = epoch + 1
+      // pointer-aware: a VERSIONED index root (retrain lifecycle)
+      // resolves to its current version; a plain dir is itself —
+      // after a retrain flip, the next batch encodes against the
+      // new version's artifacts with no topology change
+      val annIdx = graft.ops.Similarity
+        .resolveIndexDir(b.sparkSession, s"$root/ann")
+      graft.ops.Similarity.ingestVectors(b, annIdx, e)
+      // optional third store: a FILTERED-serving index at
+      // `root/fann` joins the topology the moment its one-time
+      // build exists — same epoch, same replay contract
+      if (Tables.manifestExists(b.sparkSession, s"$root/fann/codes"))
+        graft.ops.Similarity.ingestFilteredVectors(b, s"$root/fann", e)
+      graft.ops.Similarity
+        .dedupSemanticIncrementalFrom(b, s"$root/sem", e,
+          writerId = Some(checkpoint))
+        .withColumn("ingest_epoch", lit(e))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("ingest_epoch")
+        .parquet(s"$root/sem_verdicts")
+      // the retrain trigger runs WHERE the data arrives: one
+      // monitor row per ingest epoch (q_ann_drift's body against
+      // the frozen artifacts — batch-proportional), so drift is
+      // caught at ingest time, not at the next offline audit; the
+      // index lifecycle reads root/drift before deciding to
+      // retrainIndexTo
+      if (!b.isEmpty)
+        graft.ops.Similarity.annDriftFrom(b.sparkSession,
+            annIdx, b)
           .withColumn("ingest_epoch", lit(e))
           .write.mode("overwrite")
           .option("partitionOverwriteMode", "dynamic")
           .partitionBy("ingest_epoch")
-          .parquet(s"$root/sem_verdicts")
-        // the retrain trigger runs WHERE the data arrives: one
-        // monitor row per ingest epoch (q_ann_drift's body against
-        // the frozen artifacts — batch-proportional), so drift is
-        // caught at ingest time, not at the next offline audit; the
-        // index lifecycle reads root/drift before deciding to
-        // retrainIndexTo
-        if (!b.isEmpty)
-          graft.ops.Similarity.annDriftFrom(b.sparkSession,
-              annIdx, b)
-            .withColumn("ingest_epoch", lit(e))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest_epoch")
-            .parquet(s"$root/drift")
-        // topology commit marker LAST (the runFrontDoor contract):
-        // cross-store readers of ann/sem/drift resolve at the highest
-        // fully-committed epoch via Tables.consistentView
-        Tables.commitEpochMarker(b.sparkSession, root, e)
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
-  }
+          .parquet(s"$root/drift")
+      // topology commit marker LAST (the runFrontDoor contract):
+      // cross-store readers of ann/sem/drift resolve at the highest
+      // fully-committed epoch via Tables.consistentView
+      Tables.commitEpochMarker(b.sparkSession, root, e)
+    }
 
   /** The vector front door's RTBF leg: one stream of vec keys
-    * tombstones the ANN code table and the SemDeDup assignment
-    * archive in one foreachBatch (+1000000 delete-epoch offset, the
+    * tombstones every [[vectorStores]] store — the ANN code table,
+    * the filtered index when present and the SemDeDup assignment
+    * archive — in one foreachBatch (+1000000 delete-epoch offset, the
     * [[runFrontDoorDeletes]] contract) — the serve path and the
     * witness probe mask the keys immediately; each archive's fold
     * makes it physical. */
   def runVectorFrontDoorDeletes(ids: DataFrame, root: String,
-                                checkpoint: String): Unit = {
-    val q = ids.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (b: DataFrame, epoch: Long) =>
-        val e = epoch + Tables.DeleteEpochBase
-        val keys = b.select(col("vec_id")).localCheckpoint()
-        Tables.ingestTombstones(keys,
-          graft.ops.Similarity.resolveIndexDir(b.sparkSession,
-            s"$root/ann") + "/tombstones", e)
-        Tables.ingestTombstones(keys, s"$root/sem/tombstones", e)
-        if (Tables.manifestExists(b.sparkSession, s"$root/fann/codes"))
-          Tables.ingestTombstones(keys, s"$root/fann/tombstones", e)
-        graft.ops.Ckpt.release(keys)
-        ()
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
-  }
+                                checkpoint: String): Unit =
+    drainDeletes(ids, checkpoint)(b =>
+      Seq(b.select(col("vec_id")) ->
+        vectorStores(b.sparkSession, root).map(_.tombstones)))
 
   /** UNIFIED right-to-be-forgotten: ONE forget-stream of document
-    * keys tombstones the ENTIRE estate — the document topology
-    * ([[runFrontDoorDeletes]]' six stores: corpus, winnow, tokens,
-    * pHash, audio, clusters) AND the victims' embedding rows in the
-    * vector topology ([[runVectorFrontDoorDeletes]]' two: ANN codes,
-    * SemDeDup assignments) — in one foreachBatch under one delete
+    * keys tombstones the ENTIRE estate — every [[documentStores]]
+    * store AND the victims' embedding rows in every [[vectorStores]]
+    * store — in one foreachBatch under one delete
     * epoch. A real forget request names a DOCUMENT; its embedding
     * rows live in different stores under a different key space, and
     * two separate delete streams is exactly how one of them gets
@@ -825,45 +733,116 @@ object StreamOps {
       vecRoot: String, checkpoint: String,
       docToVec: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
         identity,
-      docVecMap: Option[DataFrame] = None): Unit = {
-    val q = ids.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (b: DataFrame, epoch: Long) =>
-        val e = epoch + Tables.DeleteEpochBase
-        val keys = b.select(col("doc_id")).localCheckpoint()
-        // document topology — the runFrontDoorDeletes set
-        Tables.ingestTombstones(keys,
-          corpusTombstonePath(s"$docRoot/corpus"), e)
-        Tables.ingestTombstones(keys, s"$docRoot/winnow/tombstones", e)
-        Tables.ingestTombstones(keys, s"$docRoot/tokens/tombstones", e)
-        Tables.ingestTombstones(keys, s"$docRoot/phash/tombstones", e)
-        Tables.ingestTombstones(keys, s"$docRoot/audio/tombstones", e)
-        Tables.ingestTombstones(keys, s"$docRoot/clusters/tombstones", e)
-        // vector topology — the same request's embedding rows: the
-        // batch of doc keys joins the mapping (equi-join on doc_id;
-        // the batch side is tiny, so AQE broadcasts it against a
-        // mapping of any size), fanning each doc out to ALL its
-        // chunk vec_ids; the scalar fallback keeps 1:1 schemes
-        val vkeys = (docVecMap match {
-          case Some(m) => keys
-            .join(m.select(col("doc_id"), col("vec_id")), Seq("doc_id"))
-            .select(col("vec_id")).distinct()
-          case None => keys.select(docToVec(col("doc_id")).as("vec_id"))
-        }).localCheckpoint()
-        Tables.ingestTombstones(vkeys,
-          graft.ops.Similarity.resolveIndexDir(b.sparkSession,
-            s"$vecRoot/ann") + "/tombstones", e)
-        Tables.ingestTombstones(vkeys, s"$vecRoot/sem/tombstones", e)
-        if (Tables.manifestExists(b.sparkSession, s"$vecRoot/fann/codes"))
-          Tables.ingestTombstones(vkeys, s"$vecRoot/fann/tombstones", e)
-        graft.ops.Ckpt.release(keys)
-        graft.ops.Ckpt.release(vkeys)
-        ()
+      docVecMap: Option[DataFrame] = None): Unit =
+    drainDeletes(ids, checkpoint) { b =>
+      val keys = b.select(col("doc_id"))
+      // the same request's embedding rows: the batch of doc keys
+      // joins the mapping (equi-join on doc_id; the batch side is
+      // tiny, so AQE broadcasts it against a mapping of any size),
+      // fanning each doc out to ALL its chunk vec_ids; the scalar
+      // fallback keeps 1:1 schemes
+      val vkeys = docVecMap match {
+        case Some(m) => keys
+          .join(m.select(col("doc_id"), col("vec_id")), Seq("doc_id"))
+          .select(col("vec_id")).distinct()
+        case None => keys.select(docToVec(col("doc_id")).as("vec_id"))
       }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+      Seq(keys -> documentStores(docRoot).map(_.tombstones),
+        vkeys -> vectorStores(b.sparkSession, vecRoot).map(_.tombstones))
+    }
+
+  // ---------- The store lists ----------
+
+  /** One data table of a [[Store]]: where it lives, whether it is
+    * BUCKETED (else MANIFESTED), and the name of its row in the
+    * unconditional windows' post-sweep health output (None: no
+    * row). */
+  private[graft] final case class StoreTable(path: String,
+      bucketed: Boolean = false, healthRow: Option[String] = None)
+
+  /** One persisted store, described once — every delete leg, both
+    * maintenance windows of both topologies and their health rows
+    * iterate [[documentStores]] / [[vectorStores]] instead of naming
+    * paths:
+    *  - `name`: the store's row in the policy-driven windows' output;
+    *  - `tables`: its data tables; the FIRST decides whether a
+    *    policy-driven window acts. A store with no tables (the
+    *    corpus: a plain epoch-partitioned directory) acts whenever it
+    *    holds live tombstones and reports no health row;
+    *  - `tombstones`, `key`: its tombstone table and the key column
+    *    it masks;
+    *  - `fold`: its epoch fold, one call across all its tables.
+    * The per-store INGEST bodies (winnow probe, cluster relabel,
+    * tokens, pHash, audio, ANN encode) stay separate code: they do
+    * different work. */
+  private[graft] final case class Store(name: String,
+      tables: Seq[StoreTable], tombstones: String, key: String,
+      fold: SparkSession => Unit)
+
+  /** A one-table store under the shared [[graft.io.Tables.foldEpochs]];
+    * its health row carries the store's name. */
+  private def epochStore(name: String, path: String, tombstones: String,
+                         key: String, bucketed: Boolean = false): Store =
+    Store(name, Seq(StoreTable(path, bucketed, Some(name))), tombstones,
+      key, s => Tables.foldEpochs(s,
+        Seq(Tables.EpochTable(path, bucketed)), tombstones, key))
+
+  /** The corpus store. Its tombstone table lives at a SIBLING path:
+    * the corpus itself is a plain epoch-partitioned parquet table
+    * (not manifested), so a `tombstones/` subdirectory would corrupt
+    * its partition discovery. */
+  private[graft] def corpusStore(corpusPath: String): Store =
+    Store("corpus", Nil, s"${corpusPath.stripSuffix("/")}_tombstones",
+      "doc_id", foldCorpusTombstones(_, corpusPath))
+
+  /** The document topology [[runFrontDoor]] maintains under `root`,
+    * every store keyed on doc_id. */
+  private[graft] def documentStores(root: String): Seq[Store] = {
+    def tomb(n: String) = s"$root/$n/tombstones"
+    Seq(
+      corpusStore(s"$root/corpus"),
+      epochStore("winnow", s"$root/winnow/fingerprints", tomb("winnow"),
+        "doc_id"),
+      // the fold spans labels + postings + sizes
+      Store("clusters", Seq(
+          StoreTable(s"$root/clusters/labels", bucketed = true,
+            Some("clusters")),
+          StoreTable(s"$root/clusters/postings", bucketed = true),
+          StoreTable(s"$root/clusters/sizes",
+            healthRow = Some("cluster_sizes"))),
+        tomb("clusters"), "doc_id",
+        graft.ops.Curation.compactClusterArchive(_, s"$root/clusters")),
+      // the fold spans postings + doc lengths
+      Store("tokens", Seq(
+          StoreTable(s"$root/tokens/postings", bucketed = true),
+          StoreTable(s"$root/tokens/doclen", healthRow = Some("doclen"))),
+        tomb("tokens"), "doc_id",
+        graft.ops.TextOps.compactTokenIndexEpochs(_, s"$root/tokens")),
+      epochStore("phash", s"$root/phash/hashes", tomb("phash"), "doc_id"),
+      epochStore("audio", s"$root/audio/hashes", tomb("audio"), "doc_id"))
+  }
+
+  /** The vector topology [[runVectorFrontDoor]] maintains under
+    * `root`, every store keyed on vec_id: the ANN code table at the
+    * index's CURRENT version (pointer-aware, so maintenance and
+    * deletes follow a retrain flip), the filtered-serving index when
+    * its one-time build exists, and the vec_id-bucketed SemDeDup
+    * assignment archive. */
+  private[graft] def vectorStores(s: SparkSession,
+                                  root: String): Seq[Store] = {
+    val ann = graft.ops.Similarity.resolveIndexDir(s, s"$root/ann")
+    val fann = s"$root/fann"
+    Seq(Store("ann_codes",
+        Seq(StoreTable(s"$ann/codes", healthRow = Some("ann_codes"))),
+        s"$ann/tombstones", "vec_id",
+        graft.ops.Similarity.compactIndexEpochs(_, ann))) ++
+      (if (!Tables.manifestExists(s, s"$fann/codes")) Nil
+       else Seq(Store("fann_codes",
+         Seq(StoreTable(s"$fann/codes", healthRow = Some("fann_codes"))),
+         s"$fann/tombstones", "vec_id",
+         graft.ops.Similarity.compactFilteredIndexEpochs(_, fann)))) :+
+      epochStore("sem_assigned", s"$root/sem/assigned",
+        s"$root/sem/tombstones", "vec_id", bucketed = true)
   }
 
   // ---------- The maintenance window ----------
@@ -882,324 +861,152 @@ object StreamOps {
     try body finally Tables.releaseMaintenanceWindow(s, root)
   }
 
+  /** The one window body behind all four window entry points, over
+    * the stores of one topology that exist (a topology's archives
+    * appear on their first non-empty epoch; absent ones are skipped,
+    * not failed). Per store:
+    *  1. decide: `policy` consults [[graft.ops.ScaleOps.maintenanceDue]]
+    *     on the PRE-sweep health of the store's first table; otherwise
+    *     everything is due;
+    *  2. fold when fold is due (physical deletes included,
+    *     newest-epoch carry everywhere);
+    *  3. vacuum the deciding table when vacuum is due — manifested
+    *     tables drop superseded manifest versions, bucketed ones their
+    *     superseded/crashed version dirs (the versioned fold retains
+    *     them for concurrent readers; without the sweep the
+    *     vacuum_due flag stays latched and every window re-acts) — and,
+    *     when the store acted at all, its other tables and its
+    *     tombstone table (tombstone tables accumulate versions fastest
+    *     of all: every delete epoch and every retire is a commit);
+    *  4. zone-map and Bloom upkeep: a fold/vacuum that rewrote files
+    *     orphans an analyzed store's sidecars (skipping reads and
+    *     point lookups degrade to full scans until re-analyzed). An
+    *     ANALYZE is a full-archive scan, so it is gated twice: a store
+    *     this window ACTED on restores full coverage; one that merely
+    *     kept ingesting re-analyzes only once its coverage halves
+    *     (amortized log-many full scans, not one per window). Each
+    *     sidecar re-analyzes with the columns its own pointer records;
+    *     never-analyzed tables are untouched.
+    * Returns the policy decision rows (pre-sweep counters, the
+    * decisions, whether the store acted), or else the post-sweep
+    * health rows of every table that reports one. */
+  private def runWindow(s: SparkSession, root: String, holderId: String,
+      stores: => Seq[Store], policy: Boolean): DataFrame =
+      withWindowLease(s, root, holderId) {
+    import s.implicits._
+    def exists(t: StoreTable) =
+      if (t.bucketed) Tables.bucketedArchiveExists(s, t.path)
+      else Tables.manifestExists(s, t.path)
+    def health(name: String, t: StoreTable, st: Store) =
+      if (t.bucketed) graft.ops.ScaleOps.bucketedArchiveHealth(s, name,
+        t.path, st.tombstones, st.key)
+      else graft.ops.ScaleOps.archiveHealth(s, name, t.path,
+        st.tombstones, st.key)
+    def vacuum(t: StoreTable): Unit =
+      if (t.bucketed) Tables.sweepBucketedScratch(s, t.path)
+      else Tables.vacuumManifested(s, t.path)
+    val live = stores.filter(st => st.tables.headOption
+      .fold(Tables.manifestExists(s, st.tombstones))(exists))
+    val decisions = live.flatMap { st =>
+      val decided = if (!policy) None else st.tables.headOption.map { t =>
+        val h = health(st.name, t, st)
+        (h, graft.ops.ScaleOps.maintenanceDue(h))
+      }
+      val (foldDue, vacDue) = decided match {
+        case Some((_, (fd, _, vd, _))) => (fd, vd)
+        case None if policy => (Tables.readTombstones(s, st.tombstones,
+          st.key).nonEmpty, false)
+        case None => (true, true)
+      }
+      val acted = foldDue || vacDue
+      if (foldDue) st.fold(s)
+      if (vacDue) st.tables.headOption.foreach(vacuum)
+      if (acted) {
+        st.tables.drop(1).filter(exists).foreach(vacuum)
+        if (Tables.manifestExists(s, st.tombstones))
+          Tables.vacuumManifested(s, st.tombstones)
+      }
+      st.tables.filter(t => !t.bucketed && exists(t)).foreach { t =>
+        val cov = if (acted) 1.0 else 0.5
+        Tables.refreshFileStatsIfStale(s, t.path, cov)
+        Tables.refreshFileBloomsIfStale(s, t.path, cov)
+      }
+      decided.map { case (h, (fd, fr, vd, vr)) =>
+        (h.store, h.n_epochs, h.n_live_rows, h.n_tombstones,
+          h.manifest_versions, h.n_dead_dirs, fd, fr, vd, vr, acted)
+      }
+    }
+    if (policy)
+      decisions.toDF("store", "n_epochs", "n_live_rows", "n_tombstones",
+          "manifest_versions", "n_dead_dirs", "fold_due", "fold_reason",
+          "vacuum_due", "vacuum_reason", "acted")
+        .orderBy("store")
+    else
+      live.flatMap(st => st.tables.collect {
+        case t @ StoreTable(_, _, Some(row)) if exists(t) =>
+          health(row, t, st)
+      }).toDF().orderBy("store")
+  }
+
   /** The front door's MAINTENANCE WINDOW as one entry point — the
     * scheduled job that runs between streaming windows under the
-    * single-writer-per-window contract every fold documents: fold
-    * the corpus store's tombstones, fold every derived archive's
-    * epoch layers (physical deletes included, newest-epoch carry
-    * everywhere), vacuum superseded manifest versions, and return
-    * one [[graft.ops.ScaleOps.ArchiveHealth]] row per manifested
-    * store — the counters a scheduler alerts on if a sweep ever
-    * stops resetting them. Stores that never bootstrapped are
-    * skipped, not failed (a topology's archives appear on their
-    * first non-empty epoch). NOT included, deliberately: the cluster
-    * SPLIT repair ([[graft.ops.Curation.clusterDeleteIds]]) — it
-    * needs the delete KEYS, which the caller of the window supplies
-    * when RTBF requests arrived since the last window (see
-    * [[runFrontDoorDeletes]]); and [[graft.io.Tables
-    * .vacuumManifested]] of the POSTINGS archives, which are
-    * bucketed (their folds retain superseded version dirs, which
-    * this window reclaims with [[graft.io.Tables
-    * .sweepBucketedScratch]]). StreamOpsSpec pins: every read view
+    * single-writer-per-window contract every fold documents: every
+    * [[documentStores]] store folds (the corpus store's tombstones;
+    * every derived archive's epoch layers, physical deletes
+    * included), vacuums and refreshes its analyzed sidecars
+    * ([[runWindow]]), and the window returns one
+    * [[graft.ops.ScaleOps.ArchiveHealth]] row per reporting table —
+    * the counters a scheduler alerts on if a sweep ever stops
+    * resetting them. Superseded versions are reclaimed immediately
+    * (the policy-driven [[runMaintenanceWindowIfDue]] instead waits
+    * for a vacuum-due decision). NOT included, deliberately: the
+    * cluster SPLIT repair ([[graft.ops.Curation.clusterDeleteIds]]) —
+    * it needs the delete KEYS, which the caller of the window
+    * supplies when RTBF requests arrived since the last window (see
+    * [[runFrontDoorDeletes]]). StreamOpsSpec pins: every read view
     * byte-identical across the sweep, every store's version/dead-dir
     * counters reset, epoch layers collapsed. */
   def runMaintenanceWindow(s: SparkSession, root: String,
       holderId: String = java.util.UUID.randomUUID.toString): DataFrame =
-      withWindowLease(s, root, holderId) {
-    import s.implicits._
-    foldCorpusTombstones(s, s"$root/corpus")
-    if (Tables.manifestExists(s, s"$root/winnow/fingerprints"))
-      Tables.foldManifestedEpochs(s, s"$root/winnow/fingerprints",
-        s"$root/winnow/tombstones", "doc_id")
-    if (Tables.bucketedArchiveExists(s, s"$root/clusters/labels"))
-      graft.ops.Curation.compactClusterArchive(s, s"$root/clusters")
-    if (Tables.bucketedArchiveExists(s, s"$root/tokens/postings"))
-      graft.ops.TextOps.compactTokenIndexEpochs(s, s"$root/tokens")
-    if (Tables.manifestExists(s, s"$root/phash/hashes"))
-      Tables.foldManifestedEpochs(s, s"$root/phash/hashes",
-        s"$root/phash/tombstones", "doc_id")
-    if (Tables.manifestExists(s, s"$root/audio/hashes"))
-      Tables.foldManifestedEpochs(s, s"$root/audio/hashes",
-        s"$root/audio/tombstones", "doc_id")
-    val stores = Seq(
-      "winnow" -> s"$root/winnow/fingerprints",
-      "cluster_sizes" -> s"$root/clusters/sizes",
-      "doclen" -> s"$root/tokens/doclen",
-      "phash" -> s"$root/phash/hashes",
-      "audio" -> s"$root/audio/hashes")
-      .filter { case (_, p) => Tables.manifestExists(s, p) }
-    stores.foreach { case (_, p) => Tables.vacuumManifested(s, p) }
-    // tombstone tables accumulate versions fastest of all (every
-    // delete epoch + every fold's clear/re-ingest is a commit) —
-    // vacuum them on the same schedule
-    (s"${corpusTombstonePath(s"$root/corpus")}" +:
-      Seq("winnow", "clusters", "tokens", "phash", "audio")
-        .map(n => s"$root/$n/tombstones"))
-      .filter(Tables.manifestExists(s, _))
-      .foreach(Tables.vacuumManifested(s, _))
-    // bucketed archives RETAIN superseded version dirs for reader
-    // isolation ([[Tables.replaceBucketedArchive]]'s pointer-flip
-    // fold); this unconditional window quiesces everything, so
-    // reclaim them now — the same immediate-reclaim semantics as the
-    // manifested vacuums above (the policy-driven IfDue variant
-    // instead leaves them one window-cadence of grace)
-    Seq(s"$root/clusters/labels", s"$root/clusters/postings",
-        s"$root/tokens/postings")
-      .filter(Tables.bucketedArchiveExists(s, _))
-      .foreach(Tables.sweepBucketedScratch(s, _))
-    // the cluster LABELS are doc_id-bucketed (no manifest pointer) —
-    // health comes from the bucketed variant
-    val bucketed =
-      if (Tables.bucketedArchiveExists(s, s"$root/clusters/labels"))
-        Seq(graft.ops.ScaleOps.bucketedArchiveHealth(s, "clusters",
-          s"$root/clusters/labels", s"$root/clusters/tombstones", "doc_id"))
-      else Nil
-    (stores.map { case (name, p) =>
-      val tomb = p.split('/').dropRight(1).mkString("/") + "/tombstones"
-      // every front-door store keys on doc_id (the vec-keyed ANN/sem
-      // archives live outside this topology)
-      graft.ops.ScaleOps.archiveHealth(s, name, p, tomb, "doc_id")
-    } ++ bucketed).toDF()
-      .orderBy("store")
-  }
+    runWindow(s, root, holderId, documentStores(root), policy = false)
 
   /** The POLICY-DRIVEN maintenance window — [[runMaintenanceWindow]]
     * with [[graft.ops.ScaleOps.maintenanceDue]] consulted BEFORE
     * each store's fold/vacuum instead of sweeping unconditionally:
-    * the monitor→decision→action loop closed. Per store group the
-    * PRE-sweep health row decides; a store that trips neither rule
-    * is not touched at all (no rewrite, no new manifest version, no
-    * IO beyond the health read) — at 100 TB an unconditional nightly
-    * sweep rewrites every archive whether or not it accumulated
-    * anything, and the fold IS the expensive step. Grouped archives
-    * fold together the way their maintenance entry points do (the
-    * cluster fold spans labels+postings+sizes; the token fold spans
-    * postings+doclen — the group acts when its DECIDING store is
-    * due). The corpus store folds when it has live tombstones
-    * (trivially "due": its fold only does delete work). Returns one
-    * row per store: the pre-sweep counters, the decisions, and
-    * whether the group acted. StreamOpsSpec pins: due stores fold
-    * (epoch layers collapse), quiescent stores keep their manifest
-    * version untouched, and the returned decisions match what
-    * happened. */
+    * the monitor→decision→action loop closed. Per store the
+    * PRE-sweep health row of its deciding table decides; a store that
+    * trips neither rule is not touched at all (no rewrite, no new
+    * manifest version, no IO beyond the health read) — at 100 TB an
+    * unconditional nightly sweep rewrites every archive whether or
+    * not it accumulated anything, and the fold IS the expensive step.
+    * Multi-table stores fold together (the cluster fold spans
+    * labels+postings+sizes; the token fold spans postings+doclen).
+    * The corpus store folds when it has live tombstones (trivially
+    * "due": its fold only does delete work). Returns one row per
+    * store: the pre-sweep counters, the decisions, and whether the
+    * store acted. StreamOpsSpec pins: due stores fold (epoch layers
+    * collapse), quiescent stores keep their manifest version
+    * untouched, and the returned decisions match what happened. */
   def runMaintenanceWindowIfDue(s: SparkSession, root: String,
       holderId: String = java.util.UUID.randomUUID.toString): DataFrame =
-      withWindowLease(s, root, holderId) {
-    import s.implicits._
-    if (Tables.readTombstones(s,
-        corpusTombstonePath(s"$root/corpus"), "doc_id").nonEmpty)
-      foldCorpusTombstones(s, s"$root/corpus")
-    // (store, deciding health, group fold action, group's secondary
-    // manifested tables — folded alongside, so they vacuum whenever
-    // the group acts or their versions would accumulate unbounded)
-    val groups = Seq(
-      ("winnow", s"$root/winnow/fingerprints", s"$root/winnow/tombstones",
-        false, () => {
-          Tables.foldManifestedEpochs(s, s"$root/winnow/fingerprints",
-            s"$root/winnow/tombstones", "doc_id"); ()
-        }, Nil),
-      ("clusters", s"$root/clusters/labels", s"$root/clusters/tombstones",
-        true, () => graft.ops.Curation.compactClusterArchive(
-          s, s"$root/clusters"),
-        Seq(s"$root/clusters/sizes")),
-      ("tokens", s"$root/tokens/postings", s"$root/tokens/tombstones",
-        true, () => {
-          graft.ops.TextOps.compactTokenIndexEpochs(s, s"$root/tokens"); ()
-        }, Seq(s"$root/tokens/doclen")),
-      ("phash", s"$root/phash/hashes", s"$root/phash/tombstones",
-        false, () => {
-          Tables.foldManifestedEpochs(s, s"$root/phash/hashes",
-            s"$root/phash/tombstones", "doc_id"); ()
-        }, Nil),
-      ("audio", s"$root/audio/hashes", s"$root/audio/tombstones",
-        false, () => {
-          Tables.foldManifestedEpochs(s, s"$root/audio/hashes",
-            s"$root/audio/tombstones", "doc_id"); ()
-        }, Nil))
-    val rows = groups.flatMap {
-      case (name, path, tomb, bucketed, fold, secondaries) =>
-      val exists =
-        if (bucketed) Tables.bucketedArchiveExists(s, path)
-        else Tables.manifestExists(s, path)
-      if (!exists) None
-      else {
-        val h =
-          if (bucketed)
-            graft.ops.ScaleOps.bucketedArchiveHealth(s, name, path,
-              tomb, "doc_id")
-          else graft.ops.ScaleOps.archiveHealth(s, name, path,
-            tomb, "doc_id")
-        val (foldDue, foldReason, vacDue, vacReason) =
-          graft.ops.ScaleOps.maintenanceDue(h)
-        if (foldDue) fold()
-        // vacuum: manifested stores reclaim superseded manifest
-        // versions; bucketed stores reclaim superseded/crashed
-        // version dirs (the versioned fold retains them for
-        // concurrent readers) — without the sweep the vacuum_due flag
-        // stays latched and every window re-acts
-        if (vacDue) {
-          if (bucketed) Tables.sweepBucketedScratch(s, path)
-          else Tables.vacuumManifested(s, path)
-        }
-        if (foldDue || vacDue)
-          (tomb +: secondaries).filter(Tables.manifestExists(s, _))
-            .foreach(Tables.vacuumManifested(s, _))
-        Some((h.store, h.n_epochs, h.n_live_rows, h.n_tombstones,
-          h.manifest_versions, h.n_dead_dirs,
-          foldDue, foldReason, vacDue, vacReason, foldDue || vacDue))
-      }
-    }
-    // zone-map upkeep: a fold/vacuum that rewrote files orphans any
-    // stats sidecar (the skipping read degrades to full scans until
-    // re-analyzed) — refresh an ANALYZED manifested store with the
-    // columns its own pointer records. An ANALYZE is a full-archive
-    // scan, so it is gated twice: a store this window REWROTE
-    // restores full coverage (the analyze-after-maintenance loop);
-    // a store that merely kept ingesting re-analyzes only once its
-    // coverage halves (each re-scan buys a doubling of commits —
-    // amortized log-many full scans, not one per window). Never-
-    // analyzed stores are untouched either way.
-    val pathByName = groups.map(g => g._1 -> g._2).toMap
-    val actedPaths = rows.collect {
-      case r if r._11 => pathByName(r._1)
-    }.toSet
-    groups.foreach { case (_, path, _, bucketed, _, _) =>
-      if (!bucketed && Tables.manifestExists(s, path)) {
-        val cov = if (actedPaths.contains(path)) 1.0 else 0.5
-        Tables.refreshFileStatsIfStale(s, path, cov)
-        // same gating for the point-lookup sidecar: Blooms orphaned
-        // by a fold's rewrite re-analyze with the key their own
-        // pointer records
-        Tables.refreshFileBloomsIfStale(s, path, cov)
-      }
-    }
-    rows.toDF("store", "n_epochs", "n_live_rows", "n_tombstones",
-        "manifest_versions", "n_dead_dirs", "fold_due", "fold_reason",
-        "vacuum_due", "vacuum_reason", "acted")
-      .orderBy("store")
-  }
+    runWindow(s, root, holderId, documentStores(root), policy = true)
 
-  /** [[runMaintenanceWindowIfDue]] for the VECTOR topology — the
-    * same monitor→decision→action gating over the vec-keyed stores:
-    * the ANN code table (manifested; fold = compactIndexEpochs) and
-    * the SemDeDup assignment archive (vec_id-bucketed; fold =
-    * foldBucketedEpochs). A quiescent index is not rewritten. */
+  /** [[runMaintenanceWindowIfDue]] for the VECTOR topology
+    * ([[vectorStores]]). A quiescent index is not rewritten. */
   def runVectorMaintenanceWindowIfDue(s: SparkSession, root: String,
       holderId: String = java.util.UUID.randomUUID.toString): DataFrame =
-      withWindowLease(s, root, holderId) {
-    import s.implicits._
-    // pointer-aware: maintenance targets the CURRENT index version
-    val annIdx = graft.ops.Similarity.resolveIndexDir(s, s"$root/ann")
-    val groups = Seq(
-      ("ann_codes", s"$annIdx/codes", s"$annIdx/tombstones",
-        false, () => {
-          graft.ops.Similarity.compactIndexEpochs(s, annIdx); ()
-        }),
-      ("fann_codes", s"$root/fann/codes", s"$root/fann/tombstones",
-        false, () => {
-          graft.ops.Similarity.compactFilteredIndexEpochs(
-            s, s"$root/fann"); ()
-        }),
-      ("sem_assigned", s"$root/sem/assigned", s"$root/sem/tombstones",
-        true, () => {
-          Tables.foldBucketedEpochs(s, s"$root/sem/assigned",
-            s"$root/sem/tombstones", "vec_id"); ()
-        }))
-    val rows = groups.flatMap { case (name, path, tomb, bucketed, fold) =>
-      val exists =
-        if (bucketed) Tables.bucketedArchiveExists(s, path)
-        else Tables.manifestExists(s, path)
-      if (!exists) None
-      else {
-        val h =
-          if (bucketed)
-            graft.ops.ScaleOps.bucketedArchiveHealth(s, name, path,
-              tomb, "vec_id")
-          else graft.ops.ScaleOps.archiveHealth(s, name, path,
-            tomb, "vec_id")
-        val (foldDue, foldReason, vacDue, vacReason) =
-          graft.ops.ScaleOps.maintenanceDue(h)
-        if (foldDue) fold()
-        // bucketed vacuum = sweep crashed-fold scratch (see the doc
-        // topology window above for why skipping it latches the flag)
-        if (vacDue) {
-          if (bucketed) Tables.sweepBucketedScratch(s, path)
-          else Tables.vacuumManifested(s, path)
-        }
-        if (foldDue || vacDue)
-          Seq(tomb).filter(Tables.manifestExists(s, _))
-            .foreach(Tables.vacuumManifested(s, _))
-        Some((h.store, h.n_epochs, h.n_live_rows, h.n_tombstones,
-          h.manifest_versions, h.n_dead_dirs,
-          foldDue, foldReason, vacDue, vacReason, foldDue || vacDue))
-      }
-    }
-    // same double-gated sidecar upkeep as the document window: a
-    // store this window rewrote restores full coverage; one that
-    // merely ingested re-analyzes only once coverage halves
-    val pathByName = groups.map(g => g._1 -> g._2).toMap
-    val actedPaths = rows.collect {
-      case r if r._11 => pathByName(r._1)
-    }.toSet
-    groups.foreach { case (_, path, _, bucketed, _) =>
-      if (!bucketed && Tables.manifestExists(s, path)) {
-        val cov = if (actedPaths.contains(path)) 1.0 else 0.5
-        Tables.refreshFileStatsIfStale(s, path, cov)
-        Tables.refreshFileBloomsIfStale(s, path, cov)
-      }
-    }
-    rows.toDF("store", "n_epochs", "n_live_rows", "n_tombstones",
-        "manifest_versions", "n_dead_dirs", "fold_due", "fold_reason",
-        "vacuum_due", "vacuum_reason", "acted")
-      .orderBy("store")
-  }
+    runWindow(s, root, holderId, vectorStores(s, root), policy = true)
 
-  /** [[runMaintenanceWindow]] for the VECTOR topology: fold the ANN
-    * code table ([[graft.ops.Similarity.compactIndexEpochs]] — the
-    * single-version result also restores scan-time DPP on `cell`)
-    * and the SemDeDup assignment archive (the shared
-    * [[graft.io.Tables.foldManifestedEpochs]] carry rule on vec_id),
-    * vacuum both plus their tombstone tables, and return the
-    * post-sweep health rows. Same single-writer-window contract;
-    * stores that never bootstrapped are skipped. */
+  /** [[runMaintenanceWindow]] for the VECTOR topology
+    * ([[vectorStores]]): the ANN code table's fold
+    * ([[graft.ops.Similarity.compactIndexEpochs]] — the single-version
+    * result also restores scan-time DPP on `cell`), the filtered
+    * index's, and the SemDeDup assignment archive's, then the vacuums
+    * and the post-sweep health rows. Same single-writer-window
+    * contract. */
   def runVectorMaintenanceWindow(s: SparkSession, root: String,
       holderId: String = java.util.UUID.randomUUID.toString): DataFrame =
-      withWindowLease(s, root, holderId) {
-    import s.implicits._
-    // pointer-aware: maintenance targets the CURRENT index version
-    val annIdx = graft.ops.Similarity.resolveIndexDir(s, s"$root/ann")
-    if (Tables.manifestExists(s, s"$annIdx/codes"))
-      graft.ops.Similarity.compactIndexEpochs(s, annIdx)
-    if (Tables.manifestExists(s, s"$root/fann/codes"))
-      graft.ops.Similarity.compactFilteredIndexEpochs(s, s"$root/fann")
-    if (Tables.bucketedArchiveExists(s, s"$root/sem/assigned"))
-      Tables.foldBucketedEpochs(s, s"$root/sem/assigned",
-        s"$root/sem/tombstones", "vec_id")
-    val stores = Seq(
-      "ann_codes" -> s"$annIdx/codes",
-      "fann_codes" -> s"$root/fann/codes")
-      .filter { case (_, p) => Tables.manifestExists(s, p) }
-    stores.foreach { case (_, p) => Tables.vacuumManifested(s, p) }
-    Seq(s"$annIdx/tombstones", s"$root/sem/tombstones",
-        s"$root/fann/tombstones")
-      .filter(Tables.manifestExists(s, _))
-      .foreach(Tables.vacuumManifested(s, _))
-    // the assignment archive is vec_id-bucketed; its pointer-flip
-    // fold retained the superseded version for readers — reclaim it
-    // now, this unconditional window's immediate-reclaim semantics
-    if (Tables.bucketedArchiveExists(s, s"$root/sem/assigned"))
-      Tables.sweepBucketedScratch(s, s"$root/sem/assigned")
-    val bucketed =
-      if (Tables.bucketedArchiveExists(s, s"$root/sem/assigned"))
-        Seq(graft.ops.ScaleOps.bucketedArchiveHealth(s, "sem_assigned",
-          s"$root/sem/assigned", s"$root/sem/tombstones", "vec_id"))
-      else Nil
-    (stores.map { case (name, p) =>
-      val tomb = p.split('/').dropRight(1).mkString("/") + "/tombstones"
-      graft.ops.ScaleOps.archiveHealth(s, name, p, tomb, "vec_id")
-    } ++ bucketed).toDF()
-      .orderBy("store")
-  }
+    runWindow(s, root, holderId, vectorStores(s, root), policy = false)
 
   // ---------- Streaming cluster-label maintenance ----------
 
@@ -1227,22 +1034,14 @@ object StreamOps {
     * state store, and accumulated label epochs fold via
     * [[graft.ops.Curation.compactLabelEpochs]]. */
   def runClusterMaintenance(docs: DataFrame, idx: String,
-                            checkpoint: String): Unit = {
-    val q = docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (b: DataFrame, epoch: Long) =>
-        // epoch 0 is the archive's build layer — micro-batch epochs
-        // start above it
-        graft.ops.Curation.clusterIncrementalFrom(
-          b, idx, isBatch = _ => lit(true), epoch = epoch + 1,
-          writerId = Some(checkpoint))
-        ()
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
-  }
+                            checkpoint: String): Unit =
+    drainBatches(docs, checkpoint) { (b, epoch) =>
+      // epoch 0 is the archive's build layer — micro-batch epochs
+      // start above it
+      graft.ops.Curation.clusterIncrementalFrom(
+        b, idx, isBatch = _ => lit(true), epoch = epoch + 1,
+        writerId = Some(checkpoint))
+    }
 
   // ---------- Transforms (batch- and stream-applicable) ----------
 
@@ -1512,16 +1311,12 @@ object StreamOps {
     * materialized view of the running aggregate; foreachBatch is also
     * the escape hatch for any sink Spark lacks a native connector
     * for. */
-  def runToParquetSnapshot(df: DataFrame, path: String): Unit = {
-    val q = df.writeStream
+  def runToParquetSnapshot(df: DataFrame, path: String): Unit =
+    drain(df.writeStream
       .outputMode(OutputMode.Complete)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         batch.write.mode("overwrite").parquet(path)
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
-  }
+      })
 
   /** foreachBatch UPSERT sink: every micro-batch is keyed-merged into
     * a parquet snapshot (incoming beats existing per key; within one
@@ -1545,8 +1340,8 @@ object StreamOps {
     * empty). The read side recovers: if the live dir is missing but
     * `.old` survives, the merge reads `.old`. */
   def runUpsertSnapshot(updates: DataFrame, keyCol: String, tsCol: String,
-                        path: String): Unit = {
-    val q = updates.writeStream
+                        path: String): Unit =
+    drain(updates.writeStream
       .outputMode(OutputMode.Append)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val spark = batch.sparkSession
@@ -1575,24 +1370,14 @@ object StreamOps {
         require(fs.rename(tmp, live), s"upsert swap: commit failed $path")
         fs.delete(old, true)
         () // foreachBatch wants Unit, not delete()'s Boolean
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
-  }
+      })
 
   /** Run a streaming query to completion over currently-available
     * input (Trigger.AvailableNow semantics via processAllAvailable)
     * into an in-memory table; returns the table name. */
   def runToMemory(df: DataFrame, name: String,
                   mode: OutputMode = OutputMode.Append): String = {
-    val q = df.writeStream
-      .outputMode(mode)
-      .format("memory")
-      .queryName(name)
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    drain(df.writeStream.outputMode(mode).format("memory").queryName(name))
     name
   }
 }

@@ -154,7 +154,7 @@ class BloomSkipSpec extends SparkSpec {
 
     Tables.ingestTombstones(
       spark.range(1).select(lit(20L).as("k")), tomb, epoch = 1L)
-    Tables.foldManifestedEpochs(spark, p, tomb, "k")
+    Tables.foldEpochs(spark, Seq(Tables.EpochTable(p)), tomb, "k")
     assert(Tables.bloomSurvivors(spark, p, hashesOf(ids))._3 == 0L,
       "stale blooms pruned freshly-folded files")
     assert(Tables.readManifestedPointLookup(spark, p, keysDf(ids))

@@ -118,7 +118,8 @@ class BucketedDvSpec extends SparkSpec {
     Tables.computeBucketedDeletionVectors(spark, p, tomb, "k")
     assert(!hasLeftAnti(
       Tables.readBucketedArchiveMasked(spark, p, tomb, "k")))
-    Tables.foldBucketedEpochs(spark, p, tomb, "k")
+    Tables.foldEpochs(spark,
+      Seq(Tables.EpochTable(p, bucketed = true)), tomb, "k")
     // the fold retired the tombstones physically — the masked read
     // equals the plain read now, whatever path it takes
     val afterFold = Tables.readBucketedArchiveMasked(spark, p, tomb, "k")

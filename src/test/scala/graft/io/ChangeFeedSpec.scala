@@ -139,7 +139,7 @@ class ChangeFeedSpec extends SparkSpec {
 
     assert(Tables.foldHorizon(spark, p).isEmpty,
       "an unfolded archive has every cursor valid")
-    Tables.foldManifestedEpochs(spark, p, tomb, "doc_id")
+    Tables.foldEpochs(spark, Seq(Tables.EpochTable(p)), tomb, "doc_id")
     // ingest high-water 3 (kept layer: cursor 2 keeps its inserts),
     // retired delete epochs up to 4 → horizon max(3-1, 4) = 4
     assert(Tables.foldHorizon(spark, p).contains(4L))
@@ -225,14 +225,16 @@ class ChangeFeedSpec extends SparkSpec {
       Tables.readBucketedArchive(spark, p), tomb, "doc_id")
     sameRows(applyFeed(state, feed), current, "bucketed identity")
 
-    Tables.foldBucketedEpochs(spark, p, tomb, "doc_id")
+    Tables.foldEpochs(spark,
+      Seq(Tables.EpochTable(p, bucketed = true)), tomb, "doc_id")
     assert(Tables.foldHorizon(spark, p).contains(4L),
       "horizon marker must survive the bucketed fold's dir swap")
     // an immediate second fold's own value is LOWER (kept epoch 3,
     // carried tombstones at 0 → max(3-1, 0) = 2): the horizon is the
     // max over the marker HISTORY, so it must hold at 4 — regression
     // here is exactly what losing the sibling dir would cause
-    Tables.foldBucketedEpochs(spark, p, tomb, "doc_id")
+    Tables.foldEpochs(spark,
+      Seq(Tables.EpochTable(p, bucketed = true)), tomb, "doc_id")
     assert(Tables.foldHorizon(spark, p).contains(4L),
       "horizon regressed across a lower-valued second fold")
     intercept[IllegalArgumentException] {

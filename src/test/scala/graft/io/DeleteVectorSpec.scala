@@ -97,7 +97,7 @@ class DeleteVectorSpec extends SparkSpec {
     // >= 5x the bytes on disk (the ShuffleVolumeSpec discipline
     // applied to write IO)
     val twinPre = dirBytes(s"$tp/data")
-    Tables.foldManifestedEpochs(spark, tp, ttomb, "doc_id")
+    Tables.foldEpochs(spark, Seq(Tables.EpochTable(tp)), ttomb, "doc_id")
     val twinWrote = dirBytes(s"$tp/data") - twinPre
     assert(retireWrote > 0 && twinWrote > 0)
     assert(retireWrote * 5 <= twinWrote,

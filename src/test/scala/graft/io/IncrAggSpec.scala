@@ -198,7 +198,7 @@ class IncrAggSpec extends SparkSpec {
       p, Seq("ingest_epoch"), _ == "ingest_epoch=2")
     Tables.ingestTombstones(
       base.where(col("doc_id") === 11L).select("doc_id"), tomb, epoch = 3L)
-    Tables.foldManifestedEpochs(spark, p, tomb, "doc_id")
+    Tables.foldEpochs(spark, Seq(Tables.EpochTable(p)), tomb, "doc_id")
     assert(Tables.foldHorizon(spark, p).exists(_ > 0L))
     val r2 = sync()
     assert(r2.mode == "resync", s"expected automatic resync, got ${r2.mode}")

@@ -139,8 +139,7 @@ class LaneFeedSpec extends SparkSpec {
     // one batch-lane delete and one streaming-lane delete, then fold
     Tables.ingestTombstones(Seq(1L).toDF("doc_id"), tomb, 2L)
     Tables.ingestTombstones(Seq(3L).toDF("doc_id"), tomb, Base + 5L)
-    Tables.foldManifestedEpochs(spark, p, tomb, "doc_id",
-      Seq("ingest_epoch"))
+    Tables.foldEpochs(spark, Seq(Tables.EpochTable(p)), tomb, "doc_id")
     val (hIns, hDel) = Tables.foldHorizons(spark, p)
     assert(hIns.exists(_ >= 1L), s"ingest-lane horizon missing: $hIns")
     assert(hDel.contains(Base + 5L),

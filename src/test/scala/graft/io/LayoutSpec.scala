@@ -744,7 +744,8 @@ class LayoutSpec extends SparkSpec {
         staged.n_dead_dirs == 0 && staged.dead_bytes == 0L,
         s"staged counters wrong: $staged")
 
-      Tables.foldManifestedEpochs(spark, path, path + "_tomb", "id")
+      Tables.foldEpochs(spark,
+        Seq(Tables.EpochTable(path)), path + "_tomb", "id")
       val folded = health()
       // epoch 0 folded (minus id 3), epoch 1 carried (id 45 stays
       // tombstoned); the two pre-fold dirs are now dead mass
@@ -797,7 +798,8 @@ class LayoutSpec extends SparkSpec {
         }
       })
       reader.start()
-      val folded = try Tables.foldBucketedEpochs(spark, path, tomb, "doc_id")
+      val folded = try Tables.foldEpochs(spark,
+        Seq(Tables.EpochTable(path, bucketed = true)), tomb, "doc_id")
         finally { stop = true; reader.join() }
       assert(folded == 3L)
       assert(failures.isEmpty, s"isolation violated: ${failures.peek()}")
@@ -929,12 +931,15 @@ class LayoutSpec extends SparkSpec {
       // the archive is now EMPTY (zero live partitions)
       Tables.ingestTombstones((0L until 30L).toDF("doc_id"),
         s"$root/tomb", epoch = 1L)
-      Tables.foldBucketedEpochs(spark, path, s"$root/tomb", "doc_id")
+      Tables.foldEpochs(spark,
+        Seq(Tables.EpochTable(path, bucketed = true)), s"$root/tomb",
+        "doc_id")
       assert(Tables.readBucketedArchive(spark, path).count() == 0L,
         "full-corpus fold left live rows")
       // the NEXT maintenance window's fold must be a -1 no-op
-      assert(Tables.foldBucketedEpochs(
-        spark, path, s"$root/tomb", "doc_id") == -1L,
+      assert(Tables.foldEpochs(spark,
+        Seq(Tables.EpochTable(path, bucketed = true)), s"$root/tomb",
+        "doc_id") == -1L,
         "fold over an emptied archive must no-op")
 
       // the sweep reclaims the superseded version dir the fold

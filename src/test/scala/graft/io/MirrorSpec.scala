@@ -229,7 +229,7 @@ class MirrorSpec extends SparkSpec {
     Tables.ingestTombstones(
       ids.where(pmod(col("doc_id"), lit(20)) === 4).select("doc_id"),
       tomb, epoch = 4L)
-    Tables.foldManifestedEpochs(spark, p, tomb, "doc_id")
+    Tables.foldEpochs(spark, Seq(Tables.EpochTable(p)), tomb, "doc_id")
     assert(Tables.foldHorizon(spark, p).exists(_ > 0L))
 
     val r = Tables.syncMirror(spark, p, tomb, "doc_id", m, buckets = 8)

@@ -67,7 +67,8 @@ class SchemaEvolutionSpec extends SparkSpec {
       "pre-evolution rows must read the new column as null")
 
     // physical fold: both vintages rewritten, superset schema kept
-    Tables.foldManifestedEpochs(spark, p, s"${p}_tombstones", "doc_id")
+    Tables.foldEpochs(spark,
+      Seq(Tables.EpochTable(p)), s"${p}_tombstones", "doc_id")
     assert(splits(Tables.readManifested(spark, p)) ==
       ((nEven + nOdd, nEven, nOdd)), "fold dropped the evolved column")
 

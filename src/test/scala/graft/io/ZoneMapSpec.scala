@@ -204,7 +204,7 @@ class ZoneMapSpec extends SparkSpec {
     // never seen — nothing prunable anymore, nothing lost either
     Tables.ingestTombstones(
       spark.range(1).select(lit(5L).as("k")), tomb, epoch = 1L)
-    Tables.foldManifestedEpochs(spark, p, tomb, "k")
+    Tables.foldEpochs(spark, Seq(Tables.EpochTable(p)), tomb, "k")
     val (_, _, prunedStale) = Tables.zonemapSurvivors(spark, p, bounds)
     assert(prunedStale == 0L, "stale stats pruned freshly-folded files")
     val afterFold = Tables.readManifestedSkipping(spark, p, bounds)

@@ -438,7 +438,8 @@ class MultimodalSpec extends SparkSpec {
       assert(pairs().isEmpty, "tombstoned clip still pairs")
       // fold: doc 100 (base layer) physically gone; doc 200 lives in
       // the newest epoch so nothing is carried for it (untombstoned)
-      assert(graft.io.Tables.foldManifestedEpochs(spark, s"$idx/hashes",
+      assert(graft.io.Tables.foldEpochs(spark,
+        Seq(graft.io.Tables.EpochTable(s"$idx/hashes")),
         s"$idx/tombstones", "doc_id") == 1L)
       val raw = graft.io.Tables.readManifested(spark, s"$idx/hashes")
         .select("doc_id").as[Long].collect().toSet

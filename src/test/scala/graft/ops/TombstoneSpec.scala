@@ -17,7 +17,7 @@ import graft.io.Tables
   *    without changing anything a read view returns;
   *  - WINNOW fingerprint archive: a tombstoned doc stops matching
   *    the streaming probe immediately, and
-  *    [[Tables.foldManifestedEpochs]] folds it out physically;
+  *    [[Tables.foldEpochs]] folds it out physically;
   *  - ANN code table ([[Similarity.deleteVectors]]): a deleted
   *    vector is never returned as a neighbor, masked serve ≡
   *    post-fold serve, and [[Similarity.compactIndexEpochs]]
@@ -177,7 +177,8 @@ class TombstoneSpec extends SparkSpec {
       // fold: docs 1/10's fingerprints physically gone, tombstones
       // retired (neither key is in the newest replayable epoch), and
       // a fresh copy still reads clean
-      Tables.foldManifestedEpochs(spark, s"$idx/fingerprints",
+      Tables.foldEpochs(spark,
+        Seq(Tables.EpochTable(s"$idx/fingerprints")),
         s"$idx/tombstones", "doc_id")
       val ids = Tables.readManifested(spark, s"$idx/fingerprints")
         .select(col("doc_id")).distinct().as[Long].collect().toSet

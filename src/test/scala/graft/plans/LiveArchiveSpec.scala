@@ -683,7 +683,8 @@ class LiveArchiveSpec extends SparkSpec {
       .queryExecution.executedPlan.toString.contains("LeftAnti"),
       "the DV-covered bucketed SQL read must not key-anti-join")
     // a fold is tracked too (and physically retires the tombstones)
-    Tables.foldBucketedEpochs(spark, p, tomb, "id")
+    Tables.foldEpochs(spark,
+      Seq(Tables.EpochTable(p, bucketed = true)), tomb, "id")
     assert(spark.sql("SELECT count(*) FROM live_bkt")
       .head().getLong(0) === 135L)
     // writes refuse with the front-door / COW guidance

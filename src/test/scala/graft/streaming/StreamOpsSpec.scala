@@ -916,7 +916,8 @@ class StreamOpsSpec extends SparkSpec {
       .resolveManifest(spark, s"$idx/tombstones")._2.keys.toSet == epochs,
       "idle restart re-committed delete epochs")
     // the physical fold retires streamed tombstones like any others
-    graft.io.Tables.foldManifestedEpochs(spark, s"$idx/fingerprints",
+    graft.io.Tables.foldEpochs(spark,
+      Seq(graft.io.Tables.EpochTable(s"$idx/fingerprints")),
       s"$idx/tombstones", "doc_id")
     assert(graft.io.Tables.readTombstones(spark, s"$idx/tombstones",
       "doc_id").isEmpty, "fold did not retire streamed tombstones")
@@ -2296,5 +2297,34 @@ class StreamOpsSpec extends SparkSpec {
     assert(r3.mode == "resync", s"expected loud full resync, got $r3")
     assertAgg("after resync")
     assert(sync().mode == "noop")
+  }
+
+  test("unconditional maintenance window: an analyzed store's zone-map " +
+    "and Bloom sidecars are back at full coverage after the fold") {
+    import spark.implicits._
+    val root = java.nio.file.Files
+      .createTempDirectory("graft-winside").toString
+    def mk(p: String) = (0 until 12).map(i => s"$p$i").mkString(" ")
+    val hashes = s"$root/phash/hashes"
+    graft.ops.Multimodal.buildPhashIndexTo(spark,
+      Seq((1L, mk("a")), (2L, mk("b"))).toDF("doc_id", "text"),
+      s"$root/phash")
+    (1L to 2L).foreach { e =>
+      graft.ops.Multimodal.ingestPhashIndex(spark,
+        Seq((10L + e, mk(s"e$e"))).toDF("doc_id", "text"),
+        s"$root/phash", e)
+    }
+    graft.io.Tables.computeFileStats(spark, hashes, Seq("doc_id"))
+    graft.io.Tables.computeFileBlooms(spark, hashes, "doc_id")
+    runMaintenanceWindow(spark, root).collect()
+    // the fold rewrote every file of the store: without the window's
+    // sidecar upkeep neither sidecar would cover a live file
+    val (statted, live) = graft.io.Tables.fileStatsCoverage(spark, hashes)
+    assert(live > 0L && statted == live,
+      s"window left stats coverage at $statted/$live")
+    val (bloomed, liveB) = graft.io.Tables.fileBloomCoverage(spark, hashes)
+    assert(liveB > 0L && bloomed == liveB,
+      s"window left Bloom coverage at $bloomed/$liveB")
+    org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(root))
   }
 }
