@@ -12,7 +12,7 @@ import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, LongType}
   * `array_contains(positions, pos)` probes by LINEAR scan — O(|D|)
   * per row, O(rows × |D|) per file. The one hot consumer of a sorted
   * long array in the engine is the deletion-vector positional mask
-  * ([[graft.io.Tables.readManifestedMasked]]): every surviving row of
+  * ([[graft.io.Tables.readMasked]]): every surviving row of
   * a victim file probes that file's sorted victim-row-index array. At
   * 100 TB RTBF volume a heavily-deleted file carries 10⁵+ positions,
   * and the linear probe turns the mask — built precisely to make

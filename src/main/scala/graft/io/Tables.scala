@@ -465,13 +465,8 @@ object Tables {
     * Overwrite-write `data/v1` under a live higher-versioned
     * manifest, clobbering partitions readers still resolve. */
   private[graft] def manifestExists(spark: SparkSession,
-                                    path: String): Boolean = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = fsFor(spark, root)
-    try fs.listStatus(root)
-      .exists(_.getPath.getName.startsWith("_manifest-"))
-    catch { case _: java.io.FileNotFoundException => false }
-  }
+                                    path: String): Boolean =
+    Layout.Manifested.versions(spark, path).nonEmpty
 
   /** Latest complete (version, partition → relative dir). */
   private[graft] def resolveManifest(spark: SparkSession, path: String)
@@ -723,18 +718,27 @@ object Tables {
         size() > 256
     })
 
-  private def readPartsCached(spark: SparkSession, path: String,
-      version: Long, parts: Map[String, String]): DataFrame = {
-    val key =
-      s"${org.apache.spark.sql.GraftColumnBridge.sessionUUID(spark)}#$path@$version"
-    val hit = snapshotMemo.get(key)
+  /** `df`, memoized under `key` in this session's snapshot memo. */
+  private def memoized(spark: SparkSession, key: String)(
+      df: => DataFrame): DataFrame = {
+    val k = s"${org.apache.spark.sql.GraftColumnBridge.sessionUUID(spark)}#$key"
+    val hit = snapshotMemo.get(k)
     if (hit != null) hit
     else {
-      val df = readFromParts(spark, path, parts)
-      snapshotMemo.put(key, df)
-      df
+      val d = df
+      snapshotMemo.put(k, d)
+      d
     }
   }
+
+  /** [[readFromParts]] through the snapshot memo; the lineage
+    * projection is a different plan shape, memoized under its own
+    * key. */
+  private def readPartsCached(spark: SparkSession, path: String,
+      version: Long, parts: Map[String, String],
+      lineage: Boolean = false): DataFrame =
+    memoized(spark, s"$path@$version${if (lineage) "#lin" else ""}")(
+      readFromParts(spark, path, parts, lineage))
 
   /** Snapshot read through the pointer: resolve the latest manifest,
     * group its directories by version (each version root is one
@@ -756,14 +760,7 @@ object Tables {
     val p = new org.apache.hadoop.fs.Path(dir)
     val fs = fsFor(spark, p)
     val stamp = fs.getFileStatus(p).getModificationTime
-    val key = s"${org.apache.spark.sql.GraftColumnBridge.sessionUUID(spark)}#art#$dir@$stamp"
-    val hit = snapshotMemo.get(key)
-    if (hit != null) hit
-    else {
-      val df = spark.read.parquet(dir)
-      snapshotMemo.put(key, df)
-      df
-    }
+    memoized(spark, s"art#$dir@$stamp")(spark.read.parquet(dir))
   }
 
   /** Time-travel read: the snapshot as of manifest version `asOf`.
@@ -810,8 +807,12 @@ object Tables {
   private[graft] def entryPaths(value: String): Seq[String] =
     value.split("\\|\\|").toSeq.filter(_.nonEmpty)
 
+  /** The snapshot of `parts`; with `lineage`, each row also carries
+    * its `_file` / `_pos` (parquet `_metadata`), projected per parquet
+    * relation BEFORE the cross-base union, because the hidden metadata
+    * column does not resolve through a Union. */
   private def readFromParts(spark: SparkSession, path: String,
-                            parts: Map[String, String]): DataFrame = {
+      parts: Map[String, String], lineage: Boolean = false): DataFrame = {
     // an empty manifest would otherwise surface as an opaque
     // `empty.reduceLeft` far from the cause
     require(parts.nonEmpty,
@@ -833,9 +834,12 @@ object Tables {
       .groupBy(_._2).toSeq
       .sortBy(_._1)
       .map { case (base, dz) =>
-        spark.read.option("basePath", base)
+        val df = spark.read.option("basePath", base)
           .option("mergeSchema", "true")
           .parquet(dz.map(_._1).sorted: _*)
+        if (!lineage) df
+        else df.select(col("*"), col("_metadata.file_path").as("_file"),
+          col("_metadata.row_index").as("_pos"))
       }
     // union TYPE COERCION would silently read a retyped column as a
     // widened common type (int lang under a string history reads as
@@ -1036,33 +1040,9 @@ object Tables {
       }
     drop.filterNot(lateKeep.contains).foreach(m =>
       fs.delete(m.getPath, false))
-    // deletion-vector dead mass: every _dv subdir except the one the
-    // current pointer names (superseded rebuilds, and masks whose
-    // pointer a retirement dropped) — same retained-until-vacuum
-    // grace the data dirs get, so a reader holding an old pointer
-    // never loses its files mid-scan
-    val dvRoot = new org.apache.hadoop.fs.Path(
-      s"${path.stripSuffix("/")}/_dv")
-    if (fs.exists(dvRoot)) {
-      val live = deletionVectors(spark, path)
-        .map(p => new org.apache.hadoop.fs.Path(p.dir).getName).toSet
-      val cutoff = System.currentTimeMillis - sidecarSweepGraceMs(spark)
-      fs.listStatus(dvRoot)
-        .filter(st => !live.contains(st.getPath.getName) &&
-          st.getModificationTime < cutoff)
-        .foreach(st => fs.delete(st.getPath, true))
-    }
-    // Bloom-sidecar dead mass: same retained-until-vacuum grace —
-    // every _file_blooms subdir except the current pointer's
-    sweepBloomDirs(spark, path)
+    sweepSidecars(spark, path, Layout.Manifested)
   }
 
-  /** Reclaim superseded Bloom-sidecar dirs: every `_file_blooms`
-    * subdir except the one the current pointer names. The builders
-    * ([[computeFileBlooms]], [[refreshBucketedBlooms]]) retain the
-    * superseded dir at publish time so a reader holding the old
-    * pointer never loses its files mid-scan — this sweep is where
-    * the dead mass goes, called from both layouts' vacuum verbs. */
   /** Sidecar dirs younger than this are SKIPPED by the sweeps: a
     * concurrent Bloom/DV build writes its dir BEFORE flipping the
     * pointer, and a racing vacuum would otherwise delete the
@@ -1074,18 +1054,34 @@ object Tables {
     spark.conf.getOption("spark.graft.sweep.sidecarGraceMs")
       .map(_.toLong).getOrElse(900000L)
 
-  private def sweepBloomDirs(spark: SparkSession, path: String): Unit = {
-    val bRoot = new org.apache.hadoop.fs.Path(
-      s"${path.stripSuffix("/")}/_file_blooms")
-    val fs = fsFor(spark, bRoot)
-    if (!fs.exists(bRoot)) return
-    val live = fileBlooms(spark, path)
-      .map(p => new org.apache.hadoop.fs.Path(p._1).getName).toSet
+  /** Reclaim superseded sidecar dirs — the deletion vectors of
+    * `layout`, the Bloom sidecar and the zone-map sidecar: every
+    * subdir except the one its current pointer names, and older than
+    * [[sidecarSweepGraceMs]]. Every builder retains the superseded dir
+    * at publish time so a reader holding the old pointer never loses
+    * its files mid-scan; this sweep, called from both layouts' vacuum
+    * verbs, is where that dead mass goes. */
+  private def sweepSidecars(spark: SparkSession, path: String,
+                            layout: Layout): Unit = {
     val cutoff = System.currentTimeMillis - sidecarSweepGraceMs(spark)
-    fs.listStatus(bRoot)
-      .filter(st => !live.contains(st.getPath.getName) &&
-        st.getModificationTime < cutoff)
-      .foreach(st => fs.delete(st.getPath, true))
+    Seq[(String, () => Option[String])](
+      layout.dvDir -> (() => deletionVectors(spark, path, layout)
+        .map(_.dir)),
+      "_file_blooms" -> (() => fileBlooms(spark, path).map(_._1)),
+      "_file_stats" -> (() => fileStats(spark, path).map(_._1))
+    ).foreach { case (kind, livePtr) =>
+      val root = new org.apache.hadoop.fs.Path(
+        s"${path.stripSuffix("/")}/$kind")
+      val fs = fsFor(spark, root)
+      if (fs.exists(root)) {
+        val live = livePtr()
+          .map(d => new org.apache.hadoop.fs.Path(d).getName).toSet
+        fs.listStatus(root)
+          .filter(st => !live.contains(st.getPath.getName) &&
+            st.getModificationTime < cutoff)
+          .foreach(st => fs.delete(st.getPath, true))
+      }
+    }
   }
 
   // ---------- Ingest expectations (declared data-quality gates) ----------
@@ -1231,17 +1227,10 @@ object Tables {
   def manifestHistory(spark: SparkSession, path: String): DataFrame = {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = fsFor(spark, root)
-    val manifests = fs.listStatus(root)
-      .filter(_.getPath.getName.startsWith("_manifest-"))
-      .sortBy(_.getPath.getName)
-    require(manifests.nonEmpty, s"no manifest at $path")
-    val mtimes = monotoneMtimes(manifests.toSeq.map(m =>
-      m.getPath.getName.stripPrefix("_manifest-").toLong ->
-        m.getModificationTime))
-    val versions = manifests.toSeq.map { m =>
-      val v = m.getPath.getName.stripPrefix("_manifest-").toLong
-      (v, readManifestFile(fs, m.getPath), mtimes(v))
-    }
+    val mtimes = commitInstants(spark, path, Layout.Manifested)
+    val versions = mtimes.keys.toSeq.sorted.map(v =>
+      (v, readManifestFile(fs, new org.apache.hadoop.fs.Path(root,
+        manifestName(v))), mtimes(v)))
     val rows = versions.zip(
         Map.empty[String, String] +: versions.map(_._2))
       .map { case ((v, parts, ts), prev) =>
@@ -1274,70 +1263,34 @@ object Tables {
     }.toMap
   }
 
+  /** Each retained version's commit instant: the version pointer's
+    * publish mtime ([[Layout.versions]]), clamped monotone. Loud when
+    * `path` holds no version of `layout`. */
+  private def commitInstants(spark: SparkSession, path: String,
+                             layout: Layout): Map[Long, Long] = {
+    val vs = layout.versions(spark, path)
+    require(vs.nonEmpty, s"no ${layout.name} table at $path")
+    monotoneMtimes(vs)
+  }
+
   /** Latest committed version whose commit instant ≤ `tsMillis` —
-    * the `TIMESTAMP AS OF` resolution. The commit instant IS the
-    * manifest pointer file's creation time (the publish makes the
-    * version visible in that same operation), clamped monotone in
-    * version order ([[monotoneMtimes]]), so no extra metadata
-    * write is needed and history older than vacuum's retention
-    * refuses exactly like [[readManifestedAt]] would. Loud when the
-    * timestamp predates the oldest RETAINED commit. */
+    * the `TIMESTAMP AS OF` resolution, for either layout. The commit
+    * instant IS the version pointer's creation time (the publish
+    * makes the version visible in that same operation), clamped
+    * monotone in version order ([[monotoneMtimes]]), so no extra
+    * metadata write is needed and history older than the vacuum's
+    * retention refuses exactly like [[Layout.readAt]] would. Loud
+    * when the timestamp predates the oldest RETAINED commit. */
   private[graft] def manifestVersionAsOf(spark: SparkSession,
-      path: String, tsMillis: Long): Long = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = fsFor(spark, root)
-    val manifests = fs.listStatus(root)
-      .filter(_.getPath.getName.startsWith("_manifest-"))
-    require(manifests.nonEmpty, s"no manifest at $path")
-    val mtimes = monotoneMtimes(manifests.toSeq.map(m =>
-      m.getPath.getName.stripPrefix("_manifest-").toLong ->
-        m.getModificationTime))
-    val eligible = mtimes.filter(_._2 <= tsMillis).keys
+      path: String, tsMillis: Long,
+      layout: Layout = Layout.Manifested): Long = {
+    val eligible = commitInstants(spark, path, layout)
+      .filter(_._2 <= tsMillis).keys
     require(eligible.nonEmpty,
       s"TIMESTAMP AS OF at $path: ${new java.sql.Timestamp(tsMillis)} " +
         "predates the oldest retained commit " +
         "(never written that early, or vacuumed)")
     eligible.max
-  }
-
-  /** [[manifestVersionAsOf]] for the bucketed layout — over the
-    * `_bucketv-` marker mtimes. */
-  private[graft] def bucketedVersionAsOf(spark: SparkSession,
-      path: String, tsMillis: Long): Long = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = fsFor(spark, root)
-    val markers = fs.listStatus(root)
-      .filter(_.getPath.getName.startsWith("_bucketv-"))
-    require(markers.nonEmpty, s"no versioned bucketed archive at $path")
-    val mtimes = monotoneMtimes(markers.toSeq.map(m =>
-      m.getPath.getName.stripPrefix("_bucketv-").toLong ->
-        m.getModificationTime))
-    val eligible = mtimes.filter(_._2 <= tsMillis).keys
-    require(eligible.nonEmpty,
-      s"TIMESTAMP AS OF at $path: ${new java.sql.Timestamp(tsMillis)} " +
-        "predates the oldest retained bucket version")
-    eligible.max
-  }
-
-  /** Commit history for a versioned bucketed archive — one row per
-    * RETAINED-or-committed version marker with its commit instant
-    * (the sweep reclaims superseded DIRS but keeps markers only for
-    * the current version, so rows here are the readable history). */
-  def bucketedHistory(spark: SparkSession, path: String): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = fsFor(spark, root)
-    val markers = fs.listStatus(root)
-      .filter(_.getPath.getName.startsWith("_bucketv-"))
-      .sortBy(_.getPath.getName)
-    require(markers.nonEmpty, s"no versioned bucketed archive at $path")
-    val mtimes = monotoneMtimes(markers.toSeq.map(m =>
-      m.getPath.getName.stripPrefix("_bucketv-").toLong ->
-        m.getModificationTime))
-    val rows = markers.toSeq.map { m =>
-      val v = m.getPath.getName.stripPrefix("_bucketv-").toLong
-      (v, new java.sql.Timestamp(mtimes(v)))
-    }
-    spark.createDataFrame(rows).toDF("version", "commit_ts")
   }
 
   // ---------- Declared additive columns (SQL schema evolution) ----------
@@ -1629,12 +1582,19 @@ object Tables {
   /** Committed versions of a bucketed archive, ascending; empty for
     * an absent archive. */
   private[graft] def bucketedVersions(spark: SparkSession,
-                                      path: String): Seq[Long] = {
+                                      path: String): Seq[Long] =
+    Layout.Bucketed.versions(spark, path).map(_._1)
+
+  /** (version, publish mtime) of every `<prefix><version>` pointer
+    * file at the table root, ascending; empty for an absent root. */
+  private def pointerVersions(spark: SparkSession, path: String,
+                              prefix: String): Seq[(Long, Long)] = {
     val root = new org.apache.hadoop.fs.Path(path)
-    val fs = fsFor(spark, root)
-    try fs.listStatus(root).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith("_bucketv-"))
-      .map(_.stripPrefix("_bucketv-").toLong).sorted
+    try fsFor(spark, root).listStatus(root).toSeq
+      .filter(_.getPath.getName.startsWith(prefix))
+      .map(st => st.getPath.getName.stripPrefix(prefix).toLong ->
+        st.getModificationTime)
+      .sorted
     catch { case _: java.io.FileNotFoundException => Nil }
   }
 
@@ -2236,21 +2196,7 @@ object Tables {
       }
       vdirs.size
     }
-    // superseded Bloom-sidecar dirs get the same grace-then-reclaim
-    sweepBloomDirs(spark, path)
-    // superseded bucketed deletion-vector dirs: everything except
-    // the current pointer's (same build-in-flight grace as blooms)
-    val dvbRoot = new org.apache.hadoop.fs.Path(
-      s"${path.stripSuffix("/")}/_dvb")
-    val cutoff = System.currentTimeMillis - sidecarSweepGraceMs(spark)
-    if (fs.exists(dvbRoot)) {
-      val live = bucketedDeletionVectors(spark, path)
-        .map(p => new org.apache.hadoop.fs.Path(p.dir).getName).toSet
-      fs.listStatus(dvbRoot)
-        .filter(st => !live.contains(st.getPath.getName) &&
-          st.getModificationTime < cutoff)
-        .foreach(st => fs.delete(st.getPath, true))
-    }
+    sweepSidecars(spark, path, Layout.Bucketed)
     // crashed mutations' in-flight markers: until cleared, every
     // masked read degrades to the key mask. Clearing one implies its
     // tree changes may have landed WITHOUT a seq bump — bump first,
@@ -2452,6 +2398,211 @@ object Tables {
         n
     }
 
+  // ---------- Table layouts ----------
+
+  /** One resolved read of a table, as the DV verbs and the fold use
+    * it. `stamp` is the deletion-vector coverage stamp: the manifest
+    * version, or the bucketed commit seq — None while a bucketed
+    * mutation is in flight, when nothing may be stamped. `empty`: a
+    * manifest listing no partitions. The reads are lazy, so a caller
+    * pays only for what it uses: `data` is the plain read, `lineage`
+    * the same rows with their `_file` / `_pos` (parquet `_metadata`),
+    * `epochHigh` the high-water ingest epoch (-1 for an empty or not
+    * epoch-partitioned table). */
+  private[graft] final class Snapshot(val stamp: Option[Long],
+      val empty: Boolean, epochHigh0: => Long, data0: => DataFrame,
+      lineage0: => DataFrame) {
+    lazy val epochHigh: Long = epochHigh0
+    lazy val data: DataFrame = data0
+    lazy val lineage: DataFrame = lineage0
+  }
+
+  /** A layout's share of an archive health row
+    * ([[graft.ops.ScaleOps.archiveHealth]]): live epochs, retained
+    * versions, and the bytes of each dead dir its vacuum reclaims. */
+  private[graft] final case class Footprint(epochs: Int, versions: Int,
+                                            deadBytes: Seq[Long])
+
+  /** How a table keeps its versions — the one value every table verb
+    * that serves both layouts is written over ([[readMasked]],
+    * [[computeDeletionVectors]], [[manifestVersionAsOf]],
+    * [[readChangesSince]], [[registerLiveSql]], [[foldEpochs]]). It
+    * owns only what really differs; the on-disk formats are the
+    * layouts' own. Declared by the caller, never detected from disk;
+    * every verb defaults to MANIFESTED. */
+  sealed trait Layout {
+    /** The layout's word in the live-SQL registry. */
+    def name: String
+    def exists(spark: SparkSession, path: String): Boolean
+    def read(spark: SparkSession, path: String): DataFrame
+    /** Time travel to retained version `v`. */
+    def readAt(spark: SparkSession, path: String, v: Long): DataFrame
+    def snapshot(spark: SparkSession, path: String): Snapshot
+    /** (version, commit-pointer mtime) of every retained version,
+      * ascending — AS OF and history read these. */
+    def versions(spark: SparkSession, path: String): Seq[(Long, Long)]
+    /** Replace the whole table with `df` as its next version. */
+    def rewrite(df: DataFrame, path: String, partCols: Seq[String]): Unit
+    /** Reclaim superseded versions and sidecar dirs. */
+    def vacuum(spark: SparkSession, path: String): Unit
+    def health(spark: SparkSession, path: String): Footprint
+    /** SQL `ALTER TABLE ADD COLUMNS`. */
+    def addColumns(spark: SparkSession, path: String,
+                   cols: StructType): Unit
+    def history(spark: SparkSession, path: String): DataFrame
+    /** The DV sidecar dir; its pointer is `<dvDir>_ptr`. */
+    private[io] def dvDir: String
+    private[io] def encodeDv(dir: String, ins: Long, del: Long,
+                             snap: Snapshot): String
+    private[io] def decodeDv(lines: Array[String]): Option[DvPointer]
+  }
+
+  object Layout {
+    /** Partition dirs behind `_manifest-<v>` pointer flips. */
+    case object Manifested extends Layout {
+      val name = "manifested"
+      def exists(spark: SparkSession, path: String): Boolean =
+        manifestExists(spark, path)
+      def read(spark: SparkSession, path: String): DataFrame =
+        readManifested(spark, path)
+      def readAt(spark: SparkSession, path: String, v: Long): DataFrame =
+        readManifestedAt(spark, path, v)
+      def snapshot(spark: SparkSession, path: String): Snapshot = {
+        // both reads go through the snapshot memo (a version's file
+        // set is immutable) — the masked read sits on serve paths,
+        // where per-query listing re-resolution is the constant the
+        // memo exists to kill
+        val (v, parts) = resolveManifest(spark, path)
+        new Snapshot(Some(v), parts.isEmpty,
+          parts.keys.map(_.takeWhile(_ != '/'))
+            .filter(_.startsWith("ingest_epoch="))
+            .map(_.stripPrefix("ingest_epoch=").toLong)
+            .foldLeft(-1L)(math.max),
+          readPartsCached(spark, path, v, parts),
+          readPartsCached(spark, path, v, parts, lineage = true))
+      }
+      def versions(spark: SparkSession, path: String): Seq[(Long, Long)] =
+        pointerVersions(spark, path, "_manifest-")
+      def rewrite(df: DataFrame, path: String,
+                  partCols: Seq[String]): Unit =
+        upsertManifested(df, path, partCols, _ => true)
+      def vacuum(spark: SparkSession, path: String): Unit =
+        vacuumManifested(spark, path)
+      def health(spark: SparkSession, path: String): Footprint = {
+        val (_, parts) = resolveManifest(spark, path)
+        val root = new org.apache.hadoop.fs.Path(path)
+        val fs = fsFor(spark, root)
+        // unreferenced leaf partition dirs under data/ — walk each
+        // version/attempt root, compare against the live manifest's
+        // relative paths; entry values may be multi-path (file-local
+        // retirement): a leaf dir is live when referenced itself OR
+        // when any reference points INTO it (carried files)
+        val referenced = parts.values.flatMap(entryPaths).toSet
+        def leaves(dir: org.apache.hadoop.fs.Path, rel: String)
+            : Seq[(String, Long)] = {
+          val kids = fs.listStatus(dir).toSeq
+            .filter(st => st.isDirectory && st.getPath.getName.contains("="))
+          kids.flatMap { k =>
+            val childRel = s"$rel/${k.getPath.getName}"
+            val deeper = leaves(k.getPath, childRel)
+            if (deeper.nonEmpty) deeper
+            else Seq(childRel -> fs.getContentSummary(k.getPath).getLength)
+          }
+        }
+        val dataRoot = new org.apache.hadoop.fs.Path(s"$path/data")
+        val dead =
+          if (!fs.exists(dataRoot)) Nil
+          else fs.listStatus(dataRoot).filter(_.isDirectory).toSeq
+            .flatMap(vd => leaves(vd.getPath, s"data/${vd.getPath.getName}"))
+            .filterNot { case (rel, _) => referenced.contains(rel) ||
+              referenced.exists(_.startsWith(rel + "/")) }
+        Footprint(
+          parts.keys.map(_.takeWhile(_ != '/')).toSet.size,
+          versions(spark, path).size, dead.map(_._2))
+      }
+      def addColumns(spark: SparkSession, path: String,
+                     cols: StructType): Unit =
+        declareManifestedColumns(spark, path, cols)
+      def history(spark: SparkSession, path: String): DataFrame =
+        manifestHistory(spark, path)
+      private[io] val dvDir = "_dv"
+      private[io] def encodeDv(dir: String, ins: Long, del: Long,
+                               snap: Snapshot): String =
+        s"$dir\n$ins\n$del\n${snap.epochHigh}\n${snap.stamp.get}"
+      private[io] def decodeDv(lines: Array[String]): Option[DvPointer] =
+        lines match {
+          case Array(dir, i, d, a, v) =>
+            Some(DvPointer(dir, i.toLong, d.toLong, a.toLong, v.toLong))
+          case _ => None
+        }
+    }
+
+    /** Complete bucketed tables in `v<N>/` dirs behind `_bucketv-`
+      * markers; epoch ingests mutate the current dir in place, so
+      * the DV stamp is the commit seq of the mutation protocol
+      * ([[bucketedRootState]]), not the version. */
+    case object Bucketed extends Layout {
+      val name = "bucketed"
+      def exists(spark: SparkSession, path: String): Boolean =
+        bucketedArchiveExists(spark, path)
+      def read(spark: SparkSession, path: String): DataFrame =
+        readBucketedArchive(spark, path)
+      def readAt(spark: SparkSession, path: String, v: Long): DataFrame =
+        readBucketedArchiveAt(spark, path, v)
+      def snapshot(spark: SparkSession, path: String): Snapshot = {
+        val (seq, busy) = bucketedRootState(spark, path)
+        lazy val data = readBucketedArchive(spark, path)
+        new Snapshot(if (busy) None else Some(seq), empty = false,
+          maxIngestEpoch(data), data,
+          data.withColumn("_file", col("_metadata.file_path"))
+            .withColumn("_pos", col("_metadata.row_index")))
+      }
+      def versions(spark: SparkSession, path: String): Seq[(Long, Long)] =
+        pointerVersions(spark, path, "_bucketv-")
+      def rewrite(df: DataFrame, path: String,
+                  partCols: Seq[String]): Unit =
+        replaceBucketedArchive(df, path)
+      def vacuum(spark: SparkSession, path: String): Unit = {
+        sweepBucketedScratch(spark, path)
+        ()
+      }
+      def health(spark: SparkSession, path: String): Footprint = {
+        val root = new org.apache.hadoop.fs.Path(path)
+        val fs = fsFor(spark, root)
+        val liveDir = new org.apache.hadoop.fs.Path(
+          bucketedLiveDir(spark, path))
+        val vdirs = fs.listStatus(root).toSeq.filter(st =>
+          st.isDirectory && st.getPath.getName.matches("v\\d+"))
+        Footprint(
+          fs.listStatus(liveDir).count(st => st.isDirectory &&
+            st.getPath.getName.startsWith("ingest_epoch=")),
+          math.max(1, vdirs.size),
+          vdirs.map(_.getPath).filter(_.getName != liveDir.getName)
+            .map(p => fs.getContentSummary(p).getLength))
+      }
+      def addColumns(spark: SparkSession, path: String,
+                     cols: StructType): Unit =
+        evolveBucketedArchive(spark, path, cols)
+      /** One row per retained version marker with its commit instant
+        * (the sweep keeps the current version's marker only). */
+      def history(spark: SparkSession, path: String): DataFrame =
+        spark.createDataFrame(commitInstants(spark, path, this).toSeq
+            .sorted.map { case (v, ts) => (v, new java.sql.Timestamp(ts)) })
+          .toDF("version", "commit_ts")
+      private[io] val dvDir = "_dvb"
+      private[io] def encodeDv(dir: String, ins: Long, del: Long,
+                               snap: Snapshot): String =
+        s"$dir\n$ins\n$del\nseq:${snap.stamp.get}"
+      private[io] def decodeDv(lines: Array[String]): Option[DvPointer] =
+        lines match {
+          case Array(dir, i, d, g) if g.startsWith("seq:") =>
+            Some(DvPointer(dir, i.toLong, d.toLong, -1L,
+              g.stripPrefix("seq:").toLong))
+          case _ => None
+        }
+    }
+  }
+
   // ---------- Tombstone lifecycle (delete epochs) ----------
 
   /** Commit one DELETE epoch of key tombstones for an archive —
@@ -2541,17 +2692,18 @@ object Tables {
         org.apache.spark.sql.functions.broadcast(t), Seq(keyCol), "left_anti")
     }
 
-  /** The tombstone-masked snapshot read that CONSUMES the
-    * deletion-vector sidecar at scan time — the read-side half of
+  /** The tombstone-masked read that CONSUMES the deletion-vector
+    * sidecar at scan time, for either layout — the read-side half of
     * the DV story ([[computeDeletionVectors]] is the write side).
     *
     * [[minusTombstones]] masks by KEY: a broadcast anti-join whose
     * build side grows with every RTBF delete until the next physical
     * fold — at 100 TB delete volume that broadcast is the OOM shape,
     * and every read pays a per-row key hash against it. When a
-    * CURRENT sidecar exists (its recorded manifest version equals
-    * the version this read resolves — any later commit may have
-    * replaced files the mask indexes by position), the mask is
+    * CURRENT sidecar exists (its recorded stamp equals the stamp of
+    * the snapshot this read resolves — [[Layout.snapshot]]: any later
+    * commit may have replaced files the mask indexes by position, and
+    * a bucketed mutation in flight stamps nothing), the mask is
     * positional instead: one broadcast of (victim file → sorted
     * row-index array) joined on the scan's `_metadata.file_path`,
     * with rows dropped when their `_metadata.row_index` sits in the
@@ -2562,26 +2714,22 @@ object Tables {
     * window), and is skipped outright when there are none — the
     * steady state between a delete's DV build and its retirement.
     *
-    * Overlay discipline: no sidecar, a version mismatch, or a
-    * vanished mask dir all degrade to [[minusTombstones]] —
-    * staleness costs the positional fast path, never rows.
-    * Row-identical to the key mask by construction (the DV was built
-    * from the same tombstone set against the same files). */
-  def readManifestedMasked(spark: SparkSession, path: String,
-      tombPath: String, keyCol: String): DataFrame = {
+    * Overlay discipline: no sidecar, a stale stamp, or a vanished
+    * mask dir all degrade to [[minusTombstones]] — staleness costs
+    * the positional fast path, never rows. Row-identical to the key
+    * mask by construction (the DV was built from the same tombstone
+    * set against the same files). Both mask shapes preserve a
+    * bucketed scan's output partitioning. */
+  def readMasked(spark: SparkSession, path: String, tombPath: String,
+                 keyCol: String,
+                 layout: Layout = Layout.Manifested): DataFrame = {
     val tombE = readTombstonesWithEpochs(spark, tombPath)
-    if (tombE.isEmpty) return readManifested(spark, path)
-    val (version, parts) = resolveManifest(spark, path)
-    // both branch bases go through the snapshot memo (a version's
-    // file set is immutable) — the masked read sits on serve paths
-    // (shingle sizes, SQL live names), where per-query footer/listing
-    // re-resolution is exactly the constant the memo exists to kill
-    def keyMasked = minusTombstones(
-      readPartsCached(spark, path, version, parts), tombPath, keyCol)
-    val dvOpt = deletionVectors(spark, path)
-      .filter(_.version == version)
-    if (dvOpt.isEmpty) return keyMasked
-    val dvp = dvOpt.get
+    if (tombE.isEmpty) return layout.read(spark, path)
+    val snap = layout.snapshot(spark, path)
+    def keyMasked = minusTombstones(snap.data, tombPath, keyCol)
+    val dvp = deletionVectors(spark, path, layout)
+      .filter(p => snap.stamp.contains(p.stamp))
+      .getOrElse(return keyMasked)
     val dv = try
       readArtifactCached(spark, dvp.dir)
         .select(col("file").as("_dv_file"),
@@ -2591,7 +2739,7 @@ object Tables {
       // retirement dropped the pointer this read already resolved
       case scala.util.control.NonFatal(_) => return keyMasked
     }
-    val base = readWithLineageCached(spark, path, version, parts)
+    val base = snap.lineage
     // binary-search probe ([[graft.expr.SortedArrayContains]]): the
     // positions array is ascending-sorted by construction
     // ([[computeDeletionVectors]]'s sort_array), and a heavily-
@@ -2627,7 +2775,7 @@ object Tables {
     * WHERE pushes down, [[graft.plans.ManifestStatsRule]] attaches
     * commit-time stats under CBO, and with `tombPath`/`keyCol` the
     * view serves the tombstone-masked (DV-consuming,
-    * [[readManifestedMasked]]) live state.
+    * [[readMasked]]) live state.
     *
     * SNAPSHOT semantics: the view resolves the manifest AT
     * REGISTRATION — exactly the consistent-read contract
@@ -2641,7 +2789,7 @@ object Tables {
       path: String, tombPath: Option[String] = None,
       keyCol: Option[String] = None): Unit = {
     val df = (tombPath, keyCol) match {
-      case (Some(t), Some(k)) => readManifestedMasked(spark, path, t, k)
+      case (Some(t), Some(k)) => readMasked(spark, path, t, k)
       case (None, None) => readManifested(spark, path)
       case _ => throw new IllegalArgumentException(
         "tombPath and keyCol come together (both or neither)")
@@ -2649,49 +2797,34 @@ object Tables {
     df.createOrReplaceTempView(name)
   }
 
-  /** Register a manifested archive as a LIVE SQL relation: the name
-    * resolves to the archive's CURRENT manifest at analysis time of
-    * every query (via [[graft.plans.ResolveLiveArchives]]), so
-    * `spark.sql("… FROM name")` tracks commits with no
-    * re-registration — the always-current sibling of the snapshot
-    * view [[registerManifestedSql]] publishes. Each query still
-    * reads ONE consistent snapshot (the manifest CAS is the
-    * atomicity); `tombPath`/`keyCol` serve the tombstone-masked
-    * (DV-consuming) live state; `asOf` pins a manifest version that
-    * is re-resolved per query (a reproducible relation that, unlike
-    * a snapshot view, survives catalog churn and later commits
-    * without drifting). Temp views and catalog tables with the same
-    * name shadow a live registration — Spark's own resolution runs
-    * first. Session-scoped, metadata-only. */
-  def registerManifestedLiveSql(spark: SparkSession, name: String,
+  /** Register an archive of either layout as a LIVE SQL relation:
+    * the name resolves to the archive's CURRENT version at analysis
+    * time of every query (via [[graft.plans.ResolveLiveArchives]]), so
+    * `spark.sql("… FROM name")` tracks commits, epoch ingests and
+    * folds with no re-registration — the always-current sibling of
+    * the snapshot view [[registerManifestedSql]] publishes. Each query
+    * still reads ONE consistent snapshot (the version pointer's CAS is
+    * the atomicity); `tombPath`/`keyCol` serve the tombstone-masked
+    * (DV-consuming, [[readMasked]]) live state; `asOf` pins a version
+    * that is re-resolved per query (a reproducible relation that,
+    * unlike a snapshot view, survives catalog churn and later commits
+    * without drifting); `consistentRoots` adds the watermark gate.
+    * SQL DELETE drives the tombstone + DV lifecycle on both layouts;
+    * a BUCKETED name refuses INSERT/UPDATE/MERGE — its rows land
+    * through the claim-guarded epoch front door, and the bucket
+    * layout is a physical contract with no row-level COW rewrite.
+    * Temp views and catalog tables with the same name shadow a live
+    * registration — Spark's own resolution runs first.
+    * Session-scoped, metadata-only; with `registry`, also persisted
+    * for future sessions ([[loadLiveSqlRegistry]]). */
+  def registerLiveSql(spark: SparkSession, name: String,
       path: String, tombPath: Option[String] = None,
       keyCol: Option[String] = None, asOf: Option[Long] = None,
       consistentRoots: Seq[String] = Nil,
-      registry: Option[String] = None): Unit = {
-    graft.plans.LiveArchives.register(spark, name,
-      graft.plans.LiveArchives.LiveReg(path, tombPath, keyCol, asOf,
-        consistentRoots))
-    registry.foreach(r => persistLiveSqlName(spark, r, name,
-      graft.plans.LiveArchives.LiveReg(path, tombPath, keyCol, asOf,
-        consistentRoots)))
-  }
-
-  /** [[registerManifestedLiveSql]] for a BUCKETED archive: the live
-    * name resolves to [[readBucketedArchive]] (or the DV-consuming
-    * [[readBucketedArchiveMasked]] with `tombPath`/`keyCol`, a
-    * bucket-version pin with `asOf`, the watermark gate with
-    * `consistentRoots`), tracking epoch ingests and folds with no
-    * re-registration. SQL DELETE drives the tombstone + bucketed-DV
-    * lifecycle; INSERT/UPDATE/MERGE refuse — rows land through the
-    * claim-guarded epoch front door, and the bucket layout is a
-    * physical contract with no row-level COW rewrite. */
-  def registerBucketedLiveSql(spark: SparkSession, name: String,
-      path: String, tombPath: Option[String] = None,
-      keyCol: Option[String] = None, asOf: Option[Long] = None,
-      consistentRoots: Seq[String] = Nil,
-      registry: Option[String] = None): Unit = {
+      registry: Option[String] = None,
+      layout: Layout = Layout.Manifested): Unit = {
     val reg = graft.plans.LiveArchives.LiveReg(path, tombPath, keyCol,
-      asOf, consistentRoots, bucketed = true)
+      asOf, consistentRoots, layout)
     graft.plans.LiveArchives.register(spark, name, reg)
     registry.foreach(r => persistLiveSqlName(spark, r, name, reg))
   }
@@ -2699,7 +2832,7 @@ object Tables {
   /** Drop a live SQL registration; the name stops resolving. With
     * `registry`, also remove the persisted entry so future sessions
     * loading that registry stop seeing the name. */
-  def unregisterManifestedLiveSql(spark: SparkSession, name: String,
+  def unregisterLiveSql(spark: SparkSession, name: String,
       registry: Option[String] = None): Unit = {
     graft.plans.LiveArchives.unregister(spark, name)
     registry.foreach { r =>
@@ -2742,7 +2875,7 @@ object Tables {
       opt(reg.asOf.map(_.toString)),
       if (reg.consistentRoots.isEmpty) "-"
       else reg.consistentRoots.mkString("\t"),
-      if (reg.bucketed) "bucketed" else "manifested"
+      reg.layout.name
     ).mkString("\n")
     val out = fs.create(f, true)
     try out.write(body.getBytes("UTF-8"))
@@ -2766,14 +2899,15 @@ object Tables {
         readSmallFile(fs, f).split("\n", -1) match {
           case Array(p, tomb, key, asOf, roots, layout) =>
             def opt(s: String) = if (s == "-") None else Some(s)
-            require(layout == "manifested" || layout == "bucketed",
-              s"live-SQL registry entry $f names unknown layout " +
-                s"'$layout'")
             graft.plans.LiveArchives.register(spark, name,
               graft.plans.LiveArchives.LiveReg(p, opt(tomb), opt(key),
                 opt(asOf).map(_.toLong),
                 if (roots == "-") Nil else roots.split("\t").toSeq,
-                bucketed = layout == "bucketed"))
+                Seq[Layout](Layout.Manifested, Layout.Bucketed)
+                  .find(_.name == layout).getOrElse(
+                    throw new IllegalArgumentException(
+                      s"live-SQL registry entry $f names unknown " +
+                        s"layout '$layout'"))))
             name
           case other => throw new IllegalStateException(
             s"garbled live-SQL registry entry at $f " +
@@ -3359,9 +3493,6 @@ object Tables {
 
   // ---------- Deletion vectors (file-local tombstone retirement) ----------
 
-  private def dvPtrPath(path: String) =
-    new org.apache.hadoop.fs.Path(path.stripSuffix("/") + "/_dv_ptr")
-
   /** What one [[retireTombstonesFileLocal]] did: which files paid a
     * rewrite and which were carried untouched by reference — the
     * cost pin for the ≥5× sparse-victim claim lives on these
@@ -3370,75 +3501,46 @@ object Tables {
       filesRewritten: Int, filesCarried: Int, bytesRewritten: Long,
       bytesCarried: Long, usedSidecar: Boolean)
 
-  /** The snapshot with per-row FILE LINEAGE (`_file`, `_pos` from
-    * parquet `_metadata`) — projected per parquet relation BEFORE
-    * the cross-base union, because the hidden metadata column does
-    * not resolve through a Union. */
-  private def readWithLineage(spark: SparkSession, path: String,
-                              parts: Map[String, String]): DataFrame = {
-    val frames = parts.values.toSeq.flatMap(entryPaths)
-      .map(d => entryDirAndBase(path, d))
-      .groupBy(_._2).toSeq.sortBy(_._1)
-      .map { case (base, dz) =>
-        spark.read.option("basePath", base)
-          .option("mergeSchema", "true")
-          .parquet(dz.map(_._1).sorted: _*)
-          .select(col("*"), col("_metadata.file_path").as("_file"),
-            col("_metadata.row_index").as("_pos"))
-      }
-    frames.reduce(_.unionByName(_, allowMissingColumns = true))
-  }
-
-  /** [[readWithLineage]] through the snapshot memo — the lineage
-    * projection is a different plan shape than the plain read, so it
-    * memoizes under its own key suffix. Same correctness argument: a
-    * manifest version's file set is immutable. */
-  private def readWithLineageCached(spark: SparkSession, path: String,
-      version: Long, parts: Map[String, String]): DataFrame = {
-    val key = s"${org.apache.spark.sql.GraftColumnBridge.sessionUUID(spark)}#$path@$version#lin"
-    val hit = snapshotMemo.get(key)
-    if (hit != null) hit
-    else {
-      val df = readWithLineage(spark, path, parts)
-      snapshotMemo.put(key, df)
-      df
-    }
-  }
-
   /** Build the archive's DELETION-VECTOR sidecar for the CURRENT
-    * tombstone set: one row per live file holding a victim —
-    * `(file, positions, n_victims)` with `positions` the sorted
-    * `_metadata.row_index` values of the victim rows (the row-mask
-    * artifact of the transactional table formats). Written AT DELETE
-    * TIME (call right after [[ingestTombstones]]): the scan that
-    * locates victims is paid once when the delete lands, so the
-    * physical retirement knows which files carry victims without
+    * tombstone set, for either layout: one row per live file holding
+    * a victim — `(file, positions, n_victims)` with `positions` the
+    * sorted `_metadata.row_index` values of the victim rows (the
+    * row-mask artifact of the transactional table formats). Written
+    * AT DELETE TIME (call right after [[ingestTombstones]]): the scan
+    * that locates victims is paid once when the delete lands, so
+    * every [[readMasked]] until the next commit stays positional and
+    * the physical retirement knows which files carry victims without
     * re-scanning the archive at maintenance time. Same overlay
     * discipline as the zone-map sidecars: fresh uniquely-named dir,
-    * pointer flips last, and the pointer records the tombstone lane
-    * maxes + archive high-water it covers — retirement checks the
-    * coverage and falls back to its own scan when the sidecar is
-    * stale, so staleness costs a scan, never rows. Returns the
-    * number of victim-carrying files. */
+    * pointer flips last, superseded dirs retained until the layout's
+    * vacuum. The pointer records the tombstone lane maxes it covers
+    * and the snapshot's coverage stamp ([[Layout.snapshot]]), and it
+    * publishes only when that stamp is unchanged across the scan — a
+    * commit (or, bucketed, a mutation in flight) inside the window
+    * leaves the previous pointer, whose older stamp already fails
+    * every currency check. Staleness costs a scan, never rows.
+    * Returns the number of victim-carrying files. */
   def computeDeletionVectors(spark: SparkSession, path: String,
-                             tombPath: String, keyCol: String): Long =
-    readTombstones(spark, tombPath, keyCol) match {
+      tombPath: String, keyCol: String,
+      layout: Layout = Layout.Manifested): Long =
+    readTombstonesWithEpochs(spark, tombPath) match {
       case None => 0L
-      case Some(tomb) =>
-        val (version, parts) = resolveManifest(spark, path)
-        if (parts.isEmpty) return 0L
-        val (insTombMax, delTombMax) =
-          readTombstonesWithEpochs(spark, tombPath)
-            .map(laneMaxes).getOrElse((-1L, -1L))
-        val archMax = maxIngestEpoch(readManifested(spark, path))
-        val dv = readWithLineage(spark, path, parts)
+      case Some(tombE) =>
+        // keys and lane maxes from ONE tombstone snapshot: a delete
+        // landing between two reads would otherwise be claimed as
+        // covered by a mask that never saw its keys
+        val tomb = tombE.select(col(keyCol)).distinct()
+        val (insTombMax, delTombMax) = laneMaxes(tombE)
+        val snap = layout.snapshot(spark, path)
+        if (snap.empty) return 0L
+        val dv = snap.lineage
           .select(col(keyCol), col("_file").as("file"),
             col("_pos").as("pos"))
           .join(broadcast(tomb), Seq(keyCol), "left_semi")
           .groupBy(col("file"))
           .agg(sort_array(collect_list(col("pos"))).as("positions"),
             count(lit(1)).as("n_victims"))
-        val dir = s"${path.stripSuffix("/")}/_dv/" +
+        val dir = s"${path.stripSuffix("/")}/${layout.dvDir}/" +
           java.util.UUID.randomUUID.toString.take(8)
         // no coalesce(1): the groupBy has already hash-partitioned
         // the mask by file, so the sidecar lands partitioned by
@@ -3446,68 +3548,56 @@ object Tables {
         // for a 100 TB archive's whole victim mask would be the
         // bottleneck the sidecar exists to remove
         dv.write.mode(SaveMode.Overwrite).parquet(dir)
-        val ptr = dvPtrPath(path)
-        val fs = fsFor(spark, ptr)
-        val out = fs.create(ptr, true)
-        try out.write(s"$dir\n$insTombMax\n$delTombMax\n$archMax\n$version"
-          .getBytes("UTF-8"))
-        finally out.close()
-        // the superseded sidecar dir stays as dead mass for readers
-        // that resolved the old pointer (the overlay discipline every
-        // other sidecar follows); [[vacuumManifested]] reclaims it
+        if (snap.stamp.nonEmpty &&
+            snap.stamp == layout.snapshot(spark, path).stamp) {
+          val ptr = dvPtrPath(path, layout)
+          val out = fsFor(spark, ptr).create(ptr, true)
+          try out.write(layout.encodeDv(dir, insTombMax, delTombMax, snap)
+            .getBytes("UTF-8"))
+          finally out.close()
+        }
         spark.read.parquet(dir).count()
     }
 
   /** A deletion-vector sidecar pointer: where the mask lives and
-    * what it covers. `version` is the MANIFEST version the mask was
-    * computed against — any later commit (append, compaction, even
-    * one that touches no tombstone lane) replaces files the mask
-    * indexes by position, so consumers require `version` to equal
-    * the current manifest version, not just lane/epoch currency. */
+    * what it covers. `stamp` is the coverage stamp of the snapshot
+    * the mask was computed against ([[Layout.snapshot]]) — any later
+    * commit replaces files the mask indexes by position, so consumers
+    * require `stamp` to equal the current one, not just lane/epoch
+    * currency. `archCovered` is the manifested high-water ingest
+    * epoch (-1: not epoch-partitioned, or a bucketed pointer, which
+    * does not record it). */
   final case class DvPointer(dir: String, insCovered: Long,
-      delCovered: Long, archCovered: Long, version: Long)
+      delCovered: Long, archCovered: Long, stamp: Long)
 
-  /** The current deletion-vector sidecar pointer, or None if never
-    * built / dropped by a retirement. */
-  def deletionVectors(spark: SparkSession, path: String)
-      : Option[DvPointer] = {
-    val ptr = dvPtrPath(path)
+  private def dvPtrPath(path: String, layout: Layout) =
+    new org.apache.hadoop.fs.Path(
+      s"${path.stripSuffix("/")}/${layout.dvDir}_ptr")
+
+  /** The current deletion-vector sidecar pointer of a `layout`
+    * table, or None if never built / dropped by a retirement. */
+  def deletionVectors(spark: SparkSession, path: String,
+      layout: Layout = Layout.Manifested): Option[DvPointer] = {
+    val ptr = dvPtrPath(path, layout)
     val fs = fsFor(spark, ptr)
     if (!fs.exists(ptr)) None
-    else readSmallFile(fs, ptr).split("\n") match {
-      case Array(dir, i, d, a, v) =>
-        Some(DvPointer(dir, i.toLong, d.toLong, a.toLong, v.toLong))
-      case other => throw new IllegalStateException(
-        s"garbled deletion-vector pointer at $ptr (${other.length} " +
-          "lines) — delete it and re-run computeDeletionVectors")
+    else {
+      val lines = readSmallFile(fs, ptr).split("\n")
+      Some(layout.decodeDv(lines).getOrElse(
+        throw new IllegalStateException(
+          s"garbled deletion-vector pointer at $ptr (${lines.length} " +
+            "lines) — delete it and re-run computeDeletionVectors")))
     }
   }
 
   private def dropDeletionVectors(spark: SparkSession,
                                   path: String): Unit = {
-    val ptr = dvPtrPath(path)
+    val ptr = dvPtrPath(path, Layout.Manifested)
     val fs = fsFor(spark, ptr)
     // pointer only: the mask dir stays for concurrent readers that
     // already resolved it; vacuumManifested sweeps unreferenced dirs
     if (fs.exists(ptr)) fs.delete(ptr, false)
   }
-
-  // ---------- Deletion vectors for BUCKETED archives ----------
-  // The bucketed layout (token/shingle postings, labels, assignment
-  // archives — the tables that are LARGEST at 100 TB) masked
-  // tombstones by broadcast key anti-join only: the same
-  // growing-build-side argument that motivated readManifestedMasked
-  // applies, so the positional machinery extends here. One
-  // difference: a bucketed archive has no manifest version to stamp
-  // coverage with — epoch ingests replace partition subtrees INSIDE
-  // the current version dir — so the pointer records the archive's
-  // COMMIT SEQUENCE instead (the protocol below). Any live-tree
-  // mutation (epoch ingest, replay, fold, evolution rewrite) bumps
-  // the seq and the masked read degrades to the key mask: staleness
-  // costs the positional fast path, never rows.
-
-  private def bucketedDvPtrPath(path: String) =
-    new org.apache.hadoop.fs.Path(path.stripSuffix("/") + "/_dvb_ptr")
 
   // ---------- Bucketed mutation protocol (O(1) coverage stamp) ----------
   // The DV coverage stamp is root-level metadata, read in ONE small
@@ -3592,126 +3682,6 @@ object Tables {
     ()
   }
 
-  /** A bucketed deletion-vector pointer: the mask dir, the tombstone
-    * lane maxes it covers, and the commit seq it was computed
-    * against (stored as `seq:<n>`). */
-  final case class BucketedDvPointer(dir: String, insCovered: Long,
-      delCovered: Long, seq: Long)
-
-  /** The current bucketed deletion-vector pointer, or None. */
-  def bucketedDeletionVectors(spark: SparkSession, path: String)
-      : Option[BucketedDvPointer] = {
-    val ptr = bucketedDvPtrPath(path)
-    val fs = fsFor(spark, ptr)
-    if (!fs.exists(ptr)) None
-    else readSmallFile(fs, ptr).split("\n") match {
-      case Array(dir, i, d, g) if g.startsWith("seq:") =>
-        Some(BucketedDvPointer(dir, i.toLong, d.toLong,
-          g.stripPrefix("seq:").toLong))
-      case other => throw new IllegalStateException(
-        s"garbled bucketed deletion-vector pointer at $ptr " +
-          s"(${other.length} lines) — delete it and re-run " +
-          "computeBucketedDeletionVectors")
-    }
-  }
-
-  /** [[computeDeletionVectors]] for the bucketed layout: one row per
-    * victim-carrying live file, `positions` the sorted
-    * `_metadata.row_index` values of the tombstoned rows. Call right
-    * after the tombstone commit (delete time), so every
-    * [[readBucketedArchiveMasked]] between the delete and the next
-    * fold stays on the positional fast path. Same overlay
-    * discipline: fresh uniquely-named dir, pointer flips last,
-    * superseded dirs retained until [[sweepBucketedScratch]]. The
-    * pointer publishes only when the build's whole window is QUIET
-    * (no in-flight mutation and an unmoved commit seq, probed before
-    * and after the scan — a mutation whose start-bump predates the
-    * window would leave its in-flight marker visible at one of the
-    * two probes); otherwise the previous pointer stays, and its
-    * older seq already fails the masked read's currency check. */
-  def computeBucketedDeletionVectors(spark: SparkSession, path: String,
-      tombPath: String, keyCol: String): Long =
-    readTombstones(spark, tombPath, keyCol) match {
-      case None => 0L
-      case Some(tomb) =>
-        val (insTombMax, delTombMax) =
-          readTombstonesWithEpochs(spark, tombPath)
-            .map(laneMaxes).getOrElse((-1L, -1L))
-        val (seq0, busy0) = bucketedRootState(spark, path)
-        val dv = readBucketedArchive(spark, path)
-          .select(col(keyCol),
-            col("_metadata.file_path").as("file"),
-            col("_metadata.row_index").as("pos"))
-          .join(broadcast(tomb), Seq(keyCol), "left_semi")
-          .groupBy(col("file"))
-          .agg(sort_array(collect_list(col("pos"))).as("positions"),
-            count(lit(1)).as("n_victims"))
-        val dir = s"${path.stripSuffix("/")}/_dvb/" +
-          java.util.UUID.randomUUID.toString.take(8)
-        // distributed like the manifested DV sidecar: the groupBy
-        // already hash-partitioned the mask by file
-        dv.write.mode(SaveMode.Overwrite).parquet(dir)
-        val (seq1, busy1) = bucketedRootState(spark, path)
-        if (!busy0 && !busy1 && seq0 == seq1) {
-          val ptr = bucketedDvPtrPath(path)
-          val out = fsFor(spark, ptr).create(ptr, true)
-          try out.write(s"$dir\n$insTombMax\n$delTombMax\nseq:$seq0"
-            .getBytes("UTF-8"))
-          finally out.close()
-        }
-        spark.read.parquet(dir).count()
-    }
-
-  /** The tombstone-masked bucketed read that CONSUMES the bucketed
-    * deletion-vector sidecar — [[readManifestedMasked]] for the
-    * bucketed layout. Coverage check order is cheapest-first: no
-    * tombstones → plain read; no pointer → key mask (one small-file
-    * probe — archives that never built a DV pay nothing new); stale
-    * stamp (a mutation committed — or is IN FLIGHT — since the
-    * build; one root listing, O(metadata), never the data tree) or
-    * vanished mask dir → key mask; otherwise the positional
-    * broadcast mask, with a key anti-join ONLY for tombstones landed
-    * after the recorded lane coverage — skipped outright in the
-    * covered steady state. */
-  def readBucketedArchiveMasked(spark: SparkSession, path: String,
-      tombPath: String, keyCol: String): DataFrame = {
-    val tombE = readTombstonesWithEpochs(spark, tombPath)
-    if (tombE.isEmpty) return readBucketedArchive(spark, path)
-    def keyMasked = minusTombstones(
-      readBucketedArchive(spark, path), tombPath, keyCol)
-    val dvOpt = bucketedDeletionVectors(spark, path).filter { p =>
-      val (seq, busy) = bucketedRootState(spark, path)
-      !busy && p.seq == seq
-    }
-    if (dvOpt.isEmpty) return keyMasked
-    val dvp = dvOpt.get
-    val dv = try
-      spark.read.parquet(dvp.dir)
-        .select(col("file").as("_dv_file"),
-          col("positions").as("_dv_positions"))
-    catch {
-      case scala.util.control.NonFatal(_) => return keyMasked
-    }
-    val base = readBucketedArchive(spark, path)
-      .withColumn("_file", col("_metadata.file_path"))
-      .withColumn("_pos", col("_metadata.row_index"))
-    val masked = base
-      .join(broadcast(dv), base("_file") === col("_dv_file"),
-        "left_outer")
-      .where(col("_dv_positions").isNull ||
-        !graft.expr.SortedSearch.sortedArrayContains(
-          col("_dv_positions"), col("_pos")))
-      .drop("_file", "_pos", "_dv_file", "_dv_positions")
-    val e = col("ingest_epoch").cast("long")
-    val fresh = tombE.get.where(
-      (e < lit(DeleteEpochBase) && e > lit(dvp.insCovered)) ||
-        (e >= lit(DeleteEpochBase) && e > lit(dvp.delCovered)))
-      .select(col(keyCol)).distinct()
-    val (fi, fd) = laneMaxes(tombE.get)
-    if (fi <= dvp.insCovered && fd <= dvp.delCovered) masked
-    else masked.join(broadcast(fresh), Seq(keyCol), "left_anti")
-  }
-
   /** FILE-LOCAL physical tombstone retirement — the deletion-vector
     * fold: rewrite ONLY the files that carry victim rows, carry every
     * other file of the touched partitions BY REFERENCE (multi-path
@@ -3770,14 +3740,14 @@ object Tables {
     // current file — the retirement would report clear_only and the
     // tombstones would clear with their victims still physically live
     val usedSidecar = dvOpt.exists { p =>
-      p.version == version && p.insCovered >= insTombMax &&
+      p.stamp == version && p.insCovered >= insTombMax &&
         p.delCovered >= delTombMax && p.archCovered >= maxE }
     val victimFiles: Set[String] =
       (if (usedSidecar)
         spark.read.parquet(dvOpt.get.dir).select("file")
           .collect().map(_.getString(0)).toSeq
       else
-        readWithLineage(spark, path, parts)
+        readFromParts(spark, path, parts, lineage = true)
           .select(col(keyCol), col("_file").as("file"))
           .join(broadcast(tomb), Seq(keyCol), "left_semi")
           .select("file").distinct()
@@ -3881,13 +3851,14 @@ object Tables {
       plans.values.map(_.keptBytes).sum, usedSidecar)
   }
 
-  /** One epoch-partitioned data table as [[foldEpochs]] rewrites it:
-    * MANIFESTED tables fold behind the manifest pointer and keep
-    * `partCols` (the ANN code table's (ingest_epoch, cell) — with
-    * `ingest_epoch` FIRST); BUCKETED ones fold as the next version by
-    * [[replaceBucketedArchive]], so the bucket layout survives. */
+  /** One epoch-partitioned data table as [[foldEpochs]] rewrites it
+    * ([[Layout.rewrite]]): MANIFESTED tables fold behind the manifest
+    * pointer and keep `partCols` (the ANN code table's
+    * (ingest_epoch, cell) — with `ingest_epoch` FIRST); BUCKETED ones
+    * fold as their next version dir, so the bucket layout survives. */
   private[graft] final case class EpochTable(path: String,
-      bucketed: Boolean = false, partCols: Seq[String] = Seq("ingest_epoch"))
+      layout: Layout = Layout.Manifested,
+      partCols: Seq[String] = Seq("ingest_epoch"))
 
   /** The epoch fold with carry, for every store and both layouts:
     * rewrite each table's live rows MINUS tombstones with every epoch
@@ -3915,17 +3886,9 @@ object Tables {
     require(tables.nonEmpty &&
       tables.forall(_.partCols.headOption.contains("ingest_epoch")),
       "foldEpochs needs tables with ingest_epoch as the first level")
-    def read(t: EpochTable) =
-      if (t.bucketed) readBucketedArchive(s, t.path)
-      else readManifested(s, t.path)
-    // manifested: the high-water mark is in the partition keys (no
-    // scan); bucketed: a nullable max, -1 for an emptied archive
+    def read(t: EpochTable) = t.layout.read(s, t.path)
     val lead = tables.head
-    val maxE =
-      if (lead.bucketed) maxIngestEpoch(read(lead))
-      else resolveManifest(s, lead.path)._2.keys
-        .map(_.takeWhile(_ != '/').stripPrefix("ingest_epoch=").toLong)
-        .foldLeft(-1L)(math.max)
+    val maxE = lead.layout.snapshot(s, lead.path).epochHigh
     if (maxE < 0L) return -1L
     val tomb = readTombstones(s, tombPath, keyCol)
     if (maxE == 0L && tomb.isEmpty) return -1L
@@ -3944,8 +3907,7 @@ object Tables {
         .withColumn("ingest_epoch",
           when(col("ingest_epoch") < maxE, lit(0L))
             .otherwise(col("ingest_epoch")))
-      if (t.bucketed) replaceBucketedArchive(folded, t.path)
-      else upsertManifested(folded, t.path, t.partCols, _ => true)
+      t.layout.rewrite(folded, t.path, t.partCols)
       // inserts at the KEPT newest epoch stay attributable (cursor
       // maxE-1 still feeds them); retired deletes do not (each lane's
       // cursor must clear its own highest retired delete epoch)
@@ -4139,28 +4101,20 @@ object Tables {
     }
   }
 
-  /** [[changesSince]] over a manifested archive. `untilEpoch` gates
-    * the feed at an upper epoch — pass the topology's
-    * [[committedWatermark]] so a cross-store consumer never ingests
-    * a half-landed front-door epoch (the [[consistentView]] rule
-    * applied to the feed). */
+  /** [[changesSince]] over an archive of either layout — a bucketed
+    * feed's insert side rides the bucketed scan, so a downstream
+    * keyed apply (join on `keyCol`) still sees the bucket
+    * partitioning. `untilEpoch` gates the feed at an upper epoch —
+    * pass the topology's [[committedWatermark]] so a cross-store
+    * consumer never ingests a half-landed front-door epoch (the
+    * [[consistentView]] rule applied to the feed). */
   def readChangesSince(spark: SparkSession, path: String,
                        tombPath: String, keyCol: String,
                        sinceEpoch: Long,
                        untilEpoch: Option[Long] = None,
-                       sinceDeleteEpoch: Long = -1L): DataFrame =
-    changesSince(readManifested(spark, path), tombPath, keyCol,
-      sinceEpoch, path, untilEpoch, sinceDeleteEpoch)
-
-  /** [[changesSince]] over a bucketed archive — the feed's insert
-    * side rides the bucketed scan, so a downstream keyed apply
-    * (join on `keyCol`) still sees the bucket partitioning. */
-  def readBucketedChangesSince(spark: SparkSession, path: String,
-                               tombPath: String, keyCol: String,
-                               sinceEpoch: Long,
-                               untilEpoch: Option[Long] = None,
-                               sinceDeleteEpoch: Long = -1L): DataFrame =
-    changesSince(readBucketedArchive(spark, path), tombPath, keyCol,
+                       sinceDeleteEpoch: Long = -1L,
+                       layout: Layout = Layout.Manifested): DataFrame =
+    changesSince(layout.read(spark, path), tombPath, keyCol,
       sinceEpoch, path, untilEpoch, sinceDeleteEpoch)
 
   // ---------- Incremental mirror (engine-driven CDC consumer) ----------
@@ -4645,8 +4599,8 @@ object Tables {
     * Re-run after layout-changing maintenance to restore pruning.
     * The sidecar lands in a fresh uniquely-named dir and the pointer
     * flips last ([[writeManifested]]'s commit discipline in
-    * miniature); superseded stats dirs are tiny and reclaimed on the
-    * next analyze. */
+    * miniature); the superseded stats dir stays for readers holding
+    * the old pointer until [[vacuumManifested]] sweeps it. */
   def computeFileStats(spark: SparkSession, path: String,
                        statsCols: Seq[String]): Long = {
     require(statsCols.nonEmpty, "computeFileStats needs columns")
@@ -4664,25 +4618,16 @@ object Tables {
       s"s${java.util.UUID.randomUUID.toString.take(8)}"
     stats.write.mode(SaveMode.Overwrite).parquet(dir)
     val n = spark.read.parquet(dir).count()
-    val prev = fileStats(spark, path).map(_._1)
     val ptr = fileStatsPtr(path)
-    val fs = fsFor(spark, ptr)
-    val out = fs.create(ptr, true)
+    val out = fsFor(spark, ptr).create(ptr, true)
     try out.write(s"$dir\n${statsCols.mkString(",")}".getBytes("UTF-8"))
     finally out.close()
-    prev.foreach(d =>
-      fs.delete(new org.apache.hadoop.fs.Path(d), true))
     // a scan of this archive may have cached "no sidecar here" —
     // drop that so AutoFileSkip prunes immediately in-session
     graft.plans.AutoFileSkip.invalidateMisses()
     n
   }
 
-  /** The surviving (file, base) pairs of a skipping read, plus how
-    * many live files were statted/pruned — split out so specs can pin
-    * the pruning itself, not just the row identity. Base = the
-    * file's manifest version root (partition-column reconstruction
-    * needs it as `basePath`). */
   /** Every live data file of the archive, each with its manifest
     * version-base (the `basePath` partition-column reconstruction
     * needs) — the file-level ground truth both skipping sidecars
@@ -4721,6 +4666,9 @@ object Tables {
     frames.reduce(_.unionByName(_, allowMissingColumns = true))
   }
 
+  /** The surviving (file, base) pairs of a skipping read, plus how
+    * many live files were statted/pruned — split out so specs can pin
+    * the pruning itself, not just the row identity. */
   private[graft] def zonemapSurvivors(spark: SparkSession, path: String,
       bounds: Seq[ZoneBound]): (Seq[(String, String)], Long, Long) = {
     // live files, each with its version-base for basePath
@@ -4732,7 +4680,6 @@ object Tables {
           s"zone-map sidecar at $path covers [${cols.mkString(",")}] " +
             s"but the read bounds ${b.colName} — re-run " +
             "computeFileStats with it"))
-        val stats = spark.read.parquet(dir)
         // a file whose min/max are NULL (all values null) or absent
         // stays IN: pruning is only ever the provably-impossible
         val keepExpr = bounds.map { b =>
@@ -4740,11 +4687,18 @@ object Tables {
             b.hi.map(v => !(col(s"min_${b.colName}") > lit(v)))
           tests.reduceOption(_ && _).getOrElse(lit(true))
         }.reduceOption(_ && _).getOrElse(lit(true))
-        val keep = stats
-          .where(coalesce(keepExpr, lit(true)))
-          .select("file").collect().map(_.getString(0)).toSet
-        val statted = stats.select("file").collect()
-          .map(_.getString(0)).toSet
+        // the sidecar dir can vanish under a racing vacuum after this
+        // read resolved the pointer — degrade to the full (correct)
+        // read, as [[bloomSurvivors]] does
+        val rows = try spark.read.parquet(dir)
+          .select(col("file"), coalesce(keepExpr, lit(true)).as("keep"))
+          .collect()
+        catch {
+          case scala.util.control.NonFatal(_) =>
+            return (liveFiles, 0L, 0L)
+        }
+        val keep = rows.filter(_.getBoolean(1)).map(_.getString(0)).toSet
+        val statted = rows.map(_.getString(0)).toSet
         val survivors = liveFiles.filter { case (f, _) =>
           !statted(f) || keep(f) }
         (survivors, liveFiles.count(f => statted(f._1)).toLong,

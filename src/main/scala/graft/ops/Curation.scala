@@ -525,8 +525,8 @@ object Curation {
     // epoch (a crash-replay must not read its own previous partial
     // commit) — so yesterday's merge commits are consumed today, and
     // a fold ([[compactLabelEpochs]]) changes nothing a reader sees
-    val archive = Tables.readBucketedArchiveMasked(s, s"$idx/labels",
-        s"$idx/tombstones", "doc_id")
+    val archive = Tables.readMasked(s, s"$idx/labels",
+        s"$idx/tombstones", "doc_id", Tables.Layout.Bucketed)
       .where(col("ingest_epoch") =!= epoch)
       .groupBy(col("doc_id"))
       .agg(max_by(col("label"), col("ingest_epoch")).as("label"))
@@ -768,8 +768,8 @@ object Curation {
     // tombstones have just landed and a sidecar would be stale (and
     // key-masked) anyway — building theirs here measured 2-5× on the
     // delete gate for masks that were never consumed covered
-    Tables.computeBucketedDeletionVectors(s, s"$idx/labels",
-      s"$idx/tombstones", "doc_id")
+    Tables.computeDeletionVectors(s, s"$idx/labels",
+      s"$idx/tombstones", "doc_id", Tables.Layout.Bucketed)
     merged
       .select(col("doc_id"), col("label").as("cluster_id"),
         (col("doc_id") === col("label")).as("keep"))
@@ -789,8 +789,8 @@ object Curation {
     // broadcast key anti-join as before. Both mask shapes preserve
     // the bucketed scan's partitioning, so the aggregate stays
     // Exchange-free either way (plan-pinned in CurationSpec).
-    Tables.readBucketedArchiveMasked(s, s"$idx/labels",
-        s"$idx/tombstones", "doc_id")
+    Tables.readMasked(s, s"$idx/labels", s"$idx/tombstones", "doc_id",
+        Tables.Layout.Bucketed)
       .groupBy(col("doc_id"))
       .agg(max_by(col("label"), col("ingest_epoch")).as("label"))
 
@@ -825,7 +825,7 @@ object Curation {
     // postings fold as the next version, the manifested sizes behind
     // the pointer
     Tables.foldEpochs(s, Seq(Tables.EpochTable(s"$idx/postings",
-        bucketed = true), Tables.EpochTable(s"$idx/sizes")),
+        Tables.Layout.Bucketed), Tables.EpochTable(s"$idx/sizes")),
       tombPath, "doc_id")
     ()
   }

@@ -653,88 +653,31 @@ object ScaleOps {
 
   // ---------- Archive health monitor ----------
 
-  /** One health row for a manifested archive — the operational
-    * metadata a fold/vacuum scheduler reads: live epoch count, live
-    * (tombstone-masked) row count, live tombstone keys, manifest
-    * version count, and the superseded data directories (with their
-    * bytes) no live manifest references — i.e. exactly what the next
-    * [[graft.io.Tables.vacuumManifested]] would reclaim. Epoch count,
-    * dead-dir discovery and version count are manifest/FS METADATA
-    * (driver-side, one listing — the compaction-service shape); the
-    * two row counts are distributed jobs. */
+  /** One health row for an archive of either layout — the
+    * operational metadata a fold/vacuum scheduler reads: live epoch
+    * count, live (tombstone-masked) row count, live tombstone keys,
+    * retained version count, and the dead dirs (with their bytes) the
+    * layout's vacuum would reclaim ([[graft.io.Tables.Layout.health]]:
+    * superseded partition dirs no live manifest references, or every
+    * non-current bucketed version dir). Epoch count, dead-dir
+    * discovery and version count are FS METADATA (driver-side
+    * listings — the compaction-service shape); the two row counts are
+    * distributed jobs. */
   private[graft] final case class ArchiveHealth(
       store: String, n_epochs: Int, n_live_rows: Long,
       n_tombstones: Long, manifest_versions: Int,
       n_dead_dirs: Int, dead_bytes: Long)
 
   private[graft] def archiveHealth(s: SparkSession, store: String,
-      path: String, tombPath: String, keyCol: String): ArchiveHealth = {
-    val (_, parts) = Tables.resolveManifest(s, path)
-    val nEpochs = parts.keys
-      .map(_.takeWhile(_ != '/').stripPrefix("ingest_epoch=")).toSet.size
+      path: String, tombPath: String, keyCol: String,
+      layout: Tables.Layout = Tables.Layout.Manifested): ArchiveHealth = {
+    val f = layout.health(s, path)
     val live = Tables.minusTombstones(
-      Tables.readManifested(s, path), tombPath, keyCol).count()
+      layout.read(s, path), tombPath, keyCol).count()
     val nTomb = Tables.readTombstones(s, tombPath, keyCol)
       .map(_.count()).getOrElse(0L)
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val versions = fs.listStatus(root)
-      .count(_.getPath.getName.startsWith("_manifest-"))
-    // unreferenced leaf partition dirs under data/ — walk each
-    // version/attempt root, compare against the live manifest's
-    // relative paths
-    // entry values may be multi-path (file-local retirement): a leaf
-    // dir is live when referenced itself OR when any reference
-    // points INTO it (carried files)
-    val referenced = parts.values.flatMap(Tables.entryPaths).toSet
-    val dataRoot = new org.apache.hadoop.fs.Path(s"$path/data")
-    def leaves(dir: org.apache.hadoop.fs.Path, rel: String)
-        : Seq[(String, Long)] = {
-      val kids = fs.listStatus(dir)
-        .filter(st => st.isDirectory && st.getPath.getName.contains("="))
-      if (kids.isEmpty) Nil
-      else kids.flatMap { k =>
-        val childRel = s"$rel/${k.getPath.getName}"
-        val deeper = leaves(k.getPath, childRel)
-        if (deeper.nonEmpty) deeper
-        else Seq(childRel -> fs.getContentSummary(k.getPath).getLength)
-      }.toSeq
-    }
-    val dead =
-      if (!fs.exists(dataRoot)) Nil
-      else fs.listStatus(dataRoot).filter(_.isDirectory).toSeq
-        .flatMap(vd => leaves(vd.getPath, s"data/${vd.getPath.getName}"))
-        .filterNot { case (rel, _) => referenced.contains(rel) ||
-          referenced.exists(_.startsWith(rel + "/")) }
-    ArchiveHealth(store, nEpochs, live, nTomb, versions,
-      dead.size, dead.map(_._2).sum)
-  }
-
-  /** [[archiveHealth]] for a BUCKETED archive: epochs are the
-    * partition directories of the CURRENT version, `versions` counts
-    * retained version dirs (the versioned fold keeps superseded
-    * versions for concurrent readers), and dead mass is every
-    * non-current version dir — reclaimed by
-    * [[graft.io.Tables.sweepBucketedScratch]], the layout's vacuum
-    * verb. */
-  private[graft] def bucketedArchiveHealth(s: SparkSession, store: String,
-      path: String, tombPath: String, keyCol: String): ArchiveHealth = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val liveDir = new org.apache.hadoop.fs.Path(
-      Tables.bucketedLiveDir(s, path))
-    val nEpochs = fs.listStatus(liveDir).count(st =>
-      st.isDirectory && st.getPath.getName.startsWith("ingest_epoch="))
-    val live = Tables.minusTombstones(
-      Tables.readBucketedArchive(s, path), tombPath, keyCol).count()
-    val nTomb = Tables.readTombstones(s, tombPath, keyCol)
-      .map(_.count()).getOrElse(0L)
-    val vdirs = fs.listStatus(root).toSeq.filter(st =>
-      st.isDirectory && st.getPath.getName.matches("v\\d+"))
-    val dead = vdirs.map(_.getPath).filter(_.getName != liveDir.getName)
-    ArchiveHealth(store, nEpochs, live, nTomb,
-      math.max(1, vdirs.size), dead.size,
-      dead.map(p => fs.getContentSummary(p).getLength).sum)
+    ArchiveHealth(store, f.epochs, live, nTomb, f.versions,
+      f.deadBytes.size, f.deadBytes.sum)
   }
 
   /** The three-stage construction behind [[qArchiveHealth]], one
@@ -868,7 +811,7 @@ object ScaleOps {
   /** The fixture behind [[qDvMaskedRead]]: the same sparse-RTBF
     * archive, but the deletion vectors stay LIVE (no retirement) and
     * a SECOND delete wave lands after the DV build — the steady
-    * state [[graft.io.Tables.readManifestedMasked]] serves between a
+    * state [[graft.io.Tables.readMasked]] serves between a
     * delete and its physical fold: the covered wave masks
     * positionally through the sidecar (no key join for it — the
     * plan pin lives in DeleteVectorSpec), the post-build wave masks
@@ -903,8 +846,7 @@ object ScaleOps {
     * wave + key mask for the post-build wave. */
   def qDvMaskedRead(s: SparkSession, dir: String): DataFrame = {
     val root = dvMaskedRoot(s, dir)
-    Tables.readManifestedMasked(s, s"$root/arch", s"$root/tomb",
-      "doc_id")
+    Tables.readMasked(s, s"$root/arch", s"$root/tomb", "doc_id")
       .select(col("doc_id"), col("lang"))
       .orderBy("doc_id")
   }
@@ -1057,8 +999,8 @@ object ScaleOps {
       val r = s"$root/$phase"
       val plain = s"graft_sqlc_${phase}_${store}_p"
       val gated = s"graft_sqlc_${phase}_${store}_g"
-      Tables.registerManifestedLiveSql(s, plain, s"$r/$store")
-      Tables.registerManifestedLiveSql(s, gated, s"$r/$store",
+      Tables.registerLiveSql(s, plain, s"$r/$store")
+      Tables.registerLiveSql(s, gated, s"$r/$store",
         consistentRoots = Seq(r))
       (phase, store,
         s.sql(s"SELECT count(*) FROM $plain").head().getLong(0),
@@ -1536,7 +1478,7 @@ object ScaleOps {
     })
 
   /** Gated: LIVE SQL relations ([[graft.io.Tables
-    * .registerManifestedLiveSql]] + [[graft.plans
+    * .registerLiveSql]] + [[graft.plans
     * .ResolveLiveArchives]]) — the always-current sibling of
     * [[qSqlArchive]]'s snapshot view. The odd half of the corpus is
     * committed AFTER the registration and the SQL aggregate still
@@ -1551,7 +1493,7 @@ object ScaleOps {
     val root = sqlLiveRoot(s, dir)
     val docs = t(s, dir, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
-    Tables.registerManifestedLiveSql(s, "graft_sql_live", s"$root/arch")
+    Tables.registerLiveSql(s, "graft_sql_live", s"$root/arch")
     // the commit the live relation must see (idempotent re-land on
     // bench re-runs: the upsert replaces the whole odd partition)
     Tables.upsertManifested(
@@ -1595,7 +1537,7 @@ object ScaleOps {
     * masked — a no-op DELETE would hash-mismatch on every lang row. */
   def qSqlDelete(s: SparkSession, dir: String): DataFrame = {
     val root = sqlDeleteRoot(s, dir)
-    Tables.registerManifestedLiveSql(s, "graft_sql_del",
+    Tables.registerLiveSql(s, "graft_sql_del",
       s"$root/arch", tombPath = Some(s"$root/tomb"),
       keyCol = Some("doc_id"))
     s.sql("DELETE FROM graft_sql_del WHERE doc_id % 10 = 3")
@@ -1634,14 +1576,14 @@ object ScaleOps {
         docs.where(pmod(col("doc_id"), lit(10)) === 3)
           .select(col("doc_id")),
         s"$root/tomb", epoch = Tables.DeleteEpochBase)
-      Tables.computeBucketedDeletionVectors(s, s"$root/arch",
-        s"$root/tomb", "doc_id")
+      Tables.computeDeletionVectors(s, s"$root/arch", s"$root/tomb",
+        "doc_id", Tables.Layout.Bucketed)
       root
     })
 
   /** Gated: POSITIONAL deletion-vector masking on the BUCKETED
-    * layout ([[graft.io.Tables.readBucketedArchiveMasked]] consuming
-    * [[graft.io.Tables.computeBucketedDeletionVectors]]) — the
+    * layout ([[graft.io.Tables.readMasked]] consuming
+    * [[graft.io.Tables.computeDeletionVectors]]) — the
     * postings/labels/assignment archives are the LARGEST tables at
     * 100 TB, and until this verb their tombstone mask was a key
     * anti-join whose broadcast build side grows with every RTBF
@@ -1654,8 +1596,8 @@ object ScaleOps {
     * sweep. */
   def qDvBucketed(s: SparkSession, dir: String): DataFrame = {
     val root = dvBucketedRoot(s, dir)
-    Tables.readBucketedArchiveMasked(s, s"$root/arch",
-      s"$root/tomb", "doc_id")
+    Tables.readMasked(s, s"$root/arch", s"$root/tomb", "doc_id",
+      Tables.Layout.Bucketed)
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n"),
         sum(col("n_chars")).cast("long").as("chars_sum"))
@@ -1683,11 +1625,11 @@ object ScaleOps {
     })
 
   /** Gated: the LIVE SQL surface for BUCKETED archives
-    * ([[graft.io.Tables.registerBucketedLiveSql]]) — the friendly
+    * ([[graft.io.Tables.registerLiveSql]]) — the friendly
     * SQL name over the epoch-ingested bucketed layout, with SQL
     * DELETE driving the tombstone + BUCKETED deletion-vector
     * lifecycle ([[graft.plans.DeleteArchiveCommand]] →
-    * `computeBucketedDeletionVectors` at delete time) and the
+    * `computeDeletionVectors` at delete time) and the
     * subsequent SQL read serving the DV-masked state. The aggregate
     * matches the everything-but-the-tenth oracle only if the DELETE
     * masked exactly its predicate's rows across both epochs'
@@ -1697,8 +1639,9 @@ object ScaleOps {
     * on bucketed names route to the epoch front door / COW verbs). */
   def qSqlBucketed(s: SparkSession, dir: String): DataFrame = {
     val root = sqlBucketedRoot(s, dir)
-    Tables.registerBucketedLiveSql(s, "graft_sql_bkt", s"$root/arch",
-      tombPath = Some(s"$root/tomb"), keyCol = Some("doc_id"))
+    Tables.registerLiveSql(s, "graft_sql_bkt", s"$root/arch",
+      tombPath = Some(s"$root/tomb"), keyCol = Some("doc_id"),
+      layout = Tables.Layout.Bucketed)
     s.sql("DELETE FROM graft_sql_bkt WHERE doc_id % 10 = 3")
     s.sql(
       """SELECT lang, count(*) AS n,
@@ -1786,7 +1729,7 @@ object ScaleOps {
     * shadow). */
   def qSqlInsert(s: SparkSession, dir: String): DataFrame = {
     val root = sqlInsertRoot(s, dir)
-    Tables.registerManifestedLiveSql(s, "graft_sql_ins", s"$root/arch")
+    Tables.registerLiveSql(s, "graft_sql_ins", s"$root/arch")
     t(s, dir, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
       .createOrReplaceTempView("graft_ins_src")
@@ -1829,7 +1772,7 @@ object ScaleOps {
     * no-match UPDATEs commit nothing, pinned/shadowed refuse). */
   def qSqlUpdate(s: SparkSession, dir: String): DataFrame = {
     val root = sqlUpdateRoot(s, dir)
-    Tables.registerManifestedLiveSql(s, "graft_sql_upd", s"$root/arch")
+    Tables.registerLiveSql(s, "graft_sql_upd", s"$root/arch")
     s.sql("UPDATE graft_sql_upd SET lang = 'xx' WHERE doc_id % 10 = 3")
     s.sql(
       """SELECT lang, count(*) AS n,
@@ -1873,7 +1816,7 @@ object ScaleOps {
     * action — every run converges to the same state. */
   def qSqlMerge(s: SparkSession, dir: String): DataFrame = {
     val root = sqlMergeRoot(s, dir)
-    Tables.registerManifestedLiveSql(s, "graft_sql_mrg",
+    Tables.registerLiveSql(s, "graft_sql_mrg",
       s"$root/arch", keyCol = Some("doc_id"))
     val docs = t(s, dir, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
@@ -1945,7 +1888,7 @@ object ScaleOps {
     * guard lands each shadow row exactly once. */
   def qSqlAlter(s: SparkSession, dir: String): DataFrame = {
     val root = sqlAlterRoot(s, dir)
-    Tables.registerManifestedLiveSql(s, "graft_sql_alt",
+    Tables.registerLiveSql(s, "graft_sql_alt",
       s"$root/arch")
     if (!s.sql("SELECT * FROM graft_sql_alt").columns
         .contains("score"))
@@ -2029,7 +1972,7 @@ object ScaleOps {
   def qSqlTimeTravel(s: SparkSession, dir: String): DataFrame = {
     val (root, tsMillis) = sqlTimeTravelRoot(s, dir)
     val ts = sessionTsLiteral(s, tsMillis)
-    Tables.registerManifestedLiveSql(s, "graft_sql_tt", s"$root/arch")
+    Tables.registerLiveSql(s, "graft_sql_tt", s"$root/arch")
     s.sql(
       s"""SELECT
          |  (SELECT count(*) FROM graft_sql_tt
@@ -2056,7 +1999,7 @@ object ScaleOps {
     * oracle-able). */
   def qSqlHistory(s: SparkSession, dir: String): DataFrame = {
     val root = historyRoot(s, dir)
-    Tables.registerManifestedLiveSql(s, "graft_sql_hist",
+    Tables.registerLiveSql(s, "graft_sql_hist",
       s"$root/arch")
     s.sql(
       """SELECT version, n_partitions, n_added, n_removed,

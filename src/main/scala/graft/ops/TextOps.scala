@@ -1007,8 +1007,8 @@ object TextOps {
     // DV-consuming masked read: with a current sidecar (built by the
     // delete flows) the tombstone mask is positional; without one
     // this is exactly the old broadcast key anti-join
-    Tables.readBucketedArchiveMasked(s, s"$idx/postings",
-        s"$idx/tombstones", "doc_id")
+    Tables.readMasked(s, s"$idx/postings", s"$idx/tombstones", "doc_id",
+        Tables.Layout.Bucketed)
       .where(col("ingest_epoch") =!= excludeEpoch)
       .select(col("doc_id"), col("shingle"))
 
@@ -1016,8 +1016,7 @@ object TextOps {
     * tombstone mask. */
   private[ops] def readShingleSizes(s: SparkSession, idx: String,
                                     excludeEpoch: Long): DataFrame =
-    Tables.readManifestedMasked(s, s"$idx/sizes",
-        s"$idx/tombstones", "doc_id")
+    Tables.readMasked(s, s"$idx/sizes", s"$idx/tombstones", "doc_id")
       .where(col("ingest_epoch") =!= excludeEpoch)
       .select(col("doc_id"), col("n_sh"))
 
@@ -1819,7 +1818,7 @@ object TextOps {
   private[graft] def compactTokenIndexEpochs(s: SparkSession,
                                              idx: String): Long =
     Tables.foldEpochs(s, Seq(Tables.EpochTable(s"$idx/doclen"),
-        Tables.EpochTable(s"$idx/postings", bucketed = true)),
+        Tables.EpochTable(s"$idx/postings", Tables.Layout.Bucketed)),
       s"$idx/tombstones", "doc_id")
 
   /** Token index per data dir, memoized: in production the index is

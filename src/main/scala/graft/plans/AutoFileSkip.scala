@@ -111,10 +111,10 @@ case class AutoFileSkip(spark: SparkSession) extends Rule[LogicalPlan]
     val doomed = scala.collection.mutable.Set[String]()
 
     // ----- Bloom: equality / IN on the analyzed key column -----
-    // Sidecar loads degrade, never fail: a re-analyze in ANOTHER
-    // JVM deletes the superseded sidecar dir right after flipping
-    // the pointer, so a planner that read the old pointer just
-    // before can hit FileNotFound here. The overlay contract says
+    // Sidecar loads degrade, never fail: a vacuum in ANOTHER JVM
+    // reclaims superseded sidecar dirs once their grace elapses, so a
+    // planner that read an old pointer long before can hit
+    // FileNotFound here. The overlay contract says
     // staleness costs pruning, never rows — so any sidecar read
     // error falls back to a full scan instead of failing the query.
     for {

@@ -32,7 +32,7 @@ import graft.io.Tables
   * rides along unchanged: [[AutoFileSkip]] prunes files through the
   * sidecars, [[ManifestStatsRule]] attaches commit-time stats under
   * CBO, and a tombstone-masked registration serves the DV-consuming
-  * live state ([[Tables.readManifestedMasked]]). A DSv2 catalog
+  * live state ([[Tables.readMasked]]). A DSv2 catalog
   * would be the other route to always-current SQL, but its scans
   * plan as `DataSourceV2Relation` — OUTSIDE the file-source relation
   * shape every sidecar rule matches — so it would trade currency for
@@ -60,11 +60,12 @@ object LiveArchives {
     * ([[Tables.consistentViewAcross]]) so a SQL consumer can never
     * read a half-landed front-door epoch — the registration is then
     * READ-ONLY (mutations go through the front door, which is what
-    * writes the epochs and markers the gate trusts). */
+    * writes the epochs and markers the gate trusts). `layout` is how
+    * the archive keeps its versions. */
   final case class LiveReg(path: String, tombPath: Option[String],
       keyCol: Option[String], asOf: Option[Long],
       consistentRoots: Seq[String] = Nil,
-      bucketed: Boolean = false)
+      layout: Tables.Layout = Tables.Layout.Manifested)
 
   private val regs =
     new java.util.concurrent.ConcurrentHashMap[String, LiveReg]()
@@ -124,9 +125,9 @@ object LiveArchives {
     new org.apache.spark.sql.catalyst.trees.TreeNodeTag[String](
       "graft_live_substituted")
 
-  /** The manifest version the substituted read resolved (manifested,
-    * unpinned regs only) — the DML snapshot for the copy-on-write
-    * conflict check. Captured BEFORE the read plan is built, so it
+  /** The version stamp the substituted read resolved (unpinned regs
+    * only; [[Tables.Layout.snapshot]]) — the DML snapshot for the
+    * copy-on-write conflict check. Captured BEFORE the read plan is built, so it
     * is ≤ the version the plan actually reads: a commit landing
     * between the two at worst refuses SPURIOUSLY (loud, re-runnable),
     * never silently. */
@@ -194,16 +195,10 @@ object LiveArchives {
   private[plans] def resolve(spark: SparkSession,
                              reg: LiveReg): LogicalPlan = {
     val df = (reg.asOf, reg.tombPath, reg.keyCol) match {
-      case (Some(v), _, _) =>
-        if (reg.bucketed) Tables.readBucketedArchiveAt(spark, reg.path, v)
-        else Tables.readManifestedAt(spark, reg.path, v)
+      case (Some(v), _, _) => reg.layout.readAt(spark, reg.path, v)
       case (_, Some(t), Some(k)) =>
-        if (reg.bucketed)
-          Tables.readBucketedArchiveMasked(spark, reg.path, t, k)
-        else Tables.readManifestedMasked(spark, reg.path, t, k)
-      case _ =>
-        if (reg.bucketed) Tables.readBucketedArchive(spark, reg.path)
-        else Tables.readManifested(spark, reg.path)
+        Tables.readMasked(spark, reg.path, t, k, reg.layout)
+      case _ => reg.layout.read(spark, reg.path)
     }
     // the consistent-view gate composes OVER the (possibly masked)
     // live read: epochs above any root's committed watermark — or
@@ -215,11 +210,9 @@ object LiveArchives {
     // SQL schema evolution: declared-but-not-yet-carried columns
     // read as null — the manifested layout's implicit merge, made
     // visible the moment the ALTER lands (bucketed archives evolve
-    // physically, so nothing to widen there)
-    val widened =
-      if (reg.bucketed) gated
-      else Tables.withDeclaredColumns(spark, reg.path, gated)
-    widened.queryExecution.analyzed
+    // physically and never declare, so nothing widens there)
+    Tables.withDeclaredColumns(spark, reg.path, gated)
+      .queryExecution.analyzed
   }
 }
 
@@ -241,9 +234,8 @@ case class ResolveLiveArchives(session: SparkSession)
         val reg = LiveArchives.lookup(session, name).get
         // snapshot version FIRST, then the plan — see BaseVersionTag
         val baseV: Option[Long] =
-          if (!reg.bucketed && reg.asOf.isEmpty &&
-              Tables.manifestExists(session, reg.path))
-            Some(Tables.resolveManifest(session, reg.path)._1)
+          if (reg.asOf.isEmpty && reg.layout.exists(session, reg.path))
+            reg.layout.snapshot(session, reg.path).stamp
           else None
         val alias =
           SubqueryAlias(name, LiveArchives.resolve(session, reg))
@@ -270,10 +262,8 @@ case class ResolveLiveArchives(session: SparkSession)
         val reg = LiveArchives.unshadowed(session, name).get
         val v: Long = (ts, ver) match {
           case (Some(tsExpr), None) =>
-            val millis = LiveArchives.evalTsMillis(session, name, tsExpr)
-            if (reg.bucketed)
-              Tables.bucketedVersionAsOf(session, reg.path, millis)
-            else Tables.manifestVersionAsOf(session, reg.path, millis)
+            Tables.manifestVersionAsOf(session, reg.path,
+              LiveArchives.evalTsMillis(session, name, tsExpr), reg.layout)
           case (None, Some(verStr)) =>
             try verStr.toLong catch {
               case _: NumberFormatException =>
@@ -286,9 +276,7 @@ case class ResolveLiveArchives(session: SparkSession)
               "<n> or TIMESTAMP AS OF <ts>")
         }
         SubqueryAlias(name,
-          (if (reg.bucketed) Tables.readBucketedArchiveAt(session, reg.path, v)
-           else Tables.readManifestedAt(session, reg.path, v))
-            .queryExecution.analyzed)
+          reg.layout.readAt(session, reg.path, v).queryExecution.analyzed)
 
       // SQL-visible history: `<name>$history` (backticked in query
       // text) reads one row per retained commit with its instant —
@@ -303,10 +291,8 @@ case class ResolveLiveArchives(session: SparkSession)
         val full = u.multipartIdentifier.head
         val reg = LiveArchives
           .unshadowed(session, full.stripSuffix("$history")).get
-        val hist =
-          if (reg.bucketed) Tables.bucketedHistory(session, reg.path)
-          else Tables.manifestHistory(session, reg.path)
-        SubqueryAlias(full, hist.queryExecution.analyzed)
+        SubqueryAlias(full,
+          reg.layout.history(session, reg.path).queryExecution.analyzed)
 
       // SQL schema evolution: `ALTER TABLE <live name> ADD COLUMNS`
       // routes onto the engine's evolution verbs — a physical staged
@@ -346,7 +332,7 @@ case class ResolveLiveArchives(session: SparkSession)
           org.apache.spark.sql.types.StructField(c.colName,
             c.dataType, nullable = true)
         }
-        EvolveArchiveCommand(name, reg.path, reg.bucketed,
+        EvolveArchiveCommand(name, reg.path, reg.layout,
           org.apache.spark.sql.types.StructType(fields))
 
       // the INSERT target is an ARGUMENT of InsertIntoStatement, not
@@ -379,10 +365,11 @@ case class ResolveLiveArchives(session: SparkSession)
             s"live archive '$name' sits behind the consistent-view " +
               "gate — read-only; mutate through the front door that " +
               "commits its epochs and markers")
-        if (reg.bucketed) throw new IllegalArgumentException(
-          s"'$name' is a BUCKETED archive — rows land through the " +
-            "claim-guarded epoch front door (ingestBucketedArchive), " +
-            "not SQL INSERT; SQL DELETE is supported")
+        if (reg.layout == Tables.Layout.Bucketed)
+          throw new IllegalArgumentException(
+            s"'$name' is a BUCKETED archive — rows land through the " +
+              "claim-guarded epoch front door (ingestBucketedArchive), " +
+              "not SQL INSERT; SQL DELETE is supported")
         WriteArchiveCommand(name, reg.path, cols, q, overwrite, byName)
 
       // DELETE FROM <live name> WHERE … — the SQL face of the RTBF
@@ -409,7 +396,7 @@ case class ResolveLiveArchives(session: SparkSession)
               "tombPath/keyCol — DELETE needs the tombstone store " +
               "and the row-identity column; re-register with both")
         DeleteArchiveCommand(name, reg.path, reg.tombPath.get,
-          reg.keyCol.get, cond, a, reg.bucketed)
+          reg.keyCol.get, cond, a, reg.layout)
 
       // UPDATE <live name> SET … [WHERE …] — the SQL face of the
       // partition-granular copy-on-write rewrite
@@ -430,11 +417,12 @@ case class ResolveLiveArchives(session: SparkSession)
             s"live archive '$name' sits behind the consistent-view " +
               "gate — read-only; mutate through the front door that " +
               "commits its epochs and markers")
-        if (reg.bucketed) throw new IllegalArgumentException(
-          s"'$name' is a BUCKETED archive — its schema and bucket " +
-            "layout are a physical contract with no row-level COW " +
-            "rewrite; UPDATE applies to manifested archives (DELETE " +
-            "is supported on both)")
+        if (reg.layout == Tables.Layout.Bucketed)
+          throw new IllegalArgumentException(
+            s"'$name' is a BUCKETED archive — its schema and bucket " +
+              "layout are a physical contract with no row-level COW " +
+              "rewrite; UPDATE applies to manifested archives (DELETE " +
+              "is supported on both)")
         UpdateArchiveCommand(name, reg.path, reg.tombPath, reg.keyCol,
           assignments, cond, a, LiveArchives.liveTargetBase(a))
 
@@ -457,11 +445,12 @@ case class ResolveLiveArchives(session: SparkSession)
             s"live archive '$name' sits behind the consistent-view " +
               "gate — read-only; mutate through the front door that " +
               "commits its epochs and markers")
-        if (reg.bucketed) throw new IllegalArgumentException(
-          s"'$name' is a BUCKETED archive — its schema and bucket " +
-            "layout are a physical contract with no row-level COW " +
-            "rewrite; MERGE applies to manifested archives (DELETE " +
-            "is supported on both)")
+        if (reg.layout == Tables.Layout.Bucketed)
+          throw new IllegalArgumentException(
+            s"'$name' is a BUCKETED archive — its schema and bucket " +
+              "layout are a physical contract with no row-level COW " +
+              "rewrite; MERGE applies to manifested archives (DELETE " +
+              "is supported on both)")
         if (reg.keyCol.isEmpty) throw new IllegalArgumentException(
           s"live archive '$name' was registered without keyCol — " +
             "MERGE needs the row-identity column for its change " +
@@ -479,17 +468,17 @@ case class ResolveLiveArchives(session: SparkSession)
 }
 
 /** `ALTER TABLE <live archive> ADD COLUMNS` → the engine's additive
-  * evolution: [[Tables.evolveBucketedArchive]] (staged physical
-  * swap) for bucketed archives, [[Tables.declareManifestedColumns]]
-  * (persisted declaration; implicit merge-by-name does the rest)
-  * for manifested ones. Existing names refuse in the verbs. */
+  * evolution ([[Tables.Layout.addColumns]]):
+  * [[Tables.evolveBucketedArchive]] (staged physical swap) for
+  * bucketed archives, [[Tables.declareManifestedColumns]] (persisted
+  * declaration; implicit merge-by-name does the rest) for manifested
+  * ones. Existing names refuse in the verbs. */
 case class EvolveArchiveCommand(name: String, path: String,
-    bucketed: Boolean,
+    layout: Tables.Layout,
     newCols: org.apache.spark.sql.types.StructType)
     extends LeafRunnableCommand {
   override def run(session: SparkSession): Seq[Row] = {
-    if (bucketed) Tables.evolveBucketedArchive(session, path, newCols)
-    else Tables.declareManifestedColumns(session, path, newCols)
+    layout.addColumns(session, path, newCols)
     Seq.empty
   }
 }
@@ -586,7 +575,7 @@ case class WriteArchiveCommand(name: String, path: String,
   * epoch — the masked state is unchanged. */
 case class DeleteArchiveCommand(name: String, path: String,
     tombPath: String, keyCol: String, condition: Expression,
-    source: LogicalPlan, bucketed: Boolean = false)
+    source: LogicalPlan, layout: Tables.Layout)
     extends LeafRunnableCommand {
 
   override def innerChildren: Seq[QueryPlan[_]] = Seq(source)
@@ -609,10 +598,8 @@ case class DeleteArchiveCommand(name: String, path: String,
       // replaces its OWN epoch's entry.
       val epoch = Tables.claimDeleteEpoch(session, tombPath)
       Tables.ingestTombstones(victims, tombPath, epoch)
-      if (bucketed)
-        Tables.computeBucketedDeletionVectors(session, path, tombPath,
-          keyCol)
-      else Tables.computeDeletionVectors(session, path, tombPath, keyCol)
+      Tables.computeDeletionVectors(session, path, tombPath, keyCol,
+        layout)
       Seq.empty
     } finally graft.ops.Ckpt.release(victims)
   }

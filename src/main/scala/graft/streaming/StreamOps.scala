@@ -753,12 +753,12 @@ object StreamOps {
 
   // ---------- The store lists ----------
 
-  /** One data table of a [[Store]]: where it lives, whether it is
-    * BUCKETED (else MANIFESTED), and the name of its row in the
-    * unconditional windows' post-sweep health output (None: no
-    * row). */
+  /** One data table of a [[Store]]: where it lives, its layout, and
+    * the name of its row in the unconditional windows' post-sweep
+    * health output (None: no row). */
   private[graft] final case class StoreTable(path: String,
-      bucketed: Boolean = false, healthRow: Option[String] = None)
+      layout: Tables.Layout = Tables.Layout.Manifested,
+      healthRow: Option[String] = None)
 
   /** One persisted store, described once — every delete leg, both
     * maintenance windows of both topologies and their health rows
@@ -782,10 +782,11 @@ object StreamOps {
   /** A one-table store under the shared [[graft.io.Tables.foldEpochs]];
     * its health row carries the store's name. */
   private def epochStore(name: String, path: String, tombstones: String,
-                         key: String, bucketed: Boolean = false): Store =
-    Store(name, Seq(StoreTable(path, bucketed, Some(name))), tombstones,
+      key: String,
+      layout: Tables.Layout = Tables.Layout.Manifested): Store =
+    Store(name, Seq(StoreTable(path, layout, Some(name))), tombstones,
       key, s => Tables.foldEpochs(s,
-        Seq(Tables.EpochTable(path, bucketed)), tombstones, key))
+        Seq(Tables.EpochTable(path, layout)), tombstones, key))
 
   /** The corpus store. Its tombstone table lives at a SIBLING path:
     * the corpus itself is a plain epoch-partitioned parquet table
@@ -805,16 +806,16 @@ object StreamOps {
         "doc_id"),
       // the fold spans labels + postings + sizes
       Store("clusters", Seq(
-          StoreTable(s"$root/clusters/labels", bucketed = true,
+          StoreTable(s"$root/clusters/labels", Tables.Layout.Bucketed,
             Some("clusters")),
-          StoreTable(s"$root/clusters/postings", bucketed = true),
+          StoreTable(s"$root/clusters/postings", Tables.Layout.Bucketed),
           StoreTable(s"$root/clusters/sizes",
             healthRow = Some("cluster_sizes"))),
         tomb("clusters"), "doc_id",
         graft.ops.Curation.compactClusterArchive(_, s"$root/clusters")),
       // the fold spans postings + doc lengths
       Store("tokens", Seq(
-          StoreTable(s"$root/tokens/postings", bucketed = true),
+          StoreTable(s"$root/tokens/postings", Tables.Layout.Bucketed),
           StoreTable(s"$root/tokens/doclen", healthRow = Some("doclen"))),
         tomb("tokens"), "doc_id",
         graft.ops.TextOps.compactTokenIndexEpochs(_, s"$root/tokens")),
@@ -842,7 +843,7 @@ object StreamOps {
          s"$fann/tombstones", "vec_id",
          graft.ops.Similarity.compactFilteredIndexEpochs(_, fann)))) :+
       epochStore("sem_assigned", s"$root/sem/assigned",
-        s"$root/sem/tombstones", "vec_id", bucketed = true)
+        s"$root/sem/tombstones", "vec_id", Tables.Layout.Bucketed)
   }
 
   // ---------- The maintenance window ----------
@@ -894,17 +895,11 @@ object StreamOps {
       stores: => Seq[Store], policy: Boolean): DataFrame =
       withWindowLease(s, root, holderId) {
     import s.implicits._
-    def exists(t: StoreTable) =
-      if (t.bucketed) Tables.bucketedArchiveExists(s, t.path)
-      else Tables.manifestExists(s, t.path)
+    def exists(t: StoreTable) = t.layout.exists(s, t.path)
     def health(name: String, t: StoreTable, st: Store) =
-      if (t.bucketed) graft.ops.ScaleOps.bucketedArchiveHealth(s, name,
-        t.path, st.tombstones, st.key)
-      else graft.ops.ScaleOps.archiveHealth(s, name, t.path,
-        st.tombstones, st.key)
-    def vacuum(t: StoreTable): Unit =
-      if (t.bucketed) Tables.sweepBucketedScratch(s, t.path)
-      else Tables.vacuumManifested(s, t.path)
+      graft.ops.ScaleOps.archiveHealth(s, name, t.path, st.tombstones,
+        st.key, t.layout)
+    def vacuum(t: StoreTable): Unit = t.layout.vacuum(s, t.path)
     val live = stores.filter(st => st.tables.headOption
       .fold(Tables.manifestExists(s, st.tombstones))(exists))
     val decisions = live.flatMap { st =>
@@ -926,7 +921,8 @@ object StreamOps {
         if (Tables.manifestExists(s, st.tombstones))
           Tables.vacuumManifested(s, st.tombstones)
       }
-      st.tables.filter(t => !t.bucketed && exists(t)).foreach { t =>
+      st.tables.filter(t => t.layout == Tables.Layout.Manifested &&
+          exists(t)).foreach { t =>
         val cov = if (acted) 1.0 else 0.5
         Tables.refreshFileStatsIfStale(s, t.path, cov)
         Tables.refreshFileBloomsIfStale(s, t.path, cov)

@@ -8,7 +8,7 @@ import graft.SparkSpec
 /** [[SortedArrayContains]] — the deletion-vector mask's O(log n)
   * probe. The contract is exact agreement with `array_contains` on
   * its domain (ascending-sorted, null-free ARRAY<BIGINT>), because
-  * [[graft.io.Tables.readManifestedMasked]] swapped it in for the
+  * [[graft.io.Tables.readMasked]] swapped it in for the
   * linear probe and the q_dv_masked_read differential gate must not
   * move by a row. */
 class SortedSearchSpec extends SparkSpec {

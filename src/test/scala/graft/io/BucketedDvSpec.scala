@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 /** Positional deletion vectors on the BUCKETED layout
-  * ([[Tables.computeBucketedDeletionVectors]] /
-  * [[Tables.readBucketedArchiveMasked]]) — the manifested DV story
+  * ([[Tables.computeDeletionVectors]] / [[Tables.readMasked]] over
+  * [[Tables.Layout.Bucketed]]) — the manifested DV story
   * extended to the archives that are largest at 100 TB:
   *
   *  - IDENTITY: the DV-masked read is row-identical to the key-mask
@@ -58,8 +58,8 @@ class BucketedDvSpec extends SparkSpec {
     val (p, tomb) = mkFixture("steady")
     Tables.ingestTombstones(
       Seq(3L, 13L, 450L).toDF("k"), tomb, Tables.DeleteEpochBase)
-    Tables.computeBucketedDeletionVectors(spark, p, tomb, "k")
-    val masked = Tables.readBucketedArchiveMasked(spark, p, tomb, "k")
+    Tables.computeDeletionVectors(spark, p, tomb, "k", Tables.Layout.Bucketed)
+    val masked = Tables.readMasked(spark, p, tomb, "k", Tables.Layout.Bucketed)
     val keyMask = Tables.minusTombstones(
       Tables.readBucketedArchive(spark, p), tomb, "k")
     assert(cnt(masked) === 497L)
@@ -80,17 +80,17 @@ class BucketedDvSpec extends SparkSpec {
     val (p, tomb) = mkFixture("fresh")
     Tables.ingestTombstones(Seq(7L).toDF("k"), tomb,
       Tables.DeleteEpochBase)
-    Tables.computeBucketedDeletionVectors(spark, p, tomb, "k")
+    Tables.computeDeletionVectors(spark, p, tomb, "k", Tables.Layout.Bucketed)
     // a later delete epoch the sidecar does not cover
     Tables.ingestTombstones(Seq(8L, 9L).toDF("k"), tomb,
       Tables.DeleteEpochBase + 1L)
-    val masked = Tables.readBucketedArchiveMasked(spark, p, tomb, "k")
+    val masked = Tables.readMasked(spark, p, tomb, "k", Tables.Layout.Bucketed)
     assert(cnt(masked) === 497L,
       "uncovered tombstones must still mask (by key)")
     assert(hasLeftAnti(masked),
       "the delete-after-DV window must key-mask the fresh tombstones")
-    Tables.computeBucketedDeletionVectors(spark, p, tomb, "k")
-    val again = Tables.readBucketedArchiveMasked(spark, p, tomb, "k")
+    Tables.computeDeletionVectors(spark, p, tomb, "k", Tables.Layout.Bucketed)
+    val again = Tables.readMasked(spark, p, tomb, "k", Tables.Layout.Bucketed)
     assert(cnt(again) === 497L && !hasLeftAnti(again),
       "a rebuild must restore the positional-only plan")
   }
@@ -100,29 +100,29 @@ class BucketedDvSpec extends SparkSpec {
     val (p, tomb) = mkFixture("stale")
     Tables.ingestTombstones(Seq(5L, 415L).toDF("k"), tomb,
       Tables.DeleteEpochBase)
-    Tables.computeBucketedDeletionVectors(spark, p, tomb, "k")
+    Tables.computeDeletionVectors(spark, p, tomb, "k", Tables.Layout.Bucketed)
     assert(!hasLeftAnti(
-      Tables.readBucketedArchiveMasked(spark, p, tomb, "k")))
+      Tables.readMasked(spark, p, tomb, "k", Tables.Layout.Bucketed)))
     // an epoch ingest changes files WITHOUT touching tombstones: the
     // commit seq moves and the positions may be wrong — the read
     // must fall back to the key mask
     Tables.ingestBucketedArchive(
       Seq((500L, "d500", 0L)).toDF("k", "body", "grp"), p, epoch = 2L)
-    val afterIngest = Tables.readBucketedArchiveMasked(spark, p, tomb, "k")
+    val afterIngest = Tables.readMasked(spark, p, tomb, "k", Tables.Layout.Bucketed)
     assert(cnt(afterIngest) === 499L,
       "post-ingest masked read must stay correct")
     assert(hasLeftAnti(afterIngest),
       "a stale seq stamp must degrade to the key mask")
     // rebuild: fast path again, and the fold's version flip degrades
     // it once more across the version boundary
-    Tables.computeBucketedDeletionVectors(spark, p, tomb, "k")
+    Tables.computeDeletionVectors(spark, p, tomb, "k", Tables.Layout.Bucketed)
     assert(!hasLeftAnti(
-      Tables.readBucketedArchiveMasked(spark, p, tomb, "k")))
+      Tables.readMasked(spark, p, tomb, "k", Tables.Layout.Bucketed)))
     Tables.foldEpochs(spark,
-      Seq(Tables.EpochTable(p, bucketed = true)), tomb, "k")
+      Seq(Tables.EpochTable(p, Tables.Layout.Bucketed)), tomb, "k")
     // the fold retired the tombstones physically — the masked read
     // equals the plain read now, whatever path it takes
-    val afterFold = Tables.readBucketedArchiveMasked(spark, p, tomb, "k")
+    val afterFold = Tables.readMasked(spark, p, tomb, "k", Tables.Layout.Bucketed)
     assert(cnt(afterFold) === 499L)
     assert(cnt(Tables.readBucketedArchive(spark, p)) === 499L)
   }
@@ -132,32 +132,32 @@ class BucketedDvSpec extends SparkSpec {
     val (p, tomb) = mkFixture("seq")
     Tables.ingestTombstones(Seq(4L).toDF("k"), tomb,
       Tables.DeleteEpochBase)
-    Tables.computeBucketedDeletionVectors(spark, p, tomb, "k")
-    val ptr = Tables.bucketedDeletionVectors(spark, p).get
-    assert(ptr.seq === Tables.bucketedRootState(spark, p)._1,
+    Tables.computeDeletionVectors(spark, p, tomb, "k", Tables.Layout.Bucketed)
+    val ptr = Tables.deletionVectors(spark, p, Tables.Layout.Bucketed).get
+    assert(ptr.stamp === Tables.bucketedRootState(spark, p)._1,
       s"a quiet-window build must stamp the current commit seq: $ptr")
     assert(!hasLeftAnti(
-      Tables.readBucketedArchiveMasked(spark, p, tomb, "k")))
+      Tables.readMasked(spark, p, tomb, "k", Tables.Layout.Bucketed)))
     // a mutation IN FLIGHT (marker present, seq not yet bumped) must
     // degrade: its files may be half-landed under an unmoved seq
     val fs = new org.apache.hadoop.fs.Path(p)
       .getFileSystem(spark.sessionState.newHadoopConf())
     val marker = new org.apache.hadoop.fs.Path(p, "_dvbmut_testcrash")
     fs.create(marker, true).close()
-    val during = Tables.readBucketedArchiveMasked(spark, p, tomb, "k")
+    val during = Tables.readMasked(spark, p, tomb, "k", Tables.Layout.Bucketed)
     assert(hasLeftAnti(during) && cnt(during) === 499L,
       "an in-flight mutation must degrade the read to the key mask")
     fs.delete(marker, false)
     assert(!hasLeftAnti(
-      Tables.readBucketedArchiveMasked(spark, p, tomb, "k")),
+      Tables.readMasked(spark, p, tomb, "k", Tables.Layout.Bucketed)),
       "clearing the marker must restore the fast path")
     // a build whose window is NOT quiet publishes no pointer: the
     // previous one stays, and its older seq no longer validates
     fs.create(marker, true).close()
     Tables.ingestTombstones(Seq(6L).toDF("k"), tomb,
       Tables.DeleteEpochBase + 1L)
-    Tables.computeBucketedDeletionVectors(spark, p, tomb, "k")
-    assert(Tables.bucketedDeletionVectors(spark, p).get === ptr,
+    Tables.computeDeletionVectors(spark, p, tomb, "k", Tables.Layout.Bucketed)
+    assert(Tables.deletionVectors(spark, p, Tables.Layout.Bucketed).get === ptr,
       "a build over an in-flight mutation must not publish a pointer")
     fs.delete(marker, false)
   }
@@ -169,10 +169,10 @@ class BucketedDvSpec extends SparkSpec {
       .getFileSystem(spark.sessionState.newHadoopConf())
     Tables.ingestTombstones(Seq(2L).toDF("k"), tomb,
       Tables.DeleteEpochBase)
-    Tables.computeBucketedDeletionVectors(spark, p, tomb, "k")
-    val dir1 = Tables.bucketedDeletionVectors(spark, p).get.dir
-    Tables.computeBucketedDeletionVectors(spark, p, tomb, "k")
-    val dir2 = Tables.bucketedDeletionVectors(spark, p).get.dir
+    Tables.computeDeletionVectors(spark, p, tomb, "k", Tables.Layout.Bucketed)
+    val dir1 = Tables.deletionVectors(spark, p, Tables.Layout.Bucketed).get.dir
+    Tables.computeDeletionVectors(spark, p, tomb, "k", Tables.Layout.Bucketed)
+    val dir2 = Tables.deletionVectors(spark, p, Tables.Layout.Bucketed).get.dir
     assert(dir2 !== dir1)
     assert(fs.exists(new org.apache.hadoop.fs.Path(dir1)),
       "the superseded mask dir must survive the pointer flip")

@@ -220,13 +220,14 @@ class ChangeFeedSpec extends SparkSpec {
         .select("doc_id"), Seq("doc_id"), "left_anti")
       .withColumn("ingest_epoch",
         when(pmod(col("doc_id"), lit(10)) === 3, lit(1L)).otherwise(lit(0L)))
-    val feed = Tables.readBucketedChangesSince(spark, p, tomb, "doc_id", 2L)
+    val feed = Tables.readChangesSince(spark, p, tomb, "doc_id", 2L,
+      layout = Tables.Layout.Bucketed)
     val current = Tables.minusTombstones(
       Tables.readBucketedArchive(spark, p), tomb, "doc_id")
     sameRows(applyFeed(state, feed), current, "bucketed identity")
 
     Tables.foldEpochs(spark,
-      Seq(Tables.EpochTable(p, bucketed = true)), tomb, "doc_id")
+      Seq(Tables.EpochTable(p, Tables.Layout.Bucketed)), tomb, "doc_id")
     assert(Tables.foldHorizon(spark, p).contains(4L),
       "horizon marker must survive the bucketed fold's dir swap")
     // an immediate second fold's own value is LOWER (kept epoch 3,
@@ -234,11 +235,12 @@ class ChangeFeedSpec extends SparkSpec {
     // max over the marker HISTORY, so it must hold at 4 — regression
     // here is exactly what losing the sibling dir would cause
     Tables.foldEpochs(spark,
-      Seq(Tables.EpochTable(p, bucketed = true)), tomb, "doc_id")
+      Seq(Tables.EpochTable(p, Tables.Layout.Bucketed)), tomb, "doc_id")
     assert(Tables.foldHorizon(spark, p).contains(4L),
       "horizon regressed across a lower-valued second fold")
     intercept[IllegalArgumentException] {
-      Tables.readBucketedChangesSince(spark, p, tomb, "doc_id", 3L)
+      Tables.readChangesSince(spark, p, tomb, "doc_id", 3L,
+        layout = Tables.Layout.Bucketed)
     }
     ()
   }

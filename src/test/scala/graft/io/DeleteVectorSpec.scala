@@ -218,7 +218,7 @@ class DeleteVectorSpec extends SparkSpec {
     val (p, tomb) = buildFixture(root)
     def keyView = Tables.minusTombstones(
       Tables.readManifested(spark, p), tomb, "doc_id")
-    def dvView = Tables.readManifestedMasked(spark, p, tomb, "doc_id")
+    def dvView = Tables.readMasked(spark, p, tomb, "doc_id")
     def plan(df: DataFrame) = df.queryExecution.executedPlan.toString
 
     // no tombstones at all: plain read, no mask machinery

@@ -16,9 +16,12 @@ import graft.SparkSpec
   *
   * Also pins that the fold retires its tombstones in ONE commit: no
   * tombstone-table version from the fold on reads a carried key as
-  * unmasked. */
+  * unmasked; and that the DV-consuming [[Tables.readMasked]] equals
+  * the key mask after every step of generated histories on both
+  * layouts. */
 class FoldPropSpec extends SparkSpec {
   import spark.implicits._
+  import FoldPropSpec._
 
   private def samples[A](g: Gen[A], n: Int = 4): Seq[A] =
     (1 to n).flatMap(i => g.apply(Gen.Parameters.default, Seed(9151L + i)))
@@ -41,6 +44,21 @@ class FoldPropSpec extends SparkSpec {
   private def tmp(p: String) =
     java.nio.file.Files.createTempDirectory(p).toString
 
+  private val layouts = Seq(Tables.Layout.Manifested, Tables.Layout.Bucketed)
+
+  private val keysGen = Gen.nonEmptyContainerOf[Set, Long](Gen.choose(1L, 12L))
+
+  private val stepsGen: Gen[(Set[Long], Seq[Step])] = for {
+    build <- keysGen
+    n <- Gen.choose(3, 7)
+    steps <- Gen.listOfN(n, Gen.frequency(
+      2 -> keysGen.map(Ingest(_)),
+      3 -> Gen.zip(Gen.oneOf(false, true), keysGen)
+        .map { case (st, ks) => Delete(st, ks) },
+      3 -> Gen.const(BuildDv),
+      1 -> Gen.const(VanishDv)))
+  } yield (build, steps)
+
   test("foldEpochs, both layouts: the masked view is unchanged, at " +
     "most epochs 0 and the newest remain, and exactly the tombstones " +
     "of newest-epoch keys survive") {
@@ -57,7 +75,8 @@ class FoldPropSpec extends SparkSpec {
       val wantTombs = if (maxE == 0L) Set.empty[Long]
         else tombKeys & newestKeys
 
-      Seq(false, true).foreach { bucketed =>
+      layouts.foreach { layout =>
+        val bucketed = layout == Tables.Layout.Bucketed
         val root = tmp("graft-foldprop")
         val path = s"$root/arch"
         val tomb = s"$root/tombstones"
@@ -88,7 +107,7 @@ class FoldPropSpec extends SparkSpec {
           s" ingests=$ingests tombs=$tombs"
         assert(view() == wantView, s"$what: pre-fold view")
 
-        Tables.foldEpochs(spark, Seq(Tables.EpochTable(path, bucketed)),
+        Tables.foldEpochs(spark, Seq(Tables.EpochTable(path, layout)),
           tomb, "k")
         assert(view() == wantView, s"$what: the fold changed the view")
         val epochs = read().select(col("ingest_epoch").cast("long"))
@@ -101,6 +120,65 @@ class FoldPropSpec extends SparkSpec {
         org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(root))
       }
     }
+  }
+
+  test("readMasked equals the key mask after every step, both " +
+    "layouts: DV builds, commits after a build, fresh tombstones in " +
+    "both lanes, a vanished mask dir") {
+    val cases = samples(stepsGen)
+    assert(cases.nonEmpty)
+    var positional = 0
+    cases.zipWithIndex.foreach { case ((build, steps), n) =>
+      layouts.foreach { layout =>
+        val root = tmp("graft-maskprop")
+        val path = s"$root/arch"
+        val tomb = s"$root/tombstones"
+        def rows(ks: Set[Long], e: Long) =
+          ks.toSeq.map(k => (k, s"v$k@$e", e)).toDF("k", "v", "ingest_epoch")
+        if (layout == Tables.Layout.Bucketed)
+          Tables.writeBucketedArchive(rows(build, 0L), path, "k", 4)
+        else Tables.writeManifested(rows(build, 0L), path, "ingest_epoch")
+        // each lane's epochs grow, as the front door and the delete
+        // legs allocate them; ingest epochs and batch deletes share a lane
+        var ingestLane = 0L
+        var deleteLane = Tables.DeleteEpochBase - 1L
+        def check(what: String): Unit = {
+          val masked = Tables.readMasked(spark, path, tomb, "k", layout)
+          if (masked.queryExecution.executedPlan.toString
+              .contains("sortedarraycontains")) positional += 1
+          val want = Tables.minusTombstones(layout.read(spark, path), tomb,
+            "k").select("k", "v").as[(Long, String)].collect().sorted.toSeq
+          assert(masked.select("k", "v").as[(Long, String)].collect()
+            .sorted.toSeq == want,
+            s"case $n ${layout.name} steps=$steps: after $what")
+        }
+        steps.foreach { step =>
+          step match {
+            case Ingest(ks) =>
+              ingestLane += 1
+              if (layout == Tables.Layout.Bucketed)
+                Tables.ingestBucketedArchive(rows(ks, ingestLane), path,
+                  ingestLane)
+              else Tables.upsertManifested(rows(ks, ingestLane), path,
+                Seq("ingest_epoch"), _ == s"ingest_epoch=$ingestLane")
+            case Delete(streaming, ks) =>
+              val e =
+                if (streaming) { deleteLane += 1; deleteLane }
+                else { ingestLane += 1; ingestLane }
+              Tables.ingestTombstones(ks.toSeq.toDF("k"), tomb, e)
+            case BuildDv =>
+              Tables.computeDeletionVectors(spark, path, tomb, "k", layout)
+            case VanishDv =>
+              Tables.deletionVectors(spark, path, layout).foreach(p =>
+                org.apache.hadoop.fs.FileUtil.fullyDelete(
+                  new java.io.File(p.dir)))
+          }
+          check(step.toString)
+        }
+        org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(root))
+      }
+    }
+    assert(positional > 0, "no step served the positional mask")
   }
 
   test("a fold that carries a tombstone retires in exactly one " +
@@ -130,4 +208,17 @@ class FoldPropSpec extends SparkSpec {
     }
     org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(root))
   }
+}
+
+object FoldPropSpec {
+  /** One step of a masked-read history: an epoch ingest (a commit —
+    * after a DV build it leaves the sidecar stale), a tombstone epoch
+    * in the ingest lane or the streaming-delete lane, a DV build, or
+    * the current mask dir vanishing under its pointer. */
+  sealed trait Step
+  final case class Ingest(keys: Set[Long]) extends Step
+  final case class Delete(streaming: Boolean, keys: Set[Long])
+    extends Step
+  case object BuildDv extends Step
+  case object VanishDv extends Step
 }

@@ -799,7 +799,7 @@ class LayoutSpec extends SparkSpec {
       })
       reader.start()
       val folded = try Tables.foldEpochs(spark,
-        Seq(Tables.EpochTable(path, bucketed = true)), tomb, "doc_id")
+        Seq(Tables.EpochTable(path, Tables.Layout.Bucketed)), tomb, "doc_id")
         finally { stop = true; reader.join() }
       assert(folded == 3L)
       assert(failures.isEmpty, s"isolation violated: ${failures.peek()}")
@@ -932,13 +932,13 @@ class LayoutSpec extends SparkSpec {
       Tables.ingestTombstones((0L until 30L).toDF("doc_id"),
         s"$root/tomb", epoch = 1L)
       Tables.foldEpochs(spark,
-        Seq(Tables.EpochTable(path, bucketed = true)), s"$root/tomb",
+        Seq(Tables.EpochTable(path, Tables.Layout.Bucketed)), s"$root/tomb",
         "doc_id")
       assert(Tables.readBucketedArchive(spark, path).count() == 0L,
         "full-corpus fold left live rows")
       // the NEXT maintenance window's fold must be a -1 no-op
       assert(Tables.foldEpochs(spark,
-        Seq(Tables.EpochTable(path, bucketed = true)), s"$root/tomb",
+        Seq(Tables.EpochTable(path, Tables.Layout.Bucketed)), s"$root/tomb",
         "doc_id") == -1L,
         "fold over an emptied archive must no-op")
 

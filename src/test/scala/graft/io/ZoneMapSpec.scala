@@ -18,7 +18,10 @@ import org.apache.spark.sql.functions._
   *    the sidecar doesn't cover is loud;
   *  - a fold's rewrite orphans the sidecar's file names → the read
   *    degrades to a full (still correct) scan until re-analyzed,
-  *    after which pruning returns.
+  *    after which pruning returns;
+  *  - a re-analyze keeps the superseded stats dir for readers that
+  *    resolved the old pointer (vacuum reclaims it past the grace),
+  *    and a vanished stats dir degrades to the unpruned read.
   */
 class ZoneMapSpec extends SparkSpec {
 
@@ -225,5 +228,44 @@ class ZoneMapSpec extends SparkSpec {
       "full coverage must not re-analyze")
     assert(Tables.fileStats(spark, p).get._1 == dirBefore,
       "no-op refresh rewrote the sidecar")
+  }
+
+  test("a re-analyze keeps the superseded stats dir until vacuum " +
+    "reclaims it past the sidecar grace") {
+    val (p, _) = mkArchive(4)
+    Tables.computeFileStats(spark, p, Seq("k"))
+    val first = new org.apache.hadoop.fs.Path(
+      Tables.fileStats(spark, p).get._1)
+    val fs = first.getFileSystem(spark.sessionState.newHadoopConf())
+    Tables.computeFileStats(spark, p, Seq("k"))
+    val second = new org.apache.hadoop.fs.Path(
+      Tables.fileStats(spark, p).get._1)
+    assert(second != first)
+    assert(fs.exists(first), "the re-analyze deleted the superseded " +
+      "stats dir under readers holding the old pointer")
+    Tables.vacuumManifested(spark, p)
+    assert(fs.exists(first),
+      "vacuum must skip sidecar dirs younger than the grace")
+    try {
+      spark.conf.set("spark.graft.sweep.sidecarGraceMs", "0")
+      Tables.vacuumManifested(spark, p)
+    } finally spark.conf.unset("spark.graft.sweep.sidecarGraceMs")
+    assert(!fs.exists(first),
+      "vacuum left the superseded stats dir as dead mass")
+    assert(fs.exists(second), "vacuum reclaimed the live stats dir")
+  }
+
+  test("a vanished stats dir degrades the skipping read to the " +
+    "unpruned read instead of throwing") {
+    val (p, _) = mkArchive(8)
+    Tables.computeFileStats(spark, p, Seq("k"))
+    org.apache.hadoop.fs.FileUtil.fullyDelete(
+      new java.io.File(Tables.fileStats(spark, p).get._1))
+    val bounds = Seq(ZoneBound("k", Some(100L), Some(199L)))
+    assert(Tables.zonemapSurvivors(spark, p, bounds)._3 == 0L)
+    val skipped = Tables.readManifestedSkipping(spark, p, bounds)
+    val plain = Tables.readManifested(spark, p)
+    assert(norm(skipped).exceptAll(norm(plain)).isEmpty &&
+      norm(plain).exceptAll(norm(skipped)).isEmpty && plain.count() == 800L)
   }
 }

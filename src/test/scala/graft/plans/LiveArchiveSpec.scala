@@ -8,7 +8,7 @@ import graft.SparkSpec
 import graft.io.Tables
 
 /** Pins for LIVE SQL relations ([[ResolveLiveArchives]] +
-  * [[graft.io.Tables.registerManifestedLiveSql]]):
+  * [[graft.io.Tables.registerLiveSql]]):
   *
   *  - CURRENCY: a commit after registration is visible to the next
   *    SQL query with NO re-registration — the defining contrast with
@@ -59,7 +59,7 @@ class LiveArchiveSpec extends SparkSpec {
   test("currency: a commit after registration is visible with no " +
     "re-registration; the snapshot view on the same archive is stale") {
     val p = freshArch("currency")
-    Tables.registerManifestedLiveSql(spark, "live_cur", p)
+    Tables.registerLiveSql(spark, "live_cur", p)
     Tables.registerManifestedSql(spark, "snap_cur", p)
     assert(spark.sql("SELECT count(*) AS n FROM live_cur")
       .head().getLong(0) === 100L)
@@ -89,7 +89,7 @@ class LiveArchiveSpec extends SparkSpec {
       p, Seq("ingest_epoch"))
     Tables.computeFileBlooms(spark, p, "id",
       expectedItemsPerFile = 64L, fpp = 0.01)
-    Tables.registerManifestedLiveSql(spark, "live_skip", p)
+    Tables.registerLiveSql(spark, "live_skip", p)
     def q: DataFrame = spark.sql(
       "SELECT id, body FROM live_skip WHERE id IN (7, 42, 199, 5555)")
     val prunedIdx = q.queryExecution.optimizedPlan.collect {
@@ -107,7 +107,7 @@ class LiveArchiveSpec extends SparkSpec {
   test("precedence: a same-name temp view shadows the live " +
     "registration; dropping it un-shadows") {
     val p = freshArch("shadow")
-    Tables.registerManifestedLiveSql(spark, "live_shadow", p)
+    Tables.registerLiveSql(spark, "live_shadow", p)
     Seq((-1L, "tempview")).toDF("id", "src")
       .createOrReplaceTempView("live_shadow")
     assert(spark.sql("SELECT count(*) FROM live_shadow")
@@ -127,7 +127,7 @@ class LiveArchiveSpec extends SparkSpec {
     Tables.writeManifested(
       docsDf(0L, 100L).withColumn("ingest_epoch", lit(0L)),
       p, Seq("ingest_epoch"))
-    Tables.registerManifestedLiveSql(spark, "live_masked", p,
+    Tables.registerLiveSql(spark, "live_masked", p,
       tombPath = Some(tomb), keyCol = Some("id"))
     assert(spark.sql("SELECT count(*) FROM live_masked")
       .head().getLong(0) === 100L)
@@ -144,23 +144,23 @@ class LiveArchiveSpec extends SparkSpec {
   test("lifecycle: unregistration makes the name unresolvable; " +
     "names match case-insensitively; misuse is loud") {
     val p = freshArch("cycle")
-    Tables.registerManifestedLiveSql(spark, "Live_Cycle", p)
+    Tables.registerLiveSql(spark, "Live_Cycle", p)
     assert(spark.sql("SELECT count(*) FROM LIVE_CYCLE")
       .head().getLong(0) === 100L,
       "live names must match case-insensitively")
-    Tables.unregisterManifestedLiveSql(spark, "live_cycle")
+    Tables.unregisterLiveSql(spark, "live_cycle")
     intercept[org.apache.spark.sql.AnalysisException] {
       spark.sql("SELECT count(*) FROM live_cycle").collect()
     }
     intercept[IllegalArgumentException] {
-      Tables.registerManifestedLiveSql(spark, "a.b", p)
+      Tables.registerLiveSql(spark, "a.b", p)
     }
     intercept[IllegalArgumentException] {
-      Tables.registerManifestedLiveSql(spark, "x", p,
+      Tables.registerLiveSql(spark, "x", p,
         tombPath = Some("t"))
     }
     intercept[IllegalArgumentException] {
-      Tables.registerManifestedLiveSql(spark, "x", p,
+      Tables.registerLiveSql(spark, "x", p,
         tombPath = Some("t"), keyCol = Some("id"), asOf = Some(1L))
     }
   }
@@ -169,7 +169,7 @@ class LiveArchiveSpec extends SparkSpec {
     "go multi-path, counts sum; INSERT OVERWRITE replaces exactly " +
     "the partitions the rows touch") {
     val p = freshArch("insert") // ids 0-99 in partition ingest_epoch=0
-    Tables.registerManifestedLiveSql(spark, "live_ins", p)
+    Tables.registerLiveSql(spark, "live_ins", p)
     // source rows for the SQL to read
     docsDf(1000L, 1060L).withColumn("ingest_epoch", lit(0L))
       .createOrReplaceTempView("ins_src")
@@ -202,7 +202,7 @@ class LiveArchiveSpec extends SparkSpec {
     "lists are checked, pinned/shadowed/static-partition writes " +
     "refuse loudly") {
     val p = freshArch("insguard")
-    Tables.registerManifestedLiveSql(spark, "live_guard", p)
+    Tables.registerLiveSql(spark, "live_guard", p)
     // BY NAME: source column order differs from the archive's read
     // order (data cols then partition col) — names win
     spark.sql("SELECT 'x9' AS body, 0L AS ingest_epoch, 3L AS grp, " +
@@ -225,7 +225,7 @@ class LiveArchiveSpec extends SparkSpec {
         "SELECT 1L AS id, 'b' AS body, 2L AS grp")
     }
     // a pinned registration is read-only
-    Tables.registerManifestedLiveSql(spark, "live_pinned", p,
+    Tables.registerLiveSql(spark, "live_pinned", p,
       asOf = Some(1L))
     intercept[Exception] {
       spark.sql("INSERT INTO live_pinned SELECT * FROM guard_src")
@@ -253,7 +253,7 @@ class LiveArchiveSpec extends SparkSpec {
     Tables.writeManifested(
       docsDf(0L, 100L).withColumn("ingest_epoch", lit(0L)),
       p, Seq("ingest_epoch"))
-    Tables.registerManifestedLiveSql(spark, "live_del", p,
+    Tables.registerLiveSql(spark, "live_del", p,
       tombPath = Some(tomb), keyCol = Some("id"))
     val filesBefore = new org.apache.hadoop.fs.Path(s"$p/data")
       .getFileSystem(spark.sessionState.newHadoopConf())
@@ -274,7 +274,7 @@ class LiveArchiveSpec extends SparkSpec {
     // the DV rebuilt at delete time against the current manifest —
     // the masked read stays positional (no key anti-join)
     val dv = Tables.deletionVectors(spark, p)
-    assert(dv.isDefined && dv.get.version ===
+    assert(dv.isDefined && dv.get.stamp ===
       Tables.resolveManifest(spark, p)._1,
       "DELETE must rebuild the deletion-vector sidecar")
     // idempotent: same predicate again, same answer
@@ -288,12 +288,12 @@ class LiveArchiveSpec extends SparkSpec {
     assert(Tables.resolveManifest(spark, tomb)._1 === tombV,
       "a no-match DELETE must not commit an empty tombstone epoch")
     // an unmasked registration has nowhere to record deletes
-    Tables.registerManifestedLiveSql(spark, "live_del_plain", p)
+    Tables.registerLiveSql(spark, "live_del_plain", p)
     intercept[Exception] {
       spark.sql("DELETE FROM live_del_plain WHERE id = 1")
     }
     // pinned snapshots are read-only
-    Tables.registerManifestedLiveSql(spark, "live_del_pin", p,
+    Tables.registerLiveSql(spark, "live_del_pin", p,
       asOf = Some(1L))
     intercept[Exception] {
       spark.sql("DELETE FROM live_del_pin WHERE id = 1")
@@ -314,7 +314,7 @@ class LiveArchiveSpec extends SparkSpec {
     "partition-column assignment moves rows") {
     val p = s"${tmpRoot("graft-live-upd")}/arch"
     Tables.writeManifested(docsDf(0L, 100L), p, Seq("grp"))
-    Tables.registerManifestedLiveSql(spark, "live_upd", p)
+    Tables.registerLiveSql(spark, "live_upd", p)
     val (v1, parts1) = Tables.resolveManifest(spark, p)
     spark.sql(
       "UPDATE live_upd SET body = concat(body, '!') WHERE grp = 3")
@@ -363,7 +363,7 @@ class LiveArchiveSpec extends SparkSpec {
     val p = s"$root/arch"
     val tomb = s"$root/tomb"
     Tables.writeManifested(docsDf(0L, 100L), p, Seq("grp"))
-    Tables.registerManifestedLiveSql(spark, "live_updm", p,
+    Tables.registerLiveSql(spark, "live_updm", p,
       tombPath = Some(tomb), keyCol = Some("id"))
     spark.sql("DELETE FROM live_updm WHERE id = 17") // grp 3
     assert(spark.sql("SELECT count(*) FROM live_updm")
@@ -379,10 +379,10 @@ class LiveArchiveSpec extends SparkSpec {
     // stay positional
     val dv = Tables.deletionVectors(spark, p)
     assert(dv.isDefined &&
-      dv.get.version === Tables.resolveManifest(spark, p)._1,
+      dv.get.stamp === Tables.resolveManifest(spark, p)._1,
       "UPDATE on a masked registration must rebuild the DV sidecar")
     // refusals
-    Tables.registerManifestedLiveSql(spark, "live_updm_pin", p,
+    Tables.registerLiveSql(spark, "live_updm_pin", p,
       asOf = Some(1L))
     intercept[Exception] {
       spark.sql("UPDATE live_updm_pin SET body = 'x' WHERE id = 1")
@@ -401,7 +401,7 @@ class LiveArchiveSpec extends SparkSpec {
     "not-matched-by-source, action order, and COW partition carry") {
     val p = s"${tmpRoot("graft-live-mrg")}/arch"
     Tables.writeManifested(docsDf(0L, 100L), p, Seq("grp"))
-    Tables.registerManifestedLiveSql(spark, "live_mrg", p,
+    Tables.registerLiveSql(spark, "live_mrg", p,
       keyCol = Some("id"))
     // source: updates id 3 (grp 3), deletes id 10 (grp 3), inserts
     // id 1000 (grp 6); id 500 matches no action condition
@@ -452,7 +452,7 @@ class LiveArchiveSpec extends SparkSpec {
     "loudly; the archive is untouched after a refused merge") {
     val p = s"${tmpRoot("graft-live-mrgg")}/arch"
     Tables.writeManifested(docsDf(0L, 50L), p, Seq("grp"))
-    Tables.registerManifestedLiveSql(spark, "live_mrgg", p,
+    Tables.registerLiveSql(spark, "live_mrgg", p,
       keyCol = Some("id"))
     // two source rows match target id 3: nondeterministic update
     Seq((3L, "a"), (3L, "b")).toDF("sid", "sbody")
@@ -468,7 +468,7 @@ class LiveArchiveSpec extends SparkSpec {
     assert(Tables.resolveManifest(spark, p)._1 === vBefore,
       "a refused MERGE must not commit")
     // a registration without keyCol cannot merge
-    Tables.registerManifestedLiveSql(spark, "live_mrgg_nokey", p)
+    Tables.registerLiveSql(spark, "live_mrgg_nokey", p)
     intercept[Exception] {
       spark.sql(
         """MERGE INTO live_mrgg_nokey t USING mrgg_dup s
@@ -476,7 +476,7 @@ class LiveArchiveSpec extends SparkSpec {
           |WHEN MATCHED THEN UPDATE SET body = s.sbody""".stripMargin)
     }
     // pinned snapshots are read-only
-    Tables.registerManifestedLiveSql(spark, "live_mrgg_pin", p,
+    Tables.registerLiveSql(spark, "live_mrgg_pin", p,
       asOf = Some(1L))
     intercept[Exception] {
       spark.sql(
@@ -495,7 +495,7 @@ class LiveArchiveSpec extends SparkSpec {
     Tables.writeManifested(
       docsDf(0L, 200L).withColumn("ingest_epoch", lit(0L)),
       p, Seq("ingest_epoch"))
-    Tables.registerManifestedLiveSql(spark, "live_race", p,
+    Tables.registerLiveSql(spark, "live_race", p,
       tombPath = Some(tomb), keyCol = Some("id"))
     // two disjoint predicates deleted CONCURRENTLY: both pick their
     // epoch read-then-commit, so they can collide on the same epoch
@@ -542,9 +542,9 @@ class LiveArchiveSpec extends SparkSpec {
     Tables.commitEpochMarker(spark, root, 1L)
     // epoch 2 lands in alpha, then the crash — no beta, no marker
     land("alpha", 2L, 200L, 220L)
-    Tables.registerManifestedLiveSql(spark, "cons_plain",
+    Tables.registerLiveSql(spark, "cons_plain",
       s"$root/alpha")
-    Tables.registerManifestedLiveSql(spark, "cons_gated",
+    Tables.registerLiveSql(spark, "cons_gated",
       s"$root/alpha", consistentRoots = Seq(root))
     assert(spark.sql("SELECT count(*) FROM cons_plain")
       .head().getLong(0) === 100L,
@@ -580,7 +580,7 @@ class LiveArchiveSpec extends SparkSpec {
     }
     // registration misuse: a pinned snapshot cannot take the gate
     intercept[IllegalArgumentException] {
-      Tables.registerManifestedLiveSql(spark, "cons_bad",
+      Tables.registerLiveSql(spark, "cons_bad",
         s"$root/alpha", asOf = Some(1L), consistentRoots = Seq(root))
     }
   }
@@ -602,9 +602,9 @@ class LiveArchiveSpec extends SparkSpec {
     // only — B's replay never finished
     Seq(rootA, rootB).foreach(Tables.commitEpochMarker(spark, _, 0L))
     Tables.commitEpochMarker(spark, rootA, 1L)
-    Tables.registerManifestedLiveSql(spark, "cross_own", p,
+    Tables.registerLiveSql(spark, "cross_own", p,
       consistentRoots = Seq(rootA))
-    Tables.registerManifestedLiveSql(spark, "cross_pair", p,
+    Tables.registerLiveSql(spark, "cross_pair", p,
       consistentRoots = Seq(rootA, rootB))
     assert(spark.sql("SELECT count(*) FROM cross_own")
       .head().getLong(0) === 80L,
@@ -639,9 +639,9 @@ class LiveArchiveSpec extends SparkSpec {
     "pinned snapshot while the table moves on") {
     val p = freshArch("asof")
     landEpoch(p, 1L, 500L, 540L) // v2: 140 rows
-    Tables.registerManifestedLiveSql(spark, "live_asof", p,
+    Tables.registerLiveSql(spark, "live_asof", p,
       asOf = Some(2L))
-    Tables.registerManifestedLiveSql(spark, "live_head", p)
+    Tables.registerLiveSql(spark, "live_head", p)
     landEpoch(p, 2L, 700L, 710L) // v3: 150 rows
     assert(spark.sql("SELECT count(*) FROM live_asof")
       .head().getLong(0) === 140L,
@@ -660,8 +660,8 @@ class LiveArchiveSpec extends SparkSpec {
     Tables.writeBucketedArchive(
       docsDf(0L, 100L).withColumn("ingest_epoch", lit(0L)),
       p, "id", buckets = 4)
-    Tables.registerBucketedLiveSql(spark, "live_bkt", p,
-      tombPath = Some(tomb), keyCol = Some("id"))
+    Tables.registerLiveSql(spark, "live_bkt", p,
+      tombPath = Some(tomb), keyCol = Some("id"), layout = Tables.Layout.Bucketed)
     assert(spark.sql("SELECT count(*) FROM live_bkt")
       .head().getLong(0) === 100L)
     // currency: an epoch ingest after registration is visible with
@@ -674,8 +674,8 @@ class LiveArchiveSpec extends SparkSpec {
     spark.sql("DELETE FROM live_bkt WHERE id % 10 = 3")
     assert(spark.sql("SELECT count(*) FROM live_bkt")
       .head().getLong(0) === 135L)
-    val dvb = Tables.bucketedDeletionVectors(spark, p)
-    assert(dvb.map(_.seq) === Some(Tables.bucketedRootState(spark, p)._1),
+    val dvb = Tables.deletionVectors(spark, p, Tables.Layout.Bucketed)
+    assert(dvb.map(_.stamp) === Some(Tables.bucketedRootState(spark, p)._1),
       "SQL DELETE on a bucketed name must build a CURRENT bucketed " +
         s"DV with the O(1) seq stamp, got $dvb")
     // the covered read through SQL is positional: no key anti-join
@@ -684,7 +684,7 @@ class LiveArchiveSpec extends SparkSpec {
       "the DV-covered bucketed SQL read must not key-anti-join")
     // a fold is tracked too (and physically retires the tombstones)
     Tables.foldEpochs(spark,
-      Seq(Tables.EpochTable(p, bucketed = true)), tomb, "id")
+      Seq(Tables.EpochTable(p, Tables.Layout.Bucketed)), tomb, "id")
     assert(spark.sql("SELECT count(*) FROM live_bkt")
       .head().getLong(0) === 135L)
     // writes refuse with the front-door / COW guidance
@@ -709,7 +709,7 @@ class LiveArchiveSpec extends SparkSpec {
     "retained snapshot while the head moves; TIMESTAMP AS OF and " +
     "garbage versions refuse loudly") {
     val p = freshArch("tt") // v1: 100 rows
-    Tables.registerManifestedLiveSql(spark, "live_tt", p)
+    Tables.registerLiveSql(spark, "live_tt", p)
     landEpoch(p, 1L, 500L, 540L) // v2: 140 rows
     landEpoch(p, 2L, 700L, 710L) // v3: 150 rows
     assert(spark.sql("SELECT count(*) FROM live_tt")
@@ -746,7 +746,7 @@ class LiveArchiveSpec extends SparkSpec {
           spark.sessionState.conf.sessionLocalTimeZone))
         .format(java.time.Instant.ofEpochMilli(millis))
     val p = freshArch("tsasof") // v1
-    Tables.registerManifestedLiveSql(spark, "live_tsasof", p)
+    Tables.registerLiveSql(spark, "live_tsasof", p)
     Thread.sleep(1200)
     val between = tsLit(System.currentTimeMillis)
     Thread.sleep(1200)
@@ -766,14 +766,14 @@ class LiveArchiveSpec extends SparkSpec {
     }
     assert(spark.sql("SELECT count(*) FROM live_tsasof VERSION AS OF 1")
       .head().getLong(0) === 100L, "VERSION AS OF must still pin")
-    Tables.unregisterManifestedLiveSql(spark, "live_tsasof")
+    Tables.unregisterLiveSql(spark, "live_tsasof")
   }
 
   test("ALTER TABLE ADD COLUMNS: a manifested live name widens " +
     "immediately (nulls), INSERTs may carry or omit the column, old " +
     "rows null-fill; misuse refuses loudly") {
     val p = freshArch("alter")
-    Tables.registerManifestedLiveSql(spark, "live_alter", p)
+    Tables.registerLiveSql(spark, "live_alter", p)
     spark.sql("ALTER TABLE live_alter ADD COLUMNS (score DOUBLE)")
     val widened = spark.sql("SELECT * FROM live_alter")
     assert(widened.columns.contains("score"),
@@ -803,7 +803,7 @@ class LiveArchiveSpec extends SparkSpec {
         "SELECT 1L AS id, 'b' AS body, 1L AS grp, " +
         "7L AS ingest_epoch, 'v' AS never_declared")
     }
-    Tables.unregisterManifestedLiveSql(spark, "live_alter")
+    Tables.unregisterLiveSql(spark, "live_alter")
   }
 
   test("ALTER TABLE ADD COLUMNS on a bucketed live name evolves " +
@@ -813,19 +813,19 @@ class LiveArchiveSpec extends SparkSpec {
     Tables.writeBucketedArchive(
       docsDf(0L, 80L).withColumn("ingest_epoch", lit(0L)),
       p, "id", buckets = 4)
-    Tables.registerBucketedLiveSql(spark, "live_alterbkt", p)
+    Tables.registerLiveSql(spark, "live_alterbkt", p, layout = Tables.Layout.Bucketed)
     spark.sql("ALTER TABLE live_alterbkt ADD COLUMNS (tag STRING)")
     val out = spark.sql("SELECT * FROM live_alterbkt")
     assert(out.columns.contains("tag") && out.count() === 80L)
     assert(out.where(col("tag").isNotNull).count() === 0L)
-    Tables.unregisterManifestedLiveSql(spark, "live_alterbkt")
+    Tables.unregisterLiveSql(spark, "live_alterbkt")
   }
 
   test("$history relation: one row per retained commit with its " +
     "instant, on manifested and bucketed names") {
     val p = freshArch("hist") // v1
     landEpoch(p, 1L, 1000L, 1010L) // v2
-    Tables.registerManifestedLiveSql(spark, "live_hist", p)
+    Tables.registerLiveSql(spark, "live_hist", p)
     val h = spark.sql(
       "SELECT version, commit_ts, n_partitions FROM `live_hist$history` " +
         "ORDER BY version")
@@ -842,12 +842,12 @@ class LiveArchiveSpec extends SparkSpec {
     Tables.writeBucketedArchive(
       docsDf(0L, 40L).withColumn("ingest_epoch", lit(0L)),
       pb, "id", buckets = 4)
-    Tables.registerBucketedLiveSql(spark, "live_histbkt", pb)
+    Tables.registerLiveSql(spark, "live_histbkt", pb, layout = Tables.Layout.Bucketed)
     assert(spark.sql("SELECT version, commit_ts FROM " +
       "`live_histbkt$history`").collect().map(_.getLong(0)).toSeq
       === Seq(1L))
     Seq("live_hist", "live_histbkt")
-      .foreach(Tables.unregisterManifestedLiveSql(spark, _))
+      .foreach(Tables.unregisterLiveSql(spark, _))
   }
 
   test("concurrent SQL UPDATEs: same-partition racers never lose an " +
@@ -861,7 +861,7 @@ class LiveArchiveSpec extends SparkSpec {
         isConflict(t.getCause))
     // --- same partition (all rows in ingest_epoch=0) ---
     val p1 = freshArch("updrace1")
-    Tables.registerManifestedLiveSql(spark, "live_updrace1", p1)
+    Tables.registerLiveSql(spark, "live_updrace1", p1)
     val race = Seq(
       ("aa", 1L, "UPDATE live_updrace1 SET body = 'aa' WHERE id = 1"),
       ("bb", 2L, "UPDATE live_updrace1 SET body = 'bb' WHERE id = 2"))
@@ -883,7 +883,7 @@ class LiveArchiveSpec extends SparkSpec {
     // --- disjoint partitions: both must land ---
     val p2 = freshArch("updrace2")
     landEpoch(p2, 1L, 1000L, 1050L)
-    Tables.registerManifestedLiveSql(spark, "live_updrace2", p2)
+    Tables.registerLiveSql(spark, "live_updrace2", p2)
     val disj = Seq(
       "UPDATE live_updrace2 SET body = 'cc' WHERE id = 1",
       "UPDATE live_updrace2 SET body = 'dd' WHERE id = 1001")
@@ -895,7 +895,7 @@ class LiveArchiveSpec extends SparkSpec {
       "body IN ('cc','dd')").head().getLong(0) === 2L,
       "both disjoint assignments must be visible")
     Seq("live_updrace1", "live_updrace2")
-      .foreach(Tables.unregisterManifestedLiveSql(spark, _))
+      .foreach(Tables.unregisterLiveSql(spark, _))
   }
 
   test("UPDATE racing MERGE on one partition: the cross-verb pair " +
@@ -908,7 +908,7 @@ class LiveArchiveSpec extends SparkSpec {
       t != null && (t.isInstanceOf[Tables.ConcurrentWriteException] ||
         isConflict(t.getCause))
     val p = freshArch("updmrg")
-    Tables.registerManifestedLiveSql(spark, "live_updmrg", p,
+    Tables.registerLiveSql(spark, "live_updmrg", p,
       keyCol = Some("id"))
     Seq((3L, "merged")).toDF("sid", "sbody")
       .createOrReplaceTempView("updmrg_src")
@@ -932,7 +932,7 @@ class LiveArchiveSpec extends SparkSpec {
           s"refusal must be the loud write conflict, got: $e")
       }
     }
-    Tables.unregisterManifestedLiveSql(spark, "live_updmrg")
+    Tables.unregisterLiveSql(spark, "live_updmrg")
   }
 
   test("DML alias hijack: a user alias that collides with ANOTHER " +
@@ -944,11 +944,11 @@ class LiveArchiveSpec extends SparkSpec {
     Seq(pEvents, pT).foreach(p => Tables.writeManifested(
       docsDf(0L, 100L).withColumn("ingest_epoch", lit(0L)),
       p, Seq("ingest_epoch")))
-    Tables.registerManifestedLiveSql(spark, "hj_events", pEvents,
+    Tables.registerLiveSql(spark, "hj_events", pEvents,
       tombPath = Some(s"$root/events_tomb"), keyCol = Some("id"))
     // the trap: a registration literally named 't', with its own
     // tombstone store — a name-based walk would land the DELETE here
-    Tables.registerManifestedLiveSql(spark, "t", pT,
+    Tables.registerLiveSql(spark, "t", pT,
       tombPath = Some(s"$root/t_tomb"), keyCol = Some("id"))
     spark.sql("DELETE FROM hj_events t WHERE t.id < 10")
     assert(spark.sql("SELECT count(*) FROM hj_events")
@@ -968,6 +968,6 @@ class LiveArchiveSpec extends SparkSpec {
     assert(spark.sql("SELECT count(*) FROM t WHERE body = 'redone'")
       .head().getLong(0) === 0L)
     Seq("hj_events", "t")
-      .foreach(Tables.unregisterManifestedLiveSql(spark, _))
+      .foreach(Tables.unregisterLiveSql(spark, _))
   }
 }

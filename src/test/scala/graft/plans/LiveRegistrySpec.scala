@@ -9,7 +9,7 @@ import graft.io.Tables
 
 /** Pins for the PERSISTENT live-SQL registry
   * ([[graft.io.Tables.loadLiveSqlRegistry]] + the `registry`
-  * parameter of `registerManifestedLiveSql`): live registrations are
+  * parameter of `registerLiveSql`): live registrations are
   * session-scoped metadata, so without persistence every new JVM
   * must re-register every name by path. The registry makes the SQL
   * catalog durable — one small file per name under
@@ -61,7 +61,7 @@ class LiveRegistrySpec extends SparkSpec {
       p, Seq("ingest_epoch"))
     Tables.computeFileBlooms(spark, p, "id",
       expectedItemsPerFile = 64L, fpp = 0.01)
-    Tables.registerManifestedLiveSql(spark, "reg_arch", p,
+    Tables.registerLiveSql(spark, "reg_arch", p,
       registry = Some(root))
     // masked archive (tombPath/keyCol must survive the round-trip)
     val p2 = s"$root/arch2"
@@ -70,7 +70,7 @@ class LiveRegistrySpec extends SparkSpec {
       docsDf(0L, 50L).withColumn("ingest_epoch", lit(0L)),
       p2, Seq("ingest_epoch"))
     Tables.ingestTombstones(Seq(1L, 2L).toDF("id"), tomb, epoch = 1L)
-    Tables.registerManifestedLiveSql(spark, "reg_masked", p2,
+    Tables.registerLiveSql(spark, "reg_masked", p2,
       tombPath = Some(tomb), keyCol = Some("id"),
       registry = Some(root))
 
@@ -102,7 +102,7 @@ class LiveRegistrySpec extends SparkSpec {
 
     // durable unregistration: future loads stop seeing the name,
     // sessions that already loaded keep their in-memory entry
-    Tables.unregisterManifestedLiveSql(spark, "reg_masked",
+    Tables.unregisterLiveSql(spark, "reg_masked",
       registry = Some(root))
     val s3 = spark.newSession()
     assert(Tables.loadLiveSqlRegistry(s3, root) === Seq("reg_arch"))
@@ -133,9 +133,9 @@ class LiveRegistrySpec extends SparkSpec {
     Tables.writeBucketedArchive(
       docsDf(0L, 100L).withColumn("ingest_epoch", lit(0L)),
       p, "id", buckets = 4)
-    Tables.registerBucketedLiveSql(spark, "reg_bkt", p,
+    Tables.registerLiveSql(spark, "reg_bkt", p,
       tombPath = Some(tomb), keyCol = Some("id"),
-      registry = Some(root))
+      registry = Some(root), layout = Tables.Layout.Bucketed)
     val s2 = spark.newSession()
     assert(Tables.loadLiveSqlRegistry(s2, root) === Seq("reg_bkt"))
     assert(s2.sql("SELECT count(*) FROM reg_bkt")
@@ -145,7 +145,7 @@ class LiveRegistrySpec extends SparkSpec {
     s2.sql("DELETE FROM reg_bkt WHERE id < 5")
     assert(s2.sql("SELECT count(*) FROM reg_bkt")
       .head().getLong(0) === 95L)
-    assert(Tables.bucketedDeletionVectors(s2, p).isDefined,
+    assert(Tables.deletionVectors(s2, p, Tables.Layout.Bucketed).isDefined,
       "a registry-loaded bucketed name must keep its layout routing")
   }
 
@@ -155,7 +155,7 @@ class LiveRegistrySpec extends SparkSpec {
     val p = s"$root/arch"
     val tomb = s"$root/tomb"
     Tables.writeManifested(docsDf(0L, 100L), p, Seq("grp"))
-    Tables.registerManifestedLiveSql(spark, "reg_dml", p,
+    Tables.registerLiveSql(spark, "reg_dml", p,
       tombPath = Some(tomb), keyCol = Some("id"),
       registry = Some(root))
     val s2 = spark.newSession()
