@@ -75,19 +75,6 @@ object Tables {
     scala.collection.concurrent.TrieMap
       .empty[(SparkSession, String, String), DataFrame]
 
-  /** Schema-evolution read: union the footer schemas of EVERY file
-    * (`mergeSchema`) so years of drifting daily partitions read as one
-    * table — columns added by later ingest versions come back null for
-    * older partitions. Spark's default schema resolution reads a
-    * single footer, so a scan planned off an old partition silently
-    * DROPS the newer columns; at 100 TB schema drift across a
-    * long-lived landing zone is the rule, not the edge case. The
-    * merged resolution costs a distributed footer read of every file
-    * at plan time, which is why this is a separate entry point and
-    * not `load`'s default. */
-  def loadEvolved(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("mergeSchema", "true").parquet(path)
-
   /** Snapshot-partitioned write (ref E4: the daily `{date}.json`
     * landing key becomes a real partition column). A filter on the
     * partition column then prunes whole directories at plan time —
@@ -868,8 +855,9 @@ object Tables {
     * Rewrites run on the same bounded concurrent pool shape as
     * [[compactPartitions]]; a partition already at its target is
     * carried into the new manifest unchanged (and if NOTHING needs
-    * rewriting, no new manifest is written at all — idempotence). */
-  /** `clusterCols`: when set, rewritten partitions are RANGE-
+    * rewriting, no new manifest is written at all — idempotence).
+    *
+    * `clusterCols`: when set, rewritten partitions are RANGE-
     * CLUSTERED on those columns (repartitionByRange + sorted files)
     * instead of size-balanced at random — the maintenance half of the
     * zone-map story: a plain `repartition` compaction scatters every
@@ -882,33 +870,6 @@ object Tables {
   def compactManifested(spark: SparkSession, path: String,
                         targetBytes: Long,
                         clusterCols: Seq[String] = Nil)
-      : Map[String, CompactStats] =
-    compactManifestedShaped(spark, path, targetBytes, (df, n) =>
-      if (clusterCols.isEmpty) df.repartition(n)
-      else df.repartitionByRange(n, clusterCols.map(col): _*)
-        .sortWithinPartitions(clusterCols.map(col): _*))
-
-  /** [[compactManifested]] shaped by a Z-ORDER curve: rewritten
-    * partitions are range-partitioned and sorted by
-    * [[zValue]](xCol, yCol) — every output file covers a compact
-    * z-range, i.e. a tight bounding box in BOTH dimensions, so a
-    * 2-D box predicate through [[readManifestedSkipping]] (bounds on
-    * both columns, stats on both) prunes to the files whose boxes
-    * intersect it. The multi-dimensional member of the clustered-
-    * compaction family for archives queried by more than one key. */
-  def compactManifestedZOrdered(spark: SparkSession, path: String,
-                                targetBytes: Long, xCol: String,
-                                yCol: String, bits: Int = 16)
-      : Map[String, CompactStats] =
-    compactManifestedShaped(spark, path, targetBytes, (df, n) =>
-      df.withColumn("__z", zValue(col(xCol), col(yCol), bits))
-        .repartitionByRange(n, col("__z"))
-        .sortWithinPartitions("__z")
-        .drop("__z"))
-
-  private def compactManifestedShaped(spark: SparkSession, path: String,
-                        targetBytes: Long,
-                        shape: (DataFrame, Int) => DataFrame)
       : Map[String, CompactStats] = {
     require(targetBytes > 0, "targetBytes must be positive")
     import scala.concurrent.{Await, ExecutionContext, Future}
@@ -947,7 +908,10 @@ object Tables {
           (part, rel, CompactStats(bytes, dataFiles.size, dataFiles.size))
         else {
           val newRel = s"data/v$next/$part"
-          shape(spark.read.parquet(subs.map(_.toString): _*), target)
+          val df = spark.read.parquet(subs.map(_.toString): _*)
+          (if (clusterCols.isEmpty) df.repartition(target)
+           else df.repartitionByRange(target, clusterCols.map(col): _*)
+             .sortWithinPartitions(clusterCols.map(col): _*))
             .write.mode(SaveMode.Overwrite).parquet(s"$path/$newRel")
           fs.delete(new org.apache.hadoop.fs.Path(
             s"$path/$newRel/_SUCCESS"), false)
@@ -3464,31 +3428,6 @@ object Tables {
       }
     }.toMap
     Some((rows, bytes, merged))
-  }
-
-  /** The merged STRING bounds of a column over the scanned
-    * partitions, decoded — the sidecar's base64 `smin`/`smax` as
-    * plain strings. Spark's cost model ignores string min/max, so
-    * these serve engine-side consumers (partition-level pruning
-    * decisions, data validation) rather than CatalogColumnStat. */
-  def commitStringBounds(spark: SparkSession, path: String,
-      column: String): Option[(String, String)] = {
-    val (_, parts) = resolveManifest(spark, path)
-    def normP(p: String) =
-      new org.apache.hadoop.fs.Path(p).toUri.getPath
-    val allDirs = parts.values.flatMap(entryPaths)
-      .map(sp => normP(entryDirAndBase(path, sp)._1)).toSet
-    manifestStatsFor(spark, path, allDirs).flatMap {
-      case (_, _, cols) =>
-        cols.get(column).flatMap { cs =>
-          def b64(s: String) = new String(
-            java.util.Base64.getDecoder.decode(s), "UTF-8")
-          (cs.smin, cs.smax) match {
-            case (Some(a), Some(b)) => Some((b64(a), b64(b)))
-            case _ => None
-          }
-        }
-    }
   }
 
   // ---------- Deletion vectors (file-local tombstone retirement) ----------

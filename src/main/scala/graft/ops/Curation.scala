@@ -524,7 +524,7 @@ object Curation {
     // archive view: LATEST epoch per doc, excluding the current
     // epoch (a crash-replay must not read its own previous partial
     // commit) — so yesterday's merge commits are consumed today, and
-    // a fold ([[compactLabelEpochs]]) changes nothing a reader sees
+    // a fold ([[compactClusterArchive]]) changes nothing a reader sees
     val archive = Tables.readMasked(s, s"$idx/labels",
         s"$idx/tombstones", "doc_id", Tables.Layout.Bucketed)
       .where(col("ingest_epoch") =!= epoch)
@@ -567,38 +567,6 @@ object Curation {
         isBatch(col("doc_id")).as("is_batch"),
         (col("doc_id") === col("label")).as("keep"))
       .orderBy("doc_id")
-  }
-
-  /** Fold accumulated label-merge epochs into the base layer — the
-    * [[graft.ops.Similarity.compactIndexEpochs]] lifecycle applied to
-    * the cluster archive. Unlike the append-only fingerprint/code
-    * tables, label epochs are UPDATES (a doc's newest epoch wins), so
-    * the fold materializes the latest-per-doc view and commits it as
-    * the sole `ingest_epoch=0` partition in one pointer flip; every
-    * prior layer drops from the manifest (old versions stay on disk
-    * until vacuum — readers of the previous pointer stay isolated).
-    * [[clusterIncrementalFrom]]'s archive read is the same
-    * latest-per-doc aggregate, so a fold is invisible to the next
-    * day's merge by construction — ClusterIndexSpec pins exactly
-    * that, plus a post-fold second-day merge. Returns the folded
-    * high-water epoch, or -1 when only the base layer exists. */
-  private[ops] def compactLabelEpochs(s: SparkSession,
-                                      idx: String): Long = {
-    val path = s"$idx/labels"
-    val arch = Tables.readBucketedArchive(s, path)
-    // nullable read: an archive emptied by a full-corpus RTBF + fold
-    // has max() = NULL, and the next window's fold must no-op, not NPE
-    val maxE = Tables.maxIngestEpoch(arch)
-    if (maxE <= 0L) return -1L
-    // label epochs are UPDATES: the fold materializes latest-per-doc
-    // (exchange-free off the doc_id-bucketed scan) as the sole base
-    // layer, as the next version (the rewrite keeps the bucket layout)
-    val current = arch
-      .groupBy(col("doc_id"))
-      .agg(max_by(col("label"), col("ingest_epoch")).as("label"))
-      .withColumn("ingest_epoch", lit(0L))
-    Tables.replaceBucketedArchive(current, path)
-    maxE
   }
 
   val qClusterIncrementalOracle: String =
@@ -794,11 +762,19 @@ object Curation {
       .groupBy(col("doc_id"))
       .agg(max_by(col("label"), col("ingest_epoch")).as("label"))
 
-  /** Full lifecycle fold for the cluster archive: labels fold to
-    * their latest-per-doc view MINUS tombstones as the sole base
-    * layer ([[compactLabelEpochs]]' fold with the delete applied
-    * physically); postings and sizes then fold their epoch layers
-    * together through [[graft.io.Tables.foldEpochs]], which also
+  /** Full lifecycle fold for the cluster archive — the
+    * [[graft.ops.Similarity.compactIndexEpochs]] lifecycle applied to
+    * the cluster archive. Unlike the append-only fingerprint/code
+    * tables, label epochs are UPDATES (a doc's newest epoch wins), so
+    * labels fold to their latest-per-doc view MINUS tombstones as the
+    * sole `ingest_epoch=0` base layer, committed as the next version
+    * (readers of the previous version stay isolated until vacuum).
+    * [[clusterIncrementalFrom]]'s archive read is the same
+    * latest-per-doc aggregate, so a fold is invisible to the next
+    * day's merge by construction — ClusterIndexSpec pins exactly
+    * that, plus a post-fold second-day merge. Postings and sizes then
+    * fold their epoch layers together through
+    * [[graft.io.Tables.foldEpochs]], which also
     * retires the tombstones except keys living in a still-replayable
     * newest epoch (a replay recomputes those rows from text and would
     * silently resurrect a folded delete — their tombstones stay

@@ -681,18 +681,19 @@ object Functions {
     import s.implicits._
     val meanAgg = new org.apache.spark.sql.expressions
     .Aggregator[(String, Double), (Double, Long), Double] {
-      def zero: (Double, Long) = (0.0, 0L)
-      def reduce(b: (Double, Long), x: (String, Double)): (Double, Long) =
+      override def zero: (Double, Long) = (0.0, 0L)
+      override def reduce(b: (Double, Long),
+                          x: (String, Double)): (Double, Long) =
         (b._1 + x._2, b._2 + 1)
-      def merge(a: (Double, Long), b: (Double, Long)): (Double, Long) =
+      override def merge(a: (Double, Long), b: (Double, Long)): (Double, Long) =
         (a._1 + b._1, a._2 + b._2)
-      def finish(b: (Double, Long)): Double =
+      override def finish(b: (Double, Long)): Double =
         if (b._2 == 0) 0.0
         else math.floor((math.floor(b._1 * 100 + 0.5) / 100) / b._2 * 10000
           + 0.5) / 10000 // round(round(sum,2)/n, 4), FP-flip-safe
-      def bufferEncoder = Encoders.tuple(Encoders.scalaDouble,
+      override def bufferEncoder = Encoders.tuple(Encoders.scalaDouble,
         Encoders.scalaLong)
-      def outputEncoder = Encoders.scalaDouble
+      override def outputEncoder = Encoders.scalaDouble
     }
     graft.io.Tables.load(s, dir, "lineitem")
       .select(col("l_returnflag"), col("l_quantity"))

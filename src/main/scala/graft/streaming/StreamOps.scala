@@ -1,86 +1,39 @@
 package graft.streaming
 
-import java.sql.Timestamp
-
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, ExpiredTimerInfo,
-  GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig,
-  TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types._
 
 import graft.io.Tables
 
-/** Structured Streaming surface of the engine.
+/** The incremental stores' streaming front doors, their delete legs
+  * and their maintenance windows.
   *
   * The reference is strictly daily snapshot batch (cron →
   * WRITE_TRUNCATE, songs-etl `terraform/cloud-scheduler.tf:4-5`,
-  * `cf_transform/main.py:72-75`) — there are no streaming semantics to
-  * match, so this module is engine capability beyond the reference
-  * (SURVEY.md §2.2): the same transformations the batch window queries
-  * run (`q_tumbling_window` / `q_session_window`), phrased so ONE
-  * definition serves both `spark.read` and `spark.readStream` inputs —
-  * which is the entire point of Structured Streaming's unified model.
-  *
-  * Scale design: watermarks bound state (no unbounded buffers), all
-  * aggregations are keyed (shuffle on group key, partial aggregation
-  * intact), and the custom-state op uses typed
-  * `flatMapGroupsWithState` with event-time timeouts so state size is
-  * O(active keys), not O(stream length).
+  * `cf_transform/main.py:72-75`); its event-time surface is the batch
+  * window queries (`q_tumbling_window`, `q_session_window`, …). This
+  * module keeps the persisted curation and vector stores current:
+  *  - [[runFrontDoor]] lands each micro-batch of documents in the
+  *    corpus store ([[ingestBatch]]) and its survivors in every
+  *    derived archive (winnow fingerprints, cluster labels, token
+  *    postings, pHash, audio), under one checkpoint and one epoch;
+  *    [[runVectorFrontDoor]] does the same for embeddings (ANN codes,
+  *    the filtered index, SemDeDup assignments, drift rows);
+  *  - the delete legs ([[runFrontDoorDeletes]],
+  *    [[runVectorFrontDoorDeletes]], [[runUnifiedForgetStream]])
+  *    tombstone a stream of keys in every store of a topology under
+  *    one delete epoch, and every read view masks them at once;
+  *  - the maintenance windows ([[runMaintenanceWindow]] and its
+  *    policy-driven and vector variants) fold, vacuum and re-analyze
+  *    each store under one topology lease.
+  * Every store is described once ([[documentStores]],
+  * [[vectorStores]]); each stream drains through [[drainBatches]],
+  * whose checkpoint makes a crashed epoch replay under its own number.
   */
 object StreamOps {
-
-  /** events schema (TESTDATA.md), for file-stream sources where schema
-    * inference is unavailable. */
-  val eventsSchema: StructType = StructType(Seq(
-    StructField("event_id", LongType),
-    StructField("ts", TimestampType),
-    StructField("user_id", LongType),
-    StructField("event_type", StringType),
-    StructField("value", DoubleType),
-    StructField("props", StringType)))
-
-  /** On-disk schema of the events parquet, probed from the staged
-    * files' footers: `ts` has shipped as TIMESTAMP(NANOS) (reads as
-    * long nanos under `spark.sql.legacy.parquet.nanosAsLong`, set by
-    * graft.Session), as un-flagged TIMESTAMP(MICROS) (reads as
-    * TIMESTAMP_NTZ), and as UTC-flagged micros (TimestampType) in
-    * engine-written stage dirs. A file-stream source takes its schema
-    * on faith — a mismatch is silent garbage, not an error — so the
-    * one batch footer read at stream SETUP is the cheap insurance.
-    * Falls back to the declared TimestampType when the directory has
-    * no files yet. */
-  private def eventsFileSchema(spark: SparkSession,
-                               dir: String): StructType = {
-    val tsType = scala.util.Try(
-      spark.read.parquet(dir).schema("ts").dataType)
-      .getOrElse(TimestampType)
-    StructType(eventsSchema.fields.map(f =>
-      if (f.name == "ts") StructField("ts", tsType) else f))
-  }
-
-  /** Streaming source over a directory of event parquet files, with
-    * the nanos→micros conversion graft.io.Tables applies on the batch
-    * side, so downstream watermarks/windows see a real TimestampType.
-    *
-    * `maxFilesPerTrigger` is the file-source backpressure knob — the
-    * first thing a production deployment sets: without it, a restart
-    * after downtime (or an initial backfill) puts the ENTIRE backlog
-    * into micro-batch 0, whose state update/shuffle must then fit in
-    * memory all at once; with it, the backlog drains in bounded
-    * batches at k files each and checkpoint progress is made every
-    * trigger. Results are identical either way (same data, same
-    * transforms) — StreamOpsSpec asserts N staged files process in
-    * ⌈N/k⌉ micro-batches with batch-identical output. */
-  def readEvents(spark: SparkSession, dir: String,
-                 maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val reader = spark.readStream.schema(eventsFileSchema(spark, dir))
-    maxFilesPerTrigger.foreach(k =>
-      reader.option("maxFilesPerTrigger", k.toString))
-    graft.io.Tables.normalizeTs(reader.parquet(dir))
-  }
 
   /** documents schema (TESTDATA.md), for file-stream sources where
     * schema inference is unavailable. */
@@ -92,8 +45,17 @@ object StreamOps {
     StructField("n_chars", LongType)))
 
   /** Streaming source over a directory of document parquet files —
-    * the crawl-drop landing zone of a training-data pipeline. Same
-    * backpressure knob as [[readEvents]]. */
+    * the crawl-drop landing zone of a training-data pipeline, and
+    * [[runFrontDoor]]'s typed input.
+    *
+    * `maxFilesPerTrigger` is the file-source backpressure knob — the
+    * first thing a production deployment sets: without it, a restart
+    * after downtime (or an initial backfill) puts the ENTIRE backlog
+    * into micro-batch 0, whose epoch must then fit in memory all at
+    * once; with it, the backlog drains in bounded batches at k files
+    * each and checkpoint progress is made every trigger. Results are
+    * identical either way — StreamOpsSpec asserts N staged files
+    * process in ⌈N/k⌉ micro-batches with batch-identical totals. */
   def readDocuments(spark: SparkSession, dir: String,
                     maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     val reader = spark.readStream.schema(documentsSchema)
@@ -108,7 +70,9 @@ object StreamOps {
     StructField("embedding", ArrayType(FloatType)),
     StructField("label", IntegerType)))
 
-  /** Streaming source over a directory of embedding parquet files. */
+  /** Streaming source over a directory of embedding parquet files —
+    * [[runVectorFrontDoor]]'s typed input, with the same backpressure
+    * knob as [[readDocuments]]. */
   def readEmbeddings(spark: SparkSession, dir: String,
                      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     val reader = spark.readStream.schema(embeddingsSchema)
@@ -119,23 +83,19 @@ object StreamOps {
 
   // ---------- The stream runner ----------
 
-  /** Run a streaming query over the currently-available input
+  /** Run `df` in append mode through a foreachBatch `body` under
+    * `checkpoint` over the currently-available input
     * (Trigger.AvailableNow semantics via processAllAvailable), then
-    * stop it — every entry point in this module drains through
-    * here. */
-  private def drain(w: DataStreamWriter[Row]): Unit = {
-    val q = w.start()
+    * stop it — every entry point in this module drains through here.
+    * This is the micro-batch epoch contract every store leg builds
+    * on: a restart resumes after the last committed epoch, and a
+    * crashed epoch replays under the same number. */
+  private def drainBatches(df: DataFrame, checkpoint: String)(
+      body: (DataFrame, Long) => Unit): Unit = {
+    val q = df.writeStream.outputMode(OutputMode.Append)
+      .option("checkpointLocation", checkpoint).foreachBatch(body).start()
     try q.processAllAvailable() finally q.stop()
   }
-
-  /** [[drain]] `df` in append mode through a foreachBatch `body`
-    * under `checkpoint` — the micro-batch epoch contract every store
-    * leg here builds on (a restart resumes after the last committed
-    * epoch; a crashed epoch replays under the same number). */
-  private def drainBatches(df: DataFrame, checkpoint: String)(
-      body: (DataFrame, Long) => Unit): Unit =
-    drain(df.writeStream.outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint).foreachBatch(body))
 
   /** The body every delete leg shares: each micro-batch of `ids`
     * commits as ONE delete epoch (+1000000 offset, so delete epochs
@@ -154,80 +114,18 @@ object StreamOps {
       }
     }
 
-  /** Streaming ANN index maintenance — the third leg of the index
-    * lifecycle (build once → serve many → maintain continuously):
-    * each micro-batch of newly embedded vectors is encoded against
-    * the persisted index's FROZEN artifacts and landed as
-    * epoch-partitioned code rows
-    * ([[graft.ops.Similarity.ingestVectors]]; epochs offset +1 so the
-    * initial build keeps epoch 0). Per-batch cost touches only the
-    * batch; the serve path sees the new vectors on its next codes
-    * read with no rebuild, and a crashed epoch replays into exactly
-    * its own partition. */
-  def runIndexIngest(vecs: DataFrame, idx: String,
-                     checkpoint: String): Unit =
-    drainBatches(vecs, checkpoint) { (b, epoch) =>
-      graft.ops.Similarity.ingestVectors(b, idx, epoch + 1)
-    }
+  // ---------- The corpus store ----------
 
-  /** Streaming DELETE requests against a persisted index — the
-    * right-to-be-forgotten feed every production deployment ends up
-    * wiring next to its ingest stream: each micro-batch of key
-    * tombstones commits as a delete epoch under [[drainDeletes]]'
-    * epoch contract. The serve /
-    * probe read views subtract the keys immediately; the archive's
-    * epoch compaction makes the removal physical and retires the
-    * tombstones on its own schedule. A crashed micro-batch replays
-    * into exactly its own tombstone epoch (replace-or-add of
-    * identical keys — deletion is idempotent by nature). */
-  def runDeleteStream(ids: DataFrame, archivePath: String,
-                      checkpoint: String): Unit =
-    drainDeletes(ids, checkpoint)(b =>
-      Seq(b -> Seq(s"$archivePath/tombstones")))
-
-  /** [[runDeleteStream]] wired for the CORPUS STORE: the corpus'
-    * tombstone table lives at the SIBLING path its [[corpusStore]]
-    * entry names (a `tombstones/` subdirectory would corrupt the
-    * plain epoch-partitioned table's partition discovery), so the
-    * generic archive-rooted entry point cannot target it; this one
-    * commits each micro-batch of doc keys directly to the sibling
-    * table [[corpusView]] reads. Same epoch contract (+1000000
-    * delete-epoch offset, idempotent replay). */
-  def runCorpusDeleteStream(ids: DataFrame, corpusPath: String,
-                            checkpoint: String): Unit =
-    drainDeletes(ids, checkpoint)(b =>
-      Seq(b -> Seq(corpusStore(corpusPath).tombstones)))
-
-  // ---------- Streaming corpus ingest (curation front door) ----------
-
-  /** One micro-batch of corpus ingest — exposed separately from
-    * [[runCorpusIngest]] so the replay-idempotence law is directly
-    * testable. Per batch:
-    *   1. quality gate: [[graft.ops.TextOps.repetitionSignals]]'s keep
-    *      flag — the IDENTICAL filter the batch query runs;
-    *   2. in-batch exact dedup: min doc_id per content hash;
-    *   3. corpus dedup: LEFT ANTI against the hashes already landed
-    *      (the batch-vs-corpus shape of dedup_incremental — cost
-    *      scales with the batch; at 100 TB the probe is a broadcast
-    *      of the BATCH hashes against the bucketed corpus table);
-    *   4. land survivors under `ingest_epoch=<epoch>` via DYNAMIC
-    *      partition overwrite — a replayed epoch rewrites exactly its
-    *      own partition, so crash-replay is idempotent.
-    * The corpus read EXCLUDES the current epoch's partition: on
-    * replay, the epoch's own previous (possibly partial) output must
-    * not anti-join the batch against itself — without the exclusion a
-    * replay would land an EMPTY partition and silently lose the
-    * epoch's docs. */
   /** The corpus store's tombstone table ([[corpusStore]]). */
   private[graft] def corpusTombstonePath(corpusPath: String): String =
     corpusStore(corpusPath).tombstones
 
   /** The corpus read view every consumer should use: landed docs
     * minus live tombstones. Deletion reaches the corpus STORE, not
-    * just the derived indexes — [[runCorpusDeleteStream]] masks here
-    * immediately (NOT [[runDeleteStream]], which appends its own
-    * `/tombstones` segment for archive-rooted layouts and would
-    * write a path this view never reads), and [[ingestBatch]]'s
+    * just the derived indexes — [[runFrontDoorDeletes]] masks here
+    * immediately (the corpus' tombstones live at the SIBLING path
+    * [[corpusStore]] names, not under a `/tombstones` segment), and
+    * [[ingestBatch]]'s
     * dedup-vs-corpus probe uses the same mask so a deleted doc stops
     * being a dedup anchor (a fresh identical arrival lands as NEW
     * content rather than being suppressed by a ghost). */
@@ -348,7 +246,26 @@ object StreamOps {
       corpusPath, corpusTombstonePath(corpusPath), "doc_id",
       groupCols, sumCols, aggPath, buckets)
 
-  /** `benchmark`: an optional held-out eval corpus (doc_id, text) —
+  /** One micro-batch of corpus ingest under `epoch` — the front door's
+    * first stage, and the verb a batch job calls once per epoch (a
+    * replay is the same epoch called again). Per batch:
+    *   1. quality gate: [[graft.ops.TextOps.repetitionSignals]]'s keep
+    *      flag — the IDENTICAL filter the batch query runs;
+    *   2. in-batch exact dedup: min doc_id per content hash;
+    *   3. corpus dedup: LEFT ANTI against the hashes already landed
+    *      (the batch-vs-corpus shape of dedup_incremental — cost
+    *      scales with the batch; at 100 TB the probe is a broadcast
+    *      of the BATCH hashes against the bucketed corpus table);
+    *   4. land survivors under `ingest_epoch=<epoch>` via DYNAMIC
+    *      partition overwrite — a replayed epoch rewrites exactly its
+    *      own partition, so crash-replay is idempotent.
+    * The corpus read EXCLUDES the current epoch's partition: on
+    * replay, the epoch's own previous (possibly partial) output must
+    * not anti-join the batch against itself — without the exclusion a
+    * replay would land an EMPTY partition and silently lose the
+    * epoch's docs.
+    *
+    * `benchmark`: an optional held-out eval corpus (doc_id, text) —
     * when supplied, the gate ALSO drops arrivals whose distinct
     * 3-gram shingles overlap the benchmark set at ratio ≥ 0.5 (the
     * [[graft.ops.Curation.qDecontaminate]] rule run at INGEST time,
@@ -424,123 +341,11 @@ object StreamOps {
       .parquet(corpusPath)
   }
 
-  /** Run the streaming corpus ingest over the currently-available
-    * files: filter → dedup-in-batch → dedup-vs-corpus → land, one
-    * epoch per micro-batch (see [[ingestBatch]]). With
-    * `maxFilesPerTrigger` set on the source, a backlog drains in
-    * bounded epochs; the checkpoint makes a restart resume after the
-    * last committed epoch and a crashed epoch replay cleanly. */
-  def runCorpusIngest(docs: DataFrame, corpusPath: String,
-                      checkpoint: String): Unit =
-    drainBatches(docs, checkpoint) { (batch, epoch) =>
-      ingestBatch(batch, epoch, corpusPath)
-    }
-
-  /** Streaming maintenance of the ranked-retrieval token index
-    * ([[graft.ops.TextOps.buildTokenIndexTo]] starts it; this keeps it
-    * current): each micro-batch of documents tokenizes ONCE and
-    * commits its postings + doc lengths under its own ingest epoch
-    * (+1 offset keeps the initial build's epoch 0), so BM25 retrieval
-    * ([[graft.ops.TextOps.bm25IndexedFrom]]) sees new docs on its next
-    * manifested read with no rebuild, and a crashed epoch replays into
-    * exactly its own partition (tokenization is a pure function of the
-    * immutable text — replace-or-add recommits identical rows). The
-    * delete feed ([[runDeleteStream]]) and the epoch fold
-    * ([[graft.ops.TextOps.compactTokenIndexEpochs]]) complete the
-    * lifecycle: every persisted archive here — fingerprints, ANN
-    * codes, cluster labels, token postings — is stream-maintainable
-    * under the same epoch contract. Per-batch cost scales with the
-    * batch, never the index. */
-  def runTokenIndexIngest(docs: DataFrame, idx: String,
-                          checkpoint: String): Unit =
-    drainBatches(docs, checkpoint) { (b, epoch) =>
-      graft.ops.TextOps.ingestTokenIndex(b, idx, epoch + 1,
-        writerId = Some(checkpoint))
-    }
-
-  /** Streaming maintenance of the pHash archive
-    * ([[graft.ops.Multimodal.buildPhashIndexTo]] starts it): each
-    * micro-batch of documents synthesizes/decodes its images ONCE and
-    * commits their 64-bit perceptual hashes under its own ingest
-    * epoch (+1 offset keeps the build layer's epoch 0) — at 100 TB
-    * the decode is the dominant pHash cost, and this is the path that
-    * makes it an ingest-time cost instead of a per-query one. Replay
-    * contract as everywhere: decoding is deterministic, so a crashed
-    * epoch recommits identical rows behind a new manifest version.
-    * With [[runDeleteStream]] on the same archive and the near-dup
-    * probe reading the masked view, the image modality gets the same
-    * ingest/delete/probe triangle as text fingerprints. */
-  def runPhashIngest(docs: DataFrame, idx: String,
-                     checkpoint: String): Unit =
-    drainBatches(docs, checkpoint) { (b, epoch) =>
-      graft.ops.Multimodal.ingestPhashIndex(
-        b.sparkSession, b, idx, epoch + 1)
-    }
-
-  /** Streaming maintenance of the audio-fingerprint archive — the
-    * audio face of [[runPhashIngest]]: each micro-batch of documents
-    * decodes its clips ONCE and commits their 60-bit block-energy
-    * fingerprints under its own ingest epoch (+1 offset keeps the
-    * build layer's epoch 0). Replay contract as everywhere: decode is
-    * deterministic, so a crashed epoch recommits identical rows. With
-    * [[runDeleteStream]] on the same archive and
-    * [[graft.io.Tables.foldEpochs]]'s fold, the audio
-    * modality has the same ingest/delete/probe triangle as text
-    * fingerprints and image hashes. */
-  def runAudioFpIngest(docs: DataFrame, idx: String,
-                       checkpoint: String): Unit =
-    drainBatches(docs, checkpoint) { (b, epoch) =>
-      graft.ops.Multimodal.ingestAudioFpIndex(
-        b.sparkSession, b, idx, epoch + 1)
-    }
-
-  /** Streaming semantic dedup — [[runNearDupProbe]]'s embedding-side
-    * sibling: each micro-batch of vectors probes the persisted
-    * SemDeDup assignment archive (frozen centroids; see
-    * [[graft.ops.Similarity.dedupSemanticIncrementalFrom]]), lands
-    * its kept/dropped verdicts under its epoch partition, and commits
-    * its own cell assignments so later batches dedup against
-    * everything that ever flowed. Verdicts before the NEXT batch's
-    * probe by construction (epoch self-exclusion); a crashed epoch
-    * replays both legs into exactly its own partitions (assignment is
-    * a pure function of the frozen artifact). The archive must
-    * already EXIST ([[graft.ops.Similarity.buildSemDedupArchiveTo]]
-    * is the one-time build). */
-  def runSemDedupProbe(vecs: DataFrame, idx: String, outPath: String,
-                       checkpoint: String): Unit =
-    drainBatches(vecs, checkpoint) { (b, epoch) =>
-      graft.ops.Similarity
-        .dedupSemanticIncrementalFrom(b, idx, epoch + 1)
-        .withColumn("ingest_epoch", lit(epoch + 1))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("ingest_epoch")
-        .parquet(outPath)
-    }
-
-  // ---------- Streaming near-dup probe (fingerprint archive) ----------
-
-  /** Streaming near-duplicate dedup over a document file stream: each
-    * micro-batch probes the winnowing fingerprint archive, lands its
-    * per-doc verdicts under its epoch partition, and commits its own
-    * fingerprints so later batches dedup against everything that ever
-    * flowed (see [[graft.ops.TextOps.ingestAndProbeFingerprints]] for
-    * the replay-idempotence contract). Stream state stays bounded:
-    * the archive is an on-disk manifested table, not state store —
-    * the winnowing density (~0.42 of k-gram hashes) is the growth
-    * rate, and the same epoch-compaction lifecycle as the ANN code
-    * table applies when epochs accumulate. */
-  def runNearDupProbe(docs: DataFrame, idx: String, outPath: String,
-                      checkpoint: String): Unit =
-    drainBatches(docs, checkpoint) { (b, epoch) =>
-      graft.ops.TextOps.ingestAndProbeFingerprints(b, epoch, idx, outPath)
-    }
-
   // ---------- The composed curation front door ----------
 
-  /** The FULL streaming curation front door — the production topology
-    * every other streaming entry point here is one leg of, composed
-    * under ONE checkpoint and ONE epoch number per micro-batch:
+  /** The FULL streaming curation front door — every document store's
+    * ingest verb composed under ONE checkpoint and ONE epoch number
+    * per micro-batch:
     *
     *   1. quality-filter (+ optional benchmark DECONTAMINATION — see
     *      [[ingestBatch]]) + exact-dedup + land into the corpus
@@ -1004,376 +809,4 @@ object StreamOps {
       holderId: String = java.util.UUID.randomUUID.toString): DataFrame =
     runWindow(s, root, holderId, vectorStores(s, root), policy = false)
 
-  // ---------- Streaming cluster-label maintenance ----------
-
-  /** Streaming maintenance of the CLUSTER archive — the near-dup
-    * CLUSTERING stage run continuously: each micro-batch of arriving
-    * documents shingles only itself, probes the archive's persisted
-    * postings index, re-labels exactly the affected components, and
-    * commits its postings + merged labels under its own epoch
-    * ([[graft.ops.Curation.clusterIncrementalFrom]] — the same body
-    * the daily batch query gates, with every arriving doc treated as
-    * batch). The archive must already EXIST
-    * ([[graft.ops.Curation.buildClusterArchiveTo]] is the one-time
-    * build); the stream keeps it current forever after.
-    *
-    * Replay safety is the epoch contract: a crashed micro-batch
-    * replays under the same epoch, its archive reads self-exclude
-    * that epoch, and both commits are replace-or-add of recomputed-
-    * identical rows. Label correctness is PATH-INDEPENDENT (labels
-    * are component minima; see the clusterIncrementalFrom scaladoc),
-    * so the final label view does not depend on how arrivals were
-    * split into micro-batches — StreamOpsSpec pins stream-landed
-    * labels ≡ a from-scratch full-corpus rebuild, across a batch
-    * split AND a differently-split replay. State stays bounded: the
-    * archive lives on disk behind the manifest pointer, not in the
-    * state store, and accumulated label epochs fold via
-    * [[graft.ops.Curation.compactLabelEpochs]]. */
-  def runClusterMaintenance(docs: DataFrame, idx: String,
-                            checkpoint: String): Unit =
-    drainBatches(docs, checkpoint) { (b, epoch) =>
-      // epoch 0 is the archive's build layer — micro-batch epochs
-      // start above it
-      graft.ops.Curation.clusterIncrementalFrom(
-        b, idx, isBatch = _ => lit(true), epoch = epoch + 1,
-        writerId = Some(checkpoint))
-    }
-
-  // ---------- Transforms (batch- and stream-applicable) ----------
-
-  /** Tumbling 10-minute counts per event type; 10-minute watermark
-    * bounds state and drops late data deterministically. */
-  def windowedCounts(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "10 minutes")
-      .groupBy(window(col("ts"), "10 minutes"), col("event_type"))
-      .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("sum_value"))
-      .select(col("window.start").as("w_start"), col("event_type"),
-        col("n"), col("sum_value"))
-
-  /** Stream-static enrichment — the MOST common production streaming
-    * join: each micro-batch of the stream joins a static dimension
-    * (here a user→segment mapping) and aggregates per segment. The
-    * static side is stateless for the stream (no watermark, no join
-    * state — Spark re-plans it per micro-batch, broadcasting when
-    * small), which is why this shape scales where a stream-stream
-    * join would need bounded buffers. Works identically on a batch
-    * DataFrame — StreamOpsSpec pins stream/batch parity. */
-  def enrichedCounts(events: DataFrame, userDim: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "10 minutes")
-      .join(broadcast(userDim), Seq("user_id"), "left")
-      .withColumn("segment", coalesce(col("segment"), lit("UNKNOWN")))
-      .groupBy(window(col("ts"), "10 minutes"), col("segment"))
-      .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("sum_value"))
-      .select(col("window.start").as("w_start"), col("segment"),
-        col("n"), col("sum_value"))
-
-  /** Session windows (10-minute gap) per user — value totals per
-    * session. */
-  def sessionized(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "10 minutes")
-      .groupBy(session_window(col("ts"), "10 minutes"), col("user_id"))
-      .agg(count(lit(1)).as("n_events"),
-        round(sum(col("value")), 2).as("session_value"))
-      .select(col("session_window.start").as("s_start"),
-        col("session_window.end").as("s_end"),
-        col("user_id"), col("n_events"), col("session_value"))
-
-  /** Streaming exact dedup on event_id, state bounded by the
-    * watermark — the streaming face of the batch `dedup_exact`. */
-  def dedupStream(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "10 minutes")
-      .dropDuplicatesWithinWatermark("event_id")
-
-  // ---------- Stream-stream join ----------
-
-  /** Watermarked stream-stream interval join: each click joins the
-    * impressions of the same user from the preceding 10 minutes.
-    * Both sides carry watermarks and the join condition bounds event
-    * time in BOTH directions, so Spark can expire buffered state —
-    * the two requirements that make a stream-stream join runnable
-    * forever instead of growing without bound.
-    *
-    * `joinType` "leftOuter" additionally emits unmatched clicks with
-    * NULL impression columns — but only once the watermark passes the
-    * click's join window, when "no match yet" provably means "no match
-    * ever" (outer results are necessarily watermark-delayed). */
-  def clickImpressionJoin(impressions: DataFrame, clicks: DataFrame,
-                          joinType: String = "inner"): DataFrame = {
-    val imp = impressions
-      .withWatermark("ts", "10 minutes")
-      .select(col("event_id").as("imp_id"), col("user_id").as("imp_user"),
-        col("ts").as("imp_ts"))
-    val clk = clicks
-      .withWatermark("ts", "10 minutes")
-      .select(col("event_id").as("click_id"), col("user_id"),
-        col("ts").as("click_ts"))
-    clk.join(imp,
-      col("user_id") === col("imp_user") &&
-        col("imp_ts") <= col("click_ts") &&
-        col("imp_ts") >= col("click_ts") - expr("INTERVAL 10 MINUTES"),
-      joinType)
-      .select(col("click_id"), col("imp_id"), col("user_id"),
-        col("click_ts"), col("imp_ts"))
-  }
-
-  // ---------- Custom state: flatMapGroupsWithState ----------
-
-  final case class Event(
-      event_id: Long, ts: Timestamp, user_id: Long,
-      event_type: String, value: Double)
-
-  final case class UserState(nEvents: Long, totalValue: Double)
-
-  final case class UserUpdate(
-      user_id: Long, n_events: Long, total_value: Double)
-
-  /** Per-user running aggregate with explicit state — the
-    * mapGroupsWithState surface. Emits one update per user per
-    * micro-batch; state times out 30 minutes (event time) after the
-    * user goes quiet, so state is O(active users). */
-  def userRunningTotals(events: Dataset[Event]): Dataset[UserUpdate] = {
-    import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", "10 minutes")
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[UserState, UserUpdate](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (uid: Long, rows: Iterator[Event], state: GroupState[UserState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val prev = state.getOption.getOrElse(UserState(0L, 0.0))
-            var n = prev.nEvents
-            var tot = prev.totalValue
-            var maxTs = 0L
-            rows.foreach { e =>
-              n += 1; tot += e.value
-              if (e.ts.getTime > maxTs) maxTs = e.ts.getTime
-            }
-            state.update(UserState(n, tot))
-            // Timeout 30 min of event time after this user's latest
-            // event (NOT from the current watermark — on the first
-            // batch the watermark is still epoch 0 and the state would
-            // expire immediately).
-            state.setTimeoutTimestamp(maxTs + 30 * 60 * 1000)
-            Iterator.single(
-              UserUpdate(uid, n, math.floor(tot * 100 + 0.5) / 100))
-          }
-      }
-  }
-
-  final case class UserPeak(user_id: Long, n_events: Long,
-                            peak_value: Double)
-
-  /** Spark 4's arbitrary-stateful-processing v2
-    * (`transformWithState` + `StatefulProcessor`): per-user event
-    * count and running peak held in an explicit `ValueState`. This is
-    * the successor API to `flatMapGroupsWithState` (kept above as the
-    * v1 surface): typed named state cells, TTL config per cell, and a
-    * timer surface — and it REQUIRES the RocksDB state store, which is
-    * also the store that survives 100 TB state (changelog
-    * checkpointing, off-heap, incremental snapshots) where the default
-    * HDFS-backed map store holds everything on-heap. State is
-    * O(active keys) × a 16-byte cell. */
-  class PeakProcessor extends StatefulProcessor[Long, Event, UserPeak] {
-    @transient private var peak: ValueState[(Long, Double)] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      peak = getHandle.getValueState[(Long, Double)]("peak",
-        Encoders.tuple(Encoders.scalaLong, Encoders.scalaDouble),
-        TTLConfig.NONE)
-    override def handleInputRows(key: Long, rows: Iterator[Event],
-                                 timers: TimerValues): Iterator[UserPeak] = {
-      var (n, p) =
-        if (peak.exists()) peak.get() else (0L, Double.NegativeInfinity)
-      rows.foreach { e => n += 1; p = math.max(p, e.value) }
-      peak.update((n, p))
-      Iterator.single(UserPeak(key, n, p))
-    }
-  }
-
-  /** One updated (count, peak) row per user per micro-batch. */
-  def userPeaks(events: Dataset[Event]): Dataset[UserPeak] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .transformWithState(new PeakProcessor, TimeMode.None(),
-        OutputMode.Update())
-  }
-
-  final case class UserCount(user_id: Long, n_events: Long)
-
-  /** Per-user event count whose state cell carries a real
-    * PROCESSING-TIME TTL — the knob that bounds v2 state at 100 TB
-    * when no watermark applies (counters, feature caches, rate
-    * trackers keyed by an unbounded id space): a cell not updated for
-    * `ttl` reads as absent and its storage is reclaimed by the RocksDB
-    * store, so state is O(keys active within the TTL window), not
-    * O(keys ever seen). Every other cell in this module keeps
-    * `TTLConfig.NONE` deliberately — their lifetime is governed by
-    * watermarks or explicit timers; this processor is the gated,
-    * spec'd exercise of the TTL path (state survives re-read inside
-    * the TTL, is gone past it — StreamOpsSpec pins both sides). */
-  class TtlCountProcessor(ttl: java.time.Duration)
-      extends StatefulProcessor[Long, Event, UserCount] {
-    @transient private var cnt: ValueState[Long] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      cnt = getHandle.getValueState[Long]("cnt", Encoders.scalaLong,
-        TTLConfig(ttl))
-    override def handleInputRows(key: Long, rows: Iterator[Event],
-                                 timers: TimerValues): Iterator[UserCount] = {
-      val n = (if (cnt.exists()) cnt.get() else 0L) + rows.size
-      cnt.update(n)
-      Iterator.single(UserCount(key, n))
-    }
-  }
-
-  /** One updated per-user count per micro-batch; the count RESTARTS
-    * from zero for a user whose state cell outlived its TTL.
-    *
-    * TTL state REQUIRES `TimeMode.ProcessingTime()` (Spark refuses it
-    * under EventTime/None), and under ProcessingTime the engine keeps
-    * planning micro-batches to advance the wall clock even with no new
-    * data — so callers must drive the query with a real trigger and
-    * poll/awaitTermination; `processAllAvailable` never returns
-    * (StreamOpsSpec documents the observed pathology and the polling
-    * harness). */
-  def userCountsTtl(events: Dataset[Event],
-                    ttl: java.time.Duration): Dataset[UserCount] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .transformWithState(new TtlCountProcessor(ttl),
-        TimeMode.ProcessingTime(), OutputMode.Update())
-  }
-
-  final case class ClosedSession(user_id: Long, n_events: Long,
-                                 closed_at_ms: Long)
-
-  /** Event-time TIMERS on the v2 API: each user keeps a running event
-    * count and (re)registers one timer at last-seen + gap; when the
-    * WATERMARK passes the timer, `handleExpiredTimer` fires and emits
-    * the closed session — push-based session expiry, the pattern
-    * `session_window` can't express when the close action has side
-    * effects (emit to an alert stream, finalize an aggregate). Timer
-    * state is one long per active key, dropped on fire. */
-  class SessionTimeoutProcessor(gapMs: Long)
-      extends StatefulProcessor[Long, Event, ClosedSession] {
-    @transient private var sess: ValueState[(Long, Long)] = _ // (n, lastMs)
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      sess = getHandle.getValueState[(Long, Long)]("sess",
-        Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong),
-        TTLConfig.NONE)
-    override def handleInputRows(key: Long, rows: Iterator[Event],
-                                 timers: TimerValues)
-        : Iterator[ClosedSession] = {
-      var (n, last) = if (sess.exists()) sess.get() else (0L, 0L)
-      rows.foreach { e => n += 1; last = math.max(last, e.ts.getTime) }
-      // one live timer per key: re-arm at the new deadline
-      getHandle.listTimers().foreach(t =>
-        getHandle.deleteTimer(t.asInstanceOf[Long]))
-      getHandle.registerTimer(last + gapMs)
-      sess.update((n, last))
-      Iterator.empty
-    }
-    override def handleExpiredTimer(key: Long, timers: TimerValues,
-                                    info: ExpiredTimerInfo)
-        : Iterator[ClosedSession] = {
-      val (n, _) = sess.get()
-      sess.clear()
-      Iterator.single(ClosedSession(key, n, info.getExpiryTimeInMs()))
-    }
-  }
-
-  /** Sessions closed by event-time timer expiry (watermark-driven). */
-  def sessionTimeouts(events: Dataset[Event],
-                      gapMinutes: Int = 10): Dataset[ClosedSession] = {
-    import events.sparkSession.implicits._
-    events.withWatermark("ts", "0 seconds")
-      .as[Event]
-      .groupByKey(_.user_id)
-      .transformWithState(new SessionTimeoutProcessor(gapMinutes * 60000L),
-        TimeMode.EventTime(), OutputMode.Append())
-  }
-
-  // ---------- Sinks ----------
-
-  /** foreachBatch sink: every micro-batch snapshot-overwrites a
-    * parquet target — the reference's WRITE_TRUNCATE semantics (G3,
-    * songs-etl `cf_transform/main.py:72-75`) driven by a stream. Used
-    * with Complete-mode aggregations this keeps the target a current
-    * materialized view of the running aggregate; foreachBatch is also
-    * the escape hatch for any sink Spark lacks a native connector
-    * for. */
-  def runToParquetSnapshot(df: DataFrame, path: String): Unit =
-    drain(df.writeStream
-      .outputMode(OutputMode.Complete)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("overwrite").parquet(path)
-      })
-
-  /** foreachBatch UPSERT sink: every micro-batch is keyed-merged into
-    * a parquet snapshot (incoming beats existing per key; within one
-    * batch the row with the greatest `ts` wins — ties impossible, the
-    * key is unique per batch after the inner dedup). This is the
-    * streaming→warehouse bridge a truncate-load pipeline graduates
-    * to: the target stays a current-state table under a continuous
-    * key-update stream, without rewriting history per batch like the
-    * Complete-mode snapshot above.
-    *
-    * The read-merge-rewrite is the parquet-only stand-in for a real
-    * MERGE INTO (Delta/Iceberg at 100 TB — where the same foreachBatch
-    * body would issue the transactional merge); the merge itself is
-    * one shuffle on the key, the same plan as `q_upsert_merge`.
-    *
-    * Crash safety: the swap is write-tmp → rename live aside to `.old`
-    * → rename tmp live → drop `.old`, so SOME complete copy of the
-    * accumulated state exists on disk at every instant (a plain
-    * delete-then-rename has a window where a crash leaves only the
-    * orphaned tmp, and the next batch would silently restart from
-    * empty). The read side recovers: if the live dir is missing but
-    * `.old` survives, the merge reads `.old`. */
-  def runUpsertSnapshot(updates: DataFrame, keyCol: String, tsCol: String,
-                        path: String): Unit =
-    drain(updates.writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        val live = new org.apache.hadoop.fs.Path(path)
-        val old = new org.apache.hadoop.fs.Path(path + ".old")
-        val tmp = new org.apache.hadoop.fs.Path(path + ".tmp")
-        val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val w = Window.partitionBy(col(keyCol))
-          .orderBy(col(tsCol).desc, col("__pri"))
-        val incoming = batch.withColumn("__pri", lit(0))
-        val existing =
-          if (fs.exists(live))
-            spark.read.parquet(path).withColumn("__pri", lit(1))
-          else if (fs.exists(old)) // crashed between the two renames
-            spark.read.parquet(old.toString).withColumn("__pri", lit(1))
-          else incoming.limit(0)
-        val merged = existing.unionByName(incoming)
-          .withColumn("__rn", row_number().over(w))
-          .where(col("__rn") === 1).drop("__rn", "__pri")
-        merged.write.mode("overwrite").parquet(tmp.toString)
-        // the merge (which read `existing`) is fully materialized in
-        // tmp — only now is it safe to move the live copy aside
-        fs.delete(old, true)
-        if (fs.exists(live))
-          require(fs.rename(live, old), s"upsert swap: aside failed $path")
-        require(fs.rename(tmp, live), s"upsert swap: commit failed $path")
-        fs.delete(old, true)
-        () // foreachBatch wants Unit, not delete()'s Boolean
-      })
-
-  /** Run a streaming query to completion over currently-available
-    * input (Trigger.AvailableNow semantics via processAllAvailable)
-    * into an in-memory table; returns the table name. */
-  def runToMemory(df: DataFrame, name: String,
-                  mode: OutputMode = OutputMode.Append): String = {
-    drain(df.writeStream.outputMode(mode).format("memory").queryName(name))
-    name
-  }
 }

@@ -475,31 +475,6 @@ class PlanSpec extends SparkSpec {
     }
   }
 
-  test("commit-time string bounds: min/max survive the sidecar's " +
-    "field syntax byte-exactly (separators, tabs, newlines, unicode) " +
-    "and merge across partitions") {
-    import spark.implicits._
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-mstats-str").toString
-    val dim = s"$root/dim"
-    try {
-      Tables.enableCommitStats(spark, dim)
-      // hostile content: every sidecar separator, control chars,
-      // multibyte — base64 must carry all of it losslessly
-      val rows = Seq(
-        (1L, "aaa|b;c\td\ne", 0L), (2L, "zzzé中文", 0L),
-        (3L, "mid", 1L), (4L, "ctl", 1L))
-        .toDF("id", "s", "grp")
-        .withColumn("ingest_epoch", col("grp"))
-        .drop("grp")
-      Tables.writeManifested(rows, dim, Seq("ingest_epoch"))
-      val bounds = Tables.commitStringBounds(spark, dim, "s")
-      assert(bounds.contains(("aaa|b;c\td\ne", "zzzé中文")),
-        s"string bounds wrong or lossy: $bounds")
-    } finally org.apache.hadoop.fs.FileUtil
-      .fullyDelete(new java.io.File(root))
-  }
-
   test("commit-time ndv merges by HLL sketch UNION across partitions: " +
     "disjoint epochs sum, repeated keys dedup — never the max/sum " +
     "scalar guesses") {

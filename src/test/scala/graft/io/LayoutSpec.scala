@@ -296,34 +296,6 @@ class LayoutSpec extends SparkSpec {
       "z-ordered round-trip changed the data")
   }
 
-  test("schema evolution: mergeSchema reads drifting partitions as one " +
-    "table, null-fills old partitions, and keeps partition pruning") {
-    import spark.implicits._
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-evolve").toString
-    // ingest v1 wrote (id, value); v2 added a quality column
-    Seq((1L, 10.0), (2L, 20.0)).toDF("id", "value")
-      .write.parquet(s"$root/day=1")
-    Seq((3L, 30.0, 0.9)).toDF("id", "value", "quality")
-      .write.parquet(s"$root/day=2")
-    val df = graft.io.Tables.loadEvolved(spark, root)
-    assert(df.columns.toSet == Set("id", "value", "quality", "day"),
-      s"merged schema wrong: ${df.columns.mkString(",")}")
-    val rows = df.orderBy("id").collect()
-    assert(rows(0).isNullAt(rows(0).fieldIndex("quality")),
-      "old partition must null-fill the added column")
-    assert(rows(2).getDouble(rows(2).fieldIndex("quality")) == 0.9)
-    // the merged-footer resolution must not cost partition pruning
-    val plan = df.where(col("day") === 2)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("day"),
-      s"partition filter lost under mergeSchema:\n$plan")
-    val pruned = df.where(col("day") === 2)
-      .select(input_file_name()).distinct().collect().map(_.getString(0))
-    assert(pruned.forall(_.contains("day=2")),
-      s"pruned scan still read: ${pruned.mkString(",")}")
-  }
-
   test("dynamic partition overwrite rewrites ONLY the target partition") {
     val out = java.nio.file.Files.createTempDirectory("graft-dpo").toString
     val ev = Tables.load(spark, sf, "events")

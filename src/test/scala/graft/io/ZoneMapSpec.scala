@@ -165,36 +165,6 @@ class ZoneMapSpec extends SparkSpec {
       .where(col("k").between(100L, 199L)).count() == 100L)
   }
 
-  test("z-order compaction + zone maps: a 2-D box predicate prunes " +
-    "to the files whose bounding boxes intersect it — pruning a " +
-    "single-column layout cannot give on the second dimension") {
-    import spark.implicits._
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-zonemap-z").toString
-    val p = s"$root/arch"
-    // a 32×32 grid: x and y both matter, neither dominates
-    val df = (0L until 1024L).map(i => (i % 32, i / 32, i))
-      .toDF("x", "y", "payload")
-    Tables.writeManifested(
-      df.repartition(16).withColumn("ingest_epoch", lit(0L)),
-      p, Seq("ingest_epoch"))
-    Tables.compactManifestedZOrdered(spark, p, targetBytes = 2048L,
-      xCol = "x", yCol = "y", bits = 5)
-    Tables.computeFileStats(spark, p, Seq("x", "y"))
-    val box = Seq(
-      Tables.ZoneBound("x", Some(0L), Some(7L)),
-      Tables.ZoneBound("y", Some(0L), Some(7L)))
-    val (survivors, statted, pruned) =
-      Tables.zonemapSurvivors(spark, p, box)
-    assert(statted >= 8L && pruned > 0L &&
-      survivors.size * 4 <= statted,
-      s"z-order box did not prune: statted=$statted " +
-        s"survivors=${survivors.size}")
-    val got = Tables.readManifestedSkipping(spark, p, box)
-      .where(col("x").between(0L, 7L) && col("y").between(0L, 7L))
-    assert(got.count() == 64L, s"2-D box lost rows: ${got.count()}")
-  }
-
   test("a fold orphans the sidecar: the read degrades to full but " +
     "stays correct, and a re-analyze restores pruning") {
     val (p, _) = mkArchive(8)

@@ -106,8 +106,13 @@ class ClusterIndexSpec extends SparkSpec {
             .where(col("doc_id") % 10 =!= 0), idx)
         Curation.clusterIncrementalFrom(
           day01.toDF("doc_id", "text"), idx).count() // day 1
-        if (foldBetween)
-          assert(Curation.compactLabelEpochs(spark, idx) == 1L)
+        if (foldBetween) {
+          Curation.compactClusterArchive(spark, idx)
+          assert(graft.io.Tables.readBucketedArchive(spark, s"$idx/labels")
+            .select(col("ingest_epoch").cast("long")).distinct()
+            .collect().map(_.getLong(0)).toSeq == Seq(0L),
+            "the fold did not collapse the label epochs")
+        }
         Curation.clusterIncrementalFrom(
             (day01 ++ day2).toDF("doc_id", "text"), idx,
             isBatch = _ % 10 === 5, epoch = 2L)
@@ -120,14 +125,18 @@ class ClusterIndexSpec extends SparkSpec {
       "unfolded day-2 merge diverged from the full recompute")
     assert(scenario(foldBetween = true) == fullExpected,
       "a fold between the days changed the merge result")
-    // fold of a base-only archive is a no-op
+    // fold of a base-only archive changes nothing a reader sees
     val idx = java.nio.file.Files
       .createTempDirectory("graft-cluster-noop").toString
     try {
       Curation.buildClusterArchiveTo(
         day01.toDF("doc_id", "text")
           .where(col("doc_id") % 10 =!= 0), idx)
-      assert(Curation.compactLabelEpochs(spark, idx) == -1L)
+      def labels() = Curation.readClusterLabels(spark, idx).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val base = labels()
+      Curation.compactClusterArchive(spark, idx)
+      assert(labels() == base, "folding a base-only archive moved a label")
     } finally {
       org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(idx))
     }

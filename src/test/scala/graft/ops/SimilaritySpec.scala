@@ -326,7 +326,6 @@ class SimilaritySpec extends SparkSpec {
   test("streaming index maintenance: streamed batches land full code " +
     "words in their own epochs, old codes untouched, replay idempotent") {
     import org.apache.spark.sql.functions._
-    import graft.streaming.StreamOps
     val root = java.nio.file.Files.createTempDirectory("graft-idx-ing")
     val idx = root.resolve("idx").toString
     // PRIVATE index copy — the shared memoized index must not absorb
@@ -335,25 +334,15 @@ class SimilaritySpec extends SparkSpec {
     val codes0 = graft.io.Tables.readManifested(spark, s"$idx/codes")
       .where(col("ingest_epoch") === 0).count()
 
-    // stage two files of "new" vectors: real embeddings, offset ids
-    val stage = root.resolve("stage").toString
-    new java.io.File(stage).mkdirs()
+    // two batches of "new" vectors: real embeddings, offset ids, one
+    // epoch each above the build layer
     val base = graft.io.Tables.load(spark, sf, "embeddings")
-    def land(name: String, lo: Int, hi: Int): Unit = {
-      val tmp = root.resolve(s"tmp-$name").toString
+    def batch(lo: Int, hi: Int) =
       base.where(col("vec_id") >= lo && col("vec_id") < hi)
         .withColumn("vec_id", col("vec_id") + 10000)
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.copy(part.toPath,
-        java.nio.file.Paths.get(s"$stage/$name.parquet"))
-    }
-    land("f1", 0, 10)
-    land("f2", 10, 20)
-    StreamOps.runIndexIngest(
-      StreamOps.readEmbeddings(spark, stage, Some(1)),
-      idx, root.resolve("ckpt").toString)
+    val f2 = batch(10, 20)
+    Similarity.ingestVectors(batch(0, 10), idx, 1L)
+    Similarity.ingestVectors(f2, idx, 2L)
 
     def codes = graft.io.Tables.readManifested(spark, s"$idx/codes")
     val newCodes = codes.where(col("vec_id") >= 10000)
@@ -368,16 +357,12 @@ class SimilaritySpec extends SparkSpec {
     assert(codes.where(col("ingest_epoch") === 0).count() == codes0,
       "streamed ingest disturbed the initial build's codes")
     assert(newCodes.select(col("ingest_epoch")).distinct().count() == 2,
-      "two micro-batches should land two epochs")
+      "two batches should land two epochs")
 
     // crash-replay: re-encode f2's batch at ITS epoch — the dynamic
     // partition overwrite must reproduce identical rows
     val snapshot = codes.collect().map(_.toSeq).sortBy(_.toString)
-    val f2 = spark.read.parquet(s"$stage/f2.parquet")
-    val f2epoch = codes
-      .where(col("vec_id") === f2.select(min(col("vec_id"))).head().getLong(0))
-      .select(col("ingest_epoch")).head().getAs[Number](0).longValue()
-    Similarity.ingestVectors(f2, idx, f2epoch)
+    Similarity.ingestVectors(f2, idx, 2L)
     val after = codes.collect().map(_.toSeq).sortBy(_.toString)
     assert(after.sameElements(snapshot), "epoch replay changed the codes")
   }

@@ -1,372 +1,27 @@
 package graft.streaming
 
-import java.sql.Timestamp
-
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.streaming.StreamOps._
 
-/** Streaming semantics under MemoryStream: watermark-driven late-data
-  * handling, windowed aggregation parity with the batch engine,
-  * bounded-state dedup, and custom flatMapGroupsWithState state. */
+/** The incremental stores' streaming surface: the front doors and
+  * their delete legs, the maintenance windows, file-source
+  * backpressure, and the per-store ingest verbs the front doors
+  * compose — called directly, once per epoch with an explicit epoch
+  * number (a replay is the same epoch called again), the way a batch
+  * job calls them. */
 class StreamOpsSpec extends SparkSpec {
-
-  private def ts(minute: Int): Timestamp =
-    Timestamp.valueOf(f"2026-01-01 10:$minute%02d:00")
-
-  private def ev(id: Long, minute: Int, uid: Long, typ: String,
-                 v: Double): Event = Event(id, ts(minute), uid, typ, v)
-
-  test("windowed counts aggregate into tumbling windows; late row beyond watermark is dropped") {
-    implicit val sq = spark.sqlContext
-    import spark.implicits._
-    val in = MemoryStream[Event]
-    val q = windowedCounts(in.toDF())
-      .writeStream.outputMode("append").format("memory")
-      .queryName("wc").start()
-
-    in.addData(ev(1, 1, 1, "click", 1.0), ev(2, 5, 1, "click", 2.0),
-      ev(3, 12, 2, "view", 3.0))
-    q.processAllAvailable()
-    // advance watermark far past the 10:00 window...
-    in.addData(ev(4, 40, 2, "view", 4.0))
-    q.processAllAvailable()
-    // ...then a late event for the closed 10:00 window: must be dropped
-    in.addData(ev(5, 2, 1, "click", 100.0))
-    q.processAllAvailable()
-    in.addData(ev(6, 55, 2, "view", 5.0))
-    q.processAllAvailable()
-    q.stop()
-
-    val rows = spark.table("wc")
-      .select(date_format(col("w_start"), "HH:mm").as("w"), col("event_type"),
-        col("n"), col("sum_value"))
-      .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2),
-        r.getDouble(3))).toSet
-    // 10:00 window emitted once with the on-time rows only
-    assert(rows.contains(("10:00", "click", 2L, 3.0)))
-    assert(rows.contains(("10:10", "view", 1L, 3.0)))
-    assert(!rows.exists { case (w, t, _, v) => w == "10:00" && v > 3.0 })
-  }
-
-  test("streaming windowed counts match the batch engine on the same data") {
-    implicit val sq = spark.sqlContext
-    import spark.implicits._
-    val data = Seq(ev(1, 1, 1, "click", 1.5), ev(2, 5, 1, "click", 2.0),
-      ev(3, 12, 2, "view", 3.0), ev(4, 15, 3, "click", 0.5))
-
-    val in = MemoryStream[Event]
-    val q = windowedCounts(in.toDF()).writeStream
-      .outputMode("append").format("memory").queryName("wc2").start()
-    in.addData(data: _*)
-    q.processAllAvailable()
-    // watermark flush so all windows emit
-    in.addData(ev(99, 59, 9, "flush", 0.0))
-    q.processAllAvailable()
-    q.stop()
-
-    val streamed = spark.table("wc2")
-      .where(col("event_type") =!= "flush")
-      .collect().map(_.toSeq).toSet
-    val batch = windowedCounts(data.toDF())
-      .collect().map(_.toSeq).toSet
-    assert(streamed == batch)
-  }
-
-  test("stream-static enrichment joins the dim per micro-batch and " +
-    "matches the batch join; unmatched users fall back to UNKNOWN") {
-    implicit val sq = spark.sqlContext
-    import spark.implicits._
-    val dim = Seq((1L, "gold"), (2L, "silver")) // user 3 intentionally absent
-      .toDF("user_id", "segment")
-    val data = Seq(ev(1, 1, 1, "click", 1.5), ev(2, 5, 2, "view", 2.0),
-      ev(3, 7, 3, "click", 4.0), ev(4, 12, 1, "view", 0.5),
-      ev(9, 59, 9, "flush", 0.0))
-
-    val in = MemoryStream[Event]
-    val q = enrichedCounts(in.toDF(), dim)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("enriched").start()
-    in.addData(data: _*)
-    q.processAllAvailable()
-    q.stop()
-    def norm(df: org.apache.spark.sql.DataFrame) = df
-      .select(date_format(col("w_start"), "HH:mm"), col("segment"),
-        col("n"), col("sum_value"))
-      .collect().map(_.toSeq).toSet
-    val streamed = norm(spark.table("enriched"))
-    // append mode only emits a window once the watermark passes its
-    // end — the flush event's own 10:50 window stays open, so the
-    // batch side is compared on the closed windows
-    val batch = norm(enrichedCounts(data.toDF(), dim))
-      .filter(_.head.asInstanceOf[String] < "10:50")
-    assert(streamed == batch,
-      s"stream-static join diverged from batch:\n$streamed\nvs\n$batch")
-    assert(streamed.exists(_(1) == "UNKNOWN"),
-      "absent dim key did not fall back to UNKNOWN")
-    assert(streamed.count(_(1) == "gold") == 2,
-      "user 1's two events should enrich to gold in two windows")
-  }
-
-  test("streaming session_window matches the batch gaps-and-islands formulation") {
-    implicit val sq = spark.sqlContext
-    import spark.implicits._
-    import org.apache.spark.sql.expressions.Window
-    // user 1: two sessions (10:01,10:05 | 10:30,10:35); user 2: two
-    // singleton sessions (10:02 | 10:50) — exercises merge + gap split
-    val data = Seq(
-      ev(1, 1, 1, "click", 1.0), ev(2, 5, 1, "view", 2.5),
-      ev(5, 2, 2, "click", 3.0),
-      ev(3, 30, 1, "click", 1.5), ev(4, 35, 1, "view", 0.5),
-      ev(6, 50, 2, "view", 1.0))
-
-    val in = MemoryStream[Event]
-    val q = sessionized(in.toDF()).writeStream
-      .outputMode("append").format("memory").queryName("sess").start()
-    // split across micro-batches (respecting the watermark) so the
-    // streaming side actually merges session state across batches
-    in.addData(data.take(3): _*)
-    q.processAllAvailable()
-    in.addData(data.drop(3): _*)
-    q.processAllAvailable()
-    // flush: watermark past every session end so append mode emits all
-    in.addData(Event(99, Timestamp.valueOf("2026-01-01 12:00:00"), 9,
-      "flush", 0.0))
-    q.processAllAvailable()
-    q.stop()
-
-    val streamed = spark.table("sess").where(col("user_id") =!= 9)
-      .select(col("user_id"), unix_timestamp(col("s_start")).as("s_start"),
-        unix_timestamp(col("s_end")).as("s_end"),
-        col("n_events"), col("session_value"))
-      .collect().map(_.toSeq).toSet
-
-    // batch formulation: gaps-and-islands with the SAME 10-minute gap.
-    // session_window treats windows as [start, end): an event exactly
-    // gap seconds after its predecessor starts a NEW session — hence
-    // `>= 600`, not `> 600`.
-    val byUser = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("event_id"))
-    val batch = data.toDF()
-      .withColumn("prev", lag(col("ts"), 1).over(byUser))
-      .withColumn("ns", (col("prev").isNull ||
-        col("ts").cast("long") - col("prev").cast("long") >= 600).cast("int"))
-      .withColumn("sid", sum(col("ns")).over(
-        byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .groupBy(col("user_id"), col("sid"))
-      .agg(min(col("ts").cast("long")).as("s_start"),
-        (max(col("ts").cast("long")) + 600).as("s_end"),
-        count(lit(1)).as("n_events"),
-        round(sum(col("value")), 2).as("session_value"))
-      .select("user_id", "s_start", "s_end", "n_events", "session_value")
-      .collect().map(_.toSeq).toSet
-
-    assert(streamed == batch,
-      s"stream/batch session mismatch:\n$streamed\nvs\n$batch")
-  }
-
-  test("dropDuplicatesWithinWatermark dedups repeated event_ids") {
-    implicit val sq = spark.sqlContext
-    import spark.implicits._
-    val in = MemoryStream[Event]
-    val q = dedupStream(in.toDF()).writeStream
-      .outputMode("append").format("memory").queryName("dd").start()
-    in.addData(ev(1, 1, 1, "click", 1.0), ev(1, 2, 1, "click", 1.0),
-      ev(2, 3, 1, "view", 2.0), ev(1, 3, 1, "click", 1.0))
-    q.processAllAvailable()
-    q.stop()
-    assert(spark.table("dd").select("event_id").as[Long].collect().sorted
-      .toSeq == Seq(1L, 2L))
-  }
-
-  test("flatMapGroupsWithState accumulates per-user running totals across batches") {
-    implicit val sq = spark.sqlContext
-    import spark.implicits._
-    val in = MemoryStream[Event]
-    val q = userRunningTotals(in.toDS()).toDF().writeStream
-      .outputMode("append").format("memory").queryName("urt").start()
-    in.addData(ev(1, 1, 7, "click", 1.25), ev(2, 2, 7, "view", 2.0))
-    q.processAllAvailable()
-    in.addData(ev(3, 10, 7, "click", 0.75))
-    q.processAllAvailable()
-    q.stop()
-    val updates = spark.table("urt")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    // one update per micro-batch: (2 events, 3.25) then (3 events, 4.0)
-    assert(updates.contains((7L, 2L, 3.25)))
-    assert(updates.contains((7L, 3L, 4.0)))
-  }
-
-  test("foreachBatch sink truncate-loads a parquet snapshot per micro-batch") {
-    implicit val sq = spark.sqlContext
-    import spark.implicits._
-    val out = java.nio.file.Files.createTempDirectory("graft-snap")
-      .toString + "/counts"
-    val in = MemoryStream[Event]
-    in.addData(ev(1, 1, 1, "click", 1.0), ev(2, 2, 2, "view", 1.0),
-      ev(3, 3, 1, "click", 1.0))
-    runToParquetSnapshot(
-      in.toDF().groupBy("event_type").count(), out)
-    val snap = spark.read.parquet(out)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(snap == Map("click" -> 2L, "view" -> 1L))
-  }
-
-  test("transformWithState (v2 stateful API) accumulates per-user " +
-    "count+peak across micro-batches under the RocksDB store") {
-    implicit val sq = spark.sqlContext
-    import spark.implicits._
-    // transformWithState REQUIRES the RocksDB state store provider
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    try {
-      val in = MemoryStream[Event]
-      val q = userPeaks(in.toDS())
-        .writeStream.outputMode("update").format("memory")
-        .queryName("peaks").start()
-      in.addData(ev(1, 1, 1, "click", 5.0), ev(2, 2, 1, "click", 9.0),
-        ev(3, 3, 2, "view", 7.0))
-      q.processAllAvailable()
-      // batch 2: user 1's new value is LOWER — peak must persist;
-      // count must keep accumulating across batches
-      in.addData(ev(4, 4, 1, "click", 3.0))
-      q.processAllAvailable()
-      q.stop()
-      val last = spark.table("peaks").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-        .groupBy(_._1).view.mapValues(_.maxBy(_._2)).toMap
-      assert(last(1L) == ((1L, 3L, 9.0)),
-        s"user 1 state wrong: ${last(1L)}")
-      assert(last(2L) == ((2L, 1L, 7.0)),
-        s"user 2 state wrong: ${last(2L)}")
-    } finally spark.conf.set(key, prev)
-  }
-
-  test("event-time timers close idle sessions when the watermark " +
-    "passes the registered expiry") {
-    implicit val sq = spark.sqlContext
-    import spark.implicits._
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    try {
-      val in = MemoryStream[Event]
-      val q = sessionTimeouts(in.toDS(), gapMinutes = 10)
-        .writeStream.outputMode("append").format("memory")
-        .queryName("closed").start()
-      // user 1: events at 10:01 and 10:03 (timer re-armed to 10:13);
-      // user 2: one event at 10:02 (timer 10:12)
-      in.addData(ev(1, 1, 1, "click", 1.0), ev(2, 3, 1, "click", 1.0),
-        ev(3, 2, 2, "view", 1.0))
-      q.processAllAvailable()
-      assert(spark.table("closed").count() == 0,
-        "no timer may fire before the watermark reaches it")
-      // 10:30 event advances the watermark past both timers; user 3's
-      // own timer (10:40) must stay pending
-      in.addData(ev(4, 30, 3, "view", 1.0))
-      q.processAllAvailable()
-      q.stop()
-      val rows = spark.table("closed").collect()
-        .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-      assert(rows.keySet == Set(1L, 2L), s"wrong sessions closed: $rows")
-      assert(rows(1L) == ((2L, ts(3).getTime + 600000L)),
-        s"user 1 session wrong: ${rows(1L)}")
-      assert(rows(2L) == ((1L, ts(2).getTime + 600000L)),
-        s"user 2 session wrong: ${rows(2L)}")
-    } finally spark.conf.set(key, prev)
-  }
-
-  /** TTL tests run the query under `Trigger.ProcessingTime` and POLL
-    * the memory sink instead of calling `processAllAvailable`: TTL
-    * state requires `TimeMode.ProcessingTime()`, and in that mode the
-    * query keeps planning micro-batches to advance the wall clock, so
-    * `processAllAvailable` NEVER returns (observed: thousands of empty
-    * batches, 4 executor tasks pegged in the RocksDB commit path for
-    * 25 minutes). Changelog checkpointing — the production setting for
-    * large state anyway — keeps those continuous commits cheap. */
-  private def withTtlQuery(name: String, ttlSeconds: Long)
-      (body: (MemoryStream[Event],
-              ((Long, Long), Long) => Boolean) => Unit): Unit = {
-    implicit val sq = spark.sqlContext
-    import spark.implicits._
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val clog = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    spark.conf.set(clog, "true")
-    try {
-      val in = MemoryStream[Event]
-      val q = userCountsTtl(in.toDS(),
-          java.time.Duration.ofSeconds(ttlSeconds))
-        .writeStream.outputMode("update").format("memory")
-        .queryName(name)
-        .trigger(org.apache.spark.sql.streaming.Trigger
-          .ProcessingTime("200 milliseconds"))
-        .start()
-      def pollFor(want: (Long, Long), timeoutMs: Long): Boolean = {
-        val t0 = System.currentTimeMillis()
-        while (System.currentTimeMillis() - t0 < timeoutMs) {
-          if (spark.table(name).collect()
-            .map(r => (r.getLong(0), r.getLong(1))).contains(want))
-            return true
-          Thread.sleep(100)
-        }
-        false
-      }
-      try body(in, pollFor) finally q.stop()
-    } finally {
-      spark.conf.set(key, prev)
-      spark.conf.unset(clog)
-    }
-  }
-
-  test("TTL state survives re-read within its TTL (long TTL, " +
-    "immediate follow-up)") {
-    // 60 s TTL: generously above any scheduling delay between the two
-    // deliveries, so a false eviction can't flake
-    withTtlQuery("ttl_alive", ttlSeconds = 60) { (in, pollFor) =>
-      in.addData(ev(1, 1, 1, "click", 1.0), ev(2, 2, 1, "click", 1.0))
-      assert(pollFor((1L, 2L), 60000), "first delivery never surfaced")
-      in.addData(ev(3, 3, 1, "click", 1.0))
-      // the count must ACCUMULATE onto live state: 2 → 3
-      assert(pollFor((1L, 3L), 60000),
-        "state did not survive within TTL")
-    }
-  }
-
-  test("TTL state is evicted once the TTL passes: the count restarts " +
-    "from zero") {
-    withTtlQuery("ttl_evict", ttlSeconds = 1) { (in, pollFor) =>
-      in.addData(ev(1, 1, 1, "click", 1.0), ev(2, 2, 1, "click", 1.0))
-      assert(pollFor((1L, 2L), 60000), "first delivery never surfaced")
-      // sleep strictly past the TTL: the only timing assumption is in
-      // the SAFE direction (more delay = more certainly expired)
-      Thread.sleep(2500)
-      in.addData(ev(3, 3, 1, "click", 1.0))
-      // the 100 TB boundedness claim: the expired cell reads as
-      // ABSENT — the count restarts at 1, never reaching 3
-      assert(pollFor((1L, 1L), 60000), "state outlived its TTL")
-      assert(!spark.table("ttl_evict").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).contains((1L, 3L)),
-        "expired state was still read")
-    }
-  }
 
   test("maxFilesPerTrigger drains a staged backlog in ceil(N/k) " +
     "micro-batches with batch-identical totals") {
     val dir = java.nio.file.Files
       .createTempDirectory("graft-ratelimit").toString
     (1 to 6).foreach(i => java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$sf/events.parquet"),
-      java.nio.file.Paths.get(s"$dir/events_$i.parquet")))
+      java.nio.file.Paths.get(s"$sf/documents.parquet"),
+      java.nio.file.Paths.get(s"$dir/documents_$i.parquet")))
     val seen = scala.collection.mutable.ArrayBuffer[(Long, Long)]()
-    val q = StreamOps.readEvents(spark, dir, maxFilesPerTrigger = Some(2))
+    val q = StreamOps.readDocuments(spark, dir, maxFilesPerTrigger = Some(2))
       .writeStream.outputMode("append")
       .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
         val n = b.count()
@@ -379,7 +34,7 @@ class StreamOpsSpec extends SparkSpec {
     val nonEmpty = seen.filter(_._2 > 0)
     assert(nonEmpty.size == 3,
       s"6 files at 2/trigger should make 3 micro-batches: $seen")
-    val perFile = graft.io.Tables.load(spark, sf, "events").count()
+    val perFile = spark.read.parquet(s"$sf/documents.parquet").count()
     assert(nonEmpty.map(_._2).sum == 6 * perFile,
       s"throttled stream lost/duplicated rows: $seen vs ${6 * perFile}")
     // backpressure bounded every batch: no trigger saw the backlog
@@ -395,136 +50,18 @@ class StreamOpsSpec extends SparkSpec {
     val dir = java.nio.file.Files
       .createTempDirectory("graft-avnow").toString
     (1 to 4).foreach(i => java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$sf/events.parquet"),
-      java.nio.file.Paths.get(s"$dir/events_$i.parquet")))
-    val q = StreamOps.readEvents(spark, dir, maxFilesPerTrigger = Some(2))
+      java.nio.file.Paths.get(s"$sf/documents.parquet"),
+      java.nio.file.Paths.get(s"$dir/documents_$i.parquet")))
+    val q = StreamOps.readDocuments(spark, dir, maxFilesPerTrigger = Some(2))
       .writeStream.outputMode("append").format("memory")
       .queryName("avnow")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     assert(q.awaitTermination(120000),
       "AvailableNow query did not self-terminate")
-    val perFile = graft.io.Tables.load(spark, sf, "events").count()
+    val perFile = spark.read.parquet(s"$sf/documents.parquet").count()
     assert(spark.table("avnow").count() == 4 * perFile,
       "AvailableNow drain lost or duplicated rows")
-  }
-
-  test("foreachBatch upsert sink keyed-merges micro-batches into a " +
-    "current-state snapshot (latest ts wins, inserts land, others " +
-    "survive)") {
-    implicit val sq = spark.sqlContext
-    import spark.implicits._
-    val out = java.nio.file.Files.createTempDirectory("graft-upsink")
-      .toString + "/state"
-    // a FRESH MemoryStream per delivery: one stream would re-deliver
-    // all earlier events to each new query (no checkpoint), and a sink
-    // that ignored the existing snapshot entirely could still pass —
-    // separate streams make each batch genuinely omit the keys whose
-    // survival is being asserted
-    def deliver(events: Event*): Unit = {
-      val in = MemoryStream[Event]
-      in.addData(events: _*)
-      runUpsertSnapshot(in.toDF(), "user_id", "ts", out)
-    }
-    // batch 1: users 1 and 2
-    deliver(ev(1, 1, 1, "click", 10.0), ev(2, 2, 2, "view", 20.0))
-    // batch 2: update user 1 (later ts), insert user 3; user 2 absent —
-    // its survival proves the merge reads the existing snapshot
-    deliver(ev(3, 9, 1, "click", 11.0), ev(4, 5, 3, "view", 30.0))
-    // batch 3: a STALE update for user 2 (older ts) must NOT win
-    deliver(ev(5, 1, 2, "view", 99.0))
-
-    val snap = spark.read.parquet(out)
-      .collect().map(r => r.getAs[Long]("user_id") ->
-        r.getAs[Double]("value")).toMap
-    assert(snap == Map(1L -> 11.0, 2L -> 20.0, 3L -> 30.0),
-      s"unexpected snapshot: $snap")
-  }
-
-  test("stream-stream interval join matches the batch join on the same data") {
-    implicit val sq = spark.sqlContext
-    import spark.implicits._
-    val impData = Seq(ev(10, 1, 1, "impression", 0), ev(11, 5, 1, "impression", 0),
-      ev(12, 30, 2, "impression", 0))
-    val clkData = Seq(ev(20, 8, 1, "click", 0), // joins imps at 10:01,10:05
-      ev(21, 35, 2, "click", 0), // joins imp at 10:30
-      ev(22, 55, 1, "click", 0)) // no imp within 10 min → no row
-
-    val imp = MemoryStream[Event]
-    val clk = MemoryStream[Event]
-    val q = clickImpressionJoin(imp.toDF(), clk.toDF()).writeStream
-      .outputMode("append").format("memory").queryName("ssj").start()
-    imp.addData(impData: _*)
-    clk.addData(clkData: _*)
-    q.processAllAvailable()
-    q.stop()
-
-    val streamed = spark.table("ssj")
-      .select("click_id", "imp_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(streamed == Set((20L, 10L), (20L, 11L), (21L, 12L)))
-
-    val batch = clickImpressionJoin(impData.toDF(), clkData.toDF())
-      .select("click_id", "imp_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(streamed == batch)
-  }
-
-  test("stream-stream LEFT OUTER join emits unmatched clicks with nulls " +
-    "after the watermark closes their window") {
-    implicit val sq = spark.sqlContext
-    import spark.implicits._
-    val imp = MemoryStream[Event]
-    val clk = MemoryStream[Event]
-    val q = clickImpressionJoin(imp.toDF(), clk.toDF(), "leftOuter")
-      .writeStream.outputMode("append").format("memory")
-      .queryName("ssjlo").start()
-    imp.addData(ev(10, 1, 1, "impression", 0))
-    clk.addData(ev(20, 8, 1, "click", 0), // matches imp 10
-      ev(22, 55, 2, "click", 0)) // no impression → NULL row, once closable
-    q.processAllAvailable()
-    // watermark still at the data's edge: the unmatched click must NOT
-    // have been emitted yet (a premature NULL would be retracted later
-    // if a match arrived — append mode can't do that)
-    val early = spark.table("ssjlo").where(col("click_id") === 22).count()
-    assert(early == 0, "outer result emitted before the watermark closed")
-    // push both watermarks far past click 22's window (10:55 + the
-    // 10-minute watermark delay) → NULL row emits. The global
-    // watermark is the MIN across both streams, so both need the flush.
-    val flushTs = Timestamp.valueOf("2026-01-01 11:30:00")
-    imp.addData(Event(98, flushTs, 9, "flush", 0))
-    clk.addData(Event(99, flushTs, 9, "flush", 0))
-    q.processAllAvailable()
-    q.stop()
-    val rows = spark.table("ssjlo")
-      .select("click_id", "imp_id").collect()
-      .map(r => (r.getLong(0), if (r.isNullAt(1)) None else Some(r.getLong(1))))
-      .toSet
-    assert(rows.contains((20L, Some(10L))))
-    assert(rows.contains((22L, None)), s"unmatched click missing: $rows")
-  }
-
-  test("file-stream source reads the events table with the declared schema") {
-    // FileStreamSource needs a directory: stage the events parquet
-    // into a temp landing dir, stream it, compare count with batch.
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-stream-landing").toString
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$sf/events.parquet"),
-      java.nio.file.Paths.get(s"$dir/events.parquet"))
-    val streamed = StreamOps.readEvents(spark, dir)
-    assert(streamed.isStreaming)
-    assert(streamed.schema("ts").dataType.typeName == "timestamp")
-    // run a WINDOWED agg so ts is actually materialized from the
-    // TIMESTAMP(NANOS) file — a count-only query column-prunes ts away
-    // and would hide a broken conversion
-    val name = StreamOps.runToMemory(
-      windowedCounts(streamed), "evcount")
-    val windowed = spark.table(name)
-    val batch = windowedCounts(graft.io.Tables.load(spark, sf, "events"))
-    assert(windowed.agg(sum("n")).head().getLong(0) <=
-      batch.agg(sum("n")).head().getLong(0))
-    assert(windowed.count() > 0)
   }
 
   test("streaming corpus ingest: quality-filters, dedups within batch " +
@@ -537,28 +74,19 @@ class StreamOpsSpec extends SparkSpec {
     val spam = Seq.fill(50)("spam ham").mkString(" ")
     def doc(id: Long, text: String) =
       (id, text, "en", "srcS", text.length.toLong)
+    def docs(rows: Seq[(Long, String, String, String, Long)]) =
+      rows.toDF("doc_id", "text", "lang", "source", "n_chars")
 
     val root = java.nio.file.Files.createTempDirectory("graft-ingest")
-    val stage = root.resolve("stage").toString
     val corpus = root.resolve("corpus").toString
-    val ckpt = root.resolve("ckpt").toString
-    new java.io.File(stage).mkdirs()
-    def land(name: String,
-             rows: Seq[(Long, String, String, String, Long)]): Unit = {
-      val tmp = root.resolve(s"tmp-$name").toString
-      rows.toDF("doc_id", "text", "lang", "source", "n_chars")
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.copy(part.toPath,
-        java.nio.file.Paths.get(s"$stage/$name.parquet"))
-    }
     val file3 = Seq(doc(6, ta), doc(7, td), doc(8, td))
-    land("f1", Seq(doc(1, ta), doc(2, tb)))
-    land("f2", Seq(doc(3, tb), doc(4, tc), doc(5, spam)))
-    land("f3", file3) // cross-batch dup of A, in-batch dup pair of D
-
-    runCorpusIngest(readDocuments(spark, stage, Some(1)), corpus, ckpt)
+    // one epoch per batch; batch 3 holds a cross-batch dup of A and an
+    // in-batch dup pair of D
+    Seq(Seq(doc(1, ta), doc(2, tb)), Seq(doc(3, tb), doc(4, tc),
+        doc(5, spam)), file3)
+      .zipWithIndex.foreach { case (rows, e) =>
+        ingestBatch(docs(rows), e.toLong, corpus)
+      }
 
     def snapshot() = spark.read.parquet(corpus)
       .select(col("doc_id"), col("fp"), col("text"),
@@ -575,9 +103,7 @@ class StreamOpsSpec extends SparkSpec {
     // dynamic partition overwrite + self-epoch exclusion must leave
     // the corpus byte-identical (crash between commit and checkpoint)
     val epochD = landed.find(_._3 == td).get._4
-    ingestBatch(
-      file3.toDF("doc_id", "text", "lang", "source", "n_chars"),
-      epochD, corpus)
+    ingestBatch(docs(file3), epochD, corpus)
     assert(snapshot() == landed, "epoch replay changed the corpus")
   }
 
@@ -594,28 +120,18 @@ class StreamOpsSpec extends SparkSpec {
     val other = "red orange yellow green blue indigo violet ultra deep"
     def doc(id: Long, text: String) =
       (id, text, "en", "srcS", text.length.toLong)
+    def docs(rows: Seq[(Long, String, String, String, Long)]) =
+      rows.toDF("doc_id", "text", "lang", "source", "n_chars")
 
     val root = java.nio.file.Files.createTempDirectory("graft-neardup")
-    val stage = root.resolve("stage").toString
     val idx = root.resolve("idx").toString
     val out = root.resolve("verdicts").toString
-    val ckpt = root.resolve("ckpt").toString
-    new java.io.File(stage).mkdirs()
-    def land(name: String,
-             rows: Seq[(Long, String, String, String, Long)]): Unit = {
-      val tmp = root.resolve(s"tmp-$name").toString
-      rows.toDF("doc_id", "text", "lang", "source", "n_chars")
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.copy(part.toPath,
-        java.nio.file.Paths.get(s"$stage/$name.parquet"))
-    }
     val file2 = Seq(doc(3, dup), doc(4, clean))
-    land("f1", Seq(doc(1, base), doc(2, other)))
-    land("f2", file2)
-
-    runNearDupProbe(readDocuments(spark, stage, Some(1)), idx, out, ckpt)
+    Seq(Seq(doc(1, base), doc(2, other)), file2).zipWithIndex
+      .foreach { case (rows, e) =>
+        graft.ops.TextOps.ingestAndProbeFingerprints(
+          docs(rows), e.toLong, idx, out)
+      }
 
     def verdicts() = spark.read.parquet(out)
       .select(col("doc_id"), col("n_matches"), col("is_dup"),
@@ -638,9 +154,8 @@ class StreamOpsSpec extends SparkSpec {
 
     // crash-replay of the second epoch: same verdicts, same archive
     val epoch3 = v(3L)._4
-    graft.ops.TextOps.ingestAndProbeFingerprints(
-      file2.toDF("doc_id", "text", "lang", "source", "n_chars"),
-      epoch3, idx, out)
+    graft.ops.TextOps.ingestAndProbeFingerprints(docs(file2), epoch3, idx,
+      out)
     assert(verdicts() == v, "epoch replay changed the verdicts")
     assert(graft.io.Tables.readManifested(spark, s"$idx/fingerprints")
       .select(col("doc_id")).distinct()
@@ -656,24 +171,13 @@ class StreamOpsSpec extends SparkSpec {
     def doc(id: Long, text: String) =
       (id, text, "en", "srcS", text.length.toLong)
     val root = java.nio.file.Files.createTempDirectory("graft-ingest0")
-    val stage = root.resolve("stage").toString
     val corpus = root.resolve("corpus").toString
-    new java.io.File(stage).mkdirs()
-    def land(name: String,
-             rows: Seq[(Long, String, String, String, Long)]): Unit = {
-      val tmp = root.resolve(s"tmp-$name").toString
-      rows.toDF("doc_id", "text", "lang", "source", "n_chars")
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.copy(part.toPath,
-        java.nio.file.Paths.get(s"$stage/$name.parquet"))
-    }
     // epoch with ZERO survivors lands first (all spam), good docs after
-    land("f1", Seq(doc(1, spam), doc(2, spam)))
-    land("f2", Seq(doc(3, mk("a")), doc(4, mk("b"))))
-    runCorpusIngest(readDocuments(spark, stage, Some(1)), corpus,
-      root.resolve("ckpt").toString)
+    Seq(Seq(doc(1, spam), doc(2, spam)), Seq(doc(3, mk("a")), doc(4, mk("b"))))
+      .zipWithIndex.foreach { case (rows, e) =>
+        ingestBatch(rows.toDF("doc_id", "text", "lang", "source", "n_chars"),
+          e.toLong, corpus)
+      }
     val landed = spark.read.parquet(corpus)
       .select(col("doc_id")).collect().map(_.getLong(0)).toSet
     assert(landed == Set(3L, 4L),
@@ -692,28 +196,18 @@ class StreamOpsSpec extends SparkSpec {
     def doc(id: Long, text: String) =
       (id, text, "en", "srcS", text.length.toLong)
     val root = java.nio.file.Files.createTempDirectory("graft-neardup0")
-    val stage = root.resolve("stage").toString
     val idx = root.resolve("idx").toString
     val out = root.resolve("verdicts").toString
-    new java.io.File(stage).mkdirs()
-    def land(name: String,
-             rows: Seq[(Long, String, String, String, Long)]): Unit = {
-      val tmp = root.resolve(s"tmp-$name").toString
-      rows.toDF("doc_id", "text", "lang", "source", "n_chars")
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.copy(part.toPath,
-        java.nio.file.Paths.get(s"$stage/$name.parquet"))
-    }
     // an epoch yielding ZERO winnowed fingerprints lands first —
     // before the fix this committed an empty manifest and every later
     // epoch's readManifested threw, permanently wedging the stream
-    land("f1", Seq(doc(1, tiny1), doc(2, tiny2)))
-    land("f2", Seq(doc(3, base), doc(4, tiny1)))
-    land("f3", Seq(doc(5, dup)))
-    runNearDupProbe(readDocuments(spark, stage, Some(1)), idx, out,
-      root.resolve("ckpt").toString)
+    Seq(Seq(doc(1, tiny1), doc(2, tiny2)), Seq(doc(3, base), doc(4, tiny1)),
+        Seq(doc(5, dup)))
+      .zipWithIndex.foreach { case (rows, e) =>
+        graft.ops.TextOps.ingestAndProbeFingerprints(
+          rows.toDF("doc_id", "text", "lang", "source", "n_chars"),
+          e.toLong, idx, out)
+      }
     val v = spark.read.parquet(out)
       .select(col("doc_id"), col("is_dup"),
         when(col("best_match_id").isNull, -1L)
@@ -734,65 +228,6 @@ class StreamOpsSpec extends SparkSpec {
     assert(archived == Set(3L, 5L), s"archive docs: $archived")
   }
 
-  test("checkpoint recovery: a stopped windowed aggregation restarts from " +
-    "its state store and the file sink stays exactly-once") {
-    import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-ckpt")
-    val src = root.resolve("src").toString
-    val chk = root.resolve("chk").toString
-    val out = root.resolve("out").toString
-    val schema = implicitly[org.apache.spark.sql.Encoder[Event]].schema
-
-    // the restarted query must be IDENTICAL (same source, transform,
-    // checkpoint, sink) — that's the recovery contract
-    def start() = windowedCounts(
-        spark.readStream.schema(schema).parquet(src))
-      .writeStream.outputMode("append").format("parquet")
-      .option("checkpointLocation", chk).option("path", out)
-      .start()
-
-    // run 1: first half of the 10:10 window, watermark too low to
-    // close anything — ALL output hinges on state surviving the stop
-    val run1 = Seq(ev(1, 1, 1, "click", 1.0), ev(2, 5, 1, "click", 2.0),
-      ev(3, 12, 2, "view", 3.0))
-    run1.toDF().write.mode("append").parquet(src)
-    val q1 = start()
-    q1.processAllAvailable()
-    q1.stop() // stop mid-stream: no window has been emitted yet
-
-    // run 2, fresh query from the same checkpoint: second half of the
-    // 10:10 window (merges into RECOVERED state, not a recompute) plus
-    // a flush event that closes every data window
-    val run2 = Seq(ev(4, 15, 3, "view", 4.0), ev(9, 59, 9, "flush", 0.0))
-    run2.toDF().write.mode("append").parquet(src)
-    val q2 = start()
-    q2.processAllAvailable()
-    q2.stop()
-
-    def sinkRows() = spark.read.parquet(out)
-      .where(col("event_type") =!= "flush")
-      .collect().map(_.toSeq).sortBy(_.toString).toSeq
-    val got = sinkRows()
-    // multiset-equal to the one-shot batch run over all the data:
-    // no loss (split window merged across the restart), no duplicates
-    val batch = windowedCounts((run1 ++ run2).toDF())
-      .where(col("event_type") =!= "flush")
-      .collect().map(_.toSeq).sortBy(_.toString).toSeq
-    assert(got == batch,
-      s"recovered stream diverged from batch:\n$got\nvs\n$batch")
-    // the 10:10 view window got one row in each run: only recovered
-    // state can make it n=2 / sum=7.0
-    assert(got.exists(r => r(1) == "view" && r(2) == 2L && r(3) == 7.0),
-      s"the split 10:10 window did not merge both runs' rows: $got")
-
-    // run 3: restart with NO new input — an idle recovery must not
-    // re-emit or re-write anything (exactly-once on replay)
-    val q3 = start()
-    q3.processAllAvailable()
-    q3.stop()
-    assert(sinkRows() == got, "idle restart changed the sink contents")
-  }
-
   test("streaming cluster maintenance: stream-landed labels equal a " +
     "from-scratch rebuild over corpus + arrivals; epoch replay is " +
     "idempotent") {
@@ -800,7 +235,7 @@ class StreamOpsSpec extends SparkSpec {
     // corpus: cluster {11,21}, isolated 31, singleton-source 61.
     // arrivals: f1 lands 12 (joins {11,21}) and isolated 41; f2 lands
     // 13 (merges with 61 and becomes the NEW component min) and 14
-    // (cross-FILE: near-dups f1's doc 12 → same cluster as 11).
+    // (cross-BATCH: near-dups f1's doc 12 → same cluster as 11).
     val corpus = Seq(
       (11L, "a b c d e"), (21L, "a b c d f"),
       (31L, "p q r s t"), (61L, "g h i j k"))
@@ -808,29 +243,19 @@ class StreamOpsSpec extends SparkSpec {
     val f2 = Seq((13L, "g h i j l"), (14L, "a b c d h"))
     def full(rows: Seq[(Long, String)]) =
       rows.map { case (id, tx) => (id, tx, "en", "srcC", tx.length.toLong) }
+        .toDF("doc_id", "text", "lang", "source", "n_chars")
 
     val root = java.nio.file.Files.createTempDirectory("graft-clstream")
-    val stage = root.resolve("stage").toString
     val idx = root.resolve("idx").toString
     val idx2 = root.resolve("idx-rebuild").toString
-    val ckpt = root.resolve("ckpt").toString
-    new java.io.File(stage).mkdirs()
-    def land(name: String, rows: Seq[(Long, String)]): Unit = {
-      val tmp = root.resolve(s"tmp-$name").toString
-      full(rows).toDF("doc_id", "text", "lang", "source", "n_chars")
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.copy(part.toPath,
-        java.nio.file.Paths.get(s"$stage/$name.parquet"))
-    }
-    land("f1", f1)
-    land("f2", f2)
     graft.ops.Curation.buildClusterArchiveTo(
       corpus.toDF("doc_id", "text"), idx)
-
-    runClusterMaintenance(readDocuments(spark, stage, Some(1)),
-      idx, ckpt)
+    // epoch 0 is the archive's build layer — arrival epochs start
+    // above it, every arriving doc treated as batch
+    Seq(f1, f2).zipWithIndex.foreach { case (rows, i) =>
+      graft.ops.Curation.clusterIncrementalFrom(full(rows), idx,
+        isBatch = _ => lit(true), epoch = i + 1L)
+    }
 
     def view(i: String) = graft.ops.Curation
       .readClusterLabels(spark, i).collect()
@@ -838,33 +263,23 @@ class StreamOpsSpec extends SparkSpec {
     val streamed = view(idx)
     // ground truth: a from-scratch archive over corpus + ALL arrivals
     // — path-independence says the maintained labels must match it
-    // exactly, however the arrivals were split into micro-batches
+    // exactly, however the arrivals were split into epochs
     graft.ops.Curation.buildClusterArchiveTo(
       (corpus ++ f1 ++ f2).toDF("doc_id", "text"), idx2)
     assert(streamed == view(idx2),
       s"streamed labels $streamed diverge from the rebuild")
     // the planted shapes actually happened
     assert(streamed(12L) == 11L && streamed(14L) == 11L,
-      "cross-file merge into the archive cluster failed")
+      "cross-batch merge into the archive cluster failed")
     assert(streamed(61L) == 13L && streamed(13L) == 13L,
       "arriving doc did not become its merged component's new min")
     assert(streamed(41L) == 41L && streamed(31L) == 31L)
 
-    // crash-replay of the LAST micro-batch (same epoch, same docs —
-    // the checkpoint contract): the view must not move
-    val maxEpoch = graft.io.Tables
-      .readBucketedArchive(spark, s"$idx/labels")
-      .agg(org.apache.spark.sql.functions.max(
-        org.apache.spark.sql.functions.col("ingest_epoch")).cast("long"))
-      .head().getLong(0)
-    graft.ops.Curation.clusterIncrementalFrom(
-      full(f2).toDF("doc_id", "text", "lang", "source", "n_chars"),
-      idx, isBatch = _ => lit(true), epoch = maxEpoch)
+    // crash-replay of the LAST epoch (same epoch, same docs): the
+    // view must not move
+    graft.ops.Curation.clusterIncrementalFrom(full(f2), idx,
+      isBatch = _ => lit(true), epoch = 2L)
     assert(view(idx) == streamed, "epoch replay moved the label view")
-    // idle restart: no new files → no new label epochs
-    runClusterMaintenance(readDocuments(spark, stage, Some(1)),
-      idx, ckpt)
-    assert(view(idx) == streamed, "idle restart moved the label view")
   }
 
   test("streaming deletes: tombstone micro-batches mask the archive " +
@@ -873,7 +288,8 @@ class StreamOpsSpec extends SparkSpec {
     val longText = "one two three four five six seven eight nine ten"
     val root = java.nio.file.Files.createTempDirectory("graft-delstream")
     val stage = root.resolve("stage").toString
-    val idx = root.resolve("idx").toString
+    // the front door's winnow store, so its delete leg reaches it
+    val idx = root.resolve("winnow").toString
     val ckpt = root.resolve("ckpt").toString
     new java.io.File(stage).mkdirs()
     graft.ops.TextOps.buildWinnowIndexTo(
@@ -899,7 +315,7 @@ class StreamOpsSpec extends SparkSpec {
         org.apache.spark.sql.types.StructField("doc_id",
           org.apache.spark.sql.types.LongType))))
       .option("maxFilesPerTrigger", "1").parquet(stage)
-    runDeleteStream(requests(), idx, ckpt)
+    runFrontDoorDeletes(requests(), root.toString, ckpt)
     // doc 1 masked from the read view; doc 2 untouched
     val masked = graft.io.Tables.minusTombstones(
         graft.io.Tables.readManifested(spark, s"$idx/fingerprints"),
@@ -911,7 +327,7 @@ class StreamOpsSpec extends SparkSpec {
       .resolveManifest(spark, s"$idx/tombstones")._2.keys.toSet
     assert(epochs.size == 2, s"delete epochs: $epochs")
     // idle restart: nothing new to commit
-    runDeleteStream(requests(), idx, ckpt)
+    runFrontDoorDeletes(requests(), root.toString, ckpt)
     assert(graft.io.Tables
       .resolveManifest(spark, s"$idx/tombstones")._2.keys.toSet == epochs,
       "idle restart re-committed delete epochs")
@@ -1169,30 +585,20 @@ class StreamOpsSpec extends SparkSpec {
     "equal a one-shot build over corpus + arrivals; a streamed delete " +
     "masks the pair probe immediately") {
     import spark.implicits._
-    def full(rows: Seq[Long]) = rows.map(id =>
+    def full(ids: Seq[Long]) = ids.map(id =>
       (id, s"t$id", "en", "srcA", 1L))
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
     val root0 = java.nio.file.Files.createTempDirectory("graft-afpstream")
     val root = root0.toString
-    val stage = s"$root/stage"
-    new java.io.File(stage).mkdirs()
-    def land(name: String, ids: Seq[Long]): Unit = {
-      val tmp = root0.resolve(s"tmp-$name").toString
-      full(ids).toDF("doc_id", "text", "lang", "source", "n_chars")
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.copy(part.toPath,
-        java.nio.file.Paths.get(s"$stage/$name.parquet"))
-    }
+    // the front door's audio store, so its delete leg reaches it
     val idx = s"$root/audio"
     // corpus seed: 100; arrivals: 200 (its amplitude-offset twin by
     // the fixture formula) then 17 (unrelated shape)
     graft.ops.Multimodal.buildAudioFpIndexTo(spark,
       Seq((100L, "x")).toDF("doc_id", "text"), idx)
-    land("f1", Seq(200L))
-    land("f2", Seq(17L))
-    runAudioFpIngest(readDocuments(spark, stage, Some(1)), idx,
-      s"$root/ckpt")
+    Seq(Seq(200L), Seq(17L)).zipWithIndex.foreach { case (ids, i) =>
+      graft.ops.Multimodal.ingestAudioFpIndex(spark, full(ids), idx, i + 1L)
+    }
     def afps() = graft.io.Tables.readManifested(spark, s"$idx/hashes")
       .select("doc_id", "afp").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -1209,10 +615,9 @@ class StreamOpsSpec extends SparkSpec {
     def pairs() = graft.ops.Multimodal.afpIndexedFrom(spark, idx)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs() == Set((100L, 200L)), s"probe pairs: ${pairs()}")
-    // idle restart: nothing moves
-    runAudioFpIngest(readDocuments(spark, stage, Some(1)), idx,
-      s"$root/ckpt")
-    assert(afps() == streamed, "idle restart moved the archive")
+    // crash-replay of the last epoch: nothing moves
+    graft.ops.Multimodal.ingestAudioFpIndex(spark, full(Seq(17L)), idx, 2L)
+    assert(afps() == streamed, "epoch replay moved the archive")
     // streamed RTBF: the twin's pairs vanish at once
     val delStage = s"$root/del"
     new java.io.File(delStage).mkdirs()
@@ -1222,9 +627,9 @@ class StreamOpsSpec extends SparkSpec {
       .listFiles().filter(_.getName.endsWith(".parquet")).head
     java.nio.file.Files.copy(dp.toPath,
       java.nio.file.Paths.get(s"$delStage/d1.parquet"))
-    runDeleteStream(
+    runFrontDoorDeletes(
       spark.readStream.schema("doc_id LONG").parquet(delStage),
-      idx, s"$root/ckpt-d")
+      root, s"$root/ckpt-d")
     assert(pairs().isEmpty, "deleted clip still pairs")
   }
 
@@ -1243,44 +648,27 @@ class StreamOpsSpec extends SparkSpec {
       Seq((0L, Seq(1.0, 0.0)), (1L, Seq(0.0, 1.0)))
         .toDF("cent_id", "cemb"),
       idx)
-    val stage = s"$root/stage"
-    new java.io.File(stage).mkdirs()
-    def land(name: String, rows: Seq[(Long, Seq[Float], Int)]): Unit = {
-      val tmp = root0.resolve(s"tmp-$name").toString
+    def vecs(rows: Seq[(Long, Seq[Float], Int)]) =
       rows.toDF("vec_id", "embedding", "label")
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.copy(part.toPath,
-        java.nio.file.Paths.get(s"$stage/$name.parquet"))
-    }
+    def probe(rows: Seq[(Long, Seq[Float], Int)], epoch: Long) =
+      graft.ops.Similarity.dedupSemanticIncrementalFrom(vecs(rows), idx,
+          epoch)
+        .select("vec_id", "is_dup").collect()
+        .map(r => r.getLong(0) -> r.getBoolean(1)).toMap
     // batch 1: 30 duplicates archive-vec 20 (colinear, same cell 0);
     // 40 lands in cell 1 but is EXACTLY orthogonal to its archive
     // sibling 10 (cos 0 < θ) — genuinely new content.
     // batch 2: 50 is colinear with BATCH-1's 40 (and orthogonal to
     // 10) — its dup flag can only come from cross-batch accumulation.
-    land("b1", Seq((30L, Seq(8f, 6f), 0), (40L, Seq(-4f, 3f), 0)))
-    land("b2", Seq((50L, Seq(-8f, 6f), 0)))
-    runSemDedupProbe(readEmbeddings(spark, stage, Some(1)), idx,
-      s"$root/verdicts", s"$root/ckpt")
-    def verdicts() = spark.read.parquet(s"$root/verdicts")
-      .select("vec_id", "is_dup").collect()
-      .map(r => r.getLong(0) -> r.getBoolean(1)).toMap
-    val got = verdicts()
+    val b2 = Seq((50L, Seq(-8f, 6f), 0))
+    val got = probe(Seq((30L, Seq(8f, 6f), 0), (40L, Seq(-4f, 3f), 0)), 1L) ++
+      probe(b2, 2L)
     assert(got == Map(30L -> true, 40L -> false, 50L -> true),
       s"streamed verdicts wrong: $got")
     // 40 duplicates NOTHING in the archive build — 50's flag can only
     // come from batch 1's committed assignments
-    // idle restart: no new files, verdicts unchanged
-    runSemDedupProbe(readEmbeddings(spark, stage, Some(1)), idx,
-      s"$root/verdicts", s"$root/ckpt")
-    assert(verdicts() == got, "idle restart moved the verdicts")
-    // crash-replay of the last micro-batch: same epoch, same rows
-    graft.ops.Similarity.dedupSemanticIncrementalFrom(
-        Seq((50L, Seq(-8.0, 6.0))).toDF("vec_id", "embedding"),
-        idx, epoch = 2L)
-      .collect()
-    assert(verdicts() == got, "epoch replay diverged")
+    // crash-replay of the last epoch: same epoch, same verdict
+    assert(probe(b2, 2L) == Map(50L -> true), "epoch replay diverged")
     val assigned = graft.io.Tables
       .readBucketedArchive(spark, s"$idx/assigned")
       .select("vec_id").distinct().as[Long].collect().toSet
@@ -1466,8 +854,8 @@ class StreamOpsSpec extends SparkSpec {
       "deleted vector still visible in the sem archive after the sweep")
   }
 
-  test("runCorpusDeleteStream targets the corpus' SIBLING tombstone " +
-    "table — the view masks streamed deletes immediately") {
+  test("the front door's delete leg targets the corpus' SIBLING " +
+    "tombstone table — the view masks streamed deletes immediately") {
     import spark.implicits._
     def mk(p: String) = (0 until 60).map(i => s"$p$i").mkString(" ")
     def docs(rows: (Long, String)*) =
@@ -1485,9 +873,9 @@ class StreamOpsSpec extends SparkSpec {
       .listFiles().filter(_.getName.endsWith(".parquet")).head
     java.nio.file.Files.copy(part.toPath,
       java.nio.file.Paths.get(s"$stage/d1.parquet"))
-    runCorpusDeleteStream(
+    runFrontDoorDeletes(
       spark.readStream.schema("doc_id LONG").parquet(stage),
-      corpus, root.resolve("ckpt").toString)
+      root.toString, root.resolve("ckpt").toString)
     val live = corpusView(spark, corpus)
       .select("doc_id").as[Long].collect().toSet
     assert(live == Set(2L),
@@ -1573,27 +961,16 @@ class StreamOpsSpec extends SparkSpec {
     val f2 = Seq((164L, "img e"))
     def full(rows: Seq[(Long, String)]) =
       rows.map { case (id, tx) => (id, tx, "en", "srcP", tx.length.toLong) }
+        .toDF("doc_id", "text", "lang", "source", "n_chars")
     val root = java.nio.file.Files.createTempDirectory("graft-phstream")
-    val stage = root.resolve("stage").toString
-    val idx = root.resolve("idx").toString
+    // the front door's pHash store, so its delete leg reaches it
+    val idx = root.resolve("phash").toString
     val idx2 = root.resolve("idx-rebuild").toString
-    val ckpt = root.resolve("ckpt").toString
-    new java.io.File(stage).mkdirs()
-    def land(name: String, rows: Seq[(Long, String)]): Unit = {
-      val tmp = root.resolve(s"tmp-$name").toString
-      full(rows).toDF("doc_id", "text", "lang", "source", "n_chars")
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.copy(part.toPath,
-        java.nio.file.Paths.get(s"$stage/$name.parquet"))
-    }
-    land("f1", f1)
-    land("f2", f2)
     graft.ops.Multimodal.buildPhashIndexTo(spark,
       corpus.toDF("doc_id", "text"), idx)
-
-    runPhashIngest(readDocuments(spark, stage, Some(1)), idx, ckpt)
+    Seq(f1, f2).zipWithIndex.foreach { case (rows, i) =>
+      graft.ops.Multimodal.ingestPhashIndex(spark, full(rows), idx, i + 1L)
+    }
 
     def hashes(i: String) = graft.io.Tables
       .readManifested(spark, s"$i/hashes")
@@ -1621,7 +998,8 @@ class StreamOpsSpec extends SparkSpec {
       java.nio.file.Paths.get(s"$delStage/d1.parquet"))
     val delStream = spark.readStream
       .schema("doc_id LONG").parquet(delStage)
-    runDeleteStream(delStream, idx, root.resolve("ckpt-del").toString)
+    runFrontDoorDeletes(delStream, root.toString,
+      root.resolve("ckpt-del").toString)
     val after = graft.ops.Multimodal.neardupIndexedFrom(spark, idx)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(after == before.filterNot { case (a, b) =>
@@ -1639,27 +1017,15 @@ class StreamOpsSpec extends SparkSpec {
     val f2 = Seq((5L, "window window window scan"))
     def full(rows: Seq[(Long, String)]) =
       rows.map { case (id, tx) => (id, tx, "en", "srcT", tx.length.toLong) }
+        .toDF("doc_id", "text", "lang", "source", "n_chars")
     val root = java.nio.file.Files.createTempDirectory("graft-tokstream")
-    val stage = root.resolve("stage").toString
     val idx = root.resolve("idx").toString
     val idx2 = root.resolve("idx-rebuild").toString
-    val ckpt = root.resolve("ckpt").toString
-    new java.io.File(stage).mkdirs()
-    def land(name: String, rows: Seq[(Long, String)]): Unit = {
-      val tmp = root.resolve(s"tmp-$name").toString
-      full(rows).toDF("doc_id", "text", "lang", "source", "n_chars")
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.copy(part.toPath,
-        java.nio.file.Paths.get(s"$stage/$name.parquet"))
-    }
-    land("f1", f1)
-    land("f2", f2)
     graft.ops.TextOps.buildTokenIndexTo(
       corpus.toDF("doc_id", "text"), idx)
-
-    runTokenIndexIngest(readDocuments(spark, stage, Some(1)), idx, ckpt)
+    Seq(f1, f2).zipWithIndex.foreach { case (rows, i) =>
+      graft.ops.TextOps.ingestTokenIndex(full(rows), idx, i + 1L)
+    }
 
     def postings(i: String) = graft.io.Tables
       .readBucketedArchive(spark, s"$i/postings")
@@ -1672,7 +1038,7 @@ class StreamOpsSpec extends SparkSpec {
     val streamedP = postings(idx)
     val streamedD = doclen(idx)
     // ground truth: a one-shot index over corpus + ALL arrivals —
-    // however the stream split them into micro-batches
+    // however they were split into epochs
     graft.ops.TextOps.buildTokenIndexTo(
       (corpus ++ f1 ++ f2).toDF("doc_id", "text"), idx2)
     assert(streamedP == postings(idx2),
@@ -1680,20 +1046,10 @@ class StreamOpsSpec extends SparkSpec {
     assert(streamedD == doclen(idx2),
       "streamed doc lengths diverge from the one-shot build")
 
-    // crash-replay of the LAST micro-batch (same epoch, same docs)
-    val maxEpoch = graft.io.Tables
-      .readBucketedArchive(spark, s"$idx/postings")
-      .agg(org.apache.spark.sql.functions.max(
-        org.apache.spark.sql.functions.col("ingest_epoch")).cast("long"))
-      .head().getLong(0)
-    graft.ops.TextOps.ingestTokenIndex(
-      full(f2).toDF("doc_id", "text", "lang", "source", "n_chars"),
-      idx, maxEpoch)
-    assert(postings(idx) == streamedP, "epoch replay moved the postings")
-    // idle restart: no new files → no new epochs, nothing moves
-    runTokenIndexIngest(readDocuments(spark, stage, Some(1)), idx, ckpt)
+    // crash-replay of the LAST epoch (same epoch, same docs)
+    graft.ops.TextOps.ingestTokenIndex(full(f2), idx, 2L)
     assert(postings(idx) == streamedP && doclen(idx) == streamedD,
-      "idle restart moved the index")
+      "epoch replay moved the index")
   }
 
   test("policy-driven maintenance window: a due store folds, a " +
