@@ -862,7 +862,7 @@ object Tables {
     * instead of size-balanced at random — the maintenance half of the
     * zone-map story: a plain `repartition` compaction scatters every
     * file across the full value range, silently destroying the
-    * disjoint per-file min/max that [[readManifestedSkipping]] prunes
+    * disjoint per-file min/max that [[graft.plans.AutoFileSkip]] prunes
     * on, so clustered archives must compact WITH their cluster
     * columns (and re-run [[computeFileStats]] after — new files, new
     * sidecar). Same rewrite trigger either way: only oversized
@@ -1748,8 +1748,6 @@ object Tables {
     // the version marker commits last: a crashed create has a v1 dir
     // but no marker and reads as "no archive"
     commitBucketVersion(spark, path, 1L)
-    refreshBucketedBlooms(spark, path)
-    ()
   }
 
   /** Align a frame's partitioning to its destination bucket layout
@@ -2023,7 +2021,7 @@ object Tables {
         .partitionBy(partCols: _*)
         .bucketBy(buckets, key).sortBy(key)
         .format("parquet").saveAsTable(name)
-      refreshBucketedBlooms(spark, path)
+      refreshFileSidecars(spark, path, layout = Layout.Bucketed)
       ()
     } finally {
       endBucketedMutation(spark, path, mut)
@@ -2240,129 +2238,24 @@ object Tables {
     try commitBucketVersion(spark, path, next)
     finally endBucketedMutation(spark, path, mut)
     ensureBucketedRegistered(spark, path)
-    refreshBucketedBlooms(spark, path)
+    refreshFileSidecars(spark, path, layout = Layout.Bucketed)
     ()
   }
 
-  // ---------- Commit-time Blooms for bucketed archives ----------
-  // Bucket pruning cuts an equality/IN probe to its bucket(s); these
-  // per-FILE Blooms then cut each bucket's epoch × writer-task file
-  // matrix to the files that might actually hold the key — the same
-  // [[AutoFileSkip]] service manifested archives get from
-  // [[computeFileBlooms]], maintained INCREMENTALLY at commit time
-  // (create / epoch ingest / fold each refresh coverage for exactly
-  // their fresh files, which they just wrote and are cache-hot).
-  // The sidecar publishes under the same `_file_blooms_ptr` overlay
-  // at the ARCHIVE ROOT, so AutoFileSkip consumes it unchanged; the
-  // overlay contract holds (uncovered files always survive — a
-  // crash between data commit and refresh costs pruning, not rows).
-
-  private def commitBloomsMarker(path: String) =
-    new org.apache.hadoop.fs.Path(path.stripSuffix("/"), "_commit_blooms")
-
-  /** Opt a bucketed archive into commit-time file Blooms on its
-    * bucket key, and build initial coverage for the files already on
-    * disk. */
-  def enableCommitBlooms(spark: SparkSession, path: String,
-                         expectedItemsPerFile: Long = 100000L,
-                         fpp: Double = 0.01): Long = {
-    val m = commitBloomsMarker(path)
-    val fs = fsFor(spark, m)
-    if (!fs.exists(m.getParent)) fs.mkdirs(m.getParent)
-    val out = fs.create(m, true)
-    try out.write(s"$expectedItemsPerFile\n$fpp".getBytes("UTF-8"))
-    finally out.close()
-    refreshBucketedBlooms(spark, path)
-  }
-
-  private def commitBloomsParams(spark: SparkSession, path: String)
-      : Option[(Long, Double)] = {
-    val m = commitBloomsMarker(path)
-    val fs = fsFor(spark, m)
-    val exists = try fs.exists(m)
-      catch { case _: java.io.FileNotFoundException => false }
-    if (!exists) None
-    else readSmallFile(fs, m).split("\n") match {
-      case Array(items, fpp) => Some((items.toLong, fpp.toDouble))
-      case _ => throw new IllegalStateException(
-        s"garbled commit-blooms marker at $m — delete it and re-run " +
-          "enableCommitBlooms")
-    }
-  }
-
-  /** Refresh the bucketed archive's Bloom sidecar to cover its
-    * current live files: blooms are BUILT only for files not yet
-    * covered (a commit's fresh files; after a fold, the whole new
-    * version), carried rows for still-live files are reused, and
-    * rows for dead files are dropped. No-op without the opt-in
-    * marker. Returns covered-file count. */
-  private[graft] def refreshBucketedBlooms(spark: SparkSession,
-                                           path: String): Long =
-    commitBloomsParams(spark, path) match {
-      case None => 0L
-      case Some((items, fpp)) =>
-        val (key, _, _, _) = readBucketSpec(spark, path)
-        val liveDir = new org.apache.hadoop.fs.Path(
-          bucketedLiveDir(spark, path))
-        val fs = fsFor(spark, liveDir)
-        def walk(d: org.apache.hadoop.fs.Path)
-            : Seq[org.apache.hadoop.fs.FileStatus] =
-          fs.listStatus(d).toSeq.flatMap { st =>
-            val n = st.getPath.getName
-            if (st.isDirectory) walk(st.getPath)
-            else if (st.isFile && !n.startsWith(".") &&
-              !n.startsWith("_")) Seq(st)
-            else Nil
-          }
-        val live = walk(liveDir).map(_.getPath.toUri.getPath).toSet
-        val numBits = graft.expr.BloomAgg.bitsFor(items, fpp)
-        val k = graft.expr.BloomAgg.hashesFor(numBits, items)
-        val prev = fileBlooms(spark, path)
-        val carried = prev.map { case (dir, _, _) =>
-          spark.read.parquet(dir).select(col("file"), col("bloom"))
-            .where(col("file").isin(live.toSeq: _*))
-        }
-        val coveredFiles = carried.map(_.select("file").collect()
-          .map(_.getString(0)).toSet).getOrElse(Set.empty)
-        val fresh = (live -- coveredFiles).toSeq.sorted
-        if (fresh.isEmpty && prev.nonEmpty &&
-            coveredFiles.size == live.size) return live.size.toLong
-        val freshBlooms =
-          if (fresh.isEmpty) None
-          else Some(spark.read.parquet(fresh: _*)
-            .withColumn("_f", input_file_name())
-            .withColumn("_h", xxhash64(col(key)))
-            .groupBy(col("_f"))
-            .agg(graft.expr.BloomAgg.bloom(col("_h"), numBits, k)
-              .as("bloom"))
-            .withColumn("file", expr("parse_url(_f, 'PATH')"))
-            .withColumn("file", coalesce(col("file"), col("_f")))
-            .select(col("file"), col("bloom")))
-        val all = (carried.toSeq ++ freshBlooms.toSeq)
-          .reduceOption(_.unionByName(_))
-          .getOrElse(return 0L)
-        val dir = s"${path.stripSuffix("/")}/_file_blooms/" +
-          s"b${java.util.UUID.randomUUID.toString.take(8)}"
-        // no coalesce(1): at 100 TB file counts the union of carried
-        // + fresh blooms is GBs of bitsets — funneling them through
-        // one task is the bottleneck the DV sidecar already shed;
-        // the fresh side is hash-partitioned by its groupBy and the
-        // probe reads the whole dir regardless of file count
-        all.write.mode(SaveMode.Overwrite).parquet(dir)
-        val n = spark.read.parquet(dir).count()
-        val ptr = fileBloomsPtr(path)
-        val pfs = fsFor(spark, ptr)
-        val out = pfs.create(ptr, true)
-        try out.write(s"$dir\n$key\n$k".getBytes("UTF-8"))
-        finally out.close()
-        // the superseded sidecar dir stays as dead mass for readers
-        // that resolved the old pointer (the overlay discipline every
-        // other sidecar follows); the vacuum sweep reclaims it
-        graft.plans.AutoFileSkip.invalidateMisses()
-        n
-    }
-
   // ---------- Table layouts ----------
+
+  /** The data files at or under `p` (a file, or a dir walked
+    * recursively), as URI paths; hidden `.`/`_` names are skipped. */
+  private def dataFiles(fs: org.apache.hadoop.fs.FileSystem,
+                        p: org.apache.hadoop.fs.Path): Seq[String] = {
+    def walk(st: org.apache.hadoop.fs.FileStatus): Seq[String] =
+      if (st.isFile) Seq(st.getPath.toUri.getPath)
+      else fs.listStatus(st.getPath).toSeq.filterNot { c =>
+        val n = c.getPath.getName
+        n.startsWith(".") || n.startsWith("_")
+      }.flatMap(walk)
+    walk(fs.getFileStatus(p))
+  }
 
   /** One resolved read of a table, as the DV verbs and the fold use
     * it. `stamp` is the deletion-vector coverage stamp: the manifest
@@ -2414,6 +2307,10 @@ object Tables {
     def addColumns(spark: SparkSession, path: String,
                    cols: StructType): Unit
     def history(spark: SparkSession, path: String): DataFrame
+    /** Every live data file with the version base its partition
+      * columns reconstruct under — what the per-file sidecars cover. */
+    private[io] def liveFiles(spark: SparkSession, path: String)
+        : Seq[(String, String)]
     /** The DV sidecar dir; its pointer is `<dvDir>_ptr`. */
     private[io] def dvDir: String
     private[io] def encodeDv(dir: String, ins: Long, del: Long,
@@ -2489,6 +2386,17 @@ object Tables {
         declareManifestedColumns(spark, path, cols)
       def history(spark: SparkSession, path: String): DataFrame =
         manifestHistory(spark, path)
+      private[io] def liveFiles(spark: SparkSession, path: String)
+          : Seq[(String, String)] = {
+        val root = path.stripSuffix("/")
+        val fs = fsFor(spark, new org.apache.hadoop.fs.Path(root))
+        resolveManifest(spark, path)._2.values.toSeq.flatMap(entryPaths)
+          .flatMap { rel =>
+            val (dir, base) = entryDirAndBase(root, rel)
+            dataFiles(fs, new org.apache.hadoop.fs.Path(dir))
+              .map(_ -> base)
+          }
+      }
       private[io] val dvDir = "_dv"
       private[io] def encodeDv(dir: String, ins: Long, del: Long,
                                snap: Snapshot): String =
@@ -2553,6 +2461,12 @@ object Tables {
         spark.createDataFrame(commitInstants(spark, path, this).toSeq
             .sorted.map { case (v, ts) => (v, new java.sql.Timestamp(ts)) })
           .toDF("version", "commit_ts")
+      private[io] def liveFiles(spark: SparkSession, path: String)
+          : Seq[(String, String)] = {
+        val live = bucketedLiveDir(spark, path)
+        val dir = new org.apache.hadoop.fs.Path(live)
+        dataFiles(fsFor(spark, dir), dir).map(_ -> live)
+      }
       private[io] val dvDir = "_dvb"
       private[io] def encodeDv(dir: String, ins: Long, del: Long,
                                snap: Snapshot): String =
@@ -2939,9 +2853,7 @@ object Tables {
 
   /** One column's commit-time stats. `min`/`max` are recorded for
     * numeric columns only (exactly the types whose external string
-    * form Catalyst parses back losslessly); `smin`/`smax` are STRING
-    * bounds, base64-encoded so arbitrary content survives the
-    * sidecar's `|`/`;`/tab field syntax; `hist` is the column's
+    * form Catalyst parses back losslessly); `hist` is the column's
     * equi-height histogram — (rows per bin, bins as (lo, hi, ndv)) —
     * built at commit time over the fresh data, the input CBO skew
     * selectivity needs and ANALYZE would otherwise have to scan
@@ -2958,7 +2870,6 @@ object Tables {
       min: Option[String], max: Option[String],
       avgLen: Long, maxLen: Long,
       hist: Option[(Double, Seq[(Double, Double, Long)])] = None,
-      smin: Option[String] = None, smax: Option[String] = None,
       sketch: Option[String] = None)
 
   /** One partition's commit-time stats: rows, bytes, per-column. */
@@ -3009,18 +2920,6 @@ object Tables {
             coalesce(max(length(c)).cast("long"), lit(0L))
           case t => lit(t.defaultSize.toLong)
         }).as(s"len|${f.name}"),
-        (f.dataType match {
-          // string BOUNDS as BINARY, base64-coded DRIVER-SIDE below:
-          // Spark's base64() SQL function line-wraps long output
-          // (MIME chunking), which would inject newlines into the
-          // sidecar's line format; java.util.Base64 never wraps
-          case StringType => min(c).cast("binary")
-          case _ => lit(null).cast("binary")
-        }).as(s"smn|${f.name}"),
-        (f.dataType match {
-          case StringType => max(c).cast("binary")
-          case _ => lit(null).cast("binary")
-        }).as(s"smx|${f.name}"),
         (if (numeric)
           expr(s"approx_percentile(cast(`${f.name}` as double), " +
             s"$pctArray, 10000)")
@@ -3109,10 +3008,6 @@ object Tables {
             math.ceil(r.getAs[Double](s"avg|${f.name}")).toLong,
             r.getAs[Long](s"len|${f.name}"),
             hist,
-            Option(r.getAs[Array[Byte]](s"smn|${f.name}"))
-              .map(java.util.Base64.getEncoder.encodeToString),
-            Option(r.getAs[Array[Byte]](s"smx|${f.name}"))
-              .map(java.util.Base64.getEncoder.encodeToString),
             Option(r.getAs[Array[Byte]](s"hsk|${f.name}"))
               .map(java.util.Base64.getEncoder.encodeToString))
         }.toMap
@@ -3130,8 +3025,7 @@ object Tables {
         }.getOrElse("")
         Seq(n, c.ndv.toString, c.nulls.toString, c.min.getOrElse(""),
           c.max.getOrElse(""), c.avgLen.toString, c.maxLen.toString,
-          histBlob, c.smin.getOrElse(""), c.smax.getOrElse(""),
-          c.sketch.getOrElse(""))
+          histBlob, c.sketch.getOrElse(""))
           .mkString("|")
       }.mkString(";")
       s"$part\t${st.rows}\t${st.bytes}\t$cols"
@@ -3153,11 +3047,16 @@ object Tables {
       Some(math.max(1L, math.round(u.getEstimate)))
     } catch { case scala.util.control.NonFatal(_) => None }
 
+  /** [[encodeStats]]'s inverse; a column entry of any other shape
+    * than its nine fields fails loudly. */
   private def decodeStats(body: String): Map[String, PartStats] =
     body.split("\n").filter(_.nonEmpty).map { line =>
       val Array(part, rows, bytes, colBlob) = line.split("\t", 4)
       val cols = colBlob.split(";").filter(_.nonEmpty).map { cb =>
-        val f = cb.split("\\|", 11)
+        val f = cb.split("\\|", -1)
+        if (f.length != 9) throw new IllegalStateException(
+          s"garbled commit-stats column entry (${f.length} fields, " +
+            s"want 9): $cb")
         val hist =
           if (f(7).isEmpty) None
           else f(7).split("~", 2) match {
@@ -3170,8 +3069,7 @@ object Tables {
           }
         f(0) -> ColStat(f(1).toLong, f(2).toLong,
           Some(f(3)).filter(_.nonEmpty), Some(f(4)).filter(_.nonEmpty),
-          f(5).toLong, f(6).toLong, hist, Some(f(8)).filter(_.nonEmpty),
-          Some(f(9)).filter(_.nonEmpty), Some(f(10)).filter(_.nonEmpty))
+          f(5).toLong, f(6).toLong, hist, Some(f(8)).filter(_.nonEmpty))
       }.toMap
       part -> PartStats(rows.toLong, bytes.toLong, cols)
     }.toMap
@@ -3314,24 +3212,13 @@ object Tables {
       case (Some(h1), Some(h2)) => mergeHists(Seq(h1, h2))
       case _ => None
     }
-    def b64d(s: String) = new String(
-      java.util.Base64.getDecoder.decode(s), "UTF-8")
-    def pickStr(a: Option[String], b: Option[String],
-                keepFirst: (String, String) => Boolean) =
-      (a, b) match {
-        case (Some(u), Some(v)) =>
-          Some(if (keepFirst(b64d(u), b64d(v))) u else v)
-        case _ => None
-      }
     val tot = math.max(1L, xRows + yRows)
     val avgLen = math.ceil(
       (x.avgLen.toDouble * xRows + y.avgLen.toDouble * yRows) / tot)
       .toLong
     ColStat(ndv, x.nulls + y.nulls,
       widen(x.min, y.min, _ min _), widen(x.max, y.max, _ max _),
-      avgLen, math.max(x.maxLen, y.maxLen), hist,
-      pickStr(x.smin, y.smin, _ <= _), pickStr(x.smax, y.smax, _ >= _),
-      sketch)
+      avgLen, math.max(x.maxLen, y.maxLen), hist, sketch)
   }
 
   /** Union serialized HLL sketches into one serialized sketch. */
@@ -3401,17 +3288,6 @@ object Tables {
         val hist =
           if (vs.exists(_.hist.isEmpty)) None
           else mergeHists(vs.map(_.hist.get))
-        def b64(s: String) = new String(
-          java.util.Base64.getDecoder.decode(s), "UTF-8")
-        def enc(s: String) = java.util.Base64.getEncoder
-          .encodeToString(s.getBytes("UTF-8"))
-        val smins = vs.map(_.smin)
-        val smaxs = vs.map(_.smax)
-        val (smn, smx) =
-          if (smins.exists(_.isEmpty) || smaxs.exists(_.isEmpty))
-            (None, None)
-          else (Some(enc(smins.flatten.map(b64).min)),
-            Some(enc(smaxs.flatten.map(b64).max)))
         // ndv: sketch UNION when every selected partition carries
         // one (exact merge — disjoint key ranges sum, shared keys
         // dedup); a single partition's scalar estimate is already
@@ -3423,8 +3299,7 @@ object Tables {
               .getOrElse(vs.map(_.ndv).max)
           else vs.map(_.ndv).max
         Some(c -> ColStat(ndv, vs.map(_.nulls).sum,
-          mn, mx, vs.map(_.avgLen).max, vs.map(_.maxLen).max,
-          hist, smn, smx))
+          mn, mx, vs.map(_.avgLen).max, vs.map(_.maxLen).max, hist))
       }
     }.toMap
     Some((rows, bytes, merged))
@@ -4493,366 +4368,262 @@ object Tables {
   def readAggregate(spark: SparkSession, aggPath: String): DataFrame =
     readManifested(spark, aggPath).drop("kb", "_asof", "_asof_del")
 
-  // ---------- Zone maps (file-level data skipping) ----------
+  // ---------- Per-file sidecars (zone maps and Blooms) ----------
+  // Two sidecars describe a table's data files, one row per file:
+  // zone maps (per-column min/max under `_file_stats/`) and Blooms
+  // (one bitset over a key column under `_file_blooms/`), each behind
+  // a `<dir>_ptr` pointer at the table root. One reader uses them —
+  // [[graft.plans.AutoFileSkip]], which prunes the scan of any
+  // filtered read at plan time — and one function writes them, for
+  // both layouts ([[buildFileSidecar]]). Zone maps prune RANGE
+  // predicates and bite when the layout clusters the column; Blooms
+  // prune high-cardinality EQUALITY lookups on any layout (a key in
+  // one file is rejected by every other file's filter with
+  // probability 1−fpp, so a k-key lookup over a hash-scattered
+  // archive reads ~k files). Each sidecar is an OVERLAY, never a
+  // correctness dependency: a live file the sidecar does not cover
+  // is always read, so staleness costs pruning, never rows.
 
-  /** One column's range constraint for [[readManifestedSkipping]]:
-    * keep files that may contain `lo <= colName <= hi` (either bound
-    * optional). Bounds are range semantics — rows with a NULL value
-    * never match, so the caller's row-level filter must be the same
-    * range predicate. */
-  final case class ZoneBound(colName: String,
-                             lo: Option[Any], hi: Option[Any])
+  /** What one sidecar kind records: the parameters its pointer names
+    * after the dir, and the per-file aggregates a build computes. */
+  private sealed abstract class FileSidecar(val kind: String) {
+    def params: Seq[String]
+    def aggs: Seq[Column]
+  }
 
-  private def fileStatsPtr(path: String) =
-    new org.apache.hadoop.fs.Path(
-      path.stripSuffix("/") + "/_file_stats_ptr")
+  private final case class ZoneMaps(cols: Seq[String])
+      extends FileSidecar("_file_stats") {
+    def params: Seq[String] = Seq(cols.mkString(","))
+    def aggs: Seq[Column] = cols.flatMap(c => Seq(
+      min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")))
+  }
 
-  /** The current stats sidecar: (stats dir, statted columns), or None
-    * if the archive was never analyzed. A garbled pointer fails
-    * loudly — delete it and re-run [[computeFileStats]]. */
-  def fileStats(spark: SparkSession, path: String)
-      : Option[(String, Seq[String])] = {
-    val p = fileStatsPtr(path)
+  /** The bit size is recorded with the hash count, so a rebuild keeps
+    * the sizing the sidecar was analyzed with. */
+  private final case class Blooms(keyCol: String, k: Int, numBits: Int)
+      extends FileSidecar("_file_blooms") {
+    def params: Seq[String] = Seq(keyCol, k.toString, numBits.toString)
+    def aggs: Seq[Column] = Seq(graft.expr.BloomAgg.bloom(
+      xxhash64(col(keyCol)), numBits, k).as("bloom"))
+  }
+
+  /** [[Blooms]] sized by [[graft.expr.BloomAgg.bitsFor]] at `fpp` for
+    * `expectedItemsPerFile` (an overfull file degrades its
+    * false-positive rate, never correctness). */
+  private def sizedBlooms(keyCol: String, expectedItemsPerFile: Long,
+                          fpp: Double): Blooms = {
+    val numBits = graft.expr.BloomAgg.bitsFor(expectedItemsPerFile, fpp)
+    Blooms(keyCol, graft.expr.BloomAgg.hashesFor(numBits,
+      expectedItemsPerFile), numBits)
+  }
+
+  private def fileSidecarPtr(path: String, kind: String) =
+    new org.apache.hadoop.fs.Path(s"${path.stripSuffix("/")}/${kind}_ptr")
+
+  /** The current sidecar of `kind` with what it was built from, or
+    * None if the table was never analyzed. A garbled pointer fails
+    * loudly, naming the fix. */
+  private def fileSidecar(spark: SparkSession, path: String,
+                          kind: String): Option[(String, FileSidecar)] = {
+    val p = fileSidecarPtr(path, kind)
     val fs = fsFor(spark, p)
     if (!fs.exists(p)) None
-    else readSmallFile(fs, p).split("\n") match {
-      case Array(dir, cols) => Some((dir, cols.split(",").toSeq))
-      case other => throw new IllegalStateException(
-        s"garbled file-stats pointer at $p (${other.length} lines) — " +
-          "delete it and re-run computeFileStats")
+    else (kind, readSmallFile(fs, p).split("\n")) match {
+      case ("_file_stats", Array(dir, cols)) =>
+        Some(dir -> ZoneMaps(cols.split(",").toSeq))
+      case ("_file_blooms", Array(dir, keyCol, k, bits)) =>
+        Some(dir -> Blooms(keyCol, k.toInt, bits.toInt))
+      case (_, lines) => throw new IllegalStateException(
+        s"garbled $kind pointer at $p (${lines.length} lines) — delete " +
+          "it and re-run " + (if (kind == "_file_stats")
+            "computeFileStats" else "computeFileBlooms"))
     }
   }
 
-  /** ANALYZE for file-level data skipping: compute per-FILE min/max
-    * of `statsCols` over the archive's current live files and publish
-    * them as a zone-map sidecar ([[readManifestedSkipping]] reads
-    * it). One column-pruned scan of the archive — paid explicitly,
-    * like any ANALYZE — producing one row per live file (a 100 TB
-    * archive at 128 MB files is ~800k rows: driver-prunable, the
-    * same order a transactional table format's file manifest holds).
-    *
-    * Stats are an OVERLAY, never a correctness dependency: the
-    * skipping read keeps any live file the sidecar doesn't cover
-    * (commits landed after the analyze; a fold rewrote files), so
-    * stale stats degrade to less pruning, never to missing rows.
-    * Re-run after layout-changing maintenance to restore pruning.
-    * The sidecar lands in a fresh uniquely-named dir and the pointer
-    * flips last ([[writeManifested]]'s commit discipline in
-    * miniature); the superseded stats dir stays for readers holding
-    * the old pointer until [[vacuumManifested]] sweeps it. */
+  /** The current zone-map sidecar: (dir, analyzed columns). */
+  def fileStats(spark: SparkSession, path: String)
+      : Option[(String, Seq[String])] =
+    fileSidecar(spark, path, "_file_stats").collect {
+      case (dir, ZoneMaps(cols)) => (dir, cols) }
+
+  /** The current Bloom sidecar: (dir, key column, hash count). */
+  def fileBlooms(spark: SparkSession, path: String)
+      : Option[(String, String, Int)] =
+    fileSidecar(spark, path, "_file_blooms").collect {
+      case (dir, Blooms(keyCol, k, _)) => (dir, keyCol, k) }
+
+  /** The live files a sidecar dir covers — the one coverage
+    * computation. A dir that vanished under a racing vacuum covers
+    * nothing. */
+  private def coveredFiles(spark: SparkSession, dir: String,
+                           live: Set[String]): Set[String] =
+    try spark.read.parquet(dir).select("file").collect()
+      .map(_.getString(0)).filter(live).toSet
+    catch { case scala.util.control.NonFatal(_) => Set.empty }
+
+  /** The rows of an explicit file list, each file read under its
+    * version base so partition columns reconstruct, unioned by name
+    * across bases. */
+  private def readFromFiles(spark: SparkSession,
+                            files: Seq[(String, String)]): DataFrame =
+    files.groupBy(_._2).toSeq.sortBy(_._1).map { case (base, fz) =>
+      spark.read.option("basePath", base).option("mergeSchema", "true")
+        .parquet(fz.map(_._1).sorted: _*)
+    }.reduce(_.unionByName(_, allowMissingColumns = true))
+
+  /** The one writer of both sidecars, for both layouts: `live` is the
+    * layout's live data files with their version bases
+    * ([[Layout.liveFiles]]). Rows of the current sidecar are carried
+    * for the files still live when it was built with the same
+    * parameters — data files are immutable, so a row stays valid as
+    * long as its file lives — and only the uncovered files are
+    * aggregated, in one column-pruned scan. Does nothing and returns
+    * None when the table has no live file, or when at least
+    * `minCoverage` of them is covered already (the default always
+    * rebuilds). Otherwise the rows land in a fresh uniquely-named
+    * dir, the pointer flips last ([[replaceSmallFile]]) and the
+    * superseded dir stays for readers holding the old pointer until
+    * [[sweepSidecars]] reclaims it; returns the rows published. */
+  private def buildFileSidecar(spark: SparkSession, path: String,
+      live: Seq[(String, String)], sc: FileSidecar,
+      minCoverage: Double = Double.PositiveInfinity): Option[Long] = {
+    val current = fileSidecar(spark, path, sc.kind)
+      .collect { case (dir, built) if built == sc => dir }
+    val covered = current.fold(Set.empty[String])(
+      coveredFiles(spark, _, live.map(_._1).toSet))
+    if (live.isEmpty || covered.size >= minCoverage * live.size)
+      return None
+    val carried = current.filter(_ => covered.nonEmpty).map(dir =>
+      spark.read.parquet(dir).where(col("file").isin(covered.toSeq: _*)))
+    val fresh = live.filterNot(f => covered(f._1))
+    val built = Option.when(fresh.nonEmpty)(readFromFiles(spark, fresh)
+      .withColumn("_f", input_file_name())
+      .groupBy(col("_f")).agg(sc.aggs.head, sc.aggs.tail: _*)
+      .withColumn("file", expr("parse_url(_f, 'PATH')"))
+      .withColumn("file", coalesce(col("file"), col("_f"))) // non-URI
+      .drop("_f"))
+    val dir = s"${path.stripSuffix("/")}/${sc.kind}/" +
+      java.util.UUID.randomUUID.toString.take(8)
+    // no coalesce(1): at 100 TB file counts the Bloom rows are GBs of
+    // bitsets, and the reader takes the dir whole
+    (carried ++ built).reduce(_.unionByName(_))
+      .write.mode(SaveMode.Overwrite).parquet(dir)
+    val n = spark.read.parquet(dir).count()
+    val ptr = fileSidecarPtr(path, sc.kind)
+    replaceSmallFile(fsFor(spark, ptr), ptr,
+      (dir +: sc.params).mkString("\n"))
+    // a scan of this table may have cached "no sidecar here" — drop
+    // that so AutoFileSkip prunes immediately in-session
+    graft.plans.AutoFileSkip.invalidateMisses()
+    Some(n)
+  }
+
+  /** Re-analyze each sidecar of the table whose coverage of the live
+    * files fell below `minCoverage`, with the parameters its own
+    * pointer records — the sidecars are self-describing, so the
+    * maintenance window needs no per-store configuration, and a
+    * bucketed commit calls this to cover the files it just wrote.
+    * A table never analyzed is not touched (and not listed). Returns
+    * how many sidecars were rebuilt. */
+  def refreshFileSidecars(spark: SparkSession, path: String,
+                          minCoverage: Double = 1.0,
+                          layout: Layout = Layout.Manifested): Int = {
+    val current = Seq("_file_stats", "_file_blooms")
+      .flatMap(fileSidecar(spark, path, _))
+    lazy val live = layout.liveFiles(spark, path)
+    current.count { case (_, sc) =>
+      buildFileSidecar(spark, path, live, sc, minCoverage).nonEmpty }
+  }
+
+  /** ANALYZE for range skipping: per-file min/max of `statsCols` over
+    * the manifested table's live files. Returns the files covered. */
   def computeFileStats(spark: SparkSession, path: String,
                        statsCols: Seq[String]): Long = {
     require(statsCols.nonEmpty, "computeFileStats needs columns")
-    val live = readManifested(spark, path)
-    val aggs = statsCols.flatMap(c => Seq(
-      min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")))
-    val stats = live
-      .withColumn("_f", input_file_name())
-      .groupBy(col("_f")).agg(aggs.head, aggs.tail: _*)
-      .withColumn("file", expr("parse_url(_f, 'PATH')"))
-      .withColumn("file",
-        coalesce(col("file"), col("_f"))) // non-URI names pass through
-      .drop("_f")
-    val dir = s"${path.stripSuffix("/")}/_file_stats/" +
-      s"s${java.util.UUID.randomUUID.toString.take(8)}"
-    stats.write.mode(SaveMode.Overwrite).parquet(dir)
-    val n = spark.read.parquet(dir).count()
-    val ptr = fileStatsPtr(path)
-    val out = fsFor(spark, ptr).create(ptr, true)
-    try out.write(s"$dir\n${statsCols.mkString(",")}".getBytes("UTF-8"))
-    finally out.close()
-    // a scan of this archive may have cached "no sidecar here" —
-    // drop that so AutoFileSkip prunes immediately in-session
-    graft.plans.AutoFileSkip.invalidateMisses()
-    n
+    buildFileSidecar(spark, path, Layout.Manifested.liveFiles(spark, path),
+      ZoneMaps(statsCols)).getOrElse(0L)
   }
 
-  /** Every live data file of the archive, each with its manifest
-    * version-base (the `basePath` partition-column reconstruction
-    * needs) — the file-level ground truth both skipping sidecars
-    * (zone maps, Blooms) prune against. */
-  private def liveFilesWithBases(spark: SparkSession, path: String)
-      : Seq[(String, String)] = {
-    val (_, parts) = resolveManifest(spark, path)
-    val root = path.stripSuffix("/")
-    val fs = fsFor(spark, new org.apache.hadoop.fs.Path(root))
-    parts.values.toSeq.flatMap(entryPaths).flatMap { rel =>
-      val (dir, base) = entryDirAndBase(root, rel)
-      val p = new org.apache.hadoop.fs.Path(dir)
-      val st = fs.getFileStatus(p)
-      if (st.isFile) Seq(st.getPath.toUri.getPath -> base)
-      else fs.listStatus(p)
-        .toSeq
-        .filter { f =>
-          val n = f.getPath.getName
-          f.isFile && !n.startsWith(".") && !n.startsWith("_")
-        }
-        .map(f => f.getPath.toUri.getPath -> base)
-    }
-  }
-
-  /** Assemble the snapshot from an explicit surviving-file list (the
-    * output shape of a skipping prune): group by version base so
-    * partition columns reconstruct, union across bases by name. */
-  private def readFromFiles(spark: SparkSession,
-                            survivors: Seq[(String, String)]): DataFrame = {
-    val frames = survivors.groupBy(_._2).toSeq.sortBy(_._1)
-      .map { case (base, fz) =>
-        spark.read.option("basePath", base)
-          .option("mergeSchema", "true")
-          .parquet(fz.map(_._1).sorted: _*)
-      }
-    frames.reduce(_.unionByName(_, allowMissingColumns = true))
-  }
-
-  /** The surviving (file, base) pairs of a skipping read, plus how
-    * many live files were statted/pruned — split out so specs can pin
-    * the pruning itself, not just the row identity. */
-  private[graft] def zonemapSurvivors(spark: SparkSession, path: String,
-      bounds: Seq[ZoneBound]): (Seq[(String, String)], Long, Long) = {
-    // live files, each with its version-base for basePath
-    val liveFiles = liveFilesWithBases(spark, path)
-    fileStats(spark, path) match {
-      case None => (liveFiles, 0L, 0L)
-      case Some((dir, cols)) =>
-        bounds.foreach(b => require(cols.contains(b.colName),
-          s"zone-map sidecar at $path covers [${cols.mkString(",")}] " +
-            s"but the read bounds ${b.colName} — re-run " +
-            "computeFileStats with it"))
-        // a file whose min/max are NULL (all values null) or absent
-        // stays IN: pruning is only ever the provably-impossible
-        val keepExpr = bounds.map { b =>
-          val tests = b.lo.map(v => !(col(s"max_${b.colName}") < lit(v))) ++
-            b.hi.map(v => !(col(s"min_${b.colName}") > lit(v)))
-          tests.reduceOption(_ && _).getOrElse(lit(true))
-        }.reduceOption(_ && _).getOrElse(lit(true))
-        // the sidecar dir can vanish under a racing vacuum after this
-        // read resolved the pointer — degrade to the full (correct)
-        // read, as [[bloomSurvivors]] does
-        val rows = try spark.read.parquet(dir)
-          .select(col("file"), coalesce(keepExpr, lit(true)).as("keep"))
-          .collect()
-        catch {
-          case scala.util.control.NonFatal(_) =>
-            return (liveFiles, 0L, 0L)
-        }
-        val keep = rows.filter(_.getBoolean(1)).map(_.getString(0)).toSet
-        val statted = rows.map(_.getString(0)).toSet
-        val survivors = liveFiles.filter { case (f, _) =>
-          !statted(f) || keep(f) }
-        (survivors, liveFiles.count(f => statted(f._1)).toLong,
-          (liveFiles.size - survivors.size).toLong)
-    }
-  }
-
-  /** Sidecar coverage: (live files the sidecar covers, live files).
-    * Coverage drops whenever maintenance rewrites files (fold,
-    * compaction, vacuumed bases) or commits land after the analyze —
-    * the uncovered files read unpruned, so coverage is the fraction
-    * of the archive the zone maps can still skip over. */
-  def fileStatsCoverage(spark: SparkSession, path: String)
-      : (Long, Long) = {
-    val (survivors, statted, _) = zonemapSurvivors(spark, path, Nil)
-    (statted, survivors.size.toLong)
-  }
-
-  /** The analyze-after-maintenance loop, closed: when an archive HAS
-    * a stats sidecar and maintenance has eroded its coverage below
-    * `minCoverage`, re-run [[computeFileStats]] with the SAME columns
-    * the pointer records (the sidecar is self-describing, so the
-    * maintenance window needs no per-store configuration). A store
-    * never analyzed, or one still fully covered, is not touched.
-    * Returns whether a re-analyze ran. */
-  def refreshFileStatsIfStale(spark: SparkSession, path: String,
-                              minCoverage: Double = 1.0): Boolean =
-    fileStats(spark, path) match {
-      case None => false
-      case Some((_, cols)) =>
-        val (statted, live) = fileStatsCoverage(spark, path)
-        if (live == 0L || statted.toDouble / live >= minCoverage) false
-        else { computeFileStats(spark, path, cols); true }
-    }
-
-  /** Zone-map-pruned snapshot read: [[readManifested]] restricted to
-    * files whose analyzed min/max ranges can intersect `bounds` —
-    * file-level data skipping for predicates on NON-partition
-    * columns, the scan-reduction half of the z-order/range layout
-    * story (clustered layouts make per-file ranges narrow; this makes
-    * the read actually skip the disjoint files, before any task is
-    * scheduled). Files the sidecar doesn't cover are always read, so
-    * the result is exactly [[readManifested]]'s rows whenever every
-    * row matching `bounds` is wanted — apply the same range predicate
-    * row-level on top (files keep their non-matching rows). */
-  def readManifestedSkipping(spark: SparkSession, path: String,
-                             bounds: Seq[ZoneBound]): DataFrame = {
-    val (survivors, _, pruned) = zonemapSurvivors(spark, path, bounds)
-    if (pruned == 0L) readManifested(spark, path)
-    else if (survivors.isEmpty)
-      readManifested(spark, path).where(lit(false))
-    else readFromFiles(spark, survivors)
-  }
-
-  // ---------- Bloom sidecars (point-lookup file skipping) ----------
-
-  private def fileBloomsPtr(path: String) =
-    new org.apache.hadoop.fs.Path(
-      path.stripSuffix("/") + "/_file_blooms_ptr")
-
-  /** The current Bloom sidecar: (sidecar dir, key column, hash
-    * count), or None if never analyzed. Garbled pointers fail loudly
-    * — delete and re-run [[computeFileBlooms]]. */
-  def fileBlooms(spark: SparkSession, path: String)
-      : Option[(String, String, Int)] = {
-    val p = fileBloomsPtr(path)
-    val fs = fsFor(spark, p)
-    if (!fs.exists(p)) None
-    else readSmallFile(fs, p).split("\n") match {
-      case Array(dir, keyCol, k) => Some((dir, keyCol, k.toInt))
-      case other => throw new IllegalStateException(
-        s"garbled file-blooms pointer at $p (${other.length} lines) — " +
-          "delete it and re-run computeFileBlooms")
-    }
-  }
-
-  /** ANALYZE for POINT-LOOKUP file skipping: build one Bloom filter
-    * per live file over `keyCol` and publish them as a sidecar
-    * ([[readManifestedPointLookup]] reads it). The zone-map sidecar
-    * ([[computeFileStats]]) prunes RANGE predicates and only bites
-    * when the layout clusters the column; Blooms prune high-
-    * cardinality EQUALITY lookups on ANY layout — a key that exists
-    * in one file is rejected by every other file's filter with
-    * probability 1−fpp, so a k-key lookup over an unclustered
-    * archive reads ~k files instead of all of them. That is the
-    * needle-in-100 TB shape (fetch these doc_ids) that min/max can
-    * never serve on a hash-scattered layout.
-    *
-    * One column-pruned scan building `numBits`-bit filters under
-    * ObjectHashAggregate (map-side partial merge — one bitset per
-    * file crosses the shuffle); sizing is [[graft.expr.BloomAgg
-    * .bitsFor]] at `fpp` for `expectedItemsPerFile` (an overfull
-    * file degrades its false-positive rate, never correctness).
-    * Same overlay contract as zone maps: files the sidecar doesn't
-    * cover are always read, so staleness costs pruning, not rows;
-    * pointer flips last; the superseded sidecar dir is reclaimed. */
+  /** ANALYZE for point-lookup skipping: one Bloom filter per live file
+    * of the manifested table over `keyCol` ([[sizedBlooms]]), built
+    * under ObjectHashAggregate (one bitset per file crosses the
+    * shuffle). Returns the files covered. */
   def computeFileBlooms(spark: SparkSession, path: String, keyCol: String,
                         expectedItemsPerFile: Long = 1000000L,
-                        fpp: Double = 0.01): Long = {
-    val numBits = graft.expr.BloomAgg.bitsFor(expectedItemsPerFile, fpp)
-    val k = graft.expr.BloomAgg.hashesFor(numBits, expectedItemsPerFile)
-    val live = readManifested(spark, path)
-    val blooms = live
-      .withColumn("_f", input_file_name())
-      .withColumn("_h", xxhash64(col(keyCol)))
-      .groupBy(col("_f"))
-      .agg(graft.expr.BloomAgg.bloom(col("_h"), numBits, k).as("bloom"))
-      .withColumn("file", expr("parse_url(_f, 'PATH')"))
-      .withColumn("file", coalesce(col("file"), col("_f")))
-      .drop("_f")
-    val dir = s"${path.stripSuffix("/")}/_file_blooms/" +
-      s"b${java.util.UUID.randomUUID.toString.take(8)}"
-    blooms.write.mode(SaveMode.Overwrite).parquet(dir)
-    val n = spark.read.parquet(dir).count()
-    val ptr = fileBloomsPtr(path)
-    val fs = fsFor(spark, ptr)
-    val out = fs.create(ptr, true)
-    try out.write(s"$dir\n$keyCol\n$k".getBytes("UTF-8"))
-    finally out.close()
-    // superseded sidecar dirs are retained until vacuum (the overlay
-    // discipline): a reader holding the old pointer keeps its files
-    // mid-scan; [[vacuumManifested]] reclaims everything the current
-    // pointer doesn't name
-    graft.plans.AutoFileSkip.invalidateMisses()
-    n
-  }
+                        fpp: Double = 0.01): Long =
+    buildFileSidecar(spark, path, Layout.Manifested.liveFiles(spark, path),
+      sizedBlooms(keyCol, expectedItemsPerFile, fpp)).getOrElse(0L)
 
-  /** The surviving (file, base) pairs of a Bloom-pruned point
-    * lookup, plus (statted, pruned) counts — the [[zonemapSurvivors]]
-    * split for the equality sidecar. `keyHashes` are the sought
-    * keys' `xxhash64` values; a covered file survives iff ANY sought
-    * key might be in it; uncovered files always survive. */
-  private[graft] def bloomSurvivors(spark: SparkSession, path: String,
-      keyHashes: Array[Long]): (Seq[(String, String)], Long, Long) = {
-    val liveFiles = liveFilesWithBases(spark, path)
-    fileBlooms(spark, path) match {
-      case None => (liveFiles, 0L, 0L)
-      case Some((dir, _, k)) =>
-        // the sidecar dir can vanish under a racing vacuum after this
-        // read already resolved the pointer — degrade to the full
-        // (correct) read, the overlay contract every sidecar keeps
-        val rows = try spark.read.parquet(dir)
-          .select(col("file"), col("bloom")).collect()
-        catch {
-          case scala.util.control.NonFatal(_) =>
-            return (liveFiles, 0L, 0L)
-        }
-        val keep = rows.iterator.filter { r =>
-          val b = r.getAs[Array[Byte]]("bloom")
-          b == null || keyHashes.exists(
-            graft.expr.BloomAgg.mightContain(b, _, k))
-        }.map(_.getString(0)).toSet
-        val statted = rows.iterator.map(_.getString(0)).toSet
-        val survivors = liveFiles.filter { case (f, _) =>
-          !statted(f) || keep(f) }
-        (survivors, liveFiles.count(f => statted(f._1)).toLong,
-          (liveFiles.size - survivors.size).toLong)
+  /** Opt a bucketed archive into commit-time Blooms on its bucket key:
+    * bucket pruning cuts an equality/IN probe to its bucket(s), and
+    * these per-file Blooms cut each bucket's epoch × writer-task file
+    * matrix to the files that might hold the key. Builds coverage for
+    * the files on disk; every later commit extends it to its fresh
+    * files ([[refreshFileSidecars]]), while they are cache-hot.
+    * Returns the files covered. */
+  def enableCommitBlooms(spark: SparkSession, path: String,
+                         expectedItemsPerFile: Long = 100000L,
+                         fpp: Double = 0.01): Long =
+    buildFileSidecar(spark, path, Layout.Bucketed.liveFiles(spark, path),
+      sizedBlooms(readBucketSpec(spark, path)._1, expectedItemsPerFile,
+        fpp)).getOrElse(0L)
+
+  /** Replace the small file `dest` so that a concurrent reader sees
+    * the old bytes or the new, never a truncated file: the body is
+    * staged next to `dest` and renamed over it. On the local FS the
+    * staged file is written and moved through java.nio (one atomic
+    * rename(2)), and the checksum file of an earlier Hadoop write is
+    * dropped first — a `.crc` of older bytes would fail every later
+    * read. Elsewhere a rename that refuses an existing destination
+    * (HDFS) falls back to delete-then-rename, whose gap reads as "no
+    * pointer", i.e. an unpruned scan. */
+  private def replaceSmallFile(fs: org.apache.hadoop.fs.FileSystem,
+                               dest: org.apache.hadoop.fs.Path,
+                               body: String): Unit = {
+    val tmp = new org.apache.hadoop.fs.Path(dest.getParent,
+      s".${dest.getName}.tmp-${java.util.UUID.randomUUID.toString.take(8)}")
+    if (fs.getScheme == "file") {
+      val d = java.nio.file.Paths.get(dest.toUri.getPath)
+      val t = java.nio.file.Paths.get(tmp.toUri.getPath)
+      java.nio.file.Files.write(t, body.getBytes("UTF-8"))
+      java.nio.file.Files.deleteIfExists(
+        d.resolveSibling(s".${dest.getName}.crc"))
+      java.nio.file.Files.move(t, d,
+        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    } else {
+      val out = fs.create(tmp, true)
+      try out.write(body.getBytes("UTF-8")) finally out.close()
+      if (!fs.rename(tmp, dest) &&
+          !(fs.delete(dest, false) && fs.rename(tmp, dest))) {
+        fs.delete(tmp, false)
+        throw new java.io.IOException(s"could not replace $dest")
+      }
     }
   }
 
-  /** Bloom sidecar coverage — the [[fileStatsCoverage]] twin:
-    * (covered live files, live files). */
-  def fileBloomCoverage(spark: SparkSession, path: String)
-      : (Long, Long) = {
-    val (survivors, statted, _) =
-      bloomSurvivors(spark, path, Array.empty)
-    // with zero sought keys every covered file is PRUNED, so the
-    // survivor list is exactly the uncovered files
-    (statted, statted + survivors.size.toLong)
-  }
-
-  /** Re-analyze the Bloom sidecar when maintenance eroded its
-    * coverage — the [[refreshFileStatsIfStale]] twin, with the key
-    * column read from the pointer itself. Never-analyzed stores are
-    * not touched. Returns whether a re-analyze ran. */
-  def refreshFileBloomsIfStale(spark: SparkSession, path: String,
-                               minCoverage: Double = 1.0,
-                               expectedItemsPerFile: Long = 1000000L,
-                               fpp: Double = 0.01): Boolean =
-    fileBlooms(spark, path) match {
-      case None => false
-      case Some((_, keyCol, _)) =>
-        val (statted, live) = fileBloomCoverage(spark, path)
-        if (live == 0L || statted.toDouble / live >= minCoverage) false
-        else {
-          computeFileBlooms(spark, path, keyCol,
-            expectedItemsPerFile, fpp)
-          true
-        }
-    }
-
-  /** Bloom-pruned point lookup: [[readManifested]] restricted to
-    * files whose Bloom filter might contain AT LEAST ONE of the
-    * sought keys. `keys` is a (small — its distinct hashes are
-    * collected to the driver, like the sidecar rows themselves) one-
-    * column DataFrame whose column matches the analyzed key column's
-    * name and type; hashing the keys through the same Spark
-    * `xxhash64` the build used is what guarantees build/probe hash
-    * parity. Surviving files keep ALL their rows — apply the
-    * equality/IN predicate row-level on top, exactly like
-    * [[readManifestedSkipping]]'s contract. */
+  /** Point lookup on the Bloom sidecar's key column: [[readManifested]]
+    * filtered to the distinct values of `keys` (a small one-column
+    * frame named like the key column, collected to the driver), so
+    * [[graft.plans.AutoFileSkip]] prunes the scan to the files whose
+    * Bloom might hold a sought key. Without a sidecar it is the plain
+    * read; callers apply their own row filter either way. */
   def readManifestedPointLookup(spark: SparkSession, path: String,
                                 keys: DataFrame): DataFrame = {
-    val keyCol = fileBlooms(spark, path) match {
-      case Some((_, c, _)) => c
-      case None =>
-        return readManifested(spark, path) // no sidecar: full scan
+    val read = readManifested(spark, path)
+    fileBlooms(spark, path) match {
+      case Some((_, keyCol, _)) =>
+        // one InSet node in the key column's own type, not an IN of one
+        // literal per key: analysis over a 100k-child IN costs seconds
+        val dt = read.schema(keyCol).dataType
+        val toCatalyst = org.apache.spark.sql.catalyst
+          .CatalystTypeConverters.createToCatalystConverter(dt)
+        val sought = keys.select(col(keyCol).cast(dt)).collect()
+          .flatMap(r => Option(r.get(0))).map(toCatalyst).toSet
+        read.where(graft.expr.Columns.of(
+          org.apache.spark.sql.catalyst.expressions.InSet(
+            graft.expr.Columns.expr(col(keyCol)), sought)))
+      case None => read
     }
-    val hashes = keys.select(xxhash64(col(keyCol)).as("_h"))
-      .distinct().collect().map(_.getLong(0))
-    val (survivors, _, pruned) = bloomSurvivors(spark, path, hashes)
-    if (pruned == 0L) readManifested(spark, path)
-    else if (survivors.isEmpty)
-      readManifested(spark, path).where(lit(false))
-    else readFromFiles(spark, survivors)
   }
 
   // ---------- Row-level MERGE (copy-on-write, partition-targeted) ----------

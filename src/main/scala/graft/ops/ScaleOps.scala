@@ -1329,24 +1329,23 @@ object ScaleOps {
       root
     })
 
-  /** Gated: zone-map file skipping ([[graft.io.Tables
-    * .readManifestedSkipping]]) — a range predicate on a
-    * NON-partition column prunes the scan to files whose analyzed
-    * min/max can intersect it, before any task is scheduled (the
+  /** Gated: zone-map file skipping — a range predicate on a
+    * NON-partition column of a plain [[graft.io.Tables.readManifested]]
+    * prunes the scan at plan time ([[graft.plans.AutoFileSkip]]) to
+    * the files whose analyzed min/max can intersect it (the
     * scan-reduction half of the range-clustered layout story), while
     * files committed AFTER the analyze are read unconditionally, so
-    * the pruned read plus the row-level filter equals the plain
-    * filtered read exactly. HASH-gated: the per-lang aggregate over
-    * `doc_id BETWEEN 100 AND 299` spans both the statted epoch (even
-    * ids, pruned) and the unstatted one (odd ids, kept). ZoneMapSpec
-    * pins the pruning itself: most statted files are skipped under a
-    * controlled 8-file range layout, all-null and missing stats stay
-    * conservative, and a fold's rewrite degrades to a full (still
-    * correct) read until re-analyzed. */
+    * the answer equals the plain filtered read exactly. HASH-gated:
+    * the per-lang aggregate over `doc_id BETWEEN 100 AND 299` spans
+    * both the statted epoch (even ids, pruned) and the unstatted one
+    * (odd ids, kept). ZoneMapSpec pins the pruning itself: most
+    * statted files are skipped under a controlled 8-file range
+    * layout, all-null and missing stats stay conservative, and a
+    * fold's rewrite degrades to a full (still correct) read until
+    * re-analyzed. */
   def qZonemapSkip(s: SparkSession, dir: String): DataFrame = {
     val root = zonemapRoot(s, dir)
-    Tables.readManifestedSkipping(s, s"$root/arch",
-        Seq(Tables.ZoneBound("doc_id", Some(100L), Some(299L))))
+    Tables.readManifested(s, s"$root/arch")
       .where(col("doc_id").between(100L, 299L))
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n"),
@@ -1399,14 +1398,15 @@ object ScaleOps {
   private val BloomLookupIds: Seq[Long] =
     Seq(42L, 100L, 250L, 498L, 7L, 333L, 100000L, 100001L)
 
-  /** Gated: Bloom-filter point-lookup file skipping
-    * ([[graft.io.Tables.readManifestedPointLookup]]) — the equality
-    * sibling of [[qZonemapSkip]]: per-file Bloom sidecars prune a
-    * multi-key lookup to the files that might hold a sought key, on
-    * a HASH-SCATTERED layout where min/max zone maps are useless,
-    * while files committed after the analyze are read
-    * unconditionally — so the pruned read plus the row-level IN
-    * equals the plain filtered read exactly. That is the fetch-
+  /** Gated: Bloom-filter point-lookup file skipping through
+    * [[graft.io.Tables.readManifestedPointLookup]], which filters the
+    * read to the sought keys so [[graft.plans.AutoFileSkip]] prunes
+    * it — the equality sibling of [[qZonemapSkip]]: per-file Bloom
+    * sidecars prune a multi-key lookup to the files that might hold a
+    * sought key, on a HASH-SCATTERED layout where min/max zone maps
+    * are useless, while files committed after the analyze are read
+    * unconditionally — so the answer equals the plain filtered read
+    * exactly. That is the fetch-
     * these-doc_ids needle shape at 100 TB: ~k files read instead of
     * the archive. BloomSkipSpec pins the pruning itself (most
     * covered files skipped), zero false negatives across key sets,

@@ -25,15 +25,14 @@ private[plans] class GraftPrunedFileIndex(
 /** Catalyst optimizer rule: file-level data skipping from the engine's
   * own sidecar statistics, applied AUTOMATICALLY to declarative reads.
   *
-  * The explicit APIs ([[Tables.readManifestedSkipping]] for zone-map
-  * range pruning, [[Tables.readManifestedPointLookup]] for Bloom
-  * point-lookup pruning) require the caller to know the sidecars
-  * exist and to phrase the read through them. This rule closes that
-  * gap the way a transactional table format's reader does: a plain
+  * This rule is the engine's one reader of the per-file sidecars
+  * ([[Tables.computeFileStats]], [[Tables.computeFileBlooms]],
+  * [[Tables.enableCommitBlooms]]), and the way a transactional table
+  * format's reader plans data skipping: a plain
   * `readManifested(...).where(key === k)` — or any filter over a scan
-  * of an analyzed archive — consults the archive's sidecars at PLAN
-  * time and shrinks the scan's file list to the files that might hold
-  * a matching row:
+  * of an analyzed archive, of either layout — consults the archive's
+  * sidecars at PLAN time and shrinks the scan's file list to the
+  * files that might hold a matching row:
   *
   *  - equality / IN on the Bloom-analyzed key column → per-file Bloom
   *    probe (the needle-in-100 TB shape on a hash-scattered layout);
@@ -261,7 +260,7 @@ case class AutoFileSkip(spark: SparkSession) extends Rule[LogicalPlan]
     * ancestor walk's metadata round-trips at plan time — but only
     * briefly, and the miss cache is dropped outright whenever this
     * JVM runs an ANALYZE ([[AutoFileSkip.invalidateMisses]], called
-    * by `computeFileStats`/`computeFileBlooms`), so "analyze then
+    * by every sidecar build), so "analyze then
     * query" prunes immediately; a cross-JVM analyze is picked up
     * when the TTL lapses. */
   private def archiveRoot(fsRel: HadoopFsRelation): Option[String] = {

@@ -684,15 +684,16 @@ object StreamOps {
     *     when the store acted at all, its other tables and its
     *     tombstone table (tombstone tables accumulate versions fastest
     *     of all: every delete epoch and every retire is a commit);
-    *  4. zone-map and Bloom upkeep: a fold/vacuum that rewrote files
-    *     orphans an analyzed store's sidecars (skipping reads and
-    *     point lookups degrade to full scans until re-analyzed). An
-    *     ANALYZE is a full-archive scan, so it is gated twice: a store
-    *     this window ACTED on restores full coverage; one that merely
-    *     kept ingesting re-analyzes only once its coverage halves
-    *     (amortized log-many full scans, not one per window). Each
-    *     sidecar re-analyzes with the columns its own pointer records;
-    *     never-analyzed tables are untouched.
+    *  4. zone-map and Bloom upkeep, on every table of either layout:
+    *     a fold/vacuum that rewrote files orphans an analyzed table's
+    *     sidecar rows (filtered reads degrade to full scans until
+    *     re-analyzed). A re-analyze scans the uncovered files, so it
+    *     is gated twice: a store this window ACTED on restores full
+    *     coverage; one that merely kept ingesting re-analyzes only
+    *     once its coverage halves. Each sidecar re-analyzes with the
+    *     parameters its own pointer records, Bloom sizing included
+    *     ([[Tables.refreshFileSidecars]]); never-analyzed tables are
+    *     untouched.
     * Returns the policy decision rows (pre-sweep counters, the
     * decisions, whether the store acted), or else the post-sweep
     * health rows of every table that reports one. */
@@ -726,12 +727,8 @@ object StreamOps {
         if (Tables.manifestExists(s, st.tombstones))
           Tables.vacuumManifested(s, st.tombstones)
       }
-      st.tables.filter(t => t.layout == Tables.Layout.Manifested &&
-          exists(t)).foreach { t =>
-        val cov = if (acted) 1.0 else 0.5
-        Tables.refreshFileStatsIfStale(s, t.path, cov)
-        Tables.refreshFileBloomsIfStale(s, t.path, cov)
-      }
+      st.tables.filter(exists).foreach(t => Tables.refreshFileSidecars(s,
+        t.path, if (acted) 1.0 else 0.5, t.layout))
       decided.map { case (h, (fd, fr, vd, vr)) =>
         (h.store, h.n_epochs, h.n_live_rows, h.n_tombstones,
           h.manifest_versions, h.n_dead_dirs, fd, fr, vd, vr, acted)

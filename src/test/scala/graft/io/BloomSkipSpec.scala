@@ -4,12 +4,13 @@ import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Bloom-filter point-lookup file skipping
-  * ([[Tables.computeFileBlooms]] / [[Tables.readManifestedPointLookup]]):
+/** Bloom-filter point-lookup file skipping: [[Tables.computeFileBlooms]]
+  * writes the sidecar, and [[graft.plans.AutoFileSkip]] prunes
+  * [[Tables.readManifestedPointLookup]] through it (the pins read the
+  * optimized plan's input files):
   *
-  *  - IDENTITY: the pruned read plus the row-level IN filter equals
-  *    the plain filtered read — zero false negatives, across key
-  *    sets and staleness states;
+  *  - IDENTITY: the pruned lookup equals the plain filtered read —
+  *    zero false negatives, across key sets and staleness states;
   *  - the pruning is REAL where zone maps are USELESS: on a hash-
   *    scattered layout (every file spans the full key range) a
   *    k-key lookup keeps ~k files while the min/max sidecar on the
@@ -18,10 +19,10 @@ import org.apache.spark.sql.functions._
   *    analyze always read; an un-analyzed archive reads in full;
   *    absent keys prune every covered file and still answer empty;
   *  - a fold's rewrite orphans the sidecar → full (still correct)
-  *    read until [[Tables.refreshFileBloomsIfStale]] re-analyzes
-  *    with the key column the pointer itself records.
+  *    read until [[Tables.refreshFileSidecars]] re-analyzes with the
+  *    key column and sizing the pointer itself records.
   */
-class BloomSkipSpec extends SparkSpec {
+class BloomSkipSpec extends SparkSpec with graft.plans.FileSkipPins {
 
   private def mkArchive(nFiles: Int): (String, DataFrame) = {
     import spark.implicits._
@@ -43,9 +44,10 @@ class BloomSkipSpec extends SparkSpec {
     ids.toDF("k")
   }
 
-  private def hashesOf(ids: Seq[Long]): Array[Long] =
-    keysDf(ids).select(xxhash64(col("k"))).distinct()
-      .collect().map(_.getLong(0))
+  /** The pruned lookup of `ids`, filtered row-level. */
+  private def lookup(p: String, ids: Seq[Long]): DataFrame =
+    Tables.readManifestedPointLookup(spark, p, keysDf(ids))
+      .where(col("k").isin(ids: _*))
 
   private def norm(df: DataFrame): DataFrame =
     df.select(col("k").cast("long"), col("v").cast("long"), col("g"))
@@ -58,65 +60,56 @@ class BloomSkipSpec extends SparkSpec {
 
   test("point lookup keeps ~k of the statted files on a layout " +
     "where zone maps prune nothing, rows identical to the plain read") {
-    val (p, _) = mkArchive(16)
+    val (p, df) = mkArchive(16)
     assert(Tables.computeFileBlooms(spark, p, "k",
       expectedItemsPerFile = 256L, fpp = 0.01) >= 16L)
     // the zone-map CONTRAST: min/max on the same hash-scattered
     // archive cannot prune the equivalent range probe at all
     Tables.computeFileStats(spark, p, Seq("k"))
-    assert(Tables.zonemapSurvivors(spark, p,
-      Seq(Tables.ZoneBound("k", Some(42L), Some(42L))))._3 == 0L,
+    // a range probe reaches only the zone maps
+    assert(!pruned(Tables.readManifested(spark, p)
+      .where(col("k").between(42L, 42L))),
       "hash-scattered files should span the full range — nothing " +
         "for min/max to prune (fixture assumption broken)")
 
     val ids = Seq(42L, 111L, 250L, 499L)
-    val (survivors, statted, pruned) =
-      Tables.bloomSurvivors(spark, p, hashesOf(ids))
-    assert(statted == 16L && pruned > 0L,
-      s"no real pruning: statted=$statted pruned=$pruned")
-    assert(survivors.size <= ids.size + 3,
-      s"a ${ids.size}-key lookup kept ${survivors.size} of $statted " +
+    val statted = withRuleDisabled(filesRead(lookup(p, ids)))
+    val survivors = filesRead(lookup(p, ids))
+    assert(statted == 16 && pruned(lookup(p, ids)),
+      s"no real pruning: statted=$statted survivors=$survivors")
+    assert(survivors <= ids.size + 3,
+      s"a ${ids.size}-key lookup kept $survivors of $statted " +
         "files — far above the fpp budget")
-    assertSame(
-      Tables.readManifestedPointLookup(spark, p, keysDf(ids))
-        .where(col("k").isin(ids: _*)),
-      Tables.readManifested(spark, p).where(col("k").isin(ids: _*)),
-      "scattered")
-    assert(Tables.readManifestedPointLookup(spark, p, keysDf(ids))
-      .where(col("k").isin(ids: _*)).count() == ids.size.toLong)
+    assertSame(lookup(p, ids),
+      df.where(col("k").isin(ids: _*)), "scattered")
+    assert(lookup(p, ids).count() == ids.size.toLong)
   }
 
   test("zero false negatives across key sets; absent keys prune " +
     "every covered file and answer empty") {
-    val (p, _) = mkArchive(8)
+    val (p, df) = mkArchive(8)
     Tables.computeFileBlooms(spark, p, "k",
       expectedItemsPerFile = 256L, fpp = 0.01)
     for (start <- Seq(0L, 13L, 399L)) {
       val ids = (start until start + 10L).toSeq
-      assertSame(
-        Tables.readManifestedPointLookup(spark, p, keysDf(ids))
-          .where(col("k").isin(ids: _*)),
-        Tables.readManifested(spark, p).where(col("k").isin(ids: _*)),
+      assertSame(lookup(p, ids), df.where(col("k").isin(ids: _*)),
         s"keyset@$start")
     }
     // absent keys: with 3 sought hashes at fpp 1% over 8 files the
     // expected false-positive survivors are ≪ 1 — allow 2
     val absent = Seq(100000L, 100001L, 100002L)
-    val (sv, statted, pruned) =
-      Tables.bloomSurvivors(spark, p, hashesOf(absent))
-    assert(statted == 8L && pruned >= statted - 2,
-      s"absent keys kept ${sv.size} files")
-    assert(Tables.readManifestedPointLookup(spark, p, keysDf(absent))
-      .where(col("k").isin(absent: _*)).count() == 0L)
+    val statted = withRuleDisabled(filesRead(lookup(p, absent)))
+    val survivors = filesRead(lookup(p, absent))
+    assert(statted == 8 && survivors <= 2,
+      s"absent keys kept $survivors of $statted files")
+    assert(lookup(p, absent).count() == 0L)
   }
 
   test("conservative: un-analyzed reads whole; post-analyze commits " +
     "always read; garbled pointer is loud") {
     import spark.implicits._
     val (p, _) = mkArchive(4)
-    val (s0, statted0, pruned0) =
-      Tables.bloomSurvivors(spark, p, hashesOf(Seq(1L)))
-    assert(statted0 == 0L && pruned0 == 0L && s0.nonEmpty,
+    assert(!pruned(lookup(p, Seq(1L))) && lookup(p, Seq(1L)).count() == 1L,
       "no sidecar must mean no pruning")
 
     Tables.computeFileBlooms(spark, p, "k",
@@ -128,8 +121,7 @@ class BloomSkipSpec extends SparkSpec {
         .toDF("k", "v", "g").withColumn("ingest_epoch", lit(1L)),
       p, Seq("ingest_epoch"), _ == "ingest_epoch=1")
     val late = Seq(10010L, 10020L)
-    assert(Tables.readManifestedPointLookup(spark, p, keysDf(late))
-      .where(col("k").isin(late: _*)).count() == 2L,
+    assert(lookup(p, late).count() == 2L,
       "keys committed after the analyze were pruned away")
 
     // garbled pointer: loud, names the fix
@@ -150,28 +142,21 @@ class BloomSkipSpec extends SparkSpec {
     Tables.computeFileBlooms(spark, p, "k",
       expectedItemsPerFile = 256L, fpp = 0.01)
     val ids = Seq(10L, 20L, 30L)
-    assert(Tables.bloomSurvivors(spark, p, hashesOf(ids))._3 > 0L)
+    assert(pruned(lookup(p, ids)))
 
     Tables.ingestTombstones(
       spark.range(1).select(lit(20L).as("k")), tomb, epoch = 1L)
     Tables.foldEpochs(spark, Seq(Tables.EpochTable(p)), tomb, "k")
-    assert(Tables.bloomSurvivors(spark, p, hashesOf(ids))._3 == 0L,
+    assert(!pruned(lookup(p, ids)),
       "stale blooms pruned freshly-folded files")
-    assert(Tables.readManifestedPointLookup(spark, p, keysDf(ids))
-      .where(col("k").isin(ids: _*)).count() == 2L) // 20 tombstoned
+    assert(lookup(p, ids).count() == 2L) // 20 tombstoned
 
-    val (covered, live) = Tables.fileBloomCoverage(spark, p)
-    assert(covered == 0L && live > 0L,
-      s"fold must erode coverage to zero: $covered/$live")
-    assert(Tables.refreshFileBloomsIfStale(spark, p,
-      expectedItemsPerFile = 256L),
+    assert(Tables.refreshFileSidecars(spark, p) == 1,
       "eroded coverage must trigger the refresh")
-    assert(Tables.bloomSurvivors(spark, p, hashesOf(ids))._3 > 0L,
-      "re-analyze did not restore pruning")
-    assert(Tables.readManifestedPointLookup(spark, p, keysDf(ids))
-      .where(col("k").isin(ids: _*)).count() == 2L)
+    assert(pruned(lookup(p, ids)), "re-analyze did not restore pruning")
+    assert(lookup(p, ids).count() == 2L)
     val dirBefore = Tables.fileBlooms(spark, p).get._1
-    assert(!Tables.refreshFileBloomsIfStale(spark, p),
+    assert(Tables.refreshFileSidecars(spark, p) == 0,
       "full coverage must not re-analyze")
     assert(Tables.fileBlooms(spark, p).get._1 == dirBefore,
       "no-op refresh rewrote the sidecar")
@@ -200,8 +185,7 @@ class BloomSkipSpec extends SparkSpec {
       "an in-flight reader of the old pointer must keep its files")
     // the sidecar is written distributed (no one-task funnel): more
     // than one part file is legal and the probe reads the dir whole
-    assert(Tables.bloomSurvivors(spark, p,
-      hashesOf(Seq(10L, 20L)))._3 > 0L)
+    assert(pruned(lookup(p, Seq(10L, 20L))))
     // vacuum reclaims exactly the unreferenced dir (grace zeroed —
     // the default protects freshly-superseded dirs from a racing
     // build's pre-flip window)
@@ -218,10 +202,7 @@ class BloomSkipSpec extends SparkSpec {
     fs.delete(new org.apache.hadoop.fs.Path(dir2), true)
     graft.plans.AutoFileSkip.invalidateMisses()
     val ids = Seq(10L, 20L, 30L)
-    assertSame(
-      Tables.readManifestedPointLookup(spark, p, keysDf(ids))
-        .where(col("k").isin(ids: _*)),
-      df.where(col("k").isin(ids: _*)),
+    assertSame(lookup(p, ids), df.where(col("k").isin(ids: _*)),
       "a vanished sidecar dir must cost pruning, never rows")
   }
 }

@@ -4,18 +4,19 @@ import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Zone-map file skipping ([[Tables.computeFileStats]] /
-  * [[Tables.readManifestedSkipping]]):
+/** Zone-map file skipping: [[Tables.computeFileStats]] writes the
+  * sidecar, and [[graft.plans.AutoFileSkip]] prunes a plain filtered
+  * [[Tables.readManifested]] through it (the pins read the optimized
+  * plan's input files):
   *
-  *  - IDENTITY: the pruned read plus the row-level range filter
-  *    equals the plain filtered read, in every staleness state;
+  *  - IDENTITY: the pruned read equals the rule-disabled read, in
+  *    every staleness state;
   *  - the pruning is REAL: under a controlled 8-file range-clustered
   *    layout, a narrow range keeps a strict minority of the statted
   *    files (the spec counts survivors, not just rows);
   *  - conservative by construction: files committed AFTER the
   *    analyze are always read; an all-null stats column keeps its
-  *    file; an un-analyzed archive reads in full; bounding a column
-  *    the sidecar doesn't cover is loud;
+  *    file; an un-analyzed archive reads in full;
   *  - a fold's rewrite orphans the sidecar's file names → the read
   *    degrades to a full (still correct) scan until re-analyzed,
   *    after which pruning returns;
@@ -23,9 +24,7 @@ import org.apache.spark.sql.functions._
   *    resolved the old pointer (vacuum reclaims it past the grace),
   *    and a vanished stats dir degrades to the unpruned read.
   */
-class ZoneMapSpec extends SparkSpec {
-
-  import Tables.ZoneBound
+class ZoneMapSpec extends SparkSpec with graft.plans.FileSkipPins {
 
   private def mkArchive(nFiles: Int): (String, DataFrame) = {
     import spark.implicits._
@@ -44,47 +43,34 @@ class ZoneMapSpec extends SparkSpec {
   private def norm(df: DataFrame): DataFrame =
     df.select(col("k").cast("long"), col("v").cast("long"), col("g"))
 
-  private def assertSame(a: DataFrame, b: DataFrame, hint: String): Unit = {
-    val (x, y) = (norm(a), norm(b))
-    assert(x.exceptAll(y).isEmpty && y.exceptAll(x).isEmpty,
-      s"$hint: pruned read diverges from plain filtered read")
-    assert(x.count() > 0, s"$hint: vacuous")
-  }
-
   test("pruned+filter == plain+filter, and the pruning actually " +
     "skips most statted files under a range-clustered layout") {
     val (p, _) = mkArchive(8)
     assert(Tables.computeFileStats(spark, p, Seq("k")) >= 8L)
-    val bounds = Seq(ZoneBound("k", Some(100L), Some(199L)))
-    val (survivors, statted, pruned) =
-      Tables.zonemapSurvivors(spark, p, bounds)
-    assert(statted >= 8L && pruned > 0L &&
-      survivors.size.toLong <= statted - pruned,
-      s"no real pruning: statted=$statted pruned=$pruned " +
-        s"survivors=${survivors.size}")
-    assert(survivors.size * 2 <= statted,
-      s"a 1/8th range kept ${survivors.size} of $statted statted files")
-    assertSame(
-      Tables.readManifestedSkipping(spark, p, bounds)
-        .where(col("k").between(100L, 199L)),
-      Tables.readManifested(spark, p)
-        .where(col("k").between(100L, 199L)),
-      "clustered")
+    def q = Tables.readManifested(spark, p)
+      .where(col("k").between(100L, 199L))
+    val statted = withRuleDisabled(filesRead(q))
+    val survivors = filesRead(q)
+    assert(statted >= 8 && pruned(q) && survivors < statted,
+      s"no real pruning: statted=$statted survivors=$survivors")
+    assert(survivors * 2 <= statted,
+      s"a 1/8th range kept $survivors of $statted statted files")
+    val rows = norm(q).collect().toSet
+    assert(rows.size == 100 &&
+      rows == withRuleDisabled(norm(q).collect().toSet),
+      "pruned read diverges from the rule-disabled read")
     // an empty range prunes everything and still answers correctly
-    val none = Tables.readManifestedSkipping(spark, p,
-      Seq(ZoneBound("k", Some(5000L), None)))
-    assert(none.where(col("k") >= 5000L).count() == 0)
+    def none = Tables.readManifested(spark, p).where(col("k") >= 5000L)
+    assert(filesRead(none) == 0 && none.count() == 0)
   }
 
   test("conservative: post-analyze commits always read; all-null " +
-    "stats keep their file; un-analyzed reads whole; unknown bound " +
-    "column is loud") {
+    "stats keep their file; un-analyzed reads whole") {
     import spark.implicits._
     val (p, _) = mkArchive(4)
-    // un-analyzed: no sidecar → plain read, zero pruned
-    val (s0, statted0, pruned0) = Tables.zonemapSurvivors(spark, p,
-      Seq(ZoneBound("k", Some(0L), Some(10L))))
-    assert(statted0 == 0L && pruned0 == 0L && s0.nonEmpty)
+    // un-analyzed: no sidecar → plain read, nothing pruned
+    assert(!pruned(Tables.readManifested(spark, p)
+      .where(col("k").between(0L, 10L))))
 
     Tables.computeFileStats(spark, p, Seq("k", "v"))
     // epoch 1 lands AFTER the analyze, far outside every statted
@@ -93,9 +79,10 @@ class ZoneMapSpec extends SparkSpec {
       (10000L until 10050L).map(i => (i, i % 7, "late"))
         .toDF("k", "v", "g").withColumn("ingest_epoch", lit(1L)),
       p, Seq("ingest_epoch"), _ == "ingest_epoch=1")
-    val got = Tables.readManifestedSkipping(spark, p,
-        Seq(ZoneBound("k", Some(10000L), None)))
-      .where(col("k") >= 10000L)
+    def got = Tables.readManifested(spark, p).where(col("k") >= 10000L)
+    assert(filesRead(got) > 0 &&
+      filesRead(got) < withRuleDisabled(filesRead(got)),
+      "the statted files should prune, the late ones survive")
     assert(got.count() == 50L,
       "rows committed after the analyze were pruned away")
 
@@ -108,19 +95,11 @@ class ZoneMapSpec extends SparkSpec {
         .toDF("k", "v").repartition(1)
         .withColumn("ingest_epoch", lit(0L)),
       p2, Seq("ingest_epoch"))
-    Tables.computeFileStats(spark, p2, Seq("v"))
-    val (s2, statted2, pruned2) = Tables.zonemapSurvivors(spark, p2,
-      Seq(ZoneBound("v", Some(0L), Some(100L))))
-    assert(statted2 == 1L && pruned2 == 0L && s2.size == 1,
+    assert(Tables.computeFileStats(spark, p2, Seq("v")) == 1L)
+    val allNull = Tables.readManifested(spark, p2)
+      .where(col("v").between(0L, 100L))
+    assert(!pruned(allNull) && filesRead(allNull) == 1,
       "an all-null stats column must keep its file")
-
-    // bounding an un-statted column is loud
-    val ex = intercept[IllegalArgumentException] {
-      Tables.readManifestedSkipping(spark, p,
-        Seq(ZoneBound("g", Some("a"), Some("z"))))
-    }
-    assert(ex.getMessage.contains("computeFileStats"),
-      s"unknown bound column must name the fix: ${ex.getMessage}")
   }
 
   test("clustered compaction: a scattered archive prunes nothing; " +
@@ -137,11 +116,10 @@ class ZoneMapSpec extends SparkSpec {
       df.repartition(16).withColumn("ingest_epoch", lit(0L)),
       p, Seq("ingest_epoch"))
     Tables.computeFileStats(spark, p, Seq("k"))
-    val bounds = Seq(Tables.ZoneBound("k", Some(100L), Some(199L)))
-    val (_, _, prunedScattered) = Tables.zonemapSurvivors(spark, p, bounds)
-    val before = Tables.readManifestedSkipping(spark, p, bounds)
+    def q = Tables.readManifested(spark, p)
       .where(col("k").between(100L, 199L))
-    assert(before.count() == 100L)
+    val prunedScattered = withRuleDisabled(filesRead(q)) - filesRead(q)
+    assert(q.count() == 100L)
 
     // compact WITH the cluster column: files become range-disjoint
     val stats = Tables.compactManifested(spark, p, targetBytes = 4096L,
@@ -149,20 +127,18 @@ class ZoneMapSpec extends SparkSpec {
     assert(stats.values.exists(s => s.filesAfter < s.filesBefore),
       s"compaction never triggered — fixture too small: $stats")
     // stale sidecar names dead files → conservative full read, correct
-    assert(Tables.zonemapSurvivors(spark, p, bounds)._3 == 0L)
-    assert(Tables.readManifestedSkipping(spark, p, bounds)
-      .where(col("k").between(100L, 199L)).count() == 100L)
+    assert(!pruned(q))
+    assert(q.count() == 100L)
 
     Tables.computeFileStats(spark, p, Seq("k"))
-    val (survivors, statted, pruned) =
-      Tables.zonemapSurvivors(spark, p, bounds)
-    assert(statted >= 3L && pruned > prunedScattered &&
-      survivors.size * 2 <= statted,
+    val statted = withRuleDisabled(filesRead(q))
+    val survivors = filesRead(q)
+    assert(statted >= 3 && statted - survivors > prunedScattered &&
+      survivors * 2 <= statted,
       s"clustered compaction did not concentrate the range: " +
-        s"statted=$statted pruned=$pruned survivors=${survivors.size} " +
+        s"statted=$statted survivors=$survivors " +
         s"(scattered pruned $prunedScattered)")
-    assert(Tables.readManifestedSkipping(spark, p, bounds)
-      .where(col("k").between(100L, 199L)).count() == 100L)
+    assert(q.count() == 100L)
   }
 
   test("a fold orphans the sidecar: the read degrades to full but " +
@@ -170,31 +146,26 @@ class ZoneMapSpec extends SparkSpec {
     val (p, _) = mkArchive(8)
     val tomb = p + "_tombstones"
     Tables.computeFileStats(spark, p, Seq("k"))
-    val bounds = Seq(ZoneBound("k", Some(0L), Some(99L)))
-    assert(Tables.zonemapSurvivors(spark, p, bounds)._3 > 0L)
+    def q = Tables.readManifested(spark, p).where(col("k").between(0L, 99L))
+    assert(pruned(q))
 
     // fold rewrites the base layer into new files the sidecar has
     // never seen — nothing prunable anymore, nothing lost either
     Tables.ingestTombstones(
       spark.range(1).select(lit(5L).as("k")), tomb, epoch = 1L)
     Tables.foldEpochs(spark, Seq(Tables.EpochTable(p)), tomb, "k")
-    val (_, _, prunedStale) = Tables.zonemapSurvivors(spark, p, bounds)
-    assert(prunedStale == 0L, "stale stats pruned freshly-folded files")
-    val afterFold = Tables.readManifestedSkipping(spark, p, bounds)
-      .where(col("k").between(0L, 99L))
-    assert(afterFold.count() == 99L) // 100 ids minus the tombstoned 5
+    assert(!pruned(q), "stale stats pruned freshly-folded files")
+    assert(q.count() == 99L) // 100 ids minus the tombstoned 5
 
-    // the managed path: refreshIfStale re-analyzes with the pointer's
+    // the managed path: the refresh re-analyzes with the pointer's
     // own columns — and a second refresh on full coverage is a no-op
     // (same stats dir, no rewrite)
-    assert(Tables.refreshFileStatsIfStale(spark, p),
+    assert(Tables.refreshFileSidecars(spark, p) == 1,
       "eroded coverage must trigger the refresh")
-    assert(Tables.zonemapSurvivors(spark, p, bounds)._3 > 0L,
-      "re-analyze did not restore pruning")
-    assert(Tables.readManifestedSkipping(spark, p, bounds)
-      .where(col("k").between(0L, 99L)).count() == 99L)
+    assert(pruned(q), "re-analyze did not restore pruning")
+    assert(q.count() == 99L)
     val dirBefore = Tables.fileStats(spark, p).get._1
-    assert(!Tables.refreshFileStatsIfStale(spark, p),
+    assert(Tables.refreshFileSidecars(spark, p) == 0,
       "full coverage must not re-analyze")
     assert(Tables.fileStats(spark, p).get._1 == dirBefore,
       "no-op refresh rewrote the sidecar")
@@ -231,11 +202,9 @@ class ZoneMapSpec extends SparkSpec {
     Tables.computeFileStats(spark, p, Seq("k"))
     org.apache.hadoop.fs.FileUtil.fullyDelete(
       new java.io.File(Tables.fileStats(spark, p).get._1))
-    val bounds = Seq(ZoneBound("k", Some(100L), Some(199L)))
-    assert(Tables.zonemapSurvivors(spark, p, bounds)._3 == 0L)
-    val skipped = Tables.readManifestedSkipping(spark, p, bounds)
-    val plain = Tables.readManifested(spark, p)
-    assert(norm(skipped).exceptAll(norm(plain)).isEmpty &&
-      norm(plain).exceptAll(norm(skipped)).isEmpty && plain.count() == 800L)
+    def q = Tables.readManifested(spark, p)
+      .where(col("k").between(100L, 199L))
+    assert(!pruned(q))
+    assert(q.count() == 100L)
   }
 }

@@ -1,7 +1,6 @@
 package graft.plans
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -13,28 +12,9 @@ import graft.io.Tables
   * identical to the rule-disabled read, the overlay contract holds
   * (files committed after the analyze are always read), and
   * non-analyzed shapes are untouched. */
-class AutoFileSkipSpec extends SparkSpec {
+class AutoFileSkipSpec extends SparkSpec with FileSkipPins {
 
   import spark.implicits._
-
-  private def scanFiles(df: DataFrame): Seq[Seq[String]] =
-    df.queryExecution.optimizedPlan.collect {
-      case l: LogicalRelation =>
-        l.relation.asInstanceOf[HadoopFsRelation]
-          .location.inputFiles.toSeq
-    }
-
-  private def pruned(df: DataFrame): Boolean =
-    df.queryExecution.optimizedPlan.collect {
-      case l: LogicalRelation if l.relation.isInstanceOf[HadoopFsRelation] &&
-        l.relation.asInstanceOf[HadoopFsRelation]
-          .location.isInstanceOf[GraftPrunedFileIndex] => l
-    }.nonEmpty
-
-  private def withRuleDisabled[T](body: => T): T = {
-    spark.conf.set(AutoFileSkip.EnabledKey, "false")
-    try body finally spark.conf.set(AutoFileSkip.EnabledKey, "true")
-  }
 
   private def rows(df: DataFrame): Set[Seq[Any]] =
     df.collect().map(_.toSeq.toVector: Seq[Any]).toSet
@@ -88,8 +68,8 @@ class AutoFileSkipSpec extends SparkSpec {
     def q = Tables.readManifested(spark, bloomArch)
       .where(col("id") === 42L).select(col("id"), col("body"))
     assert(pruned(q), "expected the marker index in the optimized plan")
-    val before = withRuleDisabled { scanFiles(q).map(_.size).sum }
-    val after = scanFiles(q).map(_.size).sum
+    val before = withRuleDisabled { filesRead(q) }
+    val after = filesRead(q)
     assert(after < before, s"no files pruned ($after of $before)")
     assert(rows(q) === withRuleDisabled { rows(q) })
     assert(rows(q) === Set(Seq(42L, "d42")))
@@ -124,8 +104,8 @@ class AutoFileSkipSpec extends SparkSpec {
       .where(col("id").between(100L, 149L))
       .select(col("id"), col("v"))
     assert(pruned(q), "expected the marker index in the optimized plan")
-    val before = withRuleDisabled { scanFiles(q).map(_.size).sum }
-    val after = scanFiles(q).map(_.size).sum
+    val before = withRuleDisabled { filesRead(q) }
+    val after = filesRead(q)
     assert(after < before, s"no files pruned ($after of $before)")
     assert(rows(q) === withRuleDisabled { rows(q) })
     assert(rows(q) ===
@@ -148,8 +128,8 @@ class AutoFileSkipSpec extends SparkSpec {
     def q = spark.sql(
       "SELECT id, body FROM afs_sql_arch WHERE id IN (7, 42, 199, 5555)")
     assert(pruned(q), "SQL-path lookup lost the sidecar pruning")
-    val before = withRuleDisabled { scanFiles(q).map(_.size).sum }
-    val after = scanFiles(q).map(_.size).sum
+    val before = withRuleDisabled { filesRead(q) }
+    val after = filesRead(q)
     assert(after < before,
       s"no files pruned through the view ($after of $before)")
     assert(rows(q) === withRuleDisabled { rows(q) })
@@ -217,8 +197,8 @@ class AutoFileSkipSpec extends SparkSpec {
       val phys = q.queryExecution.executedPlan.toString
       assert(phys.contains("SelectedBucketsCount"),
         s"file skipping must not cost bucket pruning:\n$phys")
-      val before = withRuleDisabled { scanFiles(q).map(_.size).sum }
-      val after = scanFiles(q).map(_.size).sum
+      val before = withRuleDisabled { filesRead(q) }
+      val after = filesRead(q)
       assert(after < before,
         s"no files pruned within the buckets ($after of $before)")
       assert(rows(q) === withRuleDisabled { rows(q) })

@@ -1105,10 +1105,10 @@ class StreamOpsSpec extends SparkSpec {
     // zone-map upkeep: the fold rewrote the analyzed store's files —
     // the window itself must have re-analyzed it back to full
     // coverage (and left the never-analyzed phash store pointerless)
-    val (statted, live) = graft.io.Tables
-      .fileStatsCoverage(spark, s"$root/winnow/fingerprints")
-    assert(live > 0L && statted == live,
-      s"window did not restore stats coverage: $statted/$live")
+    val fp = s"$root/winnow/fingerprints"
+    assert(graft.io.Tables.fileStats(spark, fp).nonEmpty &&
+      graft.io.Tables.refreshFileSidecars(spark, fp) == 0,
+      "window did not restore stats coverage")
     assert(graft.io.Tables
       .fileStats(spark, s"$root/phash/hashes").isEmpty,
       "the window must not analyze a store nobody asked it to")
@@ -1657,6 +1657,7 @@ class StreamOpsSpec extends SparkSpec {
 
   test("unconditional maintenance window: an analyzed store's zone-map " +
     "and Bloom sidecars are back at full coverage after the fold") {
+    import graft.io.Tables
     import spark.implicits._
     val root = java.nio.file.Files
       .createTempDirectory("graft-winside").toString
@@ -1670,17 +1671,25 @@ class StreamOpsSpec extends SparkSpec {
         Seq((10L + e, mk(s"e$e"))).toDF("doc_id", "text"),
         s"$root/phash", e)
     }
-    graft.io.Tables.computeFileStats(spark, hashes, Seq("doc_id"))
-    graft.io.Tables.computeFileBlooms(spark, hashes, "doc_id")
+    Tables.computeFileStats(spark, hashes, Seq("doc_id"))
+    // analyzed at 256 keys per file: 312-byte bitsets
+    Tables.computeFileBlooms(spark, hashes, "doc_id",
+      expectedItemsPerFile = 256L)
+    def bitsetSizes = spark.read.parquet(Tables.fileBlooms(spark, hashes)
+      .get._1).select(length(col("bloom"))).as[Int].collect().toSet
+    assert(bitsetSizes == Set(312))
+    val bloomDir = Tables.fileBlooms(spark, hashes).get._1
     runMaintenanceWindow(spark, root).collect()
     // the fold rewrote every file of the store: without the window's
-    // sidecar upkeep neither sidecar would cover a live file
-    val (statted, live) = graft.io.Tables.fileStatsCoverage(spark, hashes)
-    assert(live > 0L && statted == live,
-      s"window left stats coverage at $statted/$live")
-    val (bloomed, liveB) = graft.io.Tables.fileBloomCoverage(spark, hashes)
-    assert(liveB > 0L && bloomed == liveB,
-      s"window left Bloom coverage at $bloomed/$liveB")
+    // sidecar upkeep neither sidecar would cover a live file, and a
+    // refresh at full coverage would rebuild both
+    assert(Tables.fileBlooms(spark, hashes).get._1 != bloomDir,
+      "the window did not re-analyze the Blooms")
+    assert(Tables.refreshFileSidecars(spark, hashes) == 0,
+      "window left a sidecar below full coverage")
+    // the re-analyze keeps the sizing the sidecar was built with
+    assert(bitsetSizes == Set(312),
+      s"window rebuilt the Blooms at $bitsetSizes bytes, not 312")
     org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(root))
   }
 }
