@@ -172,9 +172,36 @@ object Tables {
       .drop("__z")
       .write.mode(SaveMode.Overwrite).parquet(path)
 
-  /** Per-partition result of a [[compactPartitions]] pass. */
+  /** Per-partition result of a [[compactPartitions]] pass;
+    * `filesAfter` counts the data files the partition holds after it. */
   final case class CompactStats(bytesBefore: Long, filesBefore: Int,
                                 filesAfter: Int)
+
+  /** The file count a compaction rewrites one partition's input
+    * `files` to, or None to leave the partition alone: it rewrites
+    * when it holds more files than one per `targetBytes` (or when
+    * `force`d), to one file per `targetBytes`. A forced rewrite can
+    * ask for as many files as it has inputs or more; only then is
+    * the count also clamped to the rows (from the parquet footers),
+    * since past the row count every extra writer task is an empty
+    * one. */
+  private def compactTarget(spark: SparkSession,
+      files: Seq[org.apache.hadoop.fs.FileStatus], targetBytes: Long,
+      force: Boolean = false): Option[Int] = {
+    val bytes = files.map(_.getLen).sum
+    val byBytes = math.max(1L, (bytes + targetBytes - 1) / targetBytes)
+    if (files.isEmpty || (files.size <= byBytes && !force)) None
+    else if (byBytes < files.size) Some(byBytes.toInt)
+    else {
+      val conf = spark.sparkContext.hadoopConfiguration
+      val rows = files.map { f =>
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf))
+        try r.getRecordCount finally r.close()
+      }.sum
+      Some(math.max(1L, math.min(byBytes, rows)).toInt)
+    }
+  }
 
   /** Bin-packing small-file compaction for a partitioned parquet table
     * — the operational cure for what incremental writes (e.g. repeated
@@ -258,15 +285,14 @@ object Tables {
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     try {
       val futures = partDirs.map { pd => Future {
-        val dataFiles = fs.listStatus(pd.getPath).toSeq.filter { f =>
+        val inputs = fs.listStatus(pd.getPath).toSeq.filter { f =>
           val n = f.getPath.getName
           f.isFile && !n.startsWith(".") && !n.startsWith("_")
         }
-        val bytes = dataFiles.map(_.getLen).sum
-        val target = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-        val after =
-          if (dataFiles.size <= target || dataFiles.isEmpty) dataFiles.size
-          else {
+        val bytes = inputs.map(_.getLen).sum
+        val after = compactTarget(spark, inputs, targetBytes) match {
+          case None => inputs.size
+          case Some(target) =>
             val name = pd.getPath.getName
             val tmp = new org.apache.hadoop.fs.Path(tmpRoot, name)
             val old = new org.apache.hadoop.fs.Path(oldRoot, name)
@@ -279,9 +305,9 @@ object Tables {
             require(fs.rename(pd.getPath, old) && fs.rename(tmp, pd.getPath),
               s"compaction swap failed for ${pd.getPath}")
             fs.delete(old, true)
-            target
-          }
-        pd.getPath.getName -> CompactStats(bytes, dataFiles.size, after)
+            dataFiles(fs, pd.getPath).size
+        }
+        pd.getPath.getName -> CompactStats(bytes, inputs.size, after)
       }}
       // lift: ALL jobs settle before anyone inspects results or touches
       // shared scratch — a thrown future must not strand running ones
@@ -891,7 +917,7 @@ object Tables {
         // back to one dir whenever it qualifies for rewrite.
         val subs = entryPaths(rel).map(sp => new org.apache.hadoop.fs.Path(
           entryDirAndBase(path, sp)._1))
-        val dataFiles = subs.flatMap { p =>
+        val inputs = subs.flatMap { p =>
           val st = fs.getFileStatus(p)
           if (st.isFile) Seq(st)
           else fs.listStatus(p).toSeq.filter { f =>
@@ -899,23 +925,25 @@ object Tables {
             f.isFile && !n.startsWith(".") && !n.startsWith("_")
           }
         }
-        val bytes = dataFiles.map(_.getLen).sum
-        val target = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
+        val bytes = inputs.map(_.getLen).sum
         // a file-carrying entry always rewrites: leaving it alone
         // would pin the superseded dir's mixed liveness forever
         val fragmented = entryPaths(rel).size > 1
-        if ((dataFiles.size <= target && !fragmented) || dataFiles.isEmpty)
-          (part, rel, CompactStats(bytes, dataFiles.size, dataFiles.size))
-        else {
-          val newRel = s"data/v$next/$part"
-          val df = spark.read.parquet(subs.map(_.toString): _*)
-          (if (clusterCols.isEmpty) df.repartition(target)
-           else df.repartitionByRange(target, clusterCols.map(col): _*)
-             .sortWithinPartitions(clusterCols.map(col): _*))
-            .write.mode(SaveMode.Overwrite).parquet(s"$path/$newRel")
-          fs.delete(new org.apache.hadoop.fs.Path(
-            s"$path/$newRel/_SUCCESS"), false)
-          (part, newRel, CompactStats(bytes, dataFiles.size, target))
+        compactTarget(spark, inputs, targetBytes, force = fragmented) match {
+          case None =>
+            (part, rel, CompactStats(bytes, inputs.size, inputs.size))
+          case Some(target) =>
+            val newRel = s"data/v$next/$part"
+            val df = spark.read.parquet(subs.map(_.toString): _*)
+            (if (clusterCols.isEmpty) df.repartition(target)
+             else df.repartitionByRange(target, clusterCols.map(col): _*)
+               .sortWithinPartitions(clusterCols.map(col): _*))
+              .write.mode(SaveMode.Overwrite).parquet(s"$path/$newRel")
+            val written = new org.apache.hadoop.fs.Path(s"$path/$newRel")
+            fs.delete(new org.apache.hadoop.fs.Path(written, "_SUCCESS"),
+              false)
+            (part, newRel,
+              CompactStats(bytes, inputs.size, dataFiles(fs, written).size))
         }
       }}
       val settled = Await.result(
@@ -1071,11 +1099,8 @@ object Tables {
         !p.exists(c => c == '\t' || c == '\n'),
         s"expectation '$n' contains tab/newline") }
     val ptr = expectationsPtr(path)
-    val fs = fsFor(spark, ptr)
-    val out = fs.create(ptr, true)
-    try out.write(rules.map { case (n, p) => s"$n\t$p" }
-      .mkString("\n").getBytes("UTF-8"))
-    finally out.close()
+    replaceSmallFile(fsFor(spark, ptr), ptr,
+      rules.map { case (n, p) => s"$n\t$p" }.mkString("\n"))
   }
 
   /** The archive's declared expectations, in declaration order;
@@ -2744,7 +2769,6 @@ object Tables {
       registryDir: String, name: String,
       reg: graft.plans.LiveArchives.LiveReg): Unit = {
     val f = liveSqlRegFile(registryDir, name)
-    val fs = fsFor(spark, f)
     def opt(v: Option[String]) = v.getOrElse("-")
     val body = Seq(
       reg.path,
@@ -2755,9 +2779,7 @@ object Tables {
       else reg.consistentRoots.mkString("\t"),
       reg.layout.name
     ).mkString("\n")
-    val out = fs.create(f, true)
-    try out.write(body.getBytes("UTF-8"))
-    finally out.close()
+    replaceSmallFile(fsFor(spark, f), f, body)
   }
 
   /** Register every name persisted in `registryDir`'s live-SQL
@@ -2771,7 +2793,10 @@ object Tables {
       s"${registryDir.stripSuffix("/")}/_graft_livesql")
     val fs = fsFor(spark, dir)
     if (!fs.exists(dir)) return Nil
-    fs.listStatus(dir).toSeq.filter(_.isFile)
+    // a name never contains '.', so a dot-named file is a staged
+    // write of [[replaceSmallFile]] (in flight, or left by a crash)
+    fs.listStatus(dir).toSeq
+      .filter(f => f.isFile && !f.getPath.getName.startsWith("."))
       .map(_.getPath).sortBy(_.getName).map { f =>
         val name = f.getName
         readSmallFile(fs, f).split("\n", -1) match {
@@ -3365,10 +3390,8 @@ object Tables {
         if (snap.stamp.nonEmpty &&
             snap.stamp == layout.snapshot(spark, path).stamp) {
           val ptr = dvPtrPath(path, layout)
-          val out = fsFor(spark, ptr).create(ptr, true)
-          try out.write(layout.encodeDv(dir, insTombMax, delTombMax, snap)
-            .getBytes("UTF-8"))
-          finally out.close()
+          replaceSmallFile(fsFor(spark, ptr), ptr,
+            layout.encodeDv(dir, insTombMax, delTombMax, snap))
         }
         spark.read.parquet(dir).count()
     }
@@ -3967,9 +3990,7 @@ object Tables {
                                 epoch: Long, delEpoch: Long,
                                 buckets: Int): Unit = {
     val p = cursorPath(mirrorPath)
-    val out = fsFor(spark, p).create(p, true)
-    try out.write(s"$epoch\n$delEpoch\n$buckets".getBytes("UTF-8"))
-    finally out.close()
+    replaceSmallFile(fsFor(spark, p), p, s"$epoch\n$delEpoch\n$buckets")
   }
 
   /** The mirror's rows without its internal bucketing column. */
@@ -4195,29 +4216,16 @@ object Tables {
     * null (null-safe group equality throughout); `count(*)` is kept
     * as `n_rows` and each `sumCols` column as `sum_<name>`; a group
     * whose count reaches zero leaves the table. Cursor discipline,
-    * fold-horizon resync, and noop behavior are [[syncMirror]]'s. */
+    * fold-horizon resync, and noop behavior are [[syncMirror]]'s;
+    * `untilEpoch` is its watermark cap. */
   def syncAggregate(spark: SparkSession, srcPath: String, srcTomb: String,
-                    keyCol: String, groupCols: Seq[String],
-                    sumCols: Seq[String], aggPath: String,
-                    buckets: Int = 32,
-                    untilEpoch: Option[Long] = None): AggSyncReport =
-    syncAggregateFrom(spark, readManifested(spark, srcPath), srcPath,
-      srcTomb, keyCol, groupCols, sumCols, aggPath, buckets, untilEpoch)
-
-  /** [[syncAggregate]] over an EXPLICIT source frame — the same
-    * engine for epoch-partitioned stores that are not manifested
-    * (the streaming corpus store's plain layout): `arch` must carry
-    * a long-comparable `ingest_epoch`, and `srcPath` still anchors
-    * the fold horizon ([[foldHorizon]]) and the resync rule.
-    * `untilEpoch` is [[syncMirror]]'s watermark cap. */
-  private[graft] def syncAggregateFrom(spark: SparkSession,
-                    arch: DataFrame, srcPath: String, srcTomb: String,
                     keyCol: String, groupCols: Seq[String],
                     sumCols: Seq[String], aggPath: String,
                     buckets: Int = 32,
                     untilEpoch: Option[Long] = None): AggSyncReport = {
     require(buckets >= 1, "buckets must be positive")
     require(groupCols.nonEmpty, "syncAggregate needs group columns")
+    val arch = readManifested(spark, srcPath)
     val (insTombMax, delTombMax) =
       readTombstonesWithEpochs(spark, srcTomb)
         .map(laneMaxes).getOrElse((-1L, -1L))
@@ -4575,8 +4583,10 @@ object Tables {
     * rename(2)), and the checksum file of an earlier Hadoop write is
     * dropped first — a `.crc` of older bytes would fail every later
     * read. Elsewhere a rename that refuses an existing destination
-    * (HDFS) falls back to delete-then-rename, whose gap reads as "no
-    * pointer", i.e. an unpruned scan. */
+    * (HDFS) falls back to delete-then-rename, whose gap reads as a
+    * missing file (for a sidecar pointer, an unpruned scan). Every
+    * pointer, cursor and registry entry the engine rewrites goes
+    * through here. */
   private def replaceSmallFile(fs: org.apache.hadoop.fs.FileSystem,
                                dest: org.apache.hadoop.fs.Path,
                                body: String): Unit = {
@@ -4585,6 +4595,7 @@ object Tables {
     if (fs.getScheme == "file") {
       val d = java.nio.file.Paths.get(dest.toUri.getPath)
       val t = java.nio.file.Paths.get(tmp.toUri.getPath)
+      java.nio.file.Files.createDirectories(t.getParent)
       java.nio.file.Files.write(t, body.getBytes("UTF-8"))
       java.nio.file.Files.deleteIfExists(
         d.resolveSibling(s".${dest.getName}.crc"))

@@ -662,7 +662,7 @@ object ScaleOps {
     * non-current bucketed version dir). Epoch count, dead-dir
     * discovery and version count are FS METADATA (driver-side
     * listings — the compaction-service shape); the two row counts are
-    * distributed jobs. */
+    * distributed jobs. A table a fold emptied holds no live rows. */
   private[graft] final case class ArchiveHealth(
       store: String, n_epochs: Int, n_live_rows: Long,
       n_tombstones: Long, manifest_versions: Int,
@@ -672,8 +672,9 @@ object ScaleOps {
       path: String, tombPath: String, keyCol: String,
       layout: Tables.Layout = Tables.Layout.Manifested): ArchiveHealth = {
     val f = layout.health(s, path)
-    val live = Tables.minusTombstones(
-      layout.read(s, path), tombPath, keyCol).count()
+    val snap = layout.snapshot(s, path)
+    val live = if (snap.empty) 0L
+      else Tables.minusTombstones(snap.data, tombPath, keyCol).count()
     val nTomb = Tables.readTombstones(s, tombPath, keyCol)
       .map(_.count()).getOrElse(0L)
     ArchiveHealth(store, f.epochs, live, nTomb, f.versions,

@@ -666,8 +666,8 @@ object TextOps {
       // words): committing an empty manifest would permanently wedge
       // every later epoch's readManifested — defer archive creation
       // to the first epoch that actually lands fingerprints (the
-      // ingestBatch hasLanded discipline; the probe side above
-      // already treats a missing manifest as an empty archive)
+      // probe side above already treats a missing manifest as an
+      // empty archive)
       if (!fps.isEmpty)
         Tables.writeManifested(fps, fpPath, Seq("ingest_epoch"))
     }

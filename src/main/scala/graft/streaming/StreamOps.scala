@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
@@ -30,8 +30,11 @@ import graft.io.Tables
   *    policy-driven and vector variants) fold, vacuum and re-analyze
   *    each store under one topology lease.
   * Every store is described once ([[documentStores]],
-  * [[vectorStores]]); each stream drains through [[drainBatches]],
-  * whose checkpoint makes a crashed epoch replay under its own number.
+  * [[vectorStores]]) as tables of one [[graft.io.Tables.Layout]] —
+  * the corpus store too — so each is folded, vacuumed, masked and
+  * read behind its commit pointer the same way; each stream drains
+  * through [[drainBatches]], whose checkpoint makes a crashed epoch
+  * replay under its own number.
   */
 object StreamOps {
 
@@ -116,23 +119,31 @@ object StreamOps {
 
   // ---------- The corpus store ----------
 
-  /** The corpus store's tombstone table ([[corpusStore]]). */
+  /** The corpus store's tombstone table. */
   private[graft] def corpusTombstonePath(corpusPath: String): String =
-    corpusStore(corpusPath).tombstones
+    s"${corpusPath.stripSuffix("/")}/tombstones"
 
   /** The corpus read view every consumer should use: landed docs
-    * minus live tombstones. Deletion reaches the corpus STORE, not
-    * just the derived indexes — [[runFrontDoorDeletes]] masks here
-    * immediately (the corpus' tombstones live at the SIBLING path
-    * [[corpusStore]] names, not under a `/tombstones` segment), and
-    * [[ingestBatch]]'s
-    * dedup-vs-corpus probe uses the same mask so a deleted doc stops
-    * being a dedup anchor (a fresh identical arrival lands as NEW
-    * content rather than being suppressed by a ghost). */
-  def corpusView(spark: SparkSession, corpusPath: String): DataFrame =
+    * minus live tombstones, over the manifested snapshot. Deletion
+    * reaches the corpus STORE, not just the derived indexes —
+    * [[runFrontDoorDeletes]] masks here immediately, and
+    * [[ingestBatch]]'s dedup-vs-corpus probe uses the same mask so a
+    * deleted doc stops being a dedup anchor (a fresh identical
+    * arrival lands as NEW content rather than being suppressed by a
+    * ghost). A corpus whose manifest lists no partitions (an
+    * all-filtered first epoch, or a fold that deleted every doc)
+    * reads as an empty frame of the columns [[ingestBatch]] lands;
+    * one never written fails loudly. `ingest_epoch` reads as a long
+    * either way, whatever type partition discovery infers. */
+  def corpusView(spark: SparkSession, corpusPath: String): DataFrame = {
+    val snap = Tables.Layout.Manifested.snapshot(spark, corpusPath)
     Tables.minusTombstones(
-      spark.read.parquet(corpusPath),
+      if (snap.empty) spark.createDataFrame(
+        java.util.Collections.emptyList[Row](), corpusSchema)
+      else snap.data.withColumn("ingest_epoch",
+        col("ingest_epoch").cast("long")),
       corpusTombstonePath(corpusPath), "doc_id")
+  }
 
   /** [[corpusView]] at the topology's committed watermark — the view
     * for consumers that JOIN the corpus against the derived archives:
@@ -143,108 +154,25 @@ object StreamOps {
   def consistentCorpusView(spark: SparkSession, root: String): DataFrame =
     Tables.consistentView(corpusView(spark, s"$root/corpus"), root)
 
-  /** Physical tombstone fold for the corpus store — the same verb the
-    * manifested archives get from their epoch compactions, adapted to
-    * the corpus' plain epoch-partitioned layout: every epoch below the
-    * high-water mark that holds tombstoned docs is rewritten without
-    * them via dynamic partition overwrite (an epoch left EMPTY by the
-    * rewrite is deleted outright — dynamic overwrite only touches
-    * partitions it writes); victims in the newest epoch stay physical
-    * but masked (a stream crash-replay re-lands exactly that epoch
-    * from its staged files, which would silently resurrect a folded
-    * delete — the carry rule every archive fold here applies), and
-    * their tombstones stay live until the next fold. NOTE the corpus
-    * store is deliberately NOT reader-isolated (it is the ingest
-    * pipeline's internal substrate, single-writer by construction —
-    * the manifested pointer machinery is reserved for the SERVED
-    * archives); a fold runs in the same maintenance window as the
-    * ingest stream it serves. Returns the folded high-water epoch,
-    * -1 for a no-op. */
-  def foldCorpusTombstones(spark: SparkSession, corpusPath: String): Long = {
-    val tombPath = corpusTombstonePath(corpusPath)
-    val tombOpt = Tables.readTombstones(spark, tombPath, "doc_id")
-    if (tombOpt.isEmpty) return -1L
-    val td = tombOpt.get.localCheckpoint()
-    // partition-column values are type-inferred on read → pin to long
-    val all = spark.read.parquet(corpusPath)
-      .withColumn("ingest_epoch", col("ingest_epoch").cast("long"))
-    val maxE = all.agg(max(col("ingest_epoch"))).head().getLong(0)
-    val victims = all.join(broadcast(td), Seq("doc_id"), "left_semi")
-      .where(col("ingest_epoch") < maxE)
-    // epoch → (has victims, survivor count): drives rewrite vs delete
-    val plan = victims.groupBy(col("ingest_epoch"))
-      .agg(count(lit(1)).as("n_victims"))
-      .join(all.groupBy(col("ingest_epoch"))
-        .agg(count(lit(1)).as("n_total")), Seq("ingest_epoch"))
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(2) - r.getLong(1)))
-    val (emptied, rewrite) = plan.partition(_._2 == 0L)
-    if (rewrite.nonEmpty) {
-      val es = rewrite.map(_._1)
-      // localCheckpoint severs the self-read: the survivor frame is
-      // fully materialized BEFORE the dynamic overwrite deletes the
-      // partitions it was derived from, so the rewrite's correctness
-      // no longer depends on Spark's handling of a same-path
-      // read-then-overwrite (the shape insertInto rejects outright),
-      // and a crash inside the overwrite commit loses nothing that
-      // the materialized frame + replay can't restore
-      val survivors = all.where(col("ingest_epoch").isInCollection(es))
-        .join(broadcast(td), Seq("doc_id"), "left_anti")
-        .localCheckpoint()
-      survivors.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("ingest_epoch")
-        .parquet(corpusPath)
-      graft.ops.Ckpt.release(survivors)
-    }
-    val root = new org.apache.hadoop.fs.Path(corpusPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    emptied.foreach { case (e, _) =>
-      fs.delete(new org.apache.hadoop.fs.Path(root,
-        s"ingest_epoch=$e"), true)
-    }
-    // retire every tombstone except newest-epoch victims (carry rule)
-    val (insTombMax, delTombMax) =
-      Tables.readTombstonesWithEpochs(spark, tombPath)
-        .map(Tables.laneMaxes).getOrElse((-1L, -1L))
-    Tables.retireTombstones(spark, tombPath, td,
-      all.where(col("ingest_epoch") === maxE)
-        .select(col("doc_id")).distinct())
-    // the retire destroys DELETE attribution (cleared outright, or
-    // carried tombstones re-stamped at epoch 0): record the horizon
-    // so a corpus change-feed consumer ([[syncCorpusAggregate]])
-    // behind it resyncs loudly instead of missing deletes — per LANE
-    // (batch-API vs streaming-offset delete epochs have separate
-    // cursors); insert attribution is untouched (epochs keep their
-    // values here), so only the retired delete epochs record
-    Tables.recordFoldHorizon(spark, corpusPath, insTombMax)
-    Tables.recordFoldHorizon(spark, corpusPath, delTombMax)
-    // deterministic block release: Dataset.unpersist is a documented
-    // NO-OP for localCheckpoint'd frames (Ckpt.scala) — on this
-    // long-running maintenance path the blocks must not wait for the
-    // ContextCleaner
-    graft.ops.Ckpt.release(td)
-    maxE
-  }
-
   /** Engine-maintained GROUP BY aggregate over the corpus store —
     * [[graft.io.Tables.syncAggregate]] (incremental view maintenance
-    * over the change feed) adapted to the corpus' plain
-    * epoch-partitioned layout: corpus statistics a 100 TB deployment
-    * watches continuously (per-language/per-source row and byte
-    * counts) stay current for the cost of each sync's feed delta, and
-    * a [[foldCorpusTombstones]] that retired delete attribution the
-    * consumer hadn't seen forces a loud full RESYNC via the fold
-    * horizon the fold now records. */
+    * over the change feed) on the corpus and its tombstones: corpus
+    * statistics a 100 TB deployment watches continuously
+    * (per-language/per-source row and byte counts) stay current for
+    * the cost of each sync's feed delta, and a fold that retired
+    * delete attribution the consumer hadn't seen forces a loud full
+    * RESYNC via the fold horizon. */
   def syncCorpusAggregate(spark: SparkSession, corpusPath: String,
                           groupCols: Seq[String], sumCols: Seq[String],
                           aggPath: String, buckets: Int = 32)
       : Tables.AggSyncReport =
-    Tables.syncAggregateFrom(spark,
-      spark.read.parquet(corpusPath)
-        .withColumn("ingest_epoch", col("ingest_epoch").cast("long")),
-      corpusPath, corpusTombstonePath(corpusPath), "doc_id",
-      groupCols, sumCols, aggPath, buckets)
+    Tables.syncAggregate(spark, corpusPath, corpusTombstonePath(corpusPath),
+      "doc_id", groupCols, sumCols, aggPath, buckets)
+
+  /** The corpus columns [[ingestBatch]] lands from a documents
+    * batch: the batch's, its content hash and the epoch partition. */
+  private val corpusSchema: StructType = documentsSchema
+    .add("fp", StringType).add("ingest_epoch", LongType)
 
   /** One micro-batch of corpus ingest under `epoch` — the front door's
     * first stage, and the verb a batch job calls once per epoch (a
@@ -256,9 +184,13 @@ object StreamOps {
     *      (the batch-vs-corpus shape of dedup_incremental — cost
     *      scales with the batch; at 100 TB the probe is a broadcast
     *      of the BATCH hashes against the bucketed corpus table);
-    *   4. land survivors under `ingest_epoch=<epoch>` via DYNAMIC
-    *      partition overwrite — a replayed epoch rewrites exactly its
-    *      own partition, so crash-replay is idempotent.
+    *   4. land survivors as partition `ingest_epoch=<epoch>` through
+    *      the manifested replace-or-add commit
+    *      ([[graft.io.Tables.upsertManifested]]) — a replayed epoch
+    *      replaces exactly its own partition, so crash-replay is
+    *      idempotent, and a concurrent [[corpusView]] resolves the
+    *      old or the new manifest, never one missing the epoch. The
+    *      first epoch bootstraps the table, survivors or not.
     * The corpus read EXCLUDES the current epoch's partition: on
     * replay, the epoch's own previous (possibly partial) output must
     * not anti-join the batch against itself — without the exclusion a
@@ -303,26 +235,17 @@ object StreamOps {
     val batchUnique = withFp
       .withColumn("__canon", min(col("doc_id")).over(wb))
       .where(col("doc_id") === col("__canon")).drop("__canon")
-    val live = new org.apache.hadoop.fs.Path(corpusPath)
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // "corpus exists" must mean "has landed partitions", not "the
-    // directory exists": an epoch whose survivors are EMPTY still
-    // creates the directory (with only _SUCCESS), and reading that
-    // throws UNABLE_TO_INFER_SCHEMA — which would wedge every
-    // subsequent epoch of the stream on the corpus-dedup read
-    val hasLanded = fs.exists(live) && fs.listStatus(live)
-      .exists(st => st.isDirectory && st.getPath.getName.contains("="))
+    val exists = Tables.Layout.Manifested.exists(spark, corpusPath)
     val fresh =
-      if (hasLanded) {
-        // tombstone-masked: a deleted (right-to-be-forgotten) doc must
-        // not survive as a dedup ANCHOR either — its content hash is
-        // derived from the removed text, and suppressing a fresh
-        // arrival against the ghost would both retain its signature
-        // and silently drop content the corpus no longer holds
-        val landed = Tables.minusTombstones(
-            spark.read.parquet(corpusPath)
-              .where(col("ingest_epoch") =!= epoch),
-            corpusTombstonePath(corpusPath), "doc_id")
+      if (exists) {
+        // tombstone-masked (corpusView): a deleted
+        // (right-to-be-forgotten) doc must not survive as a dedup
+        // ANCHOR either — its content hash is derived from the removed
+        // text, and suppressing a fresh arrival against the ghost
+        // would both retain its signature and silently drop content
+        // the corpus no longer holds
+        val landed = corpusView(spark, corpusPath)
+          .where(col("ingest_epoch") =!= epoch)
         // scalable anti-join shape: a naive batch-ANTI-corpus would
         // have to broadcast the CORPUS side (anti joins only broadcast
         // their right input). Instead, semi-join the corpus against
@@ -334,11 +257,11 @@ object StreamOps {
           broadcast(batchUnique.select(col("fp"))), Seq("fp"), "left_semi")
         batchUnique.join(broadcast(seen), Seq("fp"), "left_anti")
       } else batchUnique
-    fresh.withColumn("ingest_epoch", lit(epoch))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("ingest_epoch")
-      .parquet(corpusPath)
+    val landing = fresh.withColumn("ingest_epoch", lit(epoch))
+    // equality, not a prefix: replaying epoch 1 must not drop 10-19
+    if (exists) Tables.upsertManifested(landing, corpusPath,
+      Seq("ingest_epoch"), _ == s"ingest_epoch=$epoch")
+    else Tables.writeManifested(landing, corpusPath, Seq("ingest_epoch"))
   }
 
   // ---------- The composed curation front door ----------
@@ -433,8 +356,8 @@ object StreamOps {
     * and the split repair runs as the archive's MAINTENANCE step
     * ([[graft.ops.Curation.clusterDeleteIds]], the same body the
     * gated `q_cluster_delete` drives), ordered against ingest by the
-    * maintenance window — the same single-writer-per-window contract
-    * the corpus fold documents. */
+    * maintenance window — the single-writer-per-window contract every
+    * fold documents. */
   def runFrontDoorDeletes(ids: DataFrame, root: String,
                           checkpoint: String): Unit =
     drainDeletes(ids, checkpoint)(b =>
@@ -570,10 +493,8 @@ object StreamOps {
     * iterate [[documentStores]] / [[vectorStores]] instead of naming
     * paths:
     *  - `name`: the store's row in the policy-driven windows' output;
-    *  - `tables`: its data tables; the FIRST decides whether a
-    *    policy-driven window acts. A store with no tables (the
-    *    corpus: a plain epoch-partitioned directory) acts whenever it
-    *    holds live tombstones and reports no health row;
+    *  - `tables`: its data tables, at least one; the FIRST decides
+    *    whether a policy-driven window acts;
     *  - `tombstones`, `key`: its tombstone table and the key column
     *    it masks;
     *  - `fold`: its epoch fold, one call across all its tables.
@@ -593,20 +514,13 @@ object StreamOps {
       key, s => Tables.foldEpochs(s,
         Seq(Tables.EpochTable(path, layout)), tombstones, key))
 
-  /** The corpus store. Its tombstone table lives at a SIBLING path:
-    * the corpus itself is a plain epoch-partitioned parquet table
-    * (not manifested), so a `tombstones/` subdirectory would corrupt
-    * its partition discovery. */
-  private[graft] def corpusStore(corpusPath: String): Store =
-    Store("corpus", Nil, s"${corpusPath.stripSuffix("/")}_tombstones",
-      "doc_id", foldCorpusTombstones(_, corpusPath))
-
   /** The document topology [[runFrontDoor]] maintains under `root`,
     * every store keyed on doc_id. */
   private[graft] def documentStores(root: String): Seq[Store] = {
     def tomb(n: String) = s"$root/$n/tombstones"
     Seq(
-      corpusStore(s"$root/corpus"),
+      epochStore("corpus", s"$root/corpus",
+        corpusTombstonePath(s"$root/corpus"), "doc_id"),
       epochStore("winnow", s"$root/winnow/fingerprints", tomb("winnow"),
         "doc_id"),
       // the fold spans labels + postings + sizes
@@ -706,22 +620,17 @@ object StreamOps {
       graft.ops.ScaleOps.archiveHealth(s, name, t.path, st.tombstones,
         st.key, t.layout)
     def vacuum(t: StoreTable): Unit = t.layout.vacuum(s, t.path)
-    val live = stores.filter(st => st.tables.headOption
-      .fold(Tables.manifestExists(s, st.tombstones))(exists))
+    val live = stores.filter(st => exists(st.tables.head))
     val decisions = live.flatMap { st =>
-      val decided = if (!policy) None else st.tables.headOption.map { t =>
-        val h = health(st.name, t, st)
+      val decided = Option.when(policy) {
+        val h = health(st.name, st.tables.head, st)
         (h, graft.ops.ScaleOps.maintenanceDue(h))
       }
-      val (foldDue, vacDue) = decided match {
-        case Some((_, (fd, _, vd, _))) => (fd, vd)
-        case None if policy => (Tables.readTombstones(s, st.tombstones,
-          st.key).nonEmpty, false)
-        case None => (true, true)
-      }
+      val (foldDue, vacDue) =
+        decided.fold((true, true)) { case (_, (fd, _, vd, _)) => (fd, vd) }
       val acted = foldDue || vacDue
       if (foldDue) st.fold(s)
-      if (vacDue) st.tables.headOption.foreach(vacuum)
+      if (vacDue) vacuum(st.tables.head)
       if (acted) {
         st.tables.drop(1).filter(exists).foreach(vacuum)
         if (Tables.manifestExists(s, st.tombstones))
@@ -749,8 +658,7 @@ object StreamOps {
   /** The front door's MAINTENANCE WINDOW as one entry point — the
     * scheduled job that runs between streaming windows under the
     * single-writer-per-window contract every fold documents: every
-    * [[documentStores]] store folds (the corpus store's tombstones;
-    * every derived archive's epoch layers, physical deletes
+    * [[documentStores]] store folds its epoch layers (physical deletes
     * included), vacuums and refreshes its analyzed sidecars
     * ([[runWindow]]), and the window returns one
     * [[graft.ops.ScaleOps.ArchiveHealth]] row per reporting table —
@@ -779,8 +687,7 @@ object StreamOps {
     * not it accumulated anything, and the fold IS the expensive step.
     * Multi-table stores fold together (the cluster fold spans
     * labels+postings+sizes; the token fold spans postings+doclen).
-    * The corpus store folds when it has live tombstones (trivially
-    * "due": its fold only does delete work). Returns one row per
+    * Returns one row per
     * store: the pre-sweep counters, the decisions, and whether the
     * store acted. StreamOpsSpec pins: due stores fold (epoch layers
     * collapse), quiescent stores keep their manifest version

@@ -714,9 +714,8 @@ class PlanSpec extends SparkSpec {
     import spark.implicits._
     val root = java.nio.file.Files.createTempDirectory("graft-fdprune")
     val corpus = root.resolve("corpus").toString
-    Seq((1L, "a", 0L), (2L, "b", 1L))
-      .toDF("doc_id", "text", "ingest_epoch")
-      .write.partitionBy("ingest_epoch").parquet(corpus)
+    Tables.writeManifested(Seq((1L, "a", 0L), (2L, "b", 1L))
+      .toDF("doc_id", "text", "ingest_epoch"), corpus, Seq("ingest_epoch"))
     val survivors = graft.streaming.StreamOps
       .corpusView(spark, corpus)
       .where(col("ingest_epoch").cast("long") === 1L)

@@ -160,12 +160,19 @@ class AppendSpec extends SparkSpec {
       "vacuum reclaimed a dir a fragmented entry still references")
     // compaction (tiny target forces rewrites) collapses the
     // multi-path entries back to single dirs
-    Tables.compactManifested(spark, p, targetBytes = 1L)
+    val compacted = Tables.compactManifested(spark, p, targetBytes = 1L)
     val (_, parts) = Tables.resolveManifest(spark, p)
     assert(parts.values.forall(!_.contains("||")),
       s"compaction left fragmented entries: $parts")
     assert(rows(Tables.readManifested(spark, p)) ===
       rows(docs(0L, 600L)))
+    // the reported file count is the files the new entry holds
+    compacted.foreach { case (part, st) =>
+      val written = new java.io.File(s"$p/${parts(part)}").listFiles()
+        .count(f => f.isFile && !f.getName.startsWith(".") &&
+          !f.getName.startsWith("_"))
+      assert(st.filesAfter === written, s"$part: $st")
+    }
     org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(root))
   }
 }

@@ -112,6 +112,14 @@ class LiveRegistrySpec extends SparkSpec {
     assert(s2.sql("SELECT count(*) FROM reg_masked")
       .head().getLong(0) === 48L,
       "a load is a snapshot: the earlier session keeps its entry")
+    // a staged entry write that never moved into place (a registrar
+    // mid-write, or one that crashed) is not a registered name
+    val stray = new java.io.FileOutputStream(
+      s"$root/_graft_livesql/.reg_late.tmp-${java.util.UUID.randomUUID}")
+    stray.write(s"$p\n-\n-\n-\n-\nmanifested".getBytes("UTF-8"))
+    stray.close()
+    assert(Tables.loadLiveSqlRegistry(spark.newSession(), root) ===
+      Seq("reg_arch"))
     // a garbled entry is loud, not silently skipped — including the
     // removed 5-line form (no layout field)
     Seq("only-one-line", s"$root/arch\n-\n-\n-\n-").foreach { body =>

@@ -1,5 +1,7 @@
 package graft.streaming
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -88,7 +90,7 @@ class StreamOpsSpec extends SparkSpec {
         ingestBatch(docs(rows), e.toLong, corpus)
       }
 
-    def snapshot() = spark.read.parquet(corpus)
+    def snapshot() = graft.io.Tables.readManifested(spark, corpus)
       .select(col("doc_id"), col("fp"), col("text"),
         col("ingest_epoch").cast("long"))
       .collect().map(r => (r.getLong(0), r.getString(1),
@@ -105,6 +107,53 @@ class StreamOpsSpec extends SparkSpec {
     val epochD = landed.find(_._3 == td).get._4
     ingestBatch(docs(file3), epochD, corpus)
     assert(snapshot() == landed, "epoch replay changed the corpus")
+
+    // the replay replaces exactly its own epoch: replaying epoch 1
+    // after epochs 10 and 11 landed leaves them in place
+    Seq(10L -> Seq(doc(9, mk("e"))), 11L -> Seq(doc(10, mk("f"))))
+      .foreach { case (e, rows) => ingestBatch(docs(rows), e, corpus) }
+    val later = snapshot()
+    assert(later.map(_._4) == Set(0L, 1L, 2L, 10L, 11L),
+      s"epochs landed: ${later.map(_._4)}")
+    ingestBatch(docs(Seq(doc(3, tb), doc(4, tc), doc(5, spam))), 1L, corpus)
+    assert(snapshot() == later, "replaying epoch 1 moved epochs 10 and 11")
+  }
+
+  test("a corpus read racing a replayed epoch's commit still sees the " +
+    "epoch: the replay replaces it behind the manifest pointer") {
+    import spark.implicits._
+    def mk(p: String) = (0 until 60).map(i => s"$p$i").mkString(" ")
+    def docs(rows: (Long, String)*) =
+      rows.map { case (id, tx) => (id, tx, "en", "srcR", tx.length.toLong) }
+        .toSeq.toDF("doc_id", "text", "lang", "source", "n_chars")
+    val root = java.nio.file.Files.createTempDirectory("graft-corprace")
+    val corpus = root.resolve("corpus").toString
+    ingestBatch(docs(1L -> mk("a")), 0L, corpus)
+    val epoch1 = docs(2L -> mk("b"), 3L -> mk("c"))
+    ingestBatch(epoch1, 1L, corpus)
+    // read the epoch at every rename onto an epoch directory the
+    // replay's commit makes — the instant a partition swap would have
+    // removed the old copy before renaming the new one in
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Set[Long]]()
+    EpochRenameHookFs.hook = Some { dst =>
+      if (dst.startsWith(corpus))
+        seen add corpusView(spark, corpus)
+          .where(col("ingest_epoch").cast("long") === 1L)
+          .select("doc_id").as[Long].collect().toSet
+    }
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.file.impl", classOf[EpochRenameHookFs].getName)
+    conf.setBoolean("fs.file.impl.disable.cache", true)
+    try ingestBatch(epoch1, 1L, corpus)
+    finally {
+      EpochRenameHookFs.hook = None
+      conf.unset("fs.file.impl")
+      conf.unset("fs.file.impl.disable.cache")
+    }
+    assert(!seen.isEmpty, "no read raced the commit")
+    assert(seen.asScala.forall(_ == Set(2L, 3L)),
+      s"a concurrent read missed the replayed epoch: $seen")
+    org.apache.hadoop.fs.FileUtil.fullyDelete(root.toFile)
   }
 
   test("streaming near-dup probe: later batches flag verbatim overlaps " +
@@ -178,7 +227,7 @@ class StreamOpsSpec extends SparkSpec {
         ingestBatch(rows.toDF("doc_id", "text", "lang", "source", "n_chars"),
           e.toLong, corpus)
       }
-    val landed = spark.read.parquet(corpus)
+    val landed = graft.io.Tables.readManifested(spark, corpus)
       .select(col("doc_id")).collect().map(_.getLong(0)).toSet
     assert(landed == Set(3L, 4L),
       s"empty first epoch wedged or polluted the corpus: $landed")
@@ -512,8 +561,9 @@ class StreamOpsSpec extends SparkSpec {
       maskedIds(s"$root/phash/hashes") == prePhash &&
       maskedIds(s"$root/audio/hashes") == preAudio,
       "sweep changed a masked archive view")
-    assert(health.keySet == Set("winnow", "clusters", "cluster_sizes",
-      "doclen", "phash", "audio"), s"health stores: ${health.keySet}")
+    assert(health.keySet == Set("corpus", "winnow", "clusters",
+      "cluster_sizes", "doclen", "phash", "audio"),
+      s"health stores: ${health.keySet}")
     health.foreach { case (store, (nEpochs, versions, deadDirs, deadB)) =>
       assert(versions == 1 && deadDirs == 0 && deadB == 0L,
         s"$store counters not reset: v=$versions dead=$deadDirs/$deadB")
@@ -554,20 +604,23 @@ class StreamOpsSpec extends SparkSpec {
     assert(ids() == Set(2L, 21L),
       "ghost anchor suppressed a fresh arrival after deletion")
 
-    // physical fold: doc 1 (old epoch) is erased from disk; a
-    // tombstoned doc in the NEWEST epoch stays physical-but-masked
+    // physical fold: doc 1 (old epoch) and doc 21 (NEWEST epoch) are
+    // erased from disk, but the newest epoch's tombstone is carried
     // (crash-replay carry rule) until the next fold
     graft.io.Tables.ingestTombstones(Seq(21L).toDF("doc_id"),
       corpusTombstonePath(corpus), epoch = 2L)
     assert(ids() == Set(2L))
-    val folded = foldCorpusTombstones(spark, corpus)
+    val schema = corpusView(spark, corpus).schema
+    val folded = graft.io.Tables.foldEpochs(spark,
+      Seq(graft.io.Tables.EpochTable(corpus)), corpusTombstonePath(corpus),
+      "doc_id")
     assert(folded == 2L, s"fold returned $folded")
     assert(ids() == Set(2L), "fold changed the corpus view")
-    val raw = spark.read.parquet(corpus)
+    val raw = graft.io.Tables.readManifested(spark, corpus)
       .select("doc_id").as[Long].collect().toSet
     assert(!raw.contains(1L), "old-epoch victim survived the fold on disk")
-    assert(raw.contains(21L),
-      "newest-epoch victim must stay physical until the next fold")
+    assert(!raw.contains(21L),
+      "newest-epoch victim survived the fold on disk")
     // epoch 0 lost doc 1 but keeps doc 2; only the carried
     // newest-epoch victim may stay tombstoned
     val tombs = graft.io.Tables.readTombstones(spark,
@@ -579,6 +632,19 @@ class StreamOpsSpec extends SparkSpec {
     // carried tombstone keeps it invisible
     ingestBatch(docs(21L -> ta), 2L, corpus)
     assert(ids() == Set(2L), "replay resurrected a folded delete")
+
+    // forget every doc: the window's fold empties the corpus, which
+    // then reads empty with the columns and types it had, and the
+    // next epoch lands normally
+    graft.io.Tables.ingestTombstones(Seq(2L).toDF("doc_id"),
+      corpusTombstonePath(corpus), epoch = 3L)
+    runMaintenanceWindow(spark, root.toString).collect()
+    assert(graft.io.Tables.resolveManifest(spark, corpus)._2.isEmpty,
+      "the fold left rows on disk")
+    assert(ids().isEmpty && corpusView(spark, corpus).schema == schema,
+      s"emptied corpus reads ${corpusView(spark, corpus).schema}")
+    ingestBatch(docs(31L -> mk("z")), 4L, corpus)
+    assert(ids() == Set(31L), "an epoch after the emptying fold")
   }
 
   test("streaming audio-fingerprint ingest: stream-landed fingerprints " +
@@ -854,8 +920,9 @@ class StreamOpsSpec extends SparkSpec {
       "deleted vector still visible in the sem archive after the sweep")
   }
 
-  test("the front door's delete leg targets the corpus' SIBLING " +
-    "tombstone table — the view masks streamed deletes immediately") {
+  test("the front door's delete leg targets the corpus' own " +
+    "tombstone table — the view masks streamed deletes immediately, " +
+    "and a corpus vacuum leaves that table readable") {
     import spark.implicits._
     def mk(p: String) = (0 until 60).map(i => s"$p$i").mkString(" ")
     def docs(rows: (Long, String)*) =
@@ -880,12 +947,23 @@ class StreamOpsSpec extends SparkSpec {
       .select("doc_id").as[Long].collect().toSet
     assert(live == Set(2L),
       s"streamed corpus delete did not mask the view: $live")
-    // and the tombstones landed at the sibling path corpusView reads,
-    // under the delete stream's +1000000-offset epoch
-    val tombs = graft.io.Tables.readTombstones(spark,
+    // and the tombstones landed in the corpus' tombstone table
+    // corpusView reads, under the delete stream's +1000000-offset epoch
+    def tombs() = graft.io.Tables.readTombstones(spark,
       corpusTombstonePath(corpus), "doc_id")
       .map(_.as[Long].collect().toSet).getOrElse(Set.empty)
-    assert(tombs == Set(1L, 3L), s"tombstone table holds $tombs")
+    assert(tombs() == Set(1L, 3L), s"tombstone table holds ${tombs()}")
+    // the tombstone table lives under the corpus root: the corpus'
+    // vacuum (here reclaiming a replay's superseded version) walks
+    // only its own versions and sidecars
+    ingestBatch(docs(1L -> mk("p"), 2L -> mk("q"), 3L -> mk("r")),
+      0L, corpus)
+    graft.io.Tables.vacuumManifested(spark, corpus)
+    assert(graft.io.Tables.Layout.Manifested.versions(spark, corpus)
+      .size == 1, "the vacuum reclaimed nothing")
+    assert(tombs() == Set(1L, 3L) && corpusView(spark, corpus)
+      .select("doc_id").as[Long].collect().toSet == Set(2L),
+      s"corpus vacuum disturbed its tombstone table: ${tombs()}")
   }
 
   test("streaming paths release their per-batch checkpoints " +
@@ -933,7 +1011,9 @@ class StreamOpsSpec extends SparkSpec {
     runFrontDoorDeletes(
       spark.readStream.schema("doc_id LONG").parquet(delStage),
       root, s"$root/ckpt-del")
-    foldCorpusTombstones(spark, s"$root/corpus")
+    graft.io.Tables.foldEpochs(spark,
+      Seq(graft.io.Tables.EpochTable(s"$root/corpus")),
+      corpusTombstonePath(s"$root/corpus"), "doc_id")
 
     // the ONLY designed residue is the Ckpt slots' latest-invocation
     // frames (released by the NEXT invocation of the same slot) —
@@ -1646,7 +1726,8 @@ class StreamOpsSpec extends SparkSpec {
     ingestBatch(Seq(doc(6, "de"), doc(7, "zh")).toDF(cols: _*), 3L, corpus)
     graft.io.Tables.ingestTombstones(Seq(4L).toDF("doc_id"),
       corpusTombstonePath(corpus), epoch = 4L)
-    foldCorpusTombstones(spark, corpus)
+    graft.io.Tables.foldEpochs(spark, Seq(graft.io.Tables.EpochTable(corpus)),
+      corpusTombstonePath(corpus), "doc_id")
     assert(graft.io.Tables.foldHorizon(spark, corpus).contains(4L),
       "fold must record the retired delete attribution horizon")
     val r3 = sync()
@@ -1692,4 +1773,19 @@ class StreamOpsSpec extends SparkSpec {
       s"window rebuilt the Blooms at $bitsetSizes bytes, not 312")
     org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(root))
   }
+}
+
+/** `file:` filesystem that calls [[EpochRenameHookFs.hook]] with the
+  * destination before every rename onto an `ingest_epoch=` path. */
+class EpochRenameHookFs extends org.apache.hadoop.fs.LocalFileSystem {
+  override def rename(src: org.apache.hadoop.fs.Path,
+                      dst: org.apache.hadoop.fs.Path): Boolean = {
+    if (dst.getName.startsWith("ingest_epoch="))
+      EpochRenameHookFs.hook.foreach(_(dst.toUri.getPath))
+    super.rename(src, dst)
+  }
+}
+
+object EpochRenameHookFs {
+  @volatile var hook: Option[String => Unit] = None
 }
