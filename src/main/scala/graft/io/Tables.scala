@@ -479,7 +479,21 @@ object Tables {
     * manifest, clobbering partitions readers still resolve. */
   private[graft] def manifestExists(spark: SparkSession,
                                     path: String): Boolean =
-    Layout.Manifested.versions(spark, path).nonEmpty
+    manifestVersions(spark, path).nonEmpty
+
+  /** (version, publish mtime) of every retained `_manifest-` pointer
+    * at the table root, ascending — AS OF and history read these;
+    * empty for an absent root. */
+  private[graft] def manifestVersions(spark: SparkSession,
+                                      path: String): Seq[(Long, Long)] = {
+    val root = new org.apache.hadoop.fs.Path(path)
+    try fsFor(spark, root).listStatus(root).toSeq
+      .filter(_.getPath.getName.startsWith("_manifest-"))
+      .map(st => st.getPath.getName.stripPrefix("_manifest-").toLong ->
+        st.getModificationTime)
+      .sorted
+    catch { case _: java.io.FileNotFoundException => Nil }
+  }
 
   /** Latest complete (version, partition → relative dir). */
   private[graft] def resolveManifest(spark: SparkSession, path: String)
@@ -540,21 +554,24 @@ object Tables {
     * [[ingestTombstones]]) catch it and re-land through the CAS
     * path. */
   def writeManifested(df: DataFrame, path: String,
-                      partCols: Seq[String]): Unit = {
+                      partCols: Seq[String]): Unit =
+    writeManifested(df, path, partCols, Layout.Manifested)
+
+  /** [[writeManifested]] with the files written by `layout`. */
+  private def writeManifested(df: DataFrame, path: String,
+      partCols: Seq[String], layout: Layout): Unit = {
     require(partCols.nonEmpty, "writeManifested needs a partition column")
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = fsFor(df.sparkSession, root)
     val attempt = s"v1w${java.util.UUID.randomUUID.toString.take(8)}"
-    df.write.mode(SaveMode.Overwrite).partitionBy(partCols: _*)
-      .parquet(s"$path/data/$attempt")
+    val cols = layout.write(df, path, s"$path/data/$attempt", partCols)
     val parts = listPartDirs(fs,
-      new org.apache.hadoop.fs.Path(s"$path/data/$attempt"),
-      partCols.length)
+      new org.apache.hadoop.fs.Path(s"$path/data/$attempt"), cols.length)
       .map(p => p -> s"data/$attempt/$p").toMap
     commitManifest(fs, root, 1L, parts)
     if (commitStatsEnabled(df.sparkSession, path))
       publishCommitStats(df.sparkSession, path, 1L, parts,
-        s"$path/data/$attempt", partCols)
+        s"$path/data/$attempt", cols)
   }
 
   /** Replace-or-add commit: write `df` (partitioned by `partCols`)
@@ -589,10 +606,12 @@ object Tables {
     * was computed without that change, so replacing the entry would
     * silently drop it. Partitions the rewrite does NOT touch merge
     * exactly as before — concurrent writers on disjoint partitions
-    * all land through the plain CAS retry. */
+    * all land through the plain CAS retry. `layout` writes the
+    * attempt dir's files. */
   private[graft] def upsertManifested(df: DataFrame, path: String,
       partCols: Seq[String], dropPart: String => Boolean,
-      expectedBase: Option[(Long, Map[String, String])]): Long = {
+      expectedBase: Option[(Long, Map[String, String])],
+      layout: Layout = Layout.Manifested): Long = {
     require(partCols.nonEmpty, "upsertManifested needs a partition column")
     val spark = df.sparkSession
     val root = new org.apache.hadoop.fs.Path(path)
@@ -600,10 +619,9 @@ object Tables {
     var (version, live) = resolveManifest(spark, path)
     val attempt =
       s"v${version + 1}w${java.util.UUID.randomUUID.toString.take(8)}"
-    df.write.mode(SaveMode.Overwrite).partitionBy(partCols: _*)
-      .parquet(s"$path/data/$attempt")
+    val cols = layout.write(df, path, s"$path/data/$attempt", partCols)
     val added = listPartDirs(fs,
-      new org.apache.hadoop.fs.Path(s"$path/data/$attempt"), partCols.length)
+      new org.apache.hadoop.fs.Path(s"$path/data/$attempt"), cols.length)
       .map(p => p -> s"data/$attempt/$p").toMap
     var attempts = 0
     while (true) {
@@ -624,7 +642,7 @@ object Tables {
         commitManifest(fs, root, version + 1, committed)
         if (commitStatsEnabled(spark, path))
           publishCommitStats(spark, path, version + 1, committed,
-            s"$path/data/$attempt", partCols)
+            s"$path/data/$attempt", cols)
         return version + 1
       } catch {
         case e: ManifestConflictException =>
@@ -744,24 +762,13 @@ object Tables {
     }
   }
 
-  /** [[readFromParts]] through the snapshot memo; the lineage
-    * projection is a different plan shape, memoized under its own
-    * key. */
-  private def readPartsCached(spark: SparkSession, path: String,
-      version: Long, parts: Map[String, String],
-      lineage: Boolean = false): DataFrame =
-    memoized(spark, s"$path@$version${if (lineage) "#lin" else ""}")(
-      readFromParts(spark, path, parts, lineage))
-
   /** Snapshot read through the pointer: resolve the latest manifest,
     * group its directories by version (each version root is one
     * `basePath`, so partition-column reconstruction works), union.
     * Every directory a resolved manifest references is guaranteed
     * live — commits never delete, only vacuum does. */
-  def readManifested(spark: SparkSession, path: String): DataFrame = {
-    val (v, parts) = resolveManifest(spark, path)
-    readPartsCached(spark, path, v, parts)
-  }
+  def readManifested(spark: SparkSession, path: String): DataFrame =
+    Layout.Manifested.read(spark, path)
 
   /** Memoized read of a SMALL immutable artifact directory (index
     * centroids/codebooks, persisted stats) — the serve-path sibling
@@ -784,17 +791,8 @@ object Tables {
     * loudly on the missing manifest rather than returning a partial
     * table. */
   def readManifestedAt(spark: SparkSession, path: String,
-                       asOf: Long): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = fsFor(spark, root)
-    val mf = new org.apache.hadoop.fs.Path(root, manifestName(asOf))
-    require(fs.exists(mf),
-      s"manifest v$asOf at $path does not exist (never written, or vacuumed)")
-    // same snapshot memo as the live read — a version's file set is
-    // immutable, and the COW verbs resolve their pinned snapshot
-    // several times per statement
-    readPartsCached(spark, path, asOf, readManifestFile(fs, mf))
-  }
+                       asOf: Long): DataFrame =
+    Layout.Manifested.readAt(spark, path, asOf)
 
   /** Resolve one manifest entry to its absolute (dir, version base).
     * A local entry is `data/vN/part=...` under this table's root; a
@@ -1032,7 +1030,7 @@ object Tables {
       }
     drop.filterNot(lateKeep.contains).foreach(m =>
       fs.delete(m.getPath, false))
-    sweepSidecars(spark, path, Layout.Manifested)
+    sweepSidecars(spark, path)
   }
 
   /** Sidecar dirs younger than this are SKIPPED by the sweeps: a
@@ -1046,19 +1044,17 @@ object Tables {
     spark.conf.getOption("spark.graft.sweep.sidecarGraceMs")
       .map(_.toLong).getOrElse(900000L)
 
-  /** Reclaim superseded sidecar dirs — the deletion vectors of
-    * `layout`, the Bloom sidecar and the zone-map sidecar: every
-    * subdir except the one its current pointer names, and older than
+  /** Reclaim superseded sidecar dirs — the deletion vectors, the
+    * Bloom sidecar and the zone-map sidecar: every subdir except the
+    * one its current pointer names, and older than
     * [[sidecarSweepGraceMs]]. Every builder retains the superseded dir
     * at publish time so a reader holding the old pointer never loses
-    * its files mid-scan; this sweep, called from both layouts' vacuum
-    * verbs, is where that dead mass goes. */
-  private def sweepSidecars(spark: SparkSession, path: String,
-                            layout: Layout): Unit = {
+    * its files mid-scan; this sweep, called from the vacuum, is where
+    * that dead mass goes. */
+  private def sweepSidecars(spark: SparkSession, path: String): Unit = {
     val cutoff = System.currentTimeMillis - sidecarSweepGraceMs(spark)
     Seq[(String, () => Option[String])](
-      layout.dvDir -> (() => deletionVectors(spark, path, layout)
-        .map(_.dir)),
+      "_dv" -> (() => deletionVectors(spark, path).map(_.dir)),
       "_file_blooms" -> (() => fileBlooms(spark, path).map(_._1)),
       "_file_stats" -> (() => fileStats(spark, path).map(_._1))
     ).foreach { case (kind, livePtr) =>
@@ -1216,7 +1212,7 @@ object Tables {
   def manifestHistory(spark: SparkSession, path: String): DataFrame = {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = fsFor(spark, root)
-    val mtimes = commitInstants(spark, path, Layout.Manifested)
+    val mtimes = commitInstants(spark, path)
     val versions = mtimes.keys.toSeq.sorted.map(v =>
       (v, readManifestFile(fs, new org.apache.hadoop.fs.Path(root,
         manifestName(v))), mtimes(v)))
@@ -1252,13 +1248,13 @@ object Tables {
     }.toMap
   }
 
-  /** Each retained version's commit instant: the version pointer's
-    * publish mtime ([[Layout.versions]]), clamped monotone. Loud when
-    * `path` holds no version of `layout`. */
-  private def commitInstants(spark: SparkSession, path: String,
-                             layout: Layout): Map[Long, Long] = {
-    val vs = layout.versions(spark, path)
-    require(vs.nonEmpty, s"no ${layout.name} table at $path")
+  /** Each retained version's commit instant: the manifest pointer's
+    * publish mtime ([[manifestVersions]]), clamped monotone. Loud when
+    * `path` holds no version. */
+  private def commitInstants(spark: SparkSession,
+                             path: String): Map[Long, Long] = {
+    val vs = manifestVersions(spark, path)
+    require(vs.nonEmpty, s"no table at $path (no _manifest- version)")
     monotoneMtimes(vs)
   }
 
@@ -1271,9 +1267,8 @@ object Tables {
     * retention refuses exactly like [[Layout.readAt]] would. Loud
     * when the timestamp predates the oldest RETAINED commit. */
   private[graft] def manifestVersionAsOf(spark: SparkSession,
-      path: String, tsMillis: Long,
-      layout: Layout = Layout.Manifested): Long = {
-    val eligible = commitInstants(spark, path, layout)
+      path: String, tsMillis: Long): Long = {
+    val eligible = commitInstants(spark, path)
       .filter(_._2 <= tsMillis).keys
     require(eligible.nonEmpty,
       s"TIMESTAMP AS OF at $path: ${new java.sql.Timestamp(tsMillis)} " +
@@ -1511,105 +1506,26 @@ object Tables {
     * working here; the bucketed scan is what makes the non-broadcast
     * fallback archive-shuffle-free.
     *
-    * Mechanics: the table is a catalog entry (bucket metadata lives
-    * in the catalog) EXTERNAL at `path`, partitioned by
-    * `ingest_epoch` and bucketed/sorted by the key. A sidecar
-    * `_graft_bucketspec` file at the table root records (key,
-    * buckets, schema) so a FRESH session re-registers the catalog
-    * entry from disk ([[readBucketedArchive]] does this lazily); the
-    * sidecar commits LAST at create time, so a crashed create reads
-    * as "no archive" — the writeManifested discipline.
-    *
-    * Maintenance isolation matches the manifested tables: the layout
-    * is VERSIONED (version dirs + append-only markers at the root —
-    * see the versioning section below), so a fold stages the rewrite
-    * as the next complete version and flips a marker while concurrent
-    * readers keep scanning the previous version's untouched dir, and
-    * [[readBucketedArchiveAt]] gives time travel over retained
-    * versions. Epoch commits stay drop-partition-then-append INSIDE
-    * the current version (replace-or-add; a crashed or replayed
-    * epoch rewrites exactly its own partition — the dynamic partition
-    * overwrite contract the corpus store uses). The postings archives
-    * are the ingest pipeline's internal probe substrate,
+    * Mechanics: a bucketed archive is a manifested table that also
+    * has a bucket spec ([[Layout.Bucketed]]). Every commit writes
+    * bucket-aligned files into a fresh `data/<attempt>/` dir and
+    * publishes them with the same `_manifest-` CAS as every other
+    * table, so versions, AS OF, history, health, vacuum and the
+    * deletion-vector stamp are the manifested ones, and a reader
+    * holds a complete snapshot until vacuum. The `_graft_bucketspec`
+    * file at the root records (key, buckets, partition columns,
+    * schema, sizing note). Key and bucket count are fixed for the
+    * root's life: only [[writeBucketedArchive]] sets them, and it
+    * recreates the root, so no retained version can be read under a
+    * bucket count its files were not written with. A read is one
+    * bucketed file relation over the snapshot's partition dirs
+    * ([[bucketedFrame]]); no catalog entry is involved. The postings
+    * archives are the ingest pipeline's internal probe substrate,
     * single-writer per maintenance window by the same contract as
     * the corpus store; the SERVED label/verdict tables stay
     * manifested. */
-  private[graft] def bucketedArchName(path: String): String = {
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(path.getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-    s"graft_arch_${digest.take(16)}"
-  }
-
-  /** Catalog name for one VERSION of a bucketed archive — the
-    * versioned layout registers each version as its own external
-    * table over its own complete directory, so a reader's resolved
-    * plan keeps working while a fold commits the next version. */
-  private[graft] def bucketedArchName(path: String, version: Long): String =
-    s"${bucketedArchName(path)}_v$version"
-
   private def bucketSpecPath(path: String) =
     new org.apache.hadoop.fs.Path(path, "_graft_bucketspec")
-
-  // ---------- Bucketed-archive versioning (manifest discipline) ----------
-  // A versioned bucketed archive's root holds append-only version
-  // markers `_bucketv-%019d` (the [[commitManifest]] discipline:
-  // resolve = max marker, commit = exclusive-publish of the next one)
-  // and version dirs `v<N>/`, each a COMPLETE bucketed table carrying
-  // its own `_graft_bucketspec`. Epoch commits mutate the CURRENT
-  // version in place (replace-or-add per partition — unchanged); a
-  // FOLD stages the rewritten archive as the NEXT version dir and
-  // flips the marker, so concurrent readers hold a complete snapshot
-  // for as long as superseded dirs are retained
-  // ([[sweepBucketedScratch]] is the reclaim verb — run it after a
-  // grace period, like [[vacuumManifested]]).
-
-  private def bucketVersionMarker(root: org.apache.hadoop.fs.Path,
-                                  v: Long) =
-    new org.apache.hadoop.fs.Path(root, f"_bucketv-$v%019d")
-
-  /** Committed versions of a bucketed archive, ascending; empty for
-    * an absent archive. */
-  private[graft] def bucketedVersions(spark: SparkSession,
-                                      path: String): Seq[Long] =
-    Layout.Bucketed.versions(spark, path).map(_._1)
-
-  /** (version, publish mtime) of every `<prefix><version>` pointer
-    * file at the table root, ascending; empty for an absent root. */
-  private def pointerVersions(spark: SparkSession, path: String,
-                              prefix: String): Seq[(Long, Long)] = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    try fsFor(spark, root).listStatus(root).toSeq
-      .filter(_.getPath.getName.startsWith(prefix))
-      .map(st => st.getPath.getName.stripPrefix(prefix).toLong ->
-        st.getModificationTime)
-      .sorted
-    catch { case _: java.io.FileNotFoundException => Nil }
-  }
-
-  /** The archive's CURRENT version (max committed marker); None for
-    * an absent archive. */
-  private[graft] def bucketedCurrentVersion(spark: SparkSession,
-                                            path: String): Option[Long] =
-    bucketedVersions(spark, path).lastOption
-
-  private[graft] def bucketedVersionDir(path: String, v: Long): String =
-    s"${path.stripSuffix("/")}/v$v"
-
-  /** Commit version `v` of a bucketed archive: exclusive-publish its
-    * marker (two concurrent folds racing the same next version are
-    * LOUD — exactly one wins, the epoch-claim discipline one level
-    * up). */
-  private def commitBucketVersion(spark: SparkSession, path: String,
-                                  v: Long): Unit = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    if (!publishExclusive(fsFor(spark, root), bucketVersionMarker(root, v),
-        v.toString))
-      throw new IllegalStateException(
-        s"bucketed archive $path: version $v was committed by a " +
-          "concurrent fold — two maintenance windows are folding the " +
-          "same archive (the window lease should have precluded this)")
-  }
 
   /** Bucket-count sizing law for the bucketed archives — the
     * [[graft.ops.Similarity.planesFor]] discipline applied to the
@@ -1644,105 +1560,33 @@ object Tables {
     p
   }
 
-  /** Does a bucketed archive exist at `path`? Mirrors
-    * [[manifestExists]]: only the genuine no-archive shapes answer
-    * false. */
-  private[graft] def bucketedArchiveExists(spark: SparkSession,
-                                           path: String): Boolean =
-    bucketedCurrentVersion(spark, path).nonEmpty
-
-  /** The archive's CURRENT version — loud when `path` holds no
-    * committed `_bucketv-` marker (no archive, or a create that
-    * crashed before its marker). */
-  private def bucketedLiveVersion(spark: SparkSession, path: String): Long =
-    bucketedCurrentVersion(spark, path).getOrElse(
-      throw new IllegalStateException(
-        s"no bucketed archive at $path: no committed _bucketv- version " +
-          "marker — build it via writeBucketedArchive"))
-
-  /** The directory holding the archive's CURRENT complete table. */
-  private[graft] def bucketedLiveDir(spark: SparkSession,
-                                     path: String): String =
-    bucketedVersionDir(path, bucketedLiveVersion(spark, path))
-
-  private def writeBucketSpec(spark: SparkSession, path: String,
-                              keyCol: String, buckets: Int,
-                              partCols: Seq[String],
-                              schema: StructType,
-                              sizingNote: String): Unit = {
+  /** The archive's bucket spec lines: key, buckets, partition
+    * columns, schema DDL, sizing note. Loud when the root holds no
+    * spec (no archive) or a garbled one. */
+  private def bucketSpecLines(spark: SparkSession,
+                              path: String): Array[String] = {
     val p = bucketSpecPath(path)
-    val out = fsFor(spark, p).create(p, true)
-    try out.write(
-      (s"$keyCol\n$buckets\n${partCols.mkString(",")}\n${schema.toDDL}" +
-        s"\n$sizingNote").getBytes("UTF-8"))
-    finally out.close()
-  }
-
-  /** The archive's current bucket spec — resolved through the
-    * version pointer (the current version dir's sidecar). */
-  private[graft] def readBucketSpec(spark: SparkSession, path: String)
-      : (String, Int, Seq[String], StructType) =
-    readBucketSpecAtDir(spark, bucketedLiveDir(spark, path), path)
-
-  private def readBucketSpecAtDir(spark: SparkSession, dir: String,
-                                  path: String)
-      : (String, Int, Seq[String], StructType) = {
-    val p = bucketSpecPath(dir)
-    // line 5 (the sizing note) is documentation, not configuration
-    val lines = readSmallFile(fsFor(spark, p), p).split("\n", 5)
-    if (lines.length == 5)
-      (lines(0), lines(1).toInt, lines(2).split(",").toSeq,
-        StructType.fromDDL(lines(3)))
-    else
+    val fs = fsFor(spark, p)
+    if (!fs.exists(p))
+      throw new IllegalStateException(
+        s"no bucketed archive at $path: no _graft_bucketspec — build " +
+          "it via writeBucketedArchive")
+    val lines = readSmallFile(fs, p).split("\n", 5)
+    if (lines.length != 5)
       throw new IllegalStateException(
         s"unreadable bucket spec at $path (${lines.length} lines) — " +
           "rebuild this archive via writeBucketedArchive")
+    lines
   }
 
-  /** Register the catalog entry for an on-disk bucketed archive if
-    * this session doesn't have it yet (a fresh JVM reading an
-    * archive a previous one wrote), and return the table name. The
-    * CREATE carries the bucket spec so the scan stays bucketed;
-    * REPAIR discovers the (possibly nested) partitions from the
-    * directory layout. */
-  private def ensureBucketedRegistered(spark: SparkSession,
-                                       path: String): String =
-    ensureBucketedRegisteredAt(spark, path, bucketedLiveVersion(spark, path))
-
-  /** Register (if this session hasn't yet) the catalog entry for one
-    * VERSION of the archive and return its name — the time-travel
-    * entry point; [[ensureBucketedRegistered]] resolves the current
-    * version through it. */
-  private def ensureBucketedRegisteredAt(spark: SparkSession,
-                                         path: String, v: Long): String = {
-    require(bucketedVersions(spark, path).contains(v),
-      s"bucketed archive $path has no committed version $v")
-    val dir = bucketedVersionDir(path, v)
-    require(fsFor(spark, new org.apache.hadoop.fs.Path(dir))
-        .exists(new org.apache.hadoop.fs.Path(dir)),
-      s"version $v of $path was reclaimed (sweepBucketedScratch) — " +
-        "retained versions only")
-    registerBucketedDir(spark, path, dir, bucketedArchName(path, v))
-  }
-
-  private def registerBucketedDir(spark: SparkSession, path: String,
-                                  dir: String, name: String): String = {
-    if (!spark.catalog.tableExists(name)) synchronized {
-      if (!spark.catalog.tableExists(name)) {
-        val (key, buckets, partCols, schema) =
-          readBucketSpecAtDir(spark, dir, path)
-        val cols = schema.fields.filterNot(f => partCols.contains(f.name)) ++
-          partCols.map(schema(_)) // partition columns last, saveAsTable-style
-        spark.sql(
-          s"""CREATE TABLE `$name` (${StructType(cols).toDDL})
-             |USING parquet
-             |PARTITIONED BY (${partCols.map(c => s"`$c`").mkString(", ")})
-             |CLUSTERED BY (`$key`) SORTED BY (`$key`) INTO $buckets BUCKETS
-             |LOCATION '$dir'""".stripMargin)
-        spark.sql(s"MSCK REPAIR TABLE `$name`")
-      }
-    }
-    name
+  /** The archive's bucket spec: (key, buckets, partition columns,
+    * schema). Line 5 (the sizing note) is documentation, not
+    * configuration. */
+  private[graft] def readBucketSpec(spark: SparkSession, path: String)
+      : (String, Int, Seq[String], StructType) = {
+    val lines = bucketSpecLines(spark, path)
+    (lines(0), lines(1).toInt, lines(2).split(",").toSeq,
+      StructType.fromDDL(lines(3)))
   }
 
   /** Create (or recreate from scratch) a bucketed archive at `path`.
@@ -1750,7 +1594,9 @@ object Tables {
     * first — the epoch machinery's contract; extra levels like the
     * ANN `cell` nest below it). The build layer conventionally
     * commits as epoch 0. `sizingNote` records how `buckets` was
-    * derived ([[bucketsFor]]) in the sidecar. */
+    * derived ([[bucketsFor]]) in the spec. The spec lands before
+    * manifest v1, which is what makes the archive exist: a crashed
+    * create reads as "no archive". */
   def writeBucketedArchive(df: DataFrame, path: String, keyCol: String,
                            buckets: Int,
                            partCols: Seq[String] = Seq("ingest_epoch"),
@@ -1762,17 +1608,11 @@ object Tables {
     val spark = df.sparkSession
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = fsFor(spark, root)
-    // recreate from scratch: previous generations' catalog entries
-    // (any versions this session registered) must go with the dirs,
-    // or a stale entry would point into the void
-    bucketedVersions(spark, path).foreach(v =>
-      spark.sql(s"DROP TABLE IF EXISTS `${bucketedArchName(path, v)}`"))
     if (fs.exists(root)) fs.delete(root, true)
-    writeBucketedVersionDir(df, path, 1L, keyCol, buckets, partCols,
-      sizingNote)
-    // the version marker commits last: a crashed create has a v1 dir
-    // but no marker and reads as "no archive"
-    commitBucketVersion(spark, path, 1L)
+    val spec = bucketSpecPath(path)
+    replaceSmallFile(fs, spec, Seq(keyCol, buckets.toString,
+      partCols.mkString(","), df.schema.toDDL, sizingNote).mkString("\n"))
+    writeManifested(df, path, partCols, Layout.Bucketed)
   }
 
   /** Align a frame's partitioning to its destination bucket layout
@@ -1796,35 +1636,77 @@ object Tables {
                             buckets: Int): DataFrame =
     df.repartition(buckets, col(keyCol))
 
-  /** Write one complete bucketed table as version `v`'s dir (catalog
-    * entry included), sidecar inside — the staging half of both
-    * CREATE and FOLD; the caller commits the marker. */
-  private def writeBucketedVersionDir(df: DataFrame, path: String,
-      v: Long, keyCol: String, buckets: Int, partCols: Seq[String],
-      sizingNote: String = ""): Unit = {
+  /** [[Layout.Bucketed]]'s commit write: `df`, conformed to the spec
+    * schema, lands bucket-aligned in the attempt dir `dir`, under the
+    * spec's partition columns, which it returns. Spark writes bucketed
+    * files only through `saveAsTable`, so the write goes through a
+    * uniquely-named staging catalog entry; the entry is external, and
+    * dropping it keeps the files. */
+  private def writeBucketedFiles(df: DataFrame, path: String,
+                                 dir: String): Seq[String] = {
     val spark = df.sparkSession
-    val dir = bucketedVersionDir(path, v)
-    val name = bucketedArchName(path, v)
-    spark.sql(s"DROP TABLE IF EXISTS `$name`")
-    val dirP = new org.apache.hadoop.fs.Path(dir)
-    val fs = fsFor(spark, dirP)
-    if (fs.exists(dirP)) fs.delete(dirP, true)
-    bucketAligned(df, keyCol, buckets)
+    val (key, buckets, partCols, schema) = readBucketSpec(spark, path)
+    val staging =
+      s"graft_stage_${java.util.UUID.randomUUID.toString.replace("-", "")}"
+    try bucketAligned(alignToArchiveSchema(df, schema, path), key, buckets)
       .write.mode(SaveMode.Overwrite).option("path", dir)
       .partitionBy(partCols: _*)
-      .bucketBy(buckets, keyCol).sortBy(keyCol)
-      .format("parquet").saveAsTable(name)
-    writeBucketSpec(spark, dir, keyCol, buckets, partCols, df.schema,
-      sizingNote)
+      .bucketBy(buckets, key).sortBy(key)
+      .format("parquet").saveAsTable(staging)
+    finally spark.sql(s"DROP TABLE IF EXISTS `$staging`")
+    partCols
+  }
+
+  /** [[Layout.Bucketed]]'s read: one bucketed file relation over the
+    * partition dirs of `parts`. The spec schema is the scan schema,
+    * so files written before an [[evolveBucketedArchive]] read the
+    * added columns as null. The partition values come from the
+    * manifest keys — the dirs sit under different attempt dirs, so
+    * there is no common base path to infer them from. The bucket
+    * spec makes the scan report its hash partitioning and prune
+    * buckets, as a catalog table would. Paths are fully qualified:
+    * the file index matches listed files to partitions by path. The
+    * schema is read nullable, as every file source reports it. */
+  private def bucketedFrame(spark: SparkSession, path: String,
+      spec: (String, Int, Seq[String], StructType),
+      parts: Map[String, String]): DataFrame = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.catalog.{BucketSpec,
+      ExternalCatalogUtils}
+    import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+      InMemoryFileIndex, NoopCache, PartitionPath, PartitionSpec}
+    val (key, buckets, partCols, declared) = spec
+    val schema = org.apache.spark.sql.GraftColumnBridge.asNullable(declared)
+    val partSchema = StructType(partCols.map(schema(_)))
+    val fs = fsFor(spark, new org.apache.hadoop.fs.Path(path))
+    val tz = spark.conf.get("spark.sql.session.timeZone")
+    val partitions = parts.toSeq.sorted.flatMap { case (part, value) =>
+      val kv = part.split("/").map { seg =>
+        val Array(k, v) = seg.split("=", 2)
+        k -> ExternalCatalogUtils.unescapePathName(v)
+      }.toMap
+      val row = InternalRow.fromSeq(partSchema.fields.toSeq.map(f =>
+        Cast(Literal(kv(f.name)), f.dataType, Some(tz)).eval()))
+      entryPaths(value).map(e => PartitionPath(row, fs.makeQualified(
+        new org.apache.hadoop.fs.Path(entryDirAndBase(path, e)._1))))
+    }
+    val index = new InMemoryFileIndex(spark, partitions.map(_.path),
+      Map.empty, Some(schema), NoopCache,
+      Some(PartitionSpec(partSchema, partitions)))
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, partSchema,
+      StructType(schema.filterNot(f => partCols.contains(f.name))),
+      Some(BucketSpec(buckets, Seq(key), Seq(key))),
+      new org.apache.spark.sql.execution.datasources.parquet
+        .ParquetFileFormat, Map.empty)(spark))
   }
 
   /** Thrown when an epoch commit on a bucketed archive finds the
-    * epoch CLAIMED by another live (or crashed) writer. The bucketed
-    * commit is drop-partition-then-append — destructive, so unlike
-    * the manifested CAS (where the loser's data dir is simply
-    * orphaned) two interleaved writers would CORRUPT the partition;
-    * the claim therefore guards the whole commit window, not just
-    * the final pointer flip. */
+    * epoch CLAIMED by another live (or crashed) writer. Two writers
+    * of the same epoch would both pass the manifest CAS — the loser
+    * re-merges onto the winner's version and its entry REPLACES the
+    * winner's partition — so the claim guards the whole commit
+    * window and makes that race loud. */
   final class ArchiveConflictException(path: String, epoch: Long,
                                        holder: String)
     extends RuntimeException(
@@ -1980,81 +1862,39 @@ object Tables {
     releaseMaintenanceWindow(spark, root)
 
   /** Commit ONE epoch into a bucketed archive, replace-or-add: the
-    * epoch's partitions (catalog entries + directory) are dropped
-    * first, so a crash-replay rewrites exactly its own partition —
-    * identical rows for the pure-function-of-immutable-input
-    * archives this layout serves. A crash BETWEEN drop and append
-    * leaves the epoch missing, which the replay restores (the
-    * dynamic-partition-overwrite recovery contract).
+    * epoch's bucket-aligned files land in a fresh attempt dir, and one
+    * manifest CAS swaps them in for every live partition under
+    * `ingest_epoch=<epoch>` ([[upsertManifested]]). A crash-replay
+    * therefore rewrites exactly its own partition, and a commit that
+    * fails before the CAS leaves the epoch's previous rows readable.
     *
-    * CONCURRENCY: the whole drop+append window runs under an
-    * atomic-exclusive per-epoch claim ([[claimEpoch]] — the
-    * manifest-CAS discipline), so two uncoordinated writers racing
-    * the same epoch are LOUD (exactly one proceeds, the other
-    * throws [[ArchiveConflictException]]) instead of silently
-    * interleaving files in the partition dir. The claim releases on
-    * completion (success or in-JVM failure — the partition is
-    * replayable either way); only a process crash leaves it held,
-    * and then a replay under the same stable `writerId` re-enters
-    * its own claim while everyone else stays blocked until
-    * [[recoverEpochClaim]]. */
+    * CONCURRENCY: the commit runs under an atomic-exclusive
+    * per-epoch claim ([[claimEpoch]]), so two uncoordinated writers
+    * racing the same epoch are LOUD (exactly one proceeds, the other
+    * throws [[ArchiveConflictException]]) instead of the CAS loser's
+    * retry silently replacing the winner's partition. The claim
+    * releases on completion (success or in-JVM failure — the
+    * partition is replayable either way); only a process crash
+    * leaves it held, and then a replay under the same stable
+    * `writerId` re-enters its own claim while everyone else stays
+    * blocked until [[recoverEpochClaim]]. */
   def ingestBucketedArchive(df: DataFrame, path: String,
                             epoch: Long,
                             writerId: Option[String] = None): Unit = {
     val spark = df.sparkSession
-    val name = ensureBucketedRegistered(spark, path)
-    val (key, buckets, partCols, schema) = readBucketSpec(spark, path)
-    // epoch data lands in the CURRENT version dir; claims stay at
-    // table-root scope — one epoch number line per archive, whatever
-    // version is live
-    val live = new org.apache.hadoop.fs.Path(
-      bucketedLiveDir(spark, path))
-    val fs = fsFor(spark, live)
-    claimEpoch(fs, path, epoch,
-      writerId.getOrElse(java.util.UUID.randomUUID.toString))
-    // the epoch commit mutates the live tree in place: declare it to
-    // the DV staleness protocol (begin before the first change, seal
-    // in the finally — a failed commit may have half-landed changes)
-    val mut = beginBucketedMutation(spark, path)
+    val partCols = readBucketSpec(spark, path)._3
+    claimEpoch(fsFor(spark, new org.apache.hadoop.fs.Path(path)), path,
+      epoch, writerId.getOrElse(java.util.UUID.randomUUID.toString))
     try {
-      // targeted drop of exactly the epoch's OWN partitions — one
-      // listing of the epoch subtree, never a full-table MSCK (at
-      // 100 TB the table holds thousands of partitions and a commit
-      // must not pay an O(table) listing): enumerate the epoch's
-      // leaf dirs, drop those catalog entries by full spec, delete
-      // the subtree
-      val part = new org.apache.hadoop.fs.Path(live, s"ingest_epoch=$epoch")
-      if (fs.exists(part)) {
-        val specs =
-          if (partCols.length == 1) Seq(s"`ingest_epoch`='$epoch'")
-          else listPartDirs(fs, part, partCols.length - 1)
-            .map(rel => (s"ingest_epoch=$epoch/" + rel).split("/")
-              .map { kv =>
-                val Array(k, v) = kv.split("=", 2)
-                s"`$k`='$v'"
-              }.mkString(", "))
-        if (specs.nonEmpty)
-          spark.sql(s"ALTER TABLE `$name` DROP IF EXISTS " +
-            specs.map(sp => s"PARTITION ($sp)").mkString(", "))
-        fs.delete(part, true)
-      }
-      spark.sql(s"REFRESH TABLE `$name`")
-      bucketAligned(
-          alignToArchiveSchema(df.withColumn("ingest_epoch", lit(epoch)),
-            schema, path), key, buckets)
-        .write.mode(SaveMode.Append)
-        .partitionBy(partCols: _*)
-        .bucketBy(buckets, key).sortBy(key)
-        .format("parquet").saveAsTable(name)
-      refreshFileSidecars(spark, path, layout = Layout.Bucketed)
+      upsertManifested(df.withColumn("ingest_epoch", lit(epoch)), path,
+        partCols, _.takeWhile(_ != '/') == s"ingest_epoch=$epoch", None,
+        Layout.Bucketed)
+      refreshFileSidecars(spark, path)
       ()
-    } finally {
-      endBucketedMutation(spark, path, mut)
-      recoverEpochClaim(spark, path, epoch)
-    }
+    } finally recoverEpochClaim(spark, path, epoch)
   }
 
-  /** Conform an ingest frame to the archive's sidecar schema:
+  /** Conform an ingest frame to the archive's spec schema:
     * columns the frame doesn't carry yet read as null (an OLD writer
     * keeps committing after [[evolveBucketedArchive]] widened the
     * archive under it), columns the archive doesn't know FAIL loudly
@@ -2074,42 +1914,33 @@ object Tables {
   }
 
   /** Add columns to a bucketed archive — the explicit evolution verb
-    * for the layout whose schema is part of the PHYSICAL contract
-    * (catalog DDL + bucketspec sidecar pin it; a manifested archive
-    * evolves implicitly because [[readFromParts]] merges by name).
-    * Rewrites through the fold's stage-then-flip with the new columns
-    * null-filled, so bucket layout, partitioning and reader
-    * isolation hold; sidecar + catalog pick up the superset schema
-    * from the rewrite. Add-a-column only — an existing name is
-    * refused, never retyped. */
+    * for the layout whose schema is part of its spec (a manifested
+    * archive evolves implicitly because [[readFromParts]] merges by
+    * name). It widens the spec's schema in one staged replace
+    * ([[replaceSmallFile]]) and rewrites nothing: the read takes the
+    * spec schema as the scan schema, so files written before read the
+    * new columns as null, at every retained version, and later
+    * commits conform to it ([[alignToArchiveSchema]]). Add-a-column
+    * only — an existing name is refused, never retyped. */
   def evolveBucketedArchive(spark: SparkSession, path: String,
                             newCols: StructType): Unit = {
-    val (_, _, _, schema) = readBucketSpec(spark, path)
+    val lines = bucketSpecLines(spark, path)
+    val schema = StructType.fromDDL(lines(3))
     val clash = newCols.fieldNames.filter(schema.fieldNames.contains)
     require(clash.isEmpty,
       s"columns [${clash.mkString(",")}] already exist at $path — " +
         "evolution is add-a-column, never change-a-column")
     require(newCols.fields.nonEmpty, "no columns to add")
-    val widened = newCols.fields.foldLeft(readBucketedArchive(spark, path))(
-      (d, f) => d.withColumn(f.name, lit(null).cast(f.dataType)))
-    replaceBucketedArchive(widened, path)
+    lines(3) = StructType(schema.fields ++ newCols.fields).toDDL
+    val p = bucketSpecPath(path)
+    replaceSmallFile(fsFor(spark, p), p, lines.mkString("\n"))
   }
 
   /** The archive as a DataFrame whose scan reports the bucket
     * partitioning (callers filter epochs / subtract tombstones on
     * top; both preserve the scan's output partitioning). */
   def readBucketedArchive(spark: SparkSession, path: String): DataFrame =
-    spark.table(ensureBucketedRegistered(spark, path))
-
-  /** Time travel over a versioned bucketed archive: the archive as
-    * of committed version `v` — a complete bucketed table while its
-    * dir is retained (reclaim = [[sweepBucketedScratch]], which
-    * keeps only the current version; run it after a grace period,
-    * the [[vacuumManifested]] contract). [[bucketedVersions]] lists
-    * what's committed; retained ⊆ committed. */
-  def readBucketedArchiveAt(spark: SparkSession, path: String,
-                            v: Long): DataFrame =
-    spark.table(ensureBucketedRegisteredAt(spark, path, v))
+    Layout.Bucketed.read(spark, path)
 
   /** High-water ingest epoch of an epoch-partitioned frame, read
     * NULLABLE: -1 for an archive with no live rows (every fold here
@@ -2156,116 +1987,16 @@ object Tables {
      if (row.isNullAt(1)) -1L else row.getLong(1))
   }
 
-  /** Reclaim a bucketed archive's dead mass — the vacuum verb for
-    * the bucketed layout: every version dir EXCEPT the current one
-    * (superseded versions a fold retained for concurrent readers,
-    * and crashed stages that never got a marker). Run AFTER a grace
-    * period longer than the slowest reader's resolve-to-read window
-    * — the [[vacuumManifested]] contract: until this runs, readers
-    * that resolved the previous version (and
-    * [[readBucketedArchiveAt]] time travelers) keep a complete
-    * snapshot. Returns the number of version dirs removed. */
-  private[graft] def sweepBucketedScratch(spark: SparkSession,
-                                          path: String): Int = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = fsFor(spark, root)
-    if (!fs.exists(root)) return 0
-    val versions = bucketedCurrentVersion(spark, path).fold(0) { c =>
-      val vdirs = fs.listStatus(root).toSeq.filter(st =>
-        st.isDirectory && st.getPath.getName.matches("v\\d+"))
-        .map(st => st.getPath.getName.stripPrefix("v").toLong)
-        .filter(_ != c)
-      vdirs.foreach { v =>
-        spark.sql(s"DROP TABLE IF EXISTS `${bucketedArchName(path, v)}`")
-        fs.delete(new org.apache.hadoop.fs.Path(
-          bucketedVersionDir(path, v)), true)
-        fs.delete(bucketVersionMarker(root, v), false)
-      }
-      vdirs.size
-    }
-    sweepSidecars(spark, path, Layout.Bucketed)
-    // crashed mutations' in-flight markers: until cleared, every
-    // masked read degrades to the key mask. Clearing one implies its
-    // tree changes may have landed WITHOUT a seq bump — bump first,
-    // so any DV stamped before the crash stops validating.
-    // SEPARATE, much larger horizon than the sidecar grace: a
-    // sidecar dir outliving its grace only loses a rebuildable
-    // artifact, but a LIVE long mutation (large epoch ingest/fold)
-    // whose marker is swept mid-flight reopens the torn-tree window
-    // the marker exists to close — a DV build in the unmarked tail
-    // would stamp seq over a half-mutated tree. The cost of a large
-    // horizon is only that reads stay on the (correct) key-mask path
-    // longer after a genuine crash.
-    val mutCutoff = System.currentTimeMillis -
-      spark.conf.getOption("spark.graft.sweep.mutationGraceMs")
-        .map(_.toLong).getOrElse(24L * 3600 * 1000)
-    val staleMuts =
-      try fs.listStatus(root).toSeq.filter(st =>
-        st.getPath.getName.startsWith("_dvbmut_") &&
-          st.getModificationTime < mutCutoff)
-      catch { case _: java.io.FileNotFoundException => Nil }
-    if (staleMuts.nonEmpty) {
-      bumpBucketedSeq(spark, path)
-      staleMuts.foreach(st => fs.delete(st.getPath, false))
-    }
-    // seq markers below the max are crash leftovers (the bump
-    // removes its predecessor; only a crash between publish and
-    // delete leaves one) — the max alone carries the protocol
-    val seqs =
-      try fs.listStatus(root).toSeq.map(_.getPath.getName)
-        .filter(_.startsWith("_dvbseq-"))
-        .map(_.stripPrefix("_dvbseq-").toLong).sorted
-      catch { case _: java.io.FileNotFoundException => Nil }
-    seqs.dropRight(1).foreach(v =>
-      fs.delete(dvbSeqMarker(root, v), false))
-    versions
-  }
-
-  /** Full-rewrite maintenance (the epoch FOLD): stage the rewritten
-    * archive as a COMPLETE bucketed table in the NEXT version dir,
-    * then flip the version marker — the [[writeManifested]] pointer
-    * discipline applied to the bucketed layout. Concurrent readers
-    * are isolated for real: a reader that resolved the previous
-    * version keeps scanning its complete, untouched dir (retained
-    * until [[sweepBucketedScratch]] reclaims it after a grace
-    * period), and [[readBucketedArchiveAt]] time-travels over
-    * whatever versions are still retained. A crash before the marker
-    * flip leaves an unreferenced stage dir (dead mass for the sweep;
-    * the next fold stages ABOVE it); a crash after the flip is a
-    * completed fold. The marker commit is exclusive-publish, so even
-    * two folds racing past the window lease fail loudly rather than
-    * interleave.
-    *
-    * DELIBERATELY NOT claim-guarded (unlike [[ingestBucketedArchive]]'s
-    * epoch commits): the fold's crash story is stage-then-flip — a
-    * crashed fold costs one dead stage dir and nothing else — and
-    * the race a claim would catch (two maintenance windows folding
-    * the same archive) is precluded by the window lease and caught
-    * loudly by the marker publish regardless. */
-  def replaceBucketedArchive(df: DataFrame, path: String): Unit = {
-    val spark = df.sparkSession
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = fsFor(spark, root)
-    val (key, buckets, partCols, _) = readBucketSpec(spark, path)
-    // stage above BOTH the current version and any crashed stage
-    val staged = fs.listStatus(root).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.matches("v\\d+"))
-      .map(_.getPath.getName.stripPrefix("v").toLong)
-    val next = (bucketedLiveVersion(spark, path) +: staged).max + 1L
-    // `df` usually READS the version being replaced — safe without a
-    // checkpoint, because the stage writes into a NEW dir while the
-    // source version's files stay untouched until the sweep
-    writeBucketedVersionDir(df, path, next, key, buckets, partCols)
-    // the stage is invisible until the marker flips — only the FLIP
-    // mutates what readers resolve, so the staleness protocol wraps
-    // exactly it
-    val mut = beginBucketedMutation(spark, path)
-    try commitBucketVersion(spark, path, next)
-    finally endBucketedMutation(spark, path, mut)
-    ensureBucketedRegistered(spark, path)
-    refreshFileSidecars(spark, path, layout = Layout.Bucketed)
-    ()
-  }
+  /** Full-rewrite maintenance (the epoch FOLD) of a bucketed archive:
+    * `df` lands bucket-aligned in a fresh attempt dir and replaces
+    * every partition in one manifest CAS ([[Layout.rewrite]]). `df`
+    * usually reads the version it replaces — safe without a
+    * checkpoint, because that version's files stay untouched until
+    * vacuum, which is also how long a concurrent reader of it keeps a
+    * complete snapshot. */
+  def replaceBucketedArchive(df: DataFrame, path: String): Unit =
+    Layout.Bucketed.rewrite(df, path,
+      readBucketSpec(df.sparkSession, path)._3)
 
   // ---------- Table layouts ----------
 
@@ -2283,226 +2014,164 @@ object Tables {
   }
 
   /** One resolved read of a table, as the DV verbs and the fold use
-    * it. `stamp` is the deletion-vector coverage stamp: the manifest
-    * version, or the bucketed commit seq — None while a bucketed
-    * mutation is in flight, when nothing may be stamped. `empty`: a
-    * manifest listing no partitions. The reads are lazy, so a caller
-    * pays only for what it uses: `data` is the plain read, `lineage`
-    * the same rows with their `_file` / `_pos` (parquet `_metadata`),
-    * `epochHigh` the high-water ingest epoch (-1 for an empty or not
-    * epoch-partitioned table). */
-  private[graft] final class Snapshot(val stamp: Option[Long],
-      val empty: Boolean, epochHigh0: => Long, data0: => DataFrame,
+    * it. `stamp` is the manifest version — the deletion-vector
+    * coverage stamp of both layouts. `empty`: a manifest listing no
+    * partitions. The reads are lazy, so a caller pays only for what
+    * it uses: `data` is the plain read, `lineage` the same rows with
+    * their `_file` / `_pos` (parquet `_metadata`), `epochHigh` the
+    * high-water ingest epoch from the partition keys (-1 for an empty
+    * or not epoch-partitioned table). */
+  private[graft] final class Snapshot(val stamp: Long,
+      val empty: Boolean, val epochHigh: Long, data0: => DataFrame,
       lineage0: => DataFrame) {
-    lazy val epochHigh: Long = epochHigh0
     lazy val data: DataFrame = data0
     lazy val lineage: DataFrame = lineage0
   }
 
-  /** A layout's share of an archive health row
+  /** An archive health row's layout-free share
     * ([[graft.ops.ScaleOps.archiveHealth]]): live epochs, retained
     * versions, and the bytes of each dead dir its vacuum reclaims. */
   private[graft] final case class Footprint(epochs: Int, versions: Int,
                                             deadBytes: Seq[Long])
 
-  /** How a table keeps its versions — the one value every table verb
+  /** The [[Footprint]] of the table at `path`: the live manifest's
+    * epochs, the retained manifest versions, and every leaf partition
+    * dir under `data/` the live manifest does not reference. Entry
+    * values may be multi-path (file-local retirement): a leaf dir is
+    * live when referenced itself OR when any reference points INTO
+    * it (carried files). */
+  private[graft] def footprint(spark: SparkSession,
+                               path: String): Footprint = {
+    val (_, parts) = resolveManifest(spark, path)
+    val fs = fsFor(spark, new org.apache.hadoop.fs.Path(path))
+    val referenced = parts.values.flatMap(entryPaths).toSet
+    def leaves(dir: org.apache.hadoop.fs.Path, rel: String)
+        : Seq[(String, Long)] = {
+      val kids = fs.listStatus(dir).toSeq
+        .filter(st => st.isDirectory && st.getPath.getName.contains("="))
+      kids.flatMap { k =>
+        val childRel = s"$rel/${k.getPath.getName}"
+        val deeper = leaves(k.getPath, childRel)
+        if (deeper.nonEmpty) deeper
+        else Seq(childRel -> fs.getContentSummary(k.getPath).getLength)
+      }
+    }
+    val dataRoot = new org.apache.hadoop.fs.Path(s"$path/data")
+    val dead =
+      if (!fs.exists(dataRoot)) Nil
+      else fs.listStatus(dataRoot).filter(_.isDirectory).toSeq
+        .flatMap(vd => leaves(vd.getPath, s"data/${vd.getPath.getName}"))
+        .filterNot { case (rel, _) => referenced.contains(rel) ||
+          referenced.exists(_.startsWith(rel + "/")) }
+    Footprint(parts.keys.map(_.takeWhile(_ != '/')).toSet.size,
+      manifestVersions(spark, path).size, dead.map(_._2))
+  }
+
+  /** How a table's files sit on disk — the one value every table verb
     * that serves both layouts is written over ([[readMasked]],
-    * [[computeDeletionVectors]], [[manifestVersionAsOf]],
-    * [[readChangesSince]], [[registerLiveSql]], [[foldEpochs]]). It
-    * owns only what really differs; the on-disk formats are the
-    * layouts' own. Declared by the caller, never detected from disk;
-    * every verb defaults to MANIFESTED. */
+    * [[computeDeletionVectors]], [[readChangesSince]],
+    * [[registerLiveSql]], [[foldEpochs]]). Both layouts publish their
+    * versions through the same `_manifest-` CAS, so the snapshot,
+    * version listing, AS OF, history, health, vacuum, live-file
+    * listing and deletion-vector stamp are written once, over the
+    * manifest; a layout owns only how a commit writes its files, how
+    * a snapshot becomes a DataFrame, and how columns are added.
+    * Declared by the caller, never detected from disk; every verb
+    * defaults to MANIFESTED. */
   sealed trait Layout {
     /** The layout's word in the live-SQL registry. */
     def name: String
-    def exists(spark: SparkSession, path: String): Boolean
-    def read(spark: SparkSession, path: String): DataFrame
-    /** Time travel to retained version `v`. */
-    def readAt(spark: SparkSession, path: String, v: Long): DataFrame
-    def snapshot(spark: SparkSession, path: String): Snapshot
-    /** (version, commit-pointer mtime) of every retained version,
-      * ascending — AS OF and history read these. */
-    def versions(spark: SparkSession, path: String): Seq[(Long, Long)]
-    /** Replace the whole table with `df` as its next version. */
-    def rewrite(df: DataFrame, path: String, partCols: Seq[String]): Unit
-    /** Reclaim superseded versions and sidecar dirs. */
-    def vacuum(spark: SparkSession, path: String): Unit
-    def health(spark: SparkSession, path: String): Footprint
+    /** Land `df` as the files of one commit in the fresh attempt dir
+      * `dir` of the table at `path`, and return the partition columns
+      * the files sit under: `partCols`, or a bucketed table's own. */
+    private[io] def write(df: DataFrame, path: String, dir: String,
+                          partCols: Seq[String]): Seq[String]
+    /** Version `v`'s partition entries as a DataFrame, memoized (a
+      * version's file set is immutable); with `lineage`, each row also
+      * carries its `_file` / `_pos`. */
+    private[io] def frame(spark: SparkSession, path: String, v: Long,
+        parts: Map[String, String], lineage: Boolean): DataFrame
     /** SQL `ALTER TABLE ADD COLUMNS`. */
     def addColumns(spark: SparkSession, path: String,
                    cols: StructType): Unit
-    def history(spark: SparkSession, path: String): DataFrame
-    /** Every live data file with the version base its partition
-      * columns reconstruct under — what the per-file sidecars cover. */
-    private[io] def liveFiles(spark: SparkSession, path: String)
-        : Seq[(String, String)]
-    /** The DV sidecar dir; its pointer is `<dvDir>_ptr`. */
-    private[io] def dvDir: String
-    private[io] def encodeDv(dir: String, ins: Long, del: Long,
-                             snap: Snapshot): String
-    private[io] def decodeDv(lines: Array[String]): Option[DvPointer]
+
+    /** The current snapshot's rows. */
+    final def read(spark: SparkSession, path: String): DataFrame = {
+      val (v, parts) = resolveManifest(spark, path)
+      frame(spark, path, v, parts, lineage = false)
+    }
+    /** Time travel to retained version `v`; loud when `v` was never
+      * written or already vacuumed. */
+    final def readAt(spark: SparkSession, path: String,
+                     v: Long): DataFrame =
+      frame(spark, path, v, manifestPartsAt(spark, path, v),
+        lineage = false)
+    final def snapshot(spark: SparkSession, path: String): Snapshot = {
+      val (v, parts) = resolveManifest(spark, path)
+      new Snapshot(v, parts.isEmpty,
+        parts.keys.map(_.takeWhile(_ != '/'))
+          .filter(_.startsWith("ingest_epoch="))
+          .map(_.stripPrefix("ingest_epoch=").toLong)
+          .foldLeft(-1L)(math.max),
+        frame(spark, path, v, parts, lineage = false),
+        frame(spark, path, v, parts, lineage = true))
+    }
+    /** Replace the whole table with `df` as its next version. A
+      * bucketed commit also brings any analyzed file sidecar back to
+      * full coverage, as its ingests do ([[enableCommitBlooms]]); a
+      * manifested table's sidecars wait for the maintenance window's
+      * refresh, and reads stay unpruned (correct) until then. */
+    final def rewrite(df: DataFrame, path: String,
+                      partCols: Seq[String]): Unit = {
+      upsertManifested(df, path, partCols, _ => true, None, this)
+      if (this == Layout.Bucketed) refreshFileSidecars(df.sparkSession, path)
+      ()
+    }
   }
 
   object Layout {
-    /** Partition dirs behind `_manifest-<v>` pointer flips. */
+    /** Plain `partitionBy` parquet dirs, read as a union per version
+      * base. */
     case object Manifested extends Layout {
       val name = "manifested"
-      def exists(spark: SparkSession, path: String): Boolean =
-        manifestExists(spark, path)
-      def read(spark: SparkSession, path: String): DataFrame =
-        readManifested(spark, path)
-      def readAt(spark: SparkSession, path: String, v: Long): DataFrame =
-        readManifestedAt(spark, path, v)
-      def snapshot(spark: SparkSession, path: String): Snapshot = {
-        // both reads go through the snapshot memo (a version's file
-        // set is immutable) — the masked read sits on serve paths,
-        // where per-query listing re-resolution is the constant the
-        // memo exists to kill
-        val (v, parts) = resolveManifest(spark, path)
-        new Snapshot(Some(v), parts.isEmpty,
-          parts.keys.map(_.takeWhile(_ != '/'))
-            .filter(_.startsWith("ingest_epoch="))
-            .map(_.stripPrefix("ingest_epoch=").toLong)
-            .foldLeft(-1L)(math.max),
-          readPartsCached(spark, path, v, parts),
-          readPartsCached(spark, path, v, parts, lineage = true))
+      private[io] def write(df: DataFrame, path: String, dir: String,
+                            partCols: Seq[String]): Seq[String] = {
+        df.write.mode(SaveMode.Overwrite).partitionBy(partCols: _*)
+          .parquet(dir)
+        partCols
       }
-      def versions(spark: SparkSession, path: String): Seq[(Long, Long)] =
-        pointerVersions(spark, path, "_manifest-")
-      def rewrite(df: DataFrame, path: String,
-                  partCols: Seq[String]): Unit =
-        upsertManifested(df, path, partCols, _ => true)
-      def vacuum(spark: SparkSession, path: String): Unit =
-        vacuumManifested(spark, path)
-      def health(spark: SparkSession, path: String): Footprint = {
-        val (_, parts) = resolveManifest(spark, path)
-        val root = new org.apache.hadoop.fs.Path(path)
-        val fs = fsFor(spark, root)
-        // unreferenced leaf partition dirs under data/ — walk each
-        // version/attempt root, compare against the live manifest's
-        // relative paths; entry values may be multi-path (file-local
-        // retirement): a leaf dir is live when referenced itself OR
-        // when any reference points INTO it (carried files)
-        val referenced = parts.values.flatMap(entryPaths).toSet
-        def leaves(dir: org.apache.hadoop.fs.Path, rel: String)
-            : Seq[(String, Long)] = {
-          val kids = fs.listStatus(dir).toSeq
-            .filter(st => st.isDirectory && st.getPath.getName.contains("="))
-          kids.flatMap { k =>
-            val childRel = s"$rel/${k.getPath.getName}"
-            val deeper = leaves(k.getPath, childRel)
-            if (deeper.nonEmpty) deeper
-            else Seq(childRel -> fs.getContentSummary(k.getPath).getLength)
-          }
-        }
-        val dataRoot = new org.apache.hadoop.fs.Path(s"$path/data")
-        val dead =
-          if (!fs.exists(dataRoot)) Nil
-          else fs.listStatus(dataRoot).filter(_.isDirectory).toSeq
-            .flatMap(vd => leaves(vd.getPath, s"data/${vd.getPath.getName}"))
-            .filterNot { case (rel, _) => referenced.contains(rel) ||
-              referenced.exists(_.startsWith(rel + "/")) }
-        Footprint(
-          parts.keys.map(_.takeWhile(_ != '/')).toSet.size,
-          versions(spark, path).size, dead.map(_._2))
-      }
+      private[io] def frame(spark: SparkSession, path: String, v: Long,
+          parts: Map[String, String], lineage: Boolean): DataFrame =
+        memoized(spark, s"$path@$v${if (lineage) "#lin" else ""}")(
+          readFromParts(spark, path, parts, lineage))
       def addColumns(spark: SparkSession, path: String,
                      cols: StructType): Unit =
         declareManifestedColumns(spark, path, cols)
-      def history(spark: SparkSession, path: String): DataFrame =
-        manifestHistory(spark, path)
-      private[io] def liveFiles(spark: SparkSession, path: String)
-          : Seq[(String, String)] = {
-        val root = path.stripSuffix("/")
-        val fs = fsFor(spark, new org.apache.hadoop.fs.Path(root))
-        resolveManifest(spark, path)._2.values.toSeq.flatMap(entryPaths)
-          .flatMap { rel =>
-            val (dir, base) = entryDirAndBase(root, rel)
-            dataFiles(fs, new org.apache.hadoop.fs.Path(dir))
-              .map(_ -> base)
-          }
-      }
-      private[io] val dvDir = "_dv"
-      private[io] def encodeDv(dir: String, ins: Long, del: Long,
-                               snap: Snapshot): String =
-        s"$dir\n$ins\n$del\n${snap.epochHigh}\n${snap.stamp.get}"
-      private[io] def decodeDv(lines: Array[String]): Option[DvPointer] =
-        lines match {
-          case Array(dir, i, d, a, v) =>
-            Some(DvPointer(dir, i.toLong, d.toLong, a.toLong, v.toLong))
-          case _ => None
-        }
     }
 
-    /** Complete bucketed tables in `v<N>/` dirs behind `_bucketv-`
-      * markers; epoch ingests mutate the current dir in place, so
-      * the DV stamp is the commit seq of the mutation protocol
-      * ([[bucketedRootState]]), not the version. */
+    /** Bucket-aligned files under the root's `_graft_bucketspec`, read
+      * as one bucketed file relation. */
     case object Bucketed extends Layout {
       val name = "bucketed"
-      def exists(spark: SparkSession, path: String): Boolean =
-        bucketedArchiveExists(spark, path)
-      def read(spark: SparkSession, path: String): DataFrame =
-        readBucketedArchive(spark, path)
-      def readAt(spark: SparkSession, path: String, v: Long): DataFrame =
-        readBucketedArchiveAt(spark, path, v)
-      def snapshot(spark: SparkSession, path: String): Snapshot = {
-        val (seq, busy) = bucketedRootState(spark, path)
-        lazy val data = readBucketedArchive(spark, path)
-        new Snapshot(if (busy) None else Some(seq), empty = false,
-          maxIngestEpoch(data), data,
-          data.withColumn("_file", col("_metadata.file_path"))
+      private[io] def write(df: DataFrame, path: String, dir: String,
+                            partCols: Seq[String]): Seq[String] =
+        writeBucketedFiles(df, path, dir)
+      /** The memo key carries the entries and the spec: an evolve
+        * widens the schema under the same version, and a recreated
+        * root restarts its version numbers. */
+      private[io] def frame(spark: SparkSession, path: String, v: Long,
+          parts: Map[String, String], lineage: Boolean): DataFrame = {
+        val spec = readBucketSpec(spark, path)
+        val key = s"$path@$v#${(parts, spec).hashCode}"
+        if (lineage) memoized(spark, s"$key#lin")(
+          frame(spark, path, v, parts, lineage = false)
+            .withColumn("_file", col("_metadata.file_path"))
             .withColumn("_pos", col("_metadata.row_index")))
-      }
-      def versions(spark: SparkSession, path: String): Seq[(Long, Long)] =
-        pointerVersions(spark, path, "_bucketv-")
-      def rewrite(df: DataFrame, path: String,
-                  partCols: Seq[String]): Unit =
-        replaceBucketedArchive(df, path)
-      def vacuum(spark: SparkSession, path: String): Unit = {
-        sweepBucketedScratch(spark, path)
-        ()
-      }
-      def health(spark: SparkSession, path: String): Footprint = {
-        val root = new org.apache.hadoop.fs.Path(path)
-        val fs = fsFor(spark, root)
-        val liveDir = new org.apache.hadoop.fs.Path(
-          bucketedLiveDir(spark, path))
-        val vdirs = fs.listStatus(root).toSeq.filter(st =>
-          st.isDirectory && st.getPath.getName.matches("v\\d+"))
-        Footprint(
-          fs.listStatus(liveDir).count(st => st.isDirectory &&
-            st.getPath.getName.startsWith("ingest_epoch=")),
-          math.max(1, vdirs.size),
-          vdirs.map(_.getPath).filter(_.getName != liveDir.getName)
-            .map(p => fs.getContentSummary(p).getLength))
+        else memoized(spark, key)(bucketedFrame(spark, path, spec, parts))
       }
       def addColumns(spark: SparkSession, path: String,
                      cols: StructType): Unit =
         evolveBucketedArchive(spark, path, cols)
-      /** One row per retained version marker with its commit instant
-        * (the sweep keeps the current version's marker only). */
-      def history(spark: SparkSession, path: String): DataFrame =
-        spark.createDataFrame(commitInstants(spark, path, this).toSeq
-            .sorted.map { case (v, ts) => (v, new java.sql.Timestamp(ts)) })
-          .toDF("version", "commit_ts")
-      private[io] def liveFiles(spark: SparkSession, path: String)
-          : Seq[(String, String)] = {
-        val live = bucketedLiveDir(spark, path)
-        val dir = new org.apache.hadoop.fs.Path(live)
-        dataFiles(fsFor(spark, dir), dir).map(_ -> live)
-      }
-      private[io] val dvDir = "_dvb"
-      private[io] def encodeDv(dir: String, ins: Long, del: Long,
-                               snap: Snapshot): String =
-        s"$dir\n$ins\n$del\nseq:${snap.stamp.get}"
-      private[io] def decodeDv(lines: Array[String]): Option[DvPointer] =
-        lines match {
-          case Array(dir, i, d, g) if g.startsWith("seq:") =>
-            Some(DvPointer(dir, i.toLong, d.toLong, -1L,
-              g.stripPrefix("seq:").toLong))
-          case _ => None
-        }
     }
   }
 
@@ -2561,8 +2230,8 @@ object Tables {
     else {
       val (v, parts) = resolveManifest(spark, path)
       if (parts.isEmpty) None // cleared by a physical fold
-      else Some(readPartsCached(spark, path, v, parts)
-        .select(col(keyCol)).distinct())
+      else Some(Layout.Manifested.frame(spark, path, v, parts,
+        lineage = false).select(col(keyCol)).distinct())
     }
 
   /** Live tombstones WITH their delete epochs — the change-feed's
@@ -2577,7 +2246,8 @@ object Tables {
     else {
       val (v, parts) = resolveManifest(spark, path)
       if (parts.isEmpty) None
-      else Some(readPartsCached(spark, path, v, parts))
+      else Some(Layout.Manifested.frame(spark, path, v, parts,
+        lineage = false))
     }
 
   /** The tombstone-masked read view: subtract an archive's live
@@ -2603,10 +2273,10 @@ object Tables {
     * build side grows with every RTBF delete until the next physical
     * fold — at 100 TB delete volume that broadcast is the OOM shape,
     * and every read pays a per-row key hash against it. When a
-    * CURRENT sidecar exists (its recorded stamp equals the stamp of
-    * the snapshot this read resolves — [[Layout.snapshot]]: any later
-    * commit may have replaced files the mask indexes by position, and
-    * a bucketed mutation in flight stamps nothing), the mask is
+    * CURRENT sidecar exists (its recorded stamp equals the manifest
+    * version this read resolves — [[Layout.snapshot]]: any later
+    * commit may have replaced files the mask indexes by position),
+    * the mask is
     * positional instead: one broadcast of (victim file → sorted
     * row-index array) joined on the scan's `_metadata.file_path`,
     * with rows dropped when their `_metadata.row_index` sits in the
@@ -2630,8 +2300,8 @@ object Tables {
     if (tombE.isEmpty) return layout.read(spark, path)
     val snap = layout.snapshot(spark, path)
     def keyMasked = minusTombstones(snap.data, tombPath, keyCol)
-    val dvp = deletionVectors(spark, path, layout)
-      .filter(p => snap.stamp.contains(p.stamp))
+    val dvp = deletionVectors(spark, path)
+      .filter(_.stamp == snap.stamp)
       .getOrElse(return keyMasked)
     val dv = try
       readArtifactCached(spark, dvp.dir)
@@ -2666,11 +2336,10 @@ object Tables {
     else masked.join(broadcast(fresh), Seq(keyCol), "left_anti")
   }
 
-  /** Register a manifested archive as a SQL-visible (temp) view, so
-    * `spark.sql("SELECT … FROM name")` and any session-attached SQL
-    * tooling reach the store — the catalog surface manifested
-    * archives otherwise lack (bucketed archives are real catalog
-    * tables already; manifested stores were API-only).
+  /** Register an archive of either layout as a SQL-visible (temp)
+    * view, so `spark.sql("SELECT … FROM name")` and any
+    * session-attached SQL tooling reach the store — the catalog
+    * surface the archives otherwise lack (they are API-only).
     *
     * The view is the SAME logical plan the API read produces, so the
     * whole optimizer surface carries over unchanged: [[graft.plans
@@ -3351,13 +3020,13 @@ object Tables {
     * the physical retirement knows which files carry victims without
     * re-scanning the archive at maintenance time. Same overlay
     * discipline as the zone-map sidecars: fresh uniquely-named dir,
-    * pointer flips last, superseded dirs retained until the layout's
-    * vacuum. The pointer records the tombstone lane maxes it covers
-    * and the snapshot's coverage stamp ([[Layout.snapshot]]), and it
-    * publishes only when that stamp is unchanged across the scan — a
-    * commit (or, bucketed, a mutation in flight) inside the window
-    * leaves the previous pointer, whose older stamp already fails
-    * every currency check. Staleness costs a scan, never rows.
+    * pointer flips last, superseded dirs retained until vacuum. The
+    * pointer records the tombstone lane maxes it covers and the
+    * snapshot's manifest version ([[Layout.snapshot]]), and it
+    * publishes only when that version is still the live one after the
+    * scan — a commit inside the window leaves the previous pointer,
+    * whose older stamp already fails every currency check. Staleness
+    * costs a scan, never rows.
     * Returns the number of victim-carrying files. */
   def computeDeletionVectors(spark: SparkSession, path: String,
       tombPath: String, keyCol: String,
@@ -3379,7 +3048,7 @@ object Tables {
           .groupBy(col("file"))
           .agg(sort_array(collect_list(col("pos"))).as("positions"),
             count(lit(1)).as("n_victims"))
-        val dir = s"${path.stripSuffix("/")}/${layout.dvDir}/" +
+        val dir = s"${path.stripSuffix("/")}/_dv/" +
           java.util.UUID.randomUUID.toString.take(8)
         // no coalesce(1): the groupBy has already hash-partitioned
         // the mask by file, so the sidecar lands partitioned by
@@ -3387,136 +3056,50 @@ object Tables {
         // for a 100 TB archive's whole victim mask would be the
         // bottleneck the sidecar exists to remove
         dv.write.mode(SaveMode.Overwrite).parquet(dir)
-        if (snap.stamp.nonEmpty &&
-            snap.stamp == layout.snapshot(spark, path).stamp) {
-          val ptr = dvPtrPath(path, layout)
-          replaceSmallFile(fsFor(spark, ptr), ptr,
-            layout.encodeDv(dir, insTombMax, delTombMax, snap))
+        if (snap.stamp == resolveManifest(spark, path)._1) {
+          val ptr = dvPtrPath(path)
+          replaceSmallFile(fsFor(spark, ptr), ptr, Seq(dir, insTombMax,
+            delTombMax, snap.epochHigh, snap.stamp).mkString("\n"))
         }
         spark.read.parquet(dir).count()
     }
 
   /** A deletion-vector sidecar pointer: where the mask lives and
-    * what it covers. `stamp` is the coverage stamp of the snapshot
+    * what it covers. `stamp` is the manifest version of the snapshot
     * the mask was computed against ([[Layout.snapshot]]) — any later
     * commit replaces files the mask indexes by position, so consumers
-    * require `stamp` to equal the current one, not just lane/epoch
-    * currency. `archCovered` is the manifested high-water ingest
-    * epoch (-1: not epoch-partitioned, or a bucketed pointer, which
-    * does not record it). */
+    * require `stamp` to equal the current version, not just lane/epoch
+    * currency. `archCovered` is the high-water ingest epoch (-1: not
+    * epoch-partitioned). */
   final case class DvPointer(dir: String, insCovered: Long,
       delCovered: Long, archCovered: Long, stamp: Long)
 
-  private def dvPtrPath(path: String, layout: Layout) =
-    new org.apache.hadoop.fs.Path(
-      s"${path.stripSuffix("/")}/${layout.dvDir}_ptr")
+  private def dvPtrPath(path: String) =
+    new org.apache.hadoop.fs.Path(s"${path.stripSuffix("/")}/_dv_ptr")
 
-  /** The current deletion-vector sidecar pointer of a `layout`
-    * table, or None if never built / dropped by a retirement. */
-  def deletionVectors(spark: SparkSession, path: String,
-      layout: Layout = Layout.Manifested): Option[DvPointer] = {
-    val ptr = dvPtrPath(path, layout)
+  /** The current deletion-vector sidecar pointer of a table of either
+    * layout, or None if never built / dropped by a retirement. */
+  def deletionVectors(spark: SparkSession,
+                      path: String): Option[DvPointer] = {
+    val ptr = dvPtrPath(path)
     val fs = fsFor(spark, ptr)
     if (!fs.exists(ptr)) None
-    else {
-      val lines = readSmallFile(fs, ptr).split("\n")
-      Some(layout.decodeDv(lines).getOrElse(
-        throw new IllegalStateException(
-          s"garbled deletion-vector pointer at $ptr (${lines.length} " +
-            "lines) — delete it and re-run computeDeletionVectors")))
+    else readSmallFile(fs, ptr).split("\n") match {
+      case Array(dir, i, d, a, v) =>
+        Some(DvPointer(dir, i.toLong, d.toLong, a.toLong, v.toLong))
+      case lines => throw new IllegalStateException(
+        s"garbled deletion-vector pointer at $ptr (${lines.length} " +
+          "lines) — delete it and re-run computeDeletionVectors")
     }
   }
 
   private def dropDeletionVectors(spark: SparkSession,
                                   path: String): Unit = {
-    val ptr = dvPtrPath(path, Layout.Manifested)
+    val ptr = dvPtrPath(path)
     val fs = fsFor(spark, ptr)
     // pointer only: the mask dir stays for concurrent readers that
     // already resolved it; vacuumManifested sweeps unreferenced dirs
     if (fs.exists(ptr)) fs.delete(ptr, false)
-  }
-
-  // ---------- Bucketed mutation protocol (O(1) coverage stamp) ----------
-  // The DV coverage stamp is root-level metadata, read in ONE small
-  // listing — never a walk of the data tree:
-  //  * `_dvbseq-%019d` markers: a monotonic COMMIT SEQUENCE, bumped
-  //    via [[publishExclusive]] (two concurrent mutators can never
-  //    share a number — the lost-increment of a rewritten counter
-  //    file would hide one mutation from the staleness check) AFTER
-  //    every live-tree mutation;
-  //  * `_dvbmut_<uuid>` in-flight markers: created BEFORE a
-  //    mutation's first tree change, removed after its bump, so a
-  //    reader or DV builder can tell "quiet" from "mid-mutation"
-  //    without walking the data tree — files added mid-mutation
-  //    would otherwise be servable under an unmoved seq.
-  // Masked-read fast path iff: no in-flight marker AND pointer seq ==
-  // current seq. A crashed mutation leaves its marker — permanent
-  // degrade to the key mask (safe, never wrong rows) until
-  // [[sweepBucketedScratch]] clears markers older than the sidecar
-  // grace AND bumps the seq for them (their tree changes may have
-  // landed without one).
-
-  private def dvbSeqMarker(root: org.apache.hadoop.fs.Path, v: Long) =
-    new org.apache.hadoop.fs.Path(root, f"_dvbseq-$v%019d")
-
-  /** (current commit seq, a mutation is in flight) — ONE root
-    * listing; (0, false) for an absent root. */
-  private[graft] def bucketedRootState(spark: SparkSession,
-                                       path: String): (Long, Boolean) = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = fsFor(spark, root)
-    val names =
-      try fs.listStatus(root).toSeq.map(_.getPath.getName)
-      catch { case _: java.io.FileNotFoundException => Nil }
-    val seq = names.filter(_.startsWith("_dvbseq-"))
-      .map(_.stripPrefix("_dvbseq-").toLong)
-      .maxOption.getOrElse(0L)
-    (seq, names.exists(_.startsWith("_dvbmut_")))
-  }
-
-  /** Advance the commit seq by exactly one fresh number (exclusive
-    * publish; collisions walk up). The superseded marker is removed
-    * after the new one is visible, so the observed max only grows. */
-  private def bumpBucketedSeq(spark: SparkSession, path: String): Unit = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = fsFor(spark, root)
-    var attempts = 0
-    while (attempts < 10000) {
-      attempts += 1
-      val (cur, _) = bucketedRootState(spark, path)
-      if (publishExclusive(fs, dvbSeqMarker(root, cur + 1),
-          (cur + 1).toString)) {
-        if (cur > 0L) fs.delete(dvbSeqMarker(root, cur), false)
-        return
-      }
-    }
-    throw new IllegalStateException(
-      s"bumpBucketedSeq at $path: still colliding after 10000 attempts")
-  }
-
-  /** Declare a live-tree mutation in flight — call BEFORE the first
-    * tree change; pass the returned marker to
-    * [[endBucketedMutation]] when done (in a finally: a failed
-    * mutation may have half-landed changes, so the bump must still
-    * happen). */
-  private def beginBucketedMutation(spark: SparkSession,
-      path: String): org.apache.hadoop.fs.Path = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = fsFor(spark, root)
-    val m = new org.apache.hadoop.fs.Path(root,
-      s"_dvbmut_${java.util.UUID.randomUUID.toString.take(8)}")
-    fs.create(m, true).close()
-    m
-  }
-
-  /** Seal a live-tree mutation: bump the commit seq (any DV stamped
-    * before this mutation stops validating), then clear the
-    * in-flight marker. */
-  private def endBucketedMutation(spark: SparkSession, path: String,
-      marker: org.apache.hadoop.fs.Path): Unit = {
-    bumpBucketedSeq(spark, path)
-    fsFor(spark, marker).delete(marker, false)
-    ()
   }
 
   /** FILE-LOCAL physical tombstone retirement — the deletion-vector
@@ -3689,10 +3272,11 @@ object Tables {
   }
 
   /** One epoch-partitioned data table as [[foldEpochs]] rewrites it
-    * ([[Layout.rewrite]]): MANIFESTED tables fold behind the manifest
-    * pointer and keep `partCols` (the ANN code table's
-    * (ingest_epoch, cell) — with `ingest_epoch` FIRST); BUCKETED ones
-    * fold as their next version dir, so the bucket layout survives. */
+    * ([[Layout.rewrite]]): every table folds behind the manifest
+    * pointer and keeps `partCols` (the ANN code table's
+    * (ingest_epoch, cell) — with `ingest_epoch` FIRST); a BUCKETED one
+    * writes its rewrite bucket-aligned, so the bucket layout
+    * survives. */
   private[graft] final case class EpochTable(path: String,
       layout: Layout = Layout.Manifested,
       partCols: Seq[String] = Seq("ingest_epoch"))
@@ -3778,9 +3362,9 @@ object Tables {
 
   // ---------- Change-data-feed (incremental consumers) ----------
 
-  // SIBLING of the archive dir, not inside it: a bucketed fold swaps
-  // the whole live directory ([[replaceBucketedArchive]]), and losing
-  // the marker history there could REGRESS the horizon (an old
+  // SIBLING of the archive dir, not inside it: a bucketed rebuild
+  // deletes and recreates its root ([[writeBucketedArchive]]), and
+  // losing the marker history there could REGRESS the horizon (an old
   // maxTombE marker above the next fold's own value) — exactly the
   // silent-skip the horizon exists to prevent
   private[graft] def horizonDir(path: String) =
@@ -4460,6 +4044,20 @@ object Tables {
     fileSidecar(spark, path, "_file_blooms").collect {
       case (dir, Blooms(keyCol, k, _)) => (dir, keyCol, k) }
 
+  /** Every live data file of the table at `path`, with the version
+    * base its partition columns reconstruct under — what the per-file
+    * sidecars cover. */
+  private def liveFiles(spark: SparkSession,
+                        path: String): Seq[(String, String)] = {
+    val root = path.stripSuffix("/")
+    val fs = fsFor(spark, new org.apache.hadoop.fs.Path(root))
+    resolveManifest(spark, path)._2.values.toSeq.flatMap(entryPaths)
+      .flatMap { rel =>
+        val (dir, base) = entryDirAndBase(root, rel)
+        dataFiles(fs, new org.apache.hadoop.fs.Path(dir)).map(_ -> base)
+      }
+  }
+
   /** The live files a sidecar dir covers — the one coverage
     * computation. A dir that vanished under a racing vacuum covers
     * nothing. */
@@ -4480,8 +4078,8 @@ object Tables {
     }.reduce(_.unionByName(_, allowMissingColumns = true))
 
   /** The one writer of both sidecars, for both layouts: `live` is the
-    * layout's live data files with their version bases
-    * ([[Layout.liveFiles]]). Rows of the current sidecar are carried
+    * table's live data files with their version bases
+    * ([[liveFiles]]). Rows of the current sidecar are carried
     * for the files still live when it was built with the same
     * parameters — data files are immutable, so a row stays valid as
     * long as its file lives — and only the uncovered files are
@@ -4534,11 +4132,10 @@ object Tables {
     * A table never analyzed is not touched (and not listed). Returns
     * how many sidecars were rebuilt. */
   def refreshFileSidecars(spark: SparkSession, path: String,
-                          minCoverage: Double = 1.0,
-                          layout: Layout = Layout.Manifested): Int = {
+                          minCoverage: Double = 1.0): Int = {
     val current = Seq("_file_stats", "_file_blooms")
       .flatMap(fileSidecar(spark, path, _))
-    lazy val live = layout.liveFiles(spark, path)
+    lazy val live = liveFiles(spark, path)
     current.count { case (_, sc) =>
       buildFileSidecar(spark, path, live, sc, minCoverage).nonEmpty }
   }
@@ -4548,7 +4145,7 @@ object Tables {
   def computeFileStats(spark: SparkSession, path: String,
                        statsCols: Seq[String]): Long = {
     require(statsCols.nonEmpty, "computeFileStats needs columns")
-    buildFileSidecar(spark, path, Layout.Manifested.liveFiles(spark, path),
+    buildFileSidecar(spark, path, liveFiles(spark, path),
       ZoneMaps(statsCols)).getOrElse(0L)
   }
 
@@ -4559,7 +4156,7 @@ object Tables {
   def computeFileBlooms(spark: SparkSession, path: String, keyCol: String,
                         expectedItemsPerFile: Long = 1000000L,
                         fpp: Double = 0.01): Long =
-    buildFileSidecar(spark, path, Layout.Manifested.liveFiles(spark, path),
+    buildFileSidecar(spark, path, liveFiles(spark, path),
       sizedBlooms(keyCol, expectedItemsPerFile, fpp)).getOrElse(0L)
 
   /** Opt a bucketed archive into commit-time Blooms on its bucket key:
@@ -4572,7 +4169,7 @@ object Tables {
   def enableCommitBlooms(spark: SparkSession, path: String,
                          expectedItemsPerFile: Long = 100000L,
                          fpp: Double = 0.01): Long =
-    buildFileSidecar(spark, path, Layout.Bucketed.liveFiles(spark, path),
+    buildFileSidecar(spark, path, liveFiles(spark, path),
       sizedBlooms(readBucketSpec(spark, path)._1, expectedItemsPerFile,
         fpp)).getOrElse(0L)
 

@@ -657,9 +657,8 @@ object ScaleOps {
     * operational metadata a fold/vacuum scheduler reads: live epoch
     * count, live (tombstone-masked) row count, live tombstone keys,
     * retained version count, and the dead dirs (with their bytes) the
-    * layout's vacuum would reclaim ([[graft.io.Tables.Layout.health]]:
-    * superseded partition dirs no live manifest references, or every
-    * non-current bucketed version dir). Epoch count, dead-dir
+    * vacuum would reclaim ([[graft.io.Tables.footprint]]: superseded
+    * partition dirs no live manifest references). Epoch count, dead-dir
     * discovery and version count are FS METADATA (driver-side
     * listings — the compaction-service shape); the two row counts are
     * distributed jobs. A table a fold emptied holds no live rows. */
@@ -671,7 +670,7 @@ object ScaleOps {
   private[graft] def archiveHealth(s: SparkSession, store: String,
       path: String, tombPath: String, keyCol: String,
       layout: Tables.Layout = Tables.Layout.Manifested): ArchiveHealth = {
-    val f = layout.health(s, path)
+    val f = Tables.footprint(s, path)
     val snap = layout.snapshot(s, path)
     val live = if (snap.empty) 0L
       else Tables.minusTombstones(snap.data, tombPath, keyCol).count()

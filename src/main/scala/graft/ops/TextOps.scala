@@ -1729,7 +1729,7 @@ object TextOps {
     // committing an empty manifest would wedge every later doclen
     // read (the all-filtered-first-epoch guard the fingerprint
     // archive applies).
-    val hasArchive = Tables.bucketedArchiveExists(s, s"$idx/postings")
+    val hasArchive = Tables.manifestExists(s, s"$idx/postings")
     if (!hasArchive && batch.isEmpty) return
     val post = batch.select(col("doc_id"),
         explode(words(col("text"))).as("token"))

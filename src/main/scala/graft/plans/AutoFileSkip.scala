@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex, LogicalRelation, NoopCache, PartitionSpec, PartitioningAwareFileIndex}
 import org.apache.spark.sql.functions.{col, lit, not}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
@@ -19,8 +19,9 @@ import graft.io.Tables
   * guard (a pruned scan is never re-pruned) and the spec's plan pin. */
 private[plans] class GraftPrunedFileIndex(
     spark: SparkSession, paths: Seq[Path], params: Map[String, String],
-    schema: Option[StructType])
-  extends InMemoryFileIndex(spark, paths, params, schema)
+    schema: Option[StructType], partitions: Option[PartitionSpec])
+  extends InMemoryFileIndex(spark, paths, params, schema, NoopCache,
+    partitions)
 
 /** Catalyst optimizer rule: file-level data skipping from the engine's
   * own sidecar statistics, applied AUTOMATICALLY to declarative reads.
@@ -169,17 +170,19 @@ case class AutoFileSkip(spark: SparkSession) extends Rule[LogicalPlan]
     if (survivors.isEmpty)
       Some(f.copy(child = LocalRelation(l.output)))
     else {
-      // partition-column reconstruction over an explicit FILE list
-      // needs a basePath: manifested reads carry one in their options
-      // already; a catalog (bucketed-archive) scan doesn't, so anchor
-      // it at the table location — without it the pruned index infers
-      // zero partition columns and the scan asserts at read time
-      val params =
-        if (fsRel.options.contains("basePath")) fsRel.options
-        else fsRel.options +
-          ("basePath" -> fsRel.location.rootPaths.head.toString)
+      // partition-column reconstruction over an explicit FILE list:
+      // manifested reads carry a basePath in their options; a bucketed
+      // read's dirs share no base, so it carries its partition spec
+      // over instead — the pruned index matches each surviving file's
+      // dir to the original partition values
+      val partitions = fsRel.location match {
+        case p: PartitioningAwareFileIndex if fsRel.bucketSpec.isDefined =>
+          Some(p.partitionSpec())
+        case _ => None
+      }
       val idx = new GraftPrunedFileIndex(fsRel.sparkSession,
-        survivors.map(new Path(_)), params, Some(fsRel.schema))
+        survivors.map(new Path(_)), fsRel.options, Some(fsRel.schema),
+        partitions)
       Some(f.copy(child =
         l.copy(relation = fsRel.copy(location = idx)(fsRel.sparkSession))))
     }

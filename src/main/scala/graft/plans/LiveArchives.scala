@@ -233,10 +233,9 @@ case class ResolveLiveArchives(session: SparkSession)
         val name = u.multipartIdentifier.head
         val reg = LiveArchives.lookup(session, name).get
         // snapshot version FIRST, then the plan — see BaseVersionTag
-        val baseV: Option[Long] =
-          if (reg.asOf.isEmpty && reg.layout.exists(session, reg.path))
-            reg.layout.snapshot(session, reg.path).stamp
-          else None
+        val baseV: Option[Long] = Option.when(reg.asOf.isEmpty &&
+            Tables.manifestExists(session, reg.path))(
+          Tables.resolveManifest(session, reg.path)._1)
         val alias =
           SubqueryAlias(name, LiveArchives.resolve(session, reg))
         alias.setTagValue(LiveArchives.SubstitutedTag, name)
@@ -263,7 +262,7 @@ case class ResolveLiveArchives(session: SparkSession)
         val v: Long = (ts, ver) match {
           case (Some(tsExpr), None) =>
             Tables.manifestVersionAsOf(session, reg.path,
-              LiveArchives.evalTsMillis(session, name, tsExpr), reg.layout)
+              LiveArchives.evalTsMillis(session, name, tsExpr))
           case (None, Some(verStr)) =>
             try verStr.toLong catch {
               case _: NumberFormatException =>
@@ -292,7 +291,7 @@ case class ResolveLiveArchives(session: SparkSession)
         val reg = LiveArchives
           .unshadowed(session, full.stripSuffix("$history")).get
         SubqueryAlias(full,
-          reg.layout.history(session, reg.path).queryExecution.analyzed)
+          Tables.manifestHistory(session, reg.path).queryExecution.analyzed)
 
       // SQL schema evolution: `ALTER TABLE <live name> ADD COLUMNS`
       // routes onto the engine's evolution verbs — a physical staged

@@ -235,7 +235,7 @@ object StreamOps {
     val batchUnique = withFp
       .withColumn("__canon", min(col("doc_id")).over(wb))
       .where(col("doc_id") === col("__canon")).drop("__canon")
-    val exists = Tables.Layout.Manifested.exists(spark, corpusPath)
+    val exists = Tables.manifestExists(spark, corpusPath)
     val fresh =
       if (exists) {
         // tombstone-masked (corpusView): a deleted
@@ -615,11 +615,11 @@ object StreamOps {
       stores: => Seq[Store], policy: Boolean): DataFrame =
       withWindowLease(s, root, holderId) {
     import s.implicits._
-    def exists(t: StoreTable) = t.layout.exists(s, t.path)
+    def exists(t: StoreTable) = Tables.manifestExists(s, t.path)
     def health(name: String, t: StoreTable, st: Store) =
       graft.ops.ScaleOps.archiveHealth(s, name, t.path, st.tombstones,
         st.key, t.layout)
-    def vacuum(t: StoreTable): Unit = t.layout.vacuum(s, t.path)
+    def vacuum(t: StoreTable): Unit = Tables.vacuumManifested(s, t.path)
     val live = stores.filter(st => exists(st.tables.head))
     val decisions = live.flatMap { st =>
       val decided = Option.when(policy) {
@@ -637,7 +637,7 @@ object StreamOps {
           Tables.vacuumManifested(s, st.tombstones)
       }
       st.tables.filter(exists).foreach(t => Tables.refreshFileSidecars(s,
-        t.path, if (acted) 1.0 else 0.5, t.layout))
+        t.path, if (acted) 1.0 else 0.5))
       decided.map { case (h, (fd, fr, vd, vr)) =>
         (h.store, h.n_epochs, h.n_live_rows, h.n_tombstones,
           h.manifest_versions, h.n_dead_dirs, fd, fr, vd, vr, acted)

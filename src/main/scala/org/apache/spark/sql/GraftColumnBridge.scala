@@ -21,6 +21,11 @@ object GraftColumnBridge extends org.apache.spark.internal.Logging {
              plan: catalyst.plans.logical.LogicalPlan): Dataset[Row] =
     classic.Dataset.ofRows(s.asInstanceOf[classic.SparkSession], plan)
 
+  /** `t` with every field nullable, nested ones included — the schema
+    * Spark's own file sources report (`asNullable` is
+    * `private[spark]`). */
+  def asNullable(t: types.StructType): types.StructType = t.asNullable
+
   /** The session's UUID — unique for the session's lifetime, never
     * reused (unlike an identity hash). `private[sql]` on the classic
     * session; re-exported for session-scoped registries. */

@@ -19,15 +19,13 @@ import graft.SparkSpec
   *  - FRESH-TOMBSTONE OVERLAY: tombstones landed after the build are
   *    key-masked on top (correctness first), and the plan shows the
   *    anti-join again;
-  *  - STALENESS: ANY live-tree mutation — an epoch ingest, a fold's
-  *    version flip — bumps the commit seq (or, mid-mutation, shows an
-  *    in-flight marker) and the masked read degrades to the key mask
-  *    (staleness costs the fast path, never rows); a rebuild
-  *    restores it. The check is ONE root listing — O(metadata),
-  *    never a recursive data-tree walk;
-  *  - VACUUM: superseded `_dvb` dirs are retained until
-  *    [[Tables.sweepBucketedScratch]], which keeps exactly the
-  *    current pointer's dir.
+  *  - STALENESS: every commit — an epoch ingest, a fold — publishes
+  *    the next manifest version, the one DV stamp of both layouts,
+  *    and the masked read degrades to the key mask (staleness costs
+  *    the fast path, never rows); a rebuild restores it;
+  *  - VACUUM: superseded `_dv` dirs are retained until
+  *    [[Tables.vacuumManifested]], which keeps exactly the current
+  *    pointer's dir.
   */
 class BucketedDvSpec extends SparkSpec {
 
@@ -104,7 +102,7 @@ class BucketedDvSpec extends SparkSpec {
     assert(!hasLeftAnti(
       Tables.readMasked(spark, p, tomb, "k", Tables.Layout.Bucketed)))
     // an epoch ingest changes files WITHOUT touching tombstones: the
-    // commit seq moves and the positions may be wrong — the read
+    // manifest version moves and the positions may be wrong — the read
     // must fall back to the key mask
     Tables.ingestBucketedArchive(
       Seq((500L, "d500", 0L)).toDF("k", "body", "grp"), p, epoch = 2L)
@@ -112,7 +110,7 @@ class BucketedDvSpec extends SparkSpec {
     assert(cnt(afterIngest) === 499L,
       "post-ingest masked read must stay correct")
     assert(hasLeftAnti(afterIngest),
-      "a stale seq stamp must degrade to the key mask")
+      "a stale stamp must degrade to the key mask")
     // rebuild: fast path again, and the fold's version flip degrades
     // it once more across the version boundary
     Tables.computeDeletionVectors(spark, p, tomb, "k", Tables.Layout.Bucketed)
@@ -127,42 +125,34 @@ class BucketedDvSpec extends SparkSpec {
     assert(cnt(Tables.readBucketedArchive(spark, p)) === 499L)
   }
 
-  test("commit-seq protocol: a quiet build stamps the O(1) seq form; " +
-    "an in-flight mutation marker degrades the read") {
+  test("an ingest after a DV build degrades readMasked to the key " +
+    "mask, and a rebuild restores the positional mask") {
     val (p, tomb) = mkFixture("seq")
     Tables.ingestTombstones(Seq(4L).toDF("k"), tomb,
       Tables.DeleteEpochBase)
     Tables.computeDeletionVectors(spark, p, tomb, "k", Tables.Layout.Bucketed)
-    val ptr = Tables.deletionVectors(spark, p, Tables.Layout.Bucketed).get
-    assert(ptr.stamp === Tables.bucketedRootState(spark, p)._1,
-      s"a quiet-window build must stamp the current commit seq: $ptr")
+    val ptr = Tables.deletionVectors(spark, p).get
+    assert(ptr.stamp === Tables.resolveManifest(spark, p)._1,
+      s"the build must stamp the live manifest version: $ptr")
     assert(!hasLeftAnti(
       Tables.readMasked(spark, p, tomb, "k", Tables.Layout.Bucketed)))
-    // a mutation IN FLIGHT (marker present, seq not yet bumped) must
-    // degrade: its files may be half-landed under an unmoved seq
-    val fs = new org.apache.hadoop.fs.Path(p)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val marker = new org.apache.hadoop.fs.Path(p, "_dvbmut_testcrash")
-    fs.create(marker, true).close()
+    // an epoch ingest publishes the next manifest version: the
+    // pointer's stamp no longer matches, so the read key-masks
+    Tables.ingestBucketedArchive(
+      Seq((600L, "d600", 0L)).toDF("k", "body", "grp"), p, epoch = 2L)
+    assert(Tables.resolveManifest(spark, p)._1 === ptr.stamp + 1L)
     val during = Tables.readMasked(spark, p, tomb, "k", Tables.Layout.Bucketed)
-    assert(hasLeftAnti(during) && cnt(during) === 499L,
-      "an in-flight mutation must degrade the read to the key mask")
-    fs.delete(marker, false)
-    assert(!hasLeftAnti(
-      Tables.readMasked(spark, p, tomb, "k", Tables.Layout.Bucketed)),
-      "clearing the marker must restore the fast path")
-    // a build whose window is NOT quiet publishes no pointer: the
-    // previous one stays, and its older seq no longer validates
-    fs.create(marker, true).close()
-    Tables.ingestTombstones(Seq(6L).toDF("k"), tomb,
-      Tables.DeleteEpochBase + 1L)
+    assert(hasLeftAnti(during) && cnt(during) === 500L,
+      "a stale stamp must degrade the read to the key mask")
     Tables.computeDeletionVectors(spark, p, tomb, "k", Tables.Layout.Bucketed)
-    assert(Tables.deletionVectors(spark, p, Tables.Layout.Bucketed).get === ptr,
-      "a build over an in-flight mutation must not publish a pointer")
-    fs.delete(marker, false)
+    assert(Tables.deletionVectors(spark, p).get.stamp ===
+      Tables.resolveManifest(spark, p)._1)
+    val again = Tables.readMasked(spark, p, tomb, "k", Tables.Layout.Bucketed)
+    assert(!hasLeftAnti(again) && cnt(again) === 500L,
+      "a rebuild must restore the positional mask")
   }
 
-  test("vacuum: superseded _dvb dirs retained until the sweep, which " +
+  test("vacuum: superseded DV dirs retained until the sweep, which " +
     "keeps exactly the current pointer's dir") {
     val (p, tomb) = mkFixture("vac")
     val fs = new org.apache.hadoop.fs.Path(p)
@@ -170,59 +160,25 @@ class BucketedDvSpec extends SparkSpec {
     Tables.ingestTombstones(Seq(2L).toDF("k"), tomb,
       Tables.DeleteEpochBase)
     Tables.computeDeletionVectors(spark, p, tomb, "k", Tables.Layout.Bucketed)
-    val dir1 = Tables.deletionVectors(spark, p, Tables.Layout.Bucketed).get.dir
+    val dir1 = Tables.deletionVectors(spark, p).get.dir
     Tables.computeDeletionVectors(spark, p, tomb, "k", Tables.Layout.Bucketed)
-    val dir2 = Tables.deletionVectors(spark, p, Tables.Layout.Bucketed).get.dir
+    val dir2 = Tables.deletionVectors(spark, p).get.dir
     assert(dir2 !== dir1)
     assert(fs.exists(new org.apache.hadoop.fs.Path(dir1)),
       "the superseded mask dir must survive the pointer flip")
     // under the default grace a JUST-superseded dir is protected —
     // a vacuum racing a concurrent build must not eat a freshly
     // written dir in its pre-pointer-flip window
-    Tables.sweepBucketedScratch(spark, p)
+    Tables.vacuumManifested(spark, p)
     assert(fs.exists(new org.apache.hadoop.fs.Path(dir1)),
       "the sweep must skip sidecar dirs younger than the grace")
     try {
       spark.conf.set("spark.graft.sweep.sidecarGraceMs", "0")
-      Tables.sweepBucketedScratch(spark, p)
+      Tables.vacuumManifested(spark, p)
     } finally spark.conf.unset("spark.graft.sweep.sidecarGraceMs")
     assert(!fs.exists(new org.apache.hadoop.fs.Path(dir1)),
       "the sweep must reclaim the superseded mask dir past the grace")
     assert(fs.exists(new org.apache.hadoop.fs.Path(dir2)),
       "the sweep must keep the current pointer's dir")
-  }
-
-  test("mutation markers sweep on their OWN (much larger) horizon: a " +
-    "live long mutation outliving the sidecar grace keeps its marker " +
-    "(reads stay degraded-correct); only past the mutation horizon is " +
-    "it treated as crashed — swept WITH a seq bump") {
-    val (p, _) = mkFixture("mutgrace")
-    val fs = new org.apache.hadoop.fs.Path(p)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val marker = new org.apache.hadoop.fs.Path(p, "_dvbmut_longrun")
-    fs.create(marker, true).close()
-    val seqBefore = Tables.bucketedRootState(spark, p)._1
-    try {
-      // sidecar grace 0 (the aggressive-test setting) must NOT eat a
-      // mutation marker — the mutation may legitimately still run
-      spark.conf.set("spark.graft.sweep.sidecarGraceMs", "0")
-      Tables.sweepBucketedScratch(spark, p)
-      assert(fs.exists(marker),
-        "a mutation marker inside the mutation horizon must survive " +
-          "a sweep whose sidecar grace has elapsed")
-      assert(Tables.bucketedRootState(spark, p)._1 === seqBefore,
-        "a surviving marker must not bump the commit seq")
-      // past the MUTATION horizon it is a crashed writer: swept, and
-      // the seq bumped so pre-crash DV stamps stop validating
-      spark.conf.set("spark.graft.sweep.mutationGraceMs", "0")
-      Tables.sweepBucketedScratch(spark, p)
-      assert(!fs.exists(marker),
-        "a marker past the mutation horizon must be swept")
-      assert(Tables.bucketedRootState(spark, p)._1 !== seqBefore,
-        "sweeping a crashed mutation's marker must bump the seq")
-    } finally {
-      spark.conf.unset("spark.graft.sweep.sidecarGraceMs")
-      spark.conf.unset("spark.graft.sweep.mutationGraceMs")
-    }
   }
 }

@@ -225,7 +225,7 @@ class FoldPropSpec extends SparkSpec {
             case BuildDv =>
               Tables.computeDeletionVectors(spark, path, tomb, "k", layout)
             case VanishDv =>
-              Tables.deletionVectors(spark, path, layout).foreach(p =>
+              Tables.deletionVectors(spark, path).foreach(p =>
                 org.apache.hadoop.fs.FileUtil.fullyDelete(
                   new java.io.File(p.dir)))
           }

@@ -378,11 +378,12 @@ class LayoutSpec extends SparkSpec {
       assert(all() == ((0L until 200L) ++ (300L until 320L)).toSet,
         "epoch replay did not replace its own partition")
 
-      // fresh catalog: drop the entry, read again — re-registers from
-      // the sidecar and the scan is STILL bucketed
-      spark.sql(s"DROP TABLE IF EXISTS `${Tables.bucketedArchName(path)}`")
-      assert(all() == ((0L until 200L) ++ (300L until 320L)).toSet,
-        "fresh-catalog re-registration lost rows")
+      // fresh session: nothing memoized, the read rebuilds from the
+      // manifest and the spec on disk
+      assert(Tables.readBucketedArchive(spark.newSession(), path)
+        .select("doc_id").as[Long].collect().toSet ==
+        ((0L until 200L) ++ (300L until 320L)).toSet,
+        "fresh-session read lost rows")
 
       // probe plan: broadcast disabled + AQE off so the layout must do
       // the work — archive side pre-partitioned (zero archive
@@ -460,11 +461,8 @@ class LayoutSpec extends SparkSpec {
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevB2)
         spark.conf.set("spark.sql.adaptive.enabled", prevA2)
       }
-    } finally {
-      spark.sql(s"DROP TABLE IF EXISTS `${Tables.bucketedArchName(path)}`")
-      org.apache.hadoop.fs.FileUtil.fullyDelete(
-        new java.io.File(path).getParentFile)
-    }
+    } finally org.apache.hadoop.fs.FileUtil.fullyDelete(
+      new java.io.File(path).getParentFile)
   }
 
   test("manifest commit is CAS: a stale-version commit raises, and " +
@@ -549,12 +547,9 @@ class LayoutSpec extends SparkSpec {
         Tables.readBucketSpec(spark, path)
       assert(key == "key" && buckets == 4 &&
         partCols == Seq("ingest_epoch", "cell"))
-      // the sizing note is on disk for audit (sidecar lives inside
-      // the current version dir under the versioned layout)
-      val vdir = Tables.bucketedVersionDir(path,
-        Tables.bucketedCurrentVersion(spark, path).get)
+      // the sizing note is on disk for audit, at the table root
       val spec = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(vdir, "_graft_bucketspec")), "UTF-8")
+        java.nio.file.Paths.get(path, "_graft_bucketspec")), "UTF-8")
       assert(spec.contains("sized rows=40"), s"sizing note missing:\n$spec")
       // nested epoch commit replaces exactly its own subtree
       Tables.ingestBucketedArchive(
@@ -568,11 +563,13 @@ class LayoutSpec extends SparkSpec {
         .select("doc_id").as[Long].collect().toSeq
       assert(got == Seq(200L), s"nested epoch replace failed: $got")
       assert(Tables.readBucketedArchive(spark, path).count() == 41)
-    } finally {
-      spark.sql(s"DROP TABLE IF EXISTS `${Tables.bucketedArchName(path)}`")
-      org.apache.hadoop.fs.FileUtil.fullyDelete(
-        new java.io.File(path).getParentFile)
-    }
+      // a fresh session rebuilds the nested partition values from the
+      // manifest keys
+      assert(Tables.readBucketedArchive(spark.newSession(), path)
+        .where(col("cell") === 2L).select("doc_id").as[Long].collect()
+        .toSet == (0L until 40L).filter(_ % 3 == 2).toSet + 200L)
+    } finally org.apache.hadoop.fs.FileUtil.fullyDelete(
+      new java.io.File(path).getParentFile)
   }
 
   test("epoch claim: a held claim blocks every OTHER writer loudly, " +
@@ -639,11 +636,8 @@ class LayoutSpec extends SparkSpec {
       threads.foreach(_.start()); threads.foreach(_.join())
       assert(wins.get() == 1 && losses.get() == n - 1,
         s"claim stampede: ${wins.get()} winners, want exactly 1")
-    } finally {
-      spark.sql(s"DROP TABLE IF EXISTS `${Tables.bucketedArchName(path)}`")
-      org.apache.hadoop.fs.FileUtil.fullyDelete(
-        new java.io.File(path).getParentFile)
-    }
+    } finally org.apache.hadoop.fs.FileUtil.fullyDelete(
+      new java.io.File(path).getParentFile)
   }
 
   test("manifest CAS is ATOMIC under a same-version stampede: " +
@@ -754,7 +748,7 @@ class LayoutSpec extends SparkSpec {
       assert(expected == 5500L)
 
       // reader hammer: resolve + count in a tight loop WHILE the fold
-      // rewrites and flips the version marker — the old in-place swap
+      // rewrites and flips the manifest pointer — an in-place swap
       // provably fails this (live dir missing mid-rename); the
       // versioned layout must never show a partial table. Counts may
       // legitimately see the PRE-fold or POST-fold total (both 5500:
@@ -777,17 +771,18 @@ class LayoutSpec extends SparkSpec {
       assert(failures.isEmpty, s"isolation violated: ${failures.peek()}")
       assert(Tables.readBucketedArchive(spark, path).count() == expected)
 
-      // the fold committed v2 and RETAINED v1: time travel reads the
-      // pre-fold snapshot (epochs still unfolded there)
-      assert(Tables.bucketedVersions(spark, path) == Seq(1L, 2L))
-      val v1 = Tables.readBucketedArchiveAt(spark, path, 1L)
-      assert(v1.count() == expected)
-      assert(v1.select("ingest_epoch").distinct().count() == 4L,
-        "v1 must still hold the unfolded epoch layout")
+      // the build and three ingests are v1-v4, the fold committed v5
+      // and RETAINED v4: time travel reads the pre-fold snapshot
+      // (epochs still unfolded there)
+      assert(Tables.resolveManifest(spark, path)._1 == 5L)
+      val v4 = Tables.Layout.Bucketed.readAt(spark, path, 4L)
+      assert(v4.count() == expected)
+      assert(v4.select("ingest_epoch").distinct().count() == 4L,
+        "v4 must still hold the unfolded epoch layout")
       assert(Tables.readBucketedArchive(spark, path)
         .select("ingest_epoch").distinct().count() == 2L,
         "current version must hold the folded layout (base + carry)")
-      // the versioned scan is still a BUCKETED catalog scan: a key
+      // the versioned scan is still a BUCKETED scan: a key
       // probe prunes to its buckets (autoBucketedScan off, as in the
       // epoch-lifecycle pin — a bare filter isn't "bucketing
       // beneficial" to the planner, pruning is)
@@ -804,51 +799,126 @@ class LayoutSpec extends SparkSpec {
       } finally spark.conf.set(
         "spark.sql.sources.bucketing.autoBucketedScan.enabled", prevAuto)
 
-      // sweep reclaims the superseded version; time travel to it is
-      // then a loud failure, the live read untouched
-      assert(Tables.sweepBucketedScratch(spark, path) == 1)
+      // the vacuum reclaims the superseded versions; time travel to
+      // one is then a loud failure, the live read untouched
+      Tables.vacuumManifested(spark, path)
       intercept[IllegalArgumentException] {
-        Tables.readBucketedArchiveAt(spark, path, 1L)
+        Tables.Layout.Bucketed.readAt(spark, path, 4L)
       }
       assert(Tables.readBucketedArchive(spark, path).count() == expected)
-    } finally {
-      (1L to 3L).foreach(v => spark.sql(
-        s"DROP TABLE IF EXISTS `${Tables.bucketedArchName(path, v)}`"))
+    } finally
       org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(root0))
+  }
+
+  test("one version scheme: a manifested and a bucketed table run " +
+    "the same lifecycle and leave the same root names, apart from " +
+    "the bucket spec") {
+    import graft.SparkSpec.spark.implicits._
+    val root = java.nio.file.Files
+      .createTempDirectory("graft-one-scheme").toString
+    def rows(ids: Range, e: Long) = ids.map(i =>
+      (i.toLong, s"k${i % 11}", e)).toDF("doc_id", "key", "ingest_epoch")
+    try {
+      spark.conf.set("spark.graft.sweep.sidecarGraceMs", "0")
+      val names = Seq(Tables.Layout.Manifested, Tables.Layout.Bucketed)
+        .map { layout =>
+          val bucketed = layout == Tables.Layout.Bucketed
+          val path = s"$root/${layout.name}"
+          val tomb = s"$root/${layout.name}_tomb"
+          if (bucketed)
+            Tables.writeBucketedArchive(rows(0 until 100, 0L), path, "key", 4)
+          else Tables.writeManifested(rows(0 until 100, 0L), path,
+            "ingest_epoch")
+          Seq(1L, 2L).foreach { e =>
+            val df = rows((100 * e).toInt until (100 * e).toInt + 20, e)
+            if (bucketed) Tables.ingestBucketedArchive(df, path, e)
+            else Tables.upsertManifested(df, path, Seq("ingest_epoch"),
+              _ == s"ingest_epoch=$e")
+          }
+          Tables.ingestTombstones(Seq(3L, 105L, 210L).toDF("doc_id"), tomb,
+            Tables.DeleteEpochBase)
+          Tables.computeDeletionVectors(spark, path, tomb, "doc_id", layout)
+          Tables.foldEpochs(spark, Seq(Tables.EpochTable(path, layout)),
+            tomb, "doc_id")
+          Tables.vacuumManifested(spark, path)
+          // 140 rows, three deleted; the newest epoch's key stays masked
+          assert(Tables.readMasked(spark, path, tomb, "doc_id", layout)
+            .count() == 137L, s"${layout.name} lifecycle lost rows")
+          new java.io.File(path).list().toSet
+        }
+      assert(names(0) == names(1) - "_graft_bucketspec",
+        s"the two layouts' roots differ: ${names(0)} vs ${names(1)}")
+    } finally {
+      spark.conf.unset("spark.graft.sweep.sidecarGraceMs")
+      org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(root))
     }
   }
 
-  test("a bucketed root with no committed _bucketv- marker fails " +
-    "loudly, naming the path") {
+  test("a failed bucketed re-ingest keeps the epoch: its previous " +
+    "rows still read, and the claim is released") {
     import graft.SparkSpec.spark.implicits._
     val root = java.nio.file.Files
-      .createTempDirectory("graft-bnomarker").toString
+      .createTempDirectory("graft-bfail").toString
     val path = s"$root/arch"
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def rows(ids: Range, e: Long) = ids.map(i =>
+      (i.toLong, s"k${i % 7}", e)).toDF("doc_id", "key", "ingest_epoch")
+    def epoch1() = Tables.readBucketedArchive(spark, path)
+      .where(col("ingest_epoch") === 1L)
+      .select("doc_id").as[Long].collect().toSet
     try {
-      Tables.writeBucketedArchive(
-        (0L until 20L).map(i => (i, s"k${i % 3}", 0L))
-          .toDF("doc_id", "key", "ingest_epoch"), path, "key", 4)
-      fs.listStatus(new org.apache.hadoop.fs.Path(path))
-        .filter(_.getPath.getName.startsWith("_bucketv-"))
-        .foreach(st => fs.delete(st.getPath, false))
-      assert(!Tables.bucketedArchiveExists(spark, path))
-      val reads = Seq[() => Any](
-        () => Tables.readBucketedArchive(spark, path),
-        () => Tables.readBucketSpec(spark, path),
-        () => Tables.ingestBucketedArchive(
-          Seq((99L, "k0")).toDF("doc_id", "key"), path, 1L))
-      reads.foreach { f =>
-        val ex = intercept[IllegalStateException](f())
-        assert(ex.getMessage.contains(path) &&
-          ex.getMessage.contains("_bucketv-"),
-          s"marker-less root error must name the path: ${ex.getMessage}")
+      Tables.writeBucketedArchive(rows(0 until 50, 0L), path, "key", 4)
+      Tables.ingestBucketedArchive(rows(100 until 120, 1L), path, 1L)
+      // the replay's frame fails at execution, inside the write
+      val boom = udf((k: String) => {
+        if (k.nonEmpty) throw new IllegalStateException("boom"); k })
+      intercept[Exception] {
+        Tables.ingestBucketedArchive(
+          rows(200 until 210, 1L).withColumn("key", boom(col("key"))),
+          path, 1L)
       }
-    } finally {
-      spark.sql(s"DROP TABLE IF EXISTS `${Tables.bucketedArchName(path, 1L)}`")
+      assert(epoch1() == (100L until 120L).toSet,
+        "a failed re-ingest must leave the epoch's previous rows")
+      assert(Tables.readBucketedArchive(spark, path).count() == 70L)
+      Tables.ingestBucketedArchive(rows(300 until 305, 1L), path, 1L)
+      assert(epoch1() == (300L until 305L).toSet)
+    } finally
       org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(root))
-    }
+  }
+
+  test("a recreated bucketed root refuses time travel to the previous " +
+    "root's versions — nothing reads under the new bucket count") {
+    import graft.SparkSpec.spark.implicits._
+    val root = java.nio.file.Files
+      .createTempDirectory("graft-brecreate").toString
+    val path = s"$root/arch"
+    def rows(ids: Range, e: Long) = ids.map(i =>
+      (i.toLong, s"k${i % 13}", e)).toDF("doc_id", "key", "ingest_epoch")
+    try {
+      Tables.writeBucketedArchive(rows(0 until 60, 0L), path, "key", 4)
+      Tables.ingestBucketedArchive(rows(100 until 110, 1L), path, 1L)
+      Tables.ingestBucketedArchive(rows(200 until 210, 2L), path, 2L)
+      assert(Tables.Layout.Bucketed.readAt(spark, path, 3L).count() == 80L)
+      assert(Tables.Layout.Bucketed.readAt(spark, path, 1L).count() == 60L)
+      Tables.writeBucketedArchive(rows(0 until 30, 0L), path, "key", 8)
+      Seq(2L, 3L).foreach { v =>
+        intercept[IllegalArgumentException] {
+          Tables.Layout.Bucketed.readAt(spark, path, v)
+        }
+      }
+      // the new root's own v1 reads under its own spec
+      val v1 = Tables.Layout.Bucketed.readAt(spark, path, 1L)
+      assert(v1.count() == 30L)
+      val prevAuto = spark.conf
+        .get("spark.sql.sources.bucketing.autoBucketedScan.enabled")
+      spark.conf.set(
+        "spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
+      try assert(v1.where(col("key") === "k3").queryExecution
+          .executedPlan.toString.contains("out of 8"),
+        "the recreated root must read under its own bucket count")
+      finally spark.conf.set(
+        "spark.sql.sources.bucketing.autoBucketedScan.enabled", prevAuto)
+    } finally
+      org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(root))
   }
 
   test("bucket-spec sidecar: a 3-line (pre-partCols) or otherwise " +
@@ -861,11 +931,9 @@ class LayoutSpec extends SparkSpec {
       val df = (0L until 40L).map(i => (i, s"k${i % 7}", 0L))
         .toDF("doc_id", "key", "ingest_epoch")
       Tables.writeBucketedArchive(df, path, "key", 4)
-      // the sidecar lives in the current version dir
+      // the sidecar lives at the table root
       val (key, buckets, _, schema) = Tables.readBucketSpec(spark, path)
-      val vdir = Tables.bucketedVersionDir(path,
-        Tables.bucketedCurrentVersion(spark, path).get)
-      val sidecar = new org.apache.hadoop.fs.Path(vdir, "_graft_bucketspec")
+      val sidecar = new org.apache.hadoop.fs.Path(path, "_graft_bucketspec")
       val fs = sidecar.getFileSystem(spark.sparkContext.hadoopConfiguration)
       def rewrite(body: String): Unit = {
         val out = fs.create(sidecar, true)
@@ -881,10 +949,8 @@ class LayoutSpec extends SparkSpec {
         assert(ex.getMessage.contains("rebuild"),
           s"garbled sidecar error not actionable: ${ex.getMessage}")
       }
-    } finally {
-      spark.sql(s"DROP TABLE IF EXISTS `${Tables.bucketedArchName(path)}`")
+    } finally
       org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(root))
-    }
   }
 
   test("emptied archives: folds no-op (max epoch is NULL, not an NPE) " +
@@ -914,18 +980,19 @@ class LayoutSpec extends SparkSpec {
         "doc_id") == -1L,
         "fold over an emptied archive must no-op")
 
-      // the sweep reclaims the superseded version dir the fold
-      // retained (v1; the fold committed v2)
-      assert(Tables.sweepBucketedScratch(spark, path) == 1,
-        "sweep must reclaim the superseded version")
-      assert(!fs.exists(new org.apache.hadoop.fs.Path(
-          Tables.bucketedVersionDir(path, 1L))),
-        "superseded version dir survived the sweep")
+      // the vacuum reclaims the build's attempt dir, which the fold
+      // retained for readers of v1 (the fold committed v2)
+      val dataDir = new org.apache.hadoop.fs.Path(s"$path/data")
+      assert(fs.listStatus(dataDir).nonEmpty)
+      Tables.vacuumManifested(spark, path)
+      assert(fs.listStatus(dataDir).isEmpty,
+        "superseded attempt dir survived the vacuum")
       assert(Tables.readBucketedArchive(spark, path).count() == 0L,
-        "sweep broke the live (current-version) read")
-    } finally {
-      spark.sql(s"DROP TABLE IF EXISTS `${Tables.bucketedArchName(path)}`")
+        "vacuum broke the live (current-version) read")
+      assert(Tables.readBucketedArchive(spark, path).columns.toSet ==
+        Set("doc_id", "key", "ingest_epoch"),
+        "an emptied archive must read with the spec's schema")
+    } finally
       org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(root))
-    }
   }
 }

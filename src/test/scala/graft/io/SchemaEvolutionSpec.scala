@@ -13,9 +13,10 @@ import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructT
   *    can co-locate both vintages under one version base) preserve
   *    the superset;
   *  - type CHANGES are not evolution and stay loud;
-  *  - BUCKETED archives pin their schema physically (catalog DDL +
-  *    sidecar), so evolution is the explicit
-  *    [[Tables.evolveBucketedArchive]] rewrite; after it, an OLD
+  *  - BUCKETED archives pin their schema in the bucket spec, so
+  *    evolution is the explicit [[Tables.evolveBucketedArchive]]
+  *    spec widening (files are not rewritten: every retained version
+  *    reads the added column as null); after it, an OLD
   *    writer's frames are null-aligned to the widened schema while
   *    an unknown column is refused with the evolution recipe — and
   *    the bucketed scan's shuffle-free keyed aggregate survives.
@@ -145,5 +146,33 @@ class SchemaEvolutionSpec extends SparkSpec {
       arch.groupBy("doc_id").agg(sum(col("n_chars"))))
     assert(!plan.contains("Exchange"),
       s"evolution broke the bucketed layout:\n$plan")
+  }
+
+  test("bucketed: AS OF the pre-evolve version reads the added column " +
+    "as null and still plans a bucketed scan") {
+    val root = java.nio.file.Files
+      .createTempDirectory("graft-evo-asof").toString
+    val p = s"$root/arch"
+    val base = docs.select(col("doc_id"), col("n_chars"))
+    Tables.writeBucketedArchive(base.withColumn("ingest_epoch", lit(0L)),
+      p, "doc_id", 4)
+    assert(!Tables.Layout.Bucketed.readAt(spark, p, 1L).columns
+      .contains("lang"))
+    Tables.evolveBucketedArchive(spark, p,
+      StructType(Seq(StructField("lang", StringType))))
+    Tables.ingestBucketedArchive(
+      docs.where(pmod(col("doc_id"), lit(4)) === 3)
+        .select(col("doc_id"), col("n_chars"), col("lang")), p, 1L)
+    val v1 = Tables.Layout.Bucketed.readAt(spark, p, 1L)
+    assert(v1.columns.contains("lang"),
+      "the pre-evolve version must read under the widened schema")
+    assert(v1.count() == base.count() &&
+      v1.where(col("lang").isNotNull).isEmpty,
+      "the pre-evolve version must read the added column as null")
+    val plan = v1.groupBy("doc_id").agg(count(col("lang")))
+      .queryExecution.executedPlan.toString
+    assert(plan.contains("Bucketed: true") && !plan.contains("Exchange"),
+      s"the pre-evolve version lost its bucketed scan:\n$plan")
+    org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(root))
   }
 }

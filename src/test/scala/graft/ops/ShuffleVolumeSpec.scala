@@ -165,11 +165,8 @@ class ShuffleVolumeSpec extends SparkSpec {
         spark.conf.set("spark.sql.adaptive.enabled", prevA)
         graft.ops.Ckpt.release(batch)
       }
-    } finally {
-      spark.sql(s"DROP TABLE IF EXISTS " +
-        s"`${graft.io.Tables.bucketedArchName(s"$idx/postings")}`")
+    } finally
       org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(idx))
-    }
   }
 
   test("indexed BM25 shuffles strictly less than the from-text path: " +

@@ -674,10 +674,10 @@ class LiveArchiveSpec extends SparkSpec {
     spark.sql("DELETE FROM live_bkt WHERE id % 10 = 3")
     assert(spark.sql("SELECT count(*) FROM live_bkt")
       .head().getLong(0) === 135L)
-    val dvb = Tables.deletionVectors(spark, p, Tables.Layout.Bucketed)
-    assert(dvb.map(_.stamp) === Some(Tables.bucketedRootState(spark, p)._1),
-      "SQL DELETE on a bucketed name must build a CURRENT bucketed " +
-        s"DV with the O(1) seq stamp, got $dvb")
+    val dvb = Tables.deletionVectors(spark, p)
+    assert(dvb.map(_.stamp) === Some(Tables.resolveManifest(spark, p)._1),
+      "SQL DELETE on a bucketed name must build a CURRENT DV stamped " +
+        s"with the live manifest version, got $dvb")
     // the covered read through SQL is positional: no key anti-join
     assert(!spark.sql("SELECT count(*) FROM live_bkt")
       .queryExecution.executedPlan.toString.contains("LeftAnti"),
@@ -698,9 +698,9 @@ class LiveArchiveSpec extends SparkSpec {
       spark.sql("MERGE INTO live_bkt t USING live_bkt s " +
         "ON t.id = s.id WHEN MATCHED THEN DELETE")
     }
-    // VERSION AS OF reads a retained bucket version: v1 predates the
-    // fold (v2), so it still holds the pre-fold 150 rows
-    assert(spark.sql("SELECT count(*) FROM live_bkt VERSION AS OF 1")
+    // VERSION AS OF reads a retained bucket version: v2 (the ingest)
+    // predates the fold (v3), so it still holds the pre-fold 150 rows
+    assert(spark.sql("SELECT count(*) FROM live_bkt VERSION AS OF 2")
       .head().getLong(0) === 150L,
       "bucketed VERSION AS OF must read the retained version")
   }

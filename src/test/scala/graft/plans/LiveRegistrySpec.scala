@@ -153,7 +153,7 @@ class LiveRegistrySpec extends SparkSpec {
     s2.sql("DELETE FROM reg_bkt WHERE id < 5")
     assert(s2.sql("SELECT count(*) FROM reg_bkt")
       .head().getLong(0) === 95L)
-    assert(Tables.deletionVectors(s2, p, Tables.Layout.Bucketed).isDefined,
+    assert(Tables.deletionVectors(s2, p).isDefined,
       "a registry-loaded bucketed name must keep its layout routing")
   }
 

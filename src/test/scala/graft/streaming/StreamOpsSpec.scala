@@ -959,7 +959,7 @@ class StreamOpsSpec extends SparkSpec {
     ingestBatch(docs(1L -> mk("p"), 2L -> mk("q"), 3L -> mk("r")),
       0L, corpus)
     graft.io.Tables.vacuumManifested(spark, corpus)
-    assert(graft.io.Tables.Layout.Manifested.versions(spark, corpus)
+    assert(graft.io.Tables.manifestVersions(spark, corpus)
       .size == 1, "the vacuum reclaimed nothing")
     assert(tombs() == Set(1L, 3L) && corpusView(spark, corpus)
       .select("doc_id").as[Long].collect().toSet == Set(2L),
